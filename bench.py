@@ -321,12 +321,11 @@ def load_bench_history(cpus: int) -> dict[str, float]:
 
 
 def plan_schedule(
-    remaining: list[str],
     est: dict[str, float],
     start_counts: dict[str, int],
     budget_s: float,
 ) -> tuple[dict[str, int], list[str]]:
-    """Fit the remaining rows into ``budget_s``: shave sample counts
+    """Fit the rows of ``start_counts`` into ``budget_s``: shave sample counts
     down SAMPLE_LADDER (largest projected block first) before dropping
     any row; drop the most expensive UNPROTECTED row first and touch
     PROTECTED rows only when nothing else is left. Returns the kept
@@ -474,7 +473,7 @@ def main() -> int:
         est = {n: hist.get(n, FALLBACK_EST_S) * cal for n in remaining}
         budget = SOFT_DEADLINE_S - (time.perf_counter() - t0) - RESERVE_S
         counts, _virtual_drops = plan_schedule(
-            remaining, est, {n: _samples(n) for n in remaining}, budget
+            est, {n: _samples(n) for n in remaining}, budget
         )
         if name not in counts:
             log(f"{name}: DROPPED by deadline planner (est "

@@ -44,6 +44,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, FloatType, StructField, StructType
 
+from datafusion_gpu_spark.context import session_state
+
 try:  # the `cuda` feature-flag analogue: probe, don't require
     import cupy as _cp  # type: ignore
 
@@ -104,6 +106,16 @@ def sum_arrow_cpu(v: pd.Series) -> np.float32:  # type: ignore[misc]
     return _sum_f32_numpy(v)
 
 
+#: SQL name -> aggregate, as registered by :func:`register_aggregates`
+SQL_AGGREGATES = {
+    "sum_arrow": sum_arrow,
+    "sum_arrow_cpu": sum_arrow_cpu,
+    "sum_cudarc": sum_arrow,  # GPU-preferring alias
+    "sum_cubecl": sum_arrow_cpu,
+    "sum_arrow_unfused": sum_arrow_cpu,  # explicit demo name
+}
+
+
 def register_aggregates(spark: SparkSession) -> None:
     """SQL-name registration — the ``ctx.register_udaf`` analogue
     (src/lib.rs:53-55). Reference names are kept as aliases so the
@@ -115,12 +127,25 @@ def register_aggregates(spark: SparkSession) -> None:
     explicitly. The production spelling of the same kernel is
     ``sum_f32_partial_final`` below: identical result semantics, but the
     shuffle carries per-partition partials instead of whole groups.
+
+    Registers once per session: a later call only checks that every name
+    still resolves to the function registered here, and re-registers all
+    of them when one was dropped or replaced (see
+    ``context._SESSION_STATE``).
     """
-    spark.udf.register("sum_arrow", sum_arrow)
-    spark.udf.register("sum_arrow_cpu", sum_arrow_cpu)
-    spark.udf.register("sum_cudarc", sum_arrow)  # GPU-preferring alias
-    spark.udf.register("sum_cubecl", sum_arrow_cpu)
-    spark.udf.register("sum_arrow_unfused", sum_arrow_cpu)  # explicit demo name
+    state = session_state(spark)
+    registry = spark._jsparkSession.sessionState().functionRegistry()
+    if state.aggregates and all(
+        registry.lookupFunctionBuilder(ident).equals(entry)
+        for ident, entry in state.aggregates.values()
+    ):
+        return
+    function_identifier = spark._jvm.org.apache.spark.sql.catalyst.FunctionIdentifier
+    state.aggregates = {}
+    for name, fn in SQL_AGGREGATES.items():
+        spark.udf.register(name, fn)
+        ident = function_identifier.apply(name)
+        state.aggregates[name] = (ident, registry.lookupFunctionBuilder(ident))
 
 
 def sum_f32_col(col: str | Column) -> Column:

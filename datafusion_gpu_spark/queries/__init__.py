@@ -23,7 +23,14 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def load(spark: SparkSession, sf_dir: str) -> SparkSession:
-    """Register the star schema + custom aggregates for a query run."""
+    """Make the star schema + custom aggregates available for a query run.
+
+    Registers once per (session, ``sf_dir``); a warm call only checks the
+    JVM catalog and re-registers just what is missing or was replaced — a
+    dropped or shadowed view, a dropped or re-registered sum, every view
+    when ``sf_dir`` changes. The session time zone is pinned to UTC on
+    every call. See ``context._SESSION_STATE``.
+    """
     register_tables(spark, sf_dir)
     register_aggregates(spark)
     return spark

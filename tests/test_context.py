@@ -3,11 +3,14 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from datafusion_gpu_spark.context import make_types_df, register_test_csv
 from datafusion_gpu_spark.queries.reference_tables import TEST_CSV
+from tests.conftest import SF_DIR
 
 
 def test_types_schema(spark):
@@ -68,9 +71,10 @@ def test_readme_parity_queries_run_verbatim(spark):
 
 
 def test_scan_cache_sweeps_stopped_sessions_and_clear_hook():
-    """ADVICE r10 #1: the scan cache must not accrete dead sessions (swept
-    on touch via the _jsc liveness probe) and must expose a clear hook for
-    callers that rewrite parquet at a cached path mid-session."""
+    """ADVICE r10 #1: the per-session registration state must not accrete
+    dead sessions (swept on touch via the _jsc liveness probe) and must
+    expose a clear hook for callers that rewrite parquet at a registered
+    path mid-session."""
     from datafusion_gpu_spark import context as ctx
 
     class _FakeSC:
@@ -81,26 +85,142 @@ def test_scan_cache_sweeps_stopped_sessions_and_clear_hook():
         def __init__(self, stopped=False):
             self._sc = _FakeSC(stopped)
 
+    def state(session, **scans):
+        return ctx._SessionState(
+            session,
+            scans={f"{p}.parquet": df for p, df in scans.items()},
+            views={
+                f"v_{p}": ctx._View(f"{p}.parquet", df, "entry") for p, df in scans.items()
+            },
+            aggregates={"sum_cudarc": ("ident", "entry")},
+        )
+
     dead, live = _FakeSession(stopped=True), _FakeSession()
     try:
-        ctx._SCAN_CACHE[id(dead)] = (dead, {"p.parquet": "dead-df"})
-        ctx._SCAN_CACHE[id(live)] = (live, {"p.parquet": "live-df"})
+        ctx._SESSION_STATE[id(dead)] = state(dead, p="dead-df")
+        ctx._SESSION_STATE[id(live)] = state(live, p="live-df", q="other-df")
         # touch through the cache with the live session: cached path short-
-        # circuits before any real read, and the dead entry is swept
+        # circuits before any real read, and the dead entry is swept —
+        # scans, views and aggregates together
         assert ctx._cached_scan(live, "p.parquet") == "live-df"
-        assert id(dead) not in ctx._SCAN_CACHE
-        assert id(live) in ctx._SCAN_CACHE
-        # per-path clear drops just that plan; per-session clear drops all
+        assert id(dead) not in ctx._SESSION_STATE
+        assert ctx.session_state(live) is ctx._SESSION_STATE[id(live)]
+        # per-path clear drops that plan and the views over it, nothing else
         ctx.clear_scan_cache(live, "p.parquet")
-        assert ctx._SCAN_CACHE[id(live)][1] == {}
+        live_state = ctx._SESSION_STATE[id(live)]
+        assert live_state.scans == {"q.parquet": "other-df"}
+        assert list(live_state.views) == ["v_q"]
+        assert list(live_state.aggregates) == ["sum_cudarc"]
+        # per-session clear drops all of it; no-arg clear drops every session
         ctx.clear_scan_cache(live)
-        assert id(live) not in ctx._SCAN_CACHE
-        ctx._SCAN_CACHE[id(live)] = (live, {"p.parquet": "live-df"})
+        assert id(live) not in ctx._SESSION_STATE
+        ctx._SESSION_STATE[id(live)] = state(live, p="live-df")
         ctx.clear_scan_cache()
-        assert ctx._SCAN_CACHE == {}
+        assert ctx._SESSION_STATE == {}
     finally:
-        ctx._SCAN_CACHE.pop(id(dead), None)
-        ctx._SCAN_CACHE.pop(id(live), None)
+        ctx._SESSION_STATE.pop(id(dead), None)
+        ctx._SESSION_STATE.pop(id(live), None)
+
+
+@pytest.fixture
+def registration_calls(spark, monkeypatch):
+    """Counts createOrReplaceTempView / udf.register calls by name."""
+    from pyspark.sql.udf import UDFRegistration
+
+    calls: list[str] = []
+    frame_cls = type(spark.range(1))
+    create_view = frame_cls.createOrReplaceTempView
+    register = UDFRegistration.register
+
+    def counting_create_view(self, name):
+        calls.append(name)
+        return create_view(self, name)
+
+    def counting_register(self, name, f, *args, **kwargs):
+        calls.append(name)
+        return register(self, name, f, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "createOrReplaceTempView", counting_create_view)
+    monkeypatch.setattr(UDFRegistration, "register", counting_register)
+    return calls
+
+
+def _view_dirs(spark, names):
+    """The directory each view scans, as absolute local paths."""
+    from urllib.parse import urlparse
+
+    return {
+        os.path.dirname(urlparse(f).path)
+        for name in names
+        for f in spark.table(name).inputFiles()
+    }
+
+
+def test_warm_load_registers_nothing(spark, registration_calls):
+    from datafusion_gpu_spark.context import TESTDATA_TABLES
+    from datafusion_gpu_spark.queries import load
+
+    load(spark, SF_DIR)  # repairs whatever earlier tests left behind
+    registration_calls.clear()
+    load(spark, SF_DIR)
+    load(spark, SF_DIR)
+    assert registration_calls == []
+    assert _view_dirs(spark, TESTDATA_TABLES) == {os.path.abspath(SF_DIR)}
+    assert spark.sql("SELECT sum_cudarc(r_regionkey) AS s FROM region").collect()[0].s == 10.0
+
+
+def test_load_restores_shadowed_and_dropped_views(spark, registration_calls):
+    from datafusion_gpu_spark.queries import load
+
+    load(spark, SF_DIR)
+    orders = spark.table("orders").count()
+    customers = spark.table("customer").count()
+    spark.range(3).createOrReplaceTempView("orders")
+    spark.catalog.dropTempView("customer")
+    registration_calls.clear()
+    load(spark, SF_DIR)
+    # only the two damaged views are re-created, nothing else
+    assert sorted(registration_calls) == ["customer", "orders"]
+    assert spark.table("orders").count() == orders
+    assert spark.table("customer").count() == customers
+    registration_calls.clear()
+    load(spark, SF_DIR)
+    assert registration_calls == []
+
+
+def test_load_repoints_every_view_on_new_sf_dir(spark, tmp_path, registration_calls):
+    import shutil
+
+    from datafusion_gpu_spark.context import TESTDATA_TABLES
+    from datafusion_gpu_spark.queries import load
+
+    for name in TESTDATA_TABLES:
+        shutil.copy(f"{SF_DIR}/{name}.parquet", tmp_path / f"{name}.parquet")
+    load(spark, SF_DIR)
+    registration_calls.clear()
+    try:
+        load(spark, str(tmp_path))
+        assert sorted(registration_calls) == sorted(TESTDATA_TABLES)
+        assert _view_dirs(spark, TESTDATA_TABLES) == {str(tmp_path)}
+    finally:
+        load(spark, SF_DIR)
+    assert _view_dirs(spark, TESTDATA_TABLES) == {os.path.abspath(SF_DIR)}
+
+
+@pytest.mark.parametrize("damage", ["drop", "replace"])
+def test_load_restores_dropped_or_replaced_sum(spark, registration_calls, damage):
+    from datafusion_gpu_spark.aggregates import SQL_AGGREGATES
+    from datafusion_gpu_spark.queries import load
+
+    load(spark, SF_DIR)
+    if damage == "drop":
+        spark.sql("DROP TEMPORARY FUNCTION sum_cudarc")
+    else:
+        spark.udf.register("sum_cudarc", F.udf(lambda v: 0.0, "float"))
+    registration_calls.clear()
+    load(spark, SF_DIR)
+    assert sorted(registration_calls) == sorted(SQL_AGGREGATES)
+    assert spark.sql("SELECT sum_cudarc(r_regionkey) AS s FROM region").collect()[0].s == 10.0
 
 
 def test_gate_staleness_rotation_orders_oldest_first():

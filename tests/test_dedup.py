@@ -152,6 +152,9 @@ def test_connected_components_label_broadcast_guard(spark, tmp_path, monkeypatch
         assert "SortMergeJoin" not in stats2["round1_plan"]
     finally:
         sc._jsc.sc().setCheckpointDir(None)
+    # a clear that silently failed would switch every later truncating
+    # operator in the suite onto the reliable-checkpoint path
+    assert not sc.getCheckpointDir()
 
 
 def test_connected_components_collapse_transitive_chain(spark):
