@@ -16,6 +16,9 @@ Protocol (BASELINE.md "Port measurement protocol"):
 Output contract (driver): exactly ONE JSON line on stdout:
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: median_sec, ...}, "sf": ...}
+plus the sampling decisions: "samples" (rows timed with other
+than the default sample count) and "dropped" (rows the deadline
+planner did not time).
 All progress goes to stderr.
 """
 
@@ -467,6 +470,7 @@ def main() -> int:
         if name not in registry:
             log(f"{name}: SKIPPED (not in registry)")
     actual_counts: dict[str, int] = {}
+    dropped: list[str] = []
     for idx, name in enumerate(order):
         remaining = order[idx:]
         cal = _cal(ratios)
@@ -478,6 +482,7 @@ def main() -> int:
         if name not in counts:
             log(f"{name}: DROPPED by deadline planner (est "
                 f"{est[name]:.2f} s x {_samples(name)} samples over budget)")
+            dropped.append(name)
             continue
         n_samples = counts[name]
         if n_samples != _samples(name):
@@ -521,6 +526,7 @@ def main() -> int:
         "unit": "sec",
         "queries": results,
         "samples": {n: c for n, c in actual_counts.items() if c != SAMPLES},
+        "dropped": dropped,
         "sf": sf,
         "canary_first": round(canary_first, 4),
         "canary_last": round(canary_last, 4),

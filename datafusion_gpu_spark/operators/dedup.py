@@ -535,7 +535,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 64,
     rows_per_band: int = 2,
     n: int = 3,
-    materialize_sig: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding, verified with exact
     Jaccard so the output contains no false positives.
@@ -561,19 +560,23 @@ def minhash_lsh_pairs(
     One pass now feeds the band index, both verification size joins,
     and the candidate generation; only the verification's shingle
     equality joins still re-derive shingles lazily.
-    ``materialize_sig=False`` keeps the fully lazy r15 spelling (the
-    A/B control).
+
+    Building the DataFrame therefore runs one Spark job: the signature
+    cut (``localCheckpoint``, or a reliable ``checkpoint`` when a
+    checkpoint dir is set — :func:`~.util.lineage_truncator`). Planning-
+    only callers (EXPLAIN, plan capture) run it too, and in local mode
+    each call's doc-sized signature block stays pinned in the block
+    manager until the JVM garbage-collects the Dataset.
     """
     from datafusion_gpu_spark.context import ensure_parallelism
+    from datafusion_gpu_spark.operators.util import lineage_truncator
 
     docs = ensure_parallelism(docs)
     bands = num_hashes // rows_per_band
     sh = exploded_shingles(docs, n)
-    sig = _signatures_of_shingles(sh, num_hashes, with_n_sh=True)
-    if materialize_sig:
-        from datafusion_gpu_spark.operators.util import lineage_truncator
-
-        sig = lineage_truncator(docs.sparkSession.sparkContext)(sig)
+    sig = lineage_truncator(docs.sparkSession.sparkContext)(
+        _signatures_of_shingles(sh, num_hashes, with_n_sh=True)
+    )
     band_cols = [
         F.xxhash64(
             F.lit(j), *[F.element_at("sig", j * rows_per_band + r + 1) for r in range(rows_per_band)]

@@ -228,20 +228,26 @@ def test_gate_staleness_rotation_orders_oldest_first():
     # coverage closed (r5), ordering is a staleness rotation — the rank
     # of each query's last driver check must be non-decreasing along
     # the registry, with never-checked entries slotted between the r2
-    # and r3 tranches (first-check latency <= one round behind the
-    # stalest re-checks, never ahead of them)
+    # and r3 tranches
+    from collections import Counter
+
     from datafusion_gpu_spark.queries import (
         _CHANGED_SINCE_CHECK,
-        _CHECK_COUNT,
-        _LAST_DRIVER_ROUND,
         _NEVER_CHECKED_RANK,
+        _RECORDS_DIR,
         _TIER_BONUS,
         _TIER_CHECKS,
+        _driver_history,
         _staleness_rank,
         all_oracles,
         all_queries,
     )
 
+    history = _driver_history()
+    # every committed driver record is folded: a broken records path
+    # must fail here, not silently rank every row "never checked"
+    assert history.rounds == len(list(_RECORDS_DIR.glob("CORRECTNESS_r*.json")))
+    assert history.rounds >= 16
     names = list(all_queries())
     rank = _staleness_rank
     ranks = [rank(n) for n in names]
@@ -252,31 +258,22 @@ def test_gate_staleness_rotation_orders_oldest_first():
     for n in names:
         if n in _CHANGED_SINCE_CHECK:
             assert rank(n) == 0.0
-        elif n in _LAST_DRIVER_ROUND:
-            want = _LAST_DRIVER_ROUND[n] + (
-                _TIER_BONUS if _CHECK_COUNT[n] >= _TIER_CHECKS else 0.0
+        elif n in history.last_round:
+            want = history.last_round[n] + (
+                _TIER_BONUS if history.check_count[n] >= _TIER_CHECKS else 0.0
             )
             assert rank(n) == want
-    # concrete instance: join_cross (green r2 AND r7) defers behind
-    # agg_gini (green r7 only) although both were last checked in r7
-    assert _CHECK_COUNT["join_cross"] >= _TIER_CHECKS
-    assert _CHECK_COUNT["agg_gini"] == 1
-    assert _LAST_DRIVER_ROUND["join_cross"] == _LAST_DRIVER_ROUND["agg_gini"]
-    assert rank("join_cross") > rank("agg_gini")
     # changed-code rows (spelling or shared machinery changed after their
     # last driver check — VERDICT r10 #1) jump the staleness queue: ALL of
     # them sit inside the gate head, ahead of every merely-stale tranche
     assert set(names[: len(_CHANGED_SINCE_CHECK)]) == set(_CHANGED_SINCE_CHECK)
     assert len(_CHANGED_SINCE_CHECK) <= 50
     # The head's 50 slots must be exactly the 50 smallest staleness
-    # ranks — derived from the rank table itself so the assertion stays
-    # true as _CHECKED_R{N} tuples accrue. Sortedness above already
-    # guarantees the cut; here we pin the head *composition*: for every
-    # rank r fully inside the head, ALL entries of that rank are in the
-    # head; the boundary rank fills the remainder in registry order.
+    # ranks. Sortedness above already guarantees the cut; here we pin
+    # the head *composition*: for every rank r fully inside the head,
+    # ALL entries of that rank are in the head; the boundary rank fills
+    # the remainder in registry order.
     head_ranks = ranks[:50]
-    from collections import Counter
-
     total_by_rank = Counter(ranks)
     head_by_rank = Counter(head_ranks)
     boundary = head_ranks[-1]
@@ -291,11 +288,96 @@ def test_gate_staleness_rotation_orders_oldest_first():
     n_never_in_head = head_by_rank.get(_NEVER_CHECKED_RANK, 0)
     if n_never_in_head < n_never:
         overflow = names[50 : 50 + (n_never - n_never_in_head)]
-        assert all(n not in _LAST_DRIVER_ROUND for n in overflow)
+        assert all(n not in history.last_round for n in overflow)
     # every query has an oracle unless deliberately rows-only (driver
     # looks oracles up by key, so only membership matters, not order)
     rows_only = {"explain_plan", "agg_approximate"}
     assert set(names) - set(all_oracles()) == rows_only
+
+
+@pytest.fixture
+def records_through_r16(tmp_path):
+    """The rotation folded over CORRECTNESS_r01..r16 only, with the pins
+    set for the round-17 gate — a fixed input whose head was computed by
+    hand, unaffected by records and pins committed later."""
+    import shutil
+
+    from datafusion_gpu_spark import queries
+
+    for rnd in range(1, 17):
+        name = f"CORRECTNESS_r{rnd:02d}.json"
+        shutil.copy(queries._RECORDS_DIR / name, tmp_path / name)
+    saved = queries._RECORDS_DIR, queries._CHANGED_SINCE_CHECK
+    queries._RECORDS_DIR = tmp_path
+    queries._CHANGED_SINCE_CHECK = (
+        "dedup_incremental_minhash", "streaming_incremental_minhash",
+    )
+    queries._driver_history.cache_clear()
+    try:
+        yield queries
+    finally:
+        queries._RECORDS_DIR, queries._CHANGED_SINCE_CHECK = saved
+        queries._driver_history.cache_clear()
+
+
+def test_gate_rotation_r17_head(records_through_r16):
+    import json
+
+    queries = records_through_r16
+    history = queries._driver_history()
+    assert history.rounds == 16
+    rank = queries._staleness_rank
+    # tier example: graph_bfs (green in r7 only) ranks ahead of
+    # join_cross (green in r7 and earlier rounds)
+    assert history.last_round["graph_bfs"] == history.last_round["join_cross"] == 7
+    assert history.check_count["graph_bfs"] == 1
+    assert history.check_count["join_cross"] >= queries._TIER_CHECKS
+    assert rank("graph_bfs") < rank("join_cross")
+    # hand-computed head: the 2 pins, then the 16 rows whose only green
+    # round is r7, then 32 of the 61 rank-8 rows (last green r8 with one
+    # green round, or r7 with several) in registry order
+    only_r7 = {
+        "dedup_prefix_filter", "events_changepoint_cusum", "events_sliding_distinct",
+        "graph_bellman_ford", "graph_bfs", "graph_condensation",
+        "graph_delta_stepping", "graph_harmonic_exact", "graph_harmonic_hyperball",
+        "graph_resource_allocation", "graph_scc", "graph_toposort",
+        "join_fuzzy_blocked", "join_geo_radius", "multimodal_phash",
+        "text_unicode_clean",
+    }
+    names = list(queries.all_queries())
+    rank_8 = [
+        n for n in names
+        if (history.last_round.get(n), history.check_count.get(n, 0) > 1)
+        in ((8, False), (7, True))
+    ]
+    assert len(rank_8) == 61
+    head = names[:50]
+    assert set(head[:2]) == set(queries._CHANGED_SINCE_CHECK)
+    assert set(head[2:18]) == only_r7
+    assert head[18:] == rank_8[:32]
+    # so no row that r16 already checked green spends a slot
+    r16 = json.loads((queries._RECORDS_DIR / "CORRECTNESS_r16.json").read_text())
+    assert not [n for n in head if n in r16 and queries._driver_checked(r16[n])]
+
+
+def test_driver_record_counts_only_green_rows():
+    from datafusion_gpu_spark.queries import _driver_checked
+
+    green = {
+        "rows_match": True, "schema_match": True, "hash_match": True,
+        "spark_rows": 5, "oracle_rows": 5, "err": None,
+    }
+    assert _driver_checked(green)
+    # rows-only by design: no oracle, no match fields set
+    assert _driver_checked({
+        "rows_match": None, "schema_match": None, "hash_match": None,
+        "spark_rows": 1, "oracle_rows": None, "err": "no_oracle",
+    })
+    assert not _driver_checked({**green, "hash_match": False})
+    assert not _driver_checked({**green, "rows_match": False})
+    assert not _driver_checked({
+        **green, "hash_match": None, "err": "TypeError: unhashable type: 'list'",
+    })
 
 
 def test_family_reexport_collision_raises():
