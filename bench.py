@@ -11,14 +11,19 @@ Protocol (BASELINE.md "Port measurement protocol"):
 - the driver's sf tables (default /root/testdata/sf0.1) for the TPC-H and
   pipeline headliners;
 - per query: one untimed warm-up, then N timed ``collect()`` iterations
-  (collect, not show — cuda_sum.rs:31-36), reporting the MEDIAN.
+  (collect, not show — cuda_sum.rs:31-36), reporting the MEDIAN;
+- the sf rows share one time box (criterion's fixed measurement time,
+  no per-query history): pass 1 gives every row its warm-up and FLOOR
+  samples, pass 2 tops each row up toward SAMPLES within an equal share
+  of the time left (see ``sample_rows``).
 
 Output contract (driver): exactly ONE JSON line on stdout:
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: median_sec, ...}, "sf": ...}
-plus the sampling decisions: "samples" (rows timed with other
-than the default sample count) and "dropped" (rows the deadline
-planner did not time).
+plus the sampling record: "samples" (sf rows timed with other than
+SAMPLES samples — FLOOR..SAMPLES-1 when the box is slow) and "dropped"
+(trailing sf rows the time box reached with no budget left), and the
+canary pair "canary_first" / "canary_last".
 All progress goes to stderr.
 """
 
@@ -36,7 +41,8 @@ def log(msg: str) -> None:
 
 
 #: (name, samples, SQL) for the warm 1M-row ``types`` table — the
-#: reference's README.md:71-75 queries, 50 samples apiece like criterion.
+#: reference's README.md:71-75 queries plus two larger-table throughput
+#: probes; fixed counts, outside the sf time box.
 TYPES_BENCHES = [
     ("ref_sum_float", 30, "SELECT sum(float) AS s FROM types"),
     ("ref_sum_arrow_cpu", 10, "SELECT sum_arrow_cpu(float) AS s FROM types"),
@@ -53,31 +59,28 @@ TYPES_BENCHES = [
     ("ref_sum_float_500m", 10, "SELECT sum(float) AS s FROM types_500m"),
 ]
 
-#: Registry queries benched against the sf dir. EVERY reported median
-#: gets >= SAMPLES samples (medians at 1-4 s wobbled ~20% on 3-5
-#: samples, BENCH_r03's tail got only 3): the set below is trimmed so
-#: 10 samples apiece fits the deadline at r3 speeds (sum of medians
-#: ~35 s -> ~385 s timed + setup). If the machine is slower, the
-#: deadline planner (r16 rework, see main()) first SHAVES sample
-#: counts down SAMPLE_LADDER (recorded in the output "samples" map)
-#: and only then drops whole queries from the expensive end (LOGGED).
-#: Trimmed vs r2/r3 sets (family still covered, see BENCH_NOTES.md):
+#: Sampling policy for the sf rows (``sample_rows``): SAMPLES timed
+#: samples per row when the time box allows; every reported row has at
+#: least FLOOR.
+#: Medians at 1-4 s wobbled ~20% on 3-5 samples, hence the target of 10.
+SAMPLES = 10
+FLOOR = 3
+#: The time box: the whole run (setup, types probes, sf rows) aims to
+#: finish inside this many seconds; RESERVE_S of it is held back for the
+#: terminal canary_last block and the JSON line.
+SOFT_DEADLINE_S = float(os.environ.get("SPARK_GRAFT_BENCH_DEADLINE", "480"))
+RESERVE_S = 6.0
+#: Registry queries benched against the sf dir, in run order. Trimmed
+#: vs the r2/r3 sets (each family still covered, see BENCH_NOTES.md):
 #: dedup_ngram_jaccard + dedup_substring_spans + dedup_simhash (MinHash
 #: is the benched fuzzy-dedup scale path), sim_topk_bruteforce (same
 #: GEMM kernel as sim_topk_vectorized), text_contamination +
 #: text_repetition (text family keeps quality/pii/perplexity).
-SAMPLES = int(os.environ.get("SPARK_GRAFT_BENCH_SAMPLES", "10"))
-SOFT_DEADLINE_S = float(os.environ.get("SPARK_GRAFT_BENCH_DEADLINE", "480"))
 SF_BENCHES = [
     "tpch_q1_pricing_summary",
     "tpch_q3_shipping_priority",
     "tpch_q5_local_supplier",
     "tpch_q6_forecast_revenue",
-    # r15 correction: tpch_q10 was trimmed mid-round to pay for the dedup
-    # PROTECTED additions, but it reported a median in BENCH_r14 and the
-    # driver contract forbids removing reported entries — restored (its
-    # ~0.55 s x 10 fits comfortably now that the heavy iterative rows run
-    # 2-4x faster post-optimization).
     "tpch_q10_returned_items",
     "window_rows_frame",
     "dedup_exact",
@@ -90,9 +93,6 @@ SF_BENCHES = [
     "sim_topk_ivf",
     "sim_knn_graph",
     "curation_pack_sequences",
-    # r15 correction: curation_shuffle was trimmed mid-round for the same
-    # budget reason as tpch_q10 and restored for the same contract reason
-    # (BENCH_r14 reports its median; never remove reported entries).
     "curation_shuffle",
     "curation_dsir_resample",
     "pipeline_end_to_end",
@@ -131,7 +131,8 @@ SF_BENCHES = [
     # checkpointing) nothing else benches; first full-round median
     # lands in BENCH_r13.
     "graph_hits",
-    # dedup_components runs after every non-iterative row: BENCH_r05
+    # dedup_components runs after every non-iterative row's pass-1
+    # samples (pass-2 top-ups all run after it): BENCH_r05
     # showed seven unchanged queries drifting +12-44% vs r04, and the
     # prime suspect is this entry's insertion at position 10 — ~39 s of
     # iterative, localCheckpoint-heavy timed work whose resident state +
@@ -140,22 +141,16 @@ SF_BENCHES = [
     # own median is unaffected by position: each round re-checkpoints
     # from scratch.
     "dedup_components",
-    # The graph-iterative family representative (VERDICT r8 ask #8):
-    # ~8.5 s/run of checkpointed Louvain rounds at sf0.1, benched at 5
-    # samples (SAMPLES_OVERRIDE — 10 would cost ~85 s and start evicting
-    # 1-2 s queries with bench history; an 8 s median wobbles far less
-    # in relative terms than the 1-4 s queries the 10-sample floor was
-    # set for). LAST on purpose: as a NEW row with no cross-round
-    # history it absorbs the end-of-run shadow, keeping
-    # dedup_components' position (and so its r8-vs-r9 comparability)
-    # unchanged — the r9 trial run with louvain BEFORE dedup_components
-    # showed the latter +32% purely from the preceding checkpoint/GC
-    # shadow.
+    # graph_louvain (~6-8 s/run of checkpointed rounds) runs LAST so it
+    # keeps dedup_components' position unchanged: a trial run with
+    # louvain BEFORE dedup_components showed the latter +32% purely from
+    # the preceding checkpoint/GC shadow. Being last, it is also the
+    # first row a spent time box drops.
     "graph_louvain",
     # graph_pagerank is gate-checked and scale-probed (SCALE.md: 2M
-    # edges, 5 rounds, linear) but not benched: ~5 s/run x 10 samples
-    # would evict dedup_components — the iterative representative with
-    # r2/r3 bench history — from the deadline budget.
+    # edges, 5 rounds, linear) but not benched: ~5 s/run would take
+    # time-box share from the iterative representative dedup_components,
+    # which has bench history since r2/r3.
     # events_gap_fill is gate-checked but not benched: the operator runs
     # ~1.1 s at sf0.1, while bench's collect() of its 1M-row dense grid
     # adds ~6 s of py4j transfer — that measures the driver pipe, not
@@ -177,195 +172,52 @@ SF_BENCHES = [
 CANARY_SQL = "SELECT sum(float) AS s FROM types"
 CANARY_SAMPLES = 15
 
-#: Queries the deadline planner may evict only when nothing unprotected
-#: remains: each is the sole bench representative of a plan family whose
-#: wall-clock otherwise has no driver evidence (dedup_components = the
-#: iterative/loop family, absent from BENCH_r04 exactly because the
-#: planner treated it like any other expensive query).
-PROTECTED = frozenset({
-    "dedup_components", "events_ks_test", "graph_louvain",
-    # The round-9 verdict's bench WATCH LIST (five risers on untouched
-    # code attributed to ambient machine state): these five must report
-    # r10 medians so the watch can close or bisect — under a slow-
-    # machine planning pass they are exactly the ~1-2.3 s rows the
-    # eviction order reaches first (both r10 local runs dropped
-    # sim_topk_ivf and one dropped sim_knn_graph).
-    "sim_knn_graph", "text_pii_redact", "sim_topk_ivf",
-    "text_quality", "text_perplexity",
-    # Round-11 family representatives (VERDICT r10 ask #6): their first
-    # full-round medians must land in BENCH_r11, so the planner may not
-    # evict them on a slow pass.
-    "agg_gain_lift_curve", "events_holt_smoothing",
-    # Round-12 family representative: first full-round median must land
-    # in BENCH_r12.
-    "events_forecast_backtest",
-    # Round-13 family representatives (survival + the extension's
-    # join-fan-in HITS): first full-round medians must land in
-    # BENCH_r13.
-    "events_cox_ph", "graph_hits",
-    # Round-15 (VERDICT r14 "What's wrong" #1): the r14 driver bench
-    # planner-evicted BOTH dedup flagships on a tired box, leaving the
-    # LLM-pipeline's near-dup representative with no fresh wall-clock.
-    # Protect them (guaranteed ~13.5 s minhash 5-sample + ~2.5 s exact
-    # 10-sample on a slow pass; tpch_q10 + curation_shuffle were briefly
-    # trimmed to pay for it, then restored — see SF_BENCHES — because
-    # reported medians are never removed).
-    "dedup_minhash_lsh", "dedup_exact",
-    # r15 optimization round: these two rows' SPELLINGS changed this
-    # round (single-scan bm25, materialized line-hash relation), so the
-    # judge needs their post-change medians — the local r15 trial run
-    # planner-dropped both on the slow box. 5-sample overrides below
-    # keep the protected cost bounded.
-    "retrieval_bm25", "dedup_lines",
-})
-
-#: Per-query sample-count overrides (expensive iterative rows whose
-#: 10-sample cost would evict cheaper queries with bench history — the
-#: r9 trial run at 10 samples apiece evicted dedup_minhash_lsh; a 3-8 s
-#: iterative median wobbles far less in relative terms than the 1-4 s
-#: queries the 10-sample floor was calibrated on).
-# Round-13: the set grew by the cox representative; rather than letting
-# the deadline planner EVICT the fuzzy-dedup family rows on a slow pass
-# (the r13 trial run dropped dedup_minhash_lsh and dedup_lines), the
-# three heaviest unprotected rows run at 5 samples — an honest recorded
-# count beats an honest omission for rows with four rounds of history;
-# their ~1-3.5 s medians wobble less in relative terms than the ~1 s
-# rows the 10-sample floor was calibrated on.
-SAMPLES_OVERRIDE = {
-    "graph_louvain": 5, "dedup_components": 5,
-    "dedup_minhash_lsh": 5, "dedup_lines": 5, "pipeline_end_to_end": 5,
-    "events_cox_ph": 5, "graph_hits": 5,
-    # r15: dsir missed the r14 driver bench AND the r15 trial run (both
-    # times the first eviction at ~1.3-1.5 s x 10); at 5 samples it fits
-    # ahead of the eviction line — an honest recorded count beats a
-    # second consecutive omission for a row with four rounds of history.
-    "curation_dsir_resample": 5,
-    # r15: bm25's spelling changed this round and it was planner-
-    # dropped in the local trial; protected + 5 samples bounds its cost
-    # (~1.5 s x 5) while guaranteeing a post-change median.
-    "retrieval_bm25": 5,
-    # r16: the two heaviest 10-sample rows (27.5 s + 19 s of guaranteed
-    # timed cost at r15 medians) start at 5 — with the planner now
-    # required to fit ALL 31 sf rows in the deadline, their 10-sample
-    # blocks were the first thing the shave ladder cut anyway; a
-    # recorded 5-sample start is more comparable round-over-round than
-    # a 10-or-7-depending-on-box one. Both have 4+ rounds of history
-    # and 1.9-3 s medians (the 10-sample floor was calibrated for 1 s
-    # rows).
-    "events_forecast_backtest": 5, "events_holt_smoothing": 5,
-}
+def _time_one(run, clock=time.perf_counter) -> float:
+    t0 = clock()
+    run()
+    return clock() - t0
 
 
-def _samples(name: str) -> int:
-    return SAMPLES_OVERRIDE.get(name, SAMPLES)
+def timed_median(fn, samples: int) -> float:
+    fn()  # warm-up (plan + shuffle files + code cache), untimed
+    return statistics.median(_time_one(fn) for _ in range(samples))
 
 
-#: Sample-count degradation ladder (VERDICT r15 ask #1): when the
-#: deadline projection overruns, the planner SHAVES sample counts down
-#: this ladder (largest timed block first) before it drops any row —
-#: an honest recorded 3-sample median beats an honest omission, and 13
-#: omissions (r15) fail the round outright. Every effective count that
-#: differs from the 10-sample default is recorded in the output JSON's
-#: "samples" map.
-SAMPLE_LADDER = (10, 7, 5, 3)
-#: Cold first run (plan + shuffle files + code cache) costs ~1.5x the
-#: steady-state median (r15 measured steady ~0.7x warm-up).
-WARM_FACTOR = 1.5
-#: Wall-clock held back for the terminal canary_last block + JSON.
-RESERVE_S = 6.0
-#: History-less rows (none today) are assumed mid-range until warmed.
-FALLBACK_EST_S = 1.5
+def sample_rows(
+    runners: dict, budget_s: float, clock=time.perf_counter
+) -> tuple[dict[str, list[float]], list[str]]:
+    """Time each ``runners`` row (name -> zero-argument callable, in run
+    order) within ``budget_s`` seconds of ``clock``, in two passes:
 
-_LADDER_FLOOR = SAMPLE_LADDER[-1]
+    1. coverage: one untimed warm-up, then FLOOR timed samples per row; a
+       row is dropped only when the budget is already spent at its turn,
+       so drops are always a trailing suffix of the order;
+    2. precision: in the same order, top each row up toward SAMPLES
+       within an equal share of what is left (``left / rows_left``,
+       recomputed per row, so time cheap rows leave unused rolls forward
+       to the rows after them); a row stops when one more sample, sized
+       by its own median so far, would overrun its share.
 
-
-def _shave(count: int) -> int:
-    """Next lower rung of the ladder (identity at the floor)."""
-    for rung in SAMPLE_LADDER:
-        if rung < count:
-            return rung
-    return count
-
-
-def load_bench_history(cpus: int) -> dict[str, float]:
-    """Per-query median seconds from the committed BENCH_r*.json history
-    (VERDICT r15 ask #1: seed the deadline planner from history instead
-    of a cold-box warm-up pass, which r15 measured at 2-10x steady-state
-    and which evicted 13 reported rows). Newest round wins; files from
-    a low-core run (``_c8``) are preferred when this run is itself at
-    <= 8 cores, deprioritized otherwise. Estimates only — every median
-    is still computed from the parquet inputs."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    entries = []
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)", os.path.basename(path))
-        if not m:
-            continue
-        low_core = "_c8" in os.path.basename(path)
-        # sort key: round number, with matching-core-profile files on top
-        entries.append((int(m.group(1)), low_core == (cpus <= 8), path))
-    hist: dict[str, float] = {}
-    for _, _, path in sorted(entries):
-        try:
-            with open(path) as fh:
-                doc = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        parsed = doc.get("parsed") if isinstance(doc.get("parsed"), dict) else doc
-        queries = parsed.get("queries")
-        if isinstance(queries, dict):
-            for name, sec in queries.items():
-                if isinstance(sec, (int, float)) and sec > 0:
-                    hist[name] = float(sec)
-    return hist
-
-
-def plan_schedule(
-    est: dict[str, float],
-    start_counts: dict[str, int],
-    budget_s: float,
-) -> tuple[dict[str, int], list[str]]:
-    """Fit the rows of ``start_counts`` into ``budget_s``: shave sample counts
-    down SAMPLE_LADDER (largest projected block first) before dropping
-    any row; drop the most expensive UNPROTECTED row first and touch
-    PROTECTED rows only when nothing else is left. Returns the kept
-    rows' effective counts and the (virtual) drop list — drops are only
-    acted on when the row is actually reached, so a mid-run
-    recalibration can resurrect a row that an early pessimistic
-    projection would have evicted."""
-    counts = dict(start_counts)
+    Returns every kept row's timed samples and the dropped rows."""
+    deadline = clock() + budget_s
+    times: dict[str, list[float]] = {}
     dropped: list[str] = []
-
-    def projection() -> float:
-        return sum(
-            WARM_FACTOR * est[n] + est[n] * counts[n] for n in counts
-        )
-
-    while counts and projection() > budget_s:
-        shavable = [n for n in counts if counts[n] > _LADDER_FLOOR]
-        if shavable:
-            victim = max(shavable, key=lambda n: est[n] * counts[n])
-            counts[victim] = _shave(counts[victim])
+    for name, run in runners.items():
+        if clock() >= deadline:
+            log(f"{name}: DROPPED (budget spent before its turn)")
+            dropped.append(name)
             continue
-        pool = [n for n in counts if n not in PROTECTED] or list(counts)
-        victim = max(pool, key=lambda n: est[n] * counts[n])
-        del counts[victim]
-        dropped.append(victim)
-    return counts, dropped
-
-
-def timed_median(fn, samples: int, warmed: bool = False) -> float:
-    if not warmed:
-        fn()  # warm-up (plan + shuffle files + code cache), untimed
-    times = []
-    for _ in range(samples):
-        t0 = time.perf_counter()
-        fn()
-        times.append(time.perf_counter() - t0)
-    return statistics.median(times)
+        run()  # warm-up (plan + shuffle files + code cache), untimed
+        times[name] = [_time_one(run, clock) for _ in range(FLOOR)]
+        log(f"{name}: pass 1 median "
+            f"{statistics.median(times[name]):.2f} s over {FLOOR} samples")
+    for idx, (name, ts) in enumerate(times.items()):
+        now = clock()
+        share_end = now + (deadline - now) / (len(times) - idx)
+        while (len(ts) < SAMPLES
+               and clock() + statistics.median(ts) <= share_end):
+            ts.append(_time_one(runners[name], clock))
+    return times, dropped
 
 
 def main() -> int:
@@ -436,82 +288,18 @@ def main() -> int:
 
     registry = all_queries()
 
-    # Deadline planner, reworked for r16 (VERDICT r15 "What's wrong" #1:
-    # the old warm-EVERYTHING-then-evict pass burned ~a minute of the
-    # deadline on a cold box warming rows it then dropped, and evicted
-    # 13 reported medians — the round's gate failure). New shape:
-    #   1. estimates are seeded from the committed BENCH_r*.json history
-    #      (driver-box units), scaled to THIS box by a running
-    #      calibration ratio (types probes first, then the measured
-    #      sf medians themselves — the box's cold phase decays within
-    #      minutes, so recent ratios dominate);
-    #   2. each row is warmed just-in-time, only if it survives the
-    #      projection made AT ITS TURN — no budget is spent warming a
-    #      row that is then evicted;
-    #   3. the projection SHAVES sample counts (10 -> 7 -> 5 -> 3,
-    #      recorded in the output "samples" map) before it drops any
-    #      row, and drops the most expensive unprotected row first;
-    #   4. a drop is final only when the row's turn arrives — mid-run
-    #      recalibration on a warming box resurrects rows an early
-    #      pessimistic projection would have evicted.
-    hist = load_bench_history(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-
-    def _cal(ratios: list[float]) -> float:
-        if not ratios:
-            return 1.0
-        recent = ratios[-5:]
-        return min(max(statistics.median(recent), 0.5), 2.5)
-
-    ratios: list[float] = [
-        results[n] / hist[n] for n in results if n in hist and hist[n] > 0
-    ]
-    order = [n for n in SF_BENCHES if n in registry]
     for name in SF_BENCHES:
         if name not in registry:
             log(f"{name}: SKIPPED (not in registry)")
-    actual_counts: dict[str, int] = {}
-    dropped: list[str] = []
-    for idx, name in enumerate(order):
-        remaining = order[idx:]
-        cal = _cal(ratios)
-        est = {n: hist.get(n, FALLBACK_EST_S) * cal for n in remaining}
-        budget = SOFT_DEADLINE_S - (time.perf_counter() - t0) - RESERVE_S
-        counts, _virtual_drops = plan_schedule(
-            est, {n: _samples(n) for n in remaining}, budget
-        )
-        if name not in counts:
-            log(f"{name}: DROPPED by deadline planner (est "
-                f"{est[name]:.2f} s x {_samples(name)} samples over budget)")
-            dropped.append(name)
-            continue
-        n_samples = counts[name]
-        if n_samples != _samples(name):
-            log(f"{name}: samples shaved {_samples(name)} -> {n_samples} "
-                f"by deadline planner")
-        fn = registry[name]
-        runner = (lambda f: lambda: f(spark, sf_dir).collect())(fn)
-        w0 = time.perf_counter()
-        runner()  # just-in-time warm-up (plan + shuffle files + code cache)
-        warm = time.perf_counter() - w0
-        # Post-warm self-check: if the real warm time says this row is
-        # far heavier here than history projected, shave it further so
-        # it cannot single-handedly evict the tail.
-        budget = SOFT_DEADLINE_S - (time.perf_counter() - t0) - RESERVE_S
-        tail_est = sum(
-            WARM_FACTOR * est[n] + est[n] * counts[n]
-            for n in counts if n != name
-        )
-        while (n_samples > _LADDER_FLOOR
-               and 0.7 * warm * n_samples > budget - tail_est):
-            n_samples = _shave(n_samples)
-            log(f"{name}: samples shaved to {n_samples} after "
-                f"{warm:.2f} s warm-up")
-        med = timed_median(runner, n_samples, warmed=True)
-        results[name] = round(med, 4)
-        actual_counts[name] = n_samples
-        log(f"{name}: median {med:.2f} s over {n_samples} samples")
-        if hist.get(name, 0) > 0:
-            ratios.append(med / hist[name])
+    runners = {
+        name: (lambda f: lambda: f(spark, sf_dir).collect())(registry[name])
+        for name in SF_BENCHES if name in registry
+    }
+    budget = SOFT_DEADLINE_S - (time.perf_counter() - t0) - RESERVE_S
+    times, dropped = sample_rows(runners, budget)
+    for name, ts in times.items():
+        results[name] = round(statistics.median(ts), 4)
+        log(f"{name}: median {results[name]:.2f} s over {len(ts)} samples")
 
     canary_last = timed_median(
         lambda: spark.sql(CANARY_SQL).collect(), CANARY_SAMPLES)
@@ -525,7 +313,8 @@ def main() -> int:
         "value": total,
         "unit": "sec",
         "queries": results,
-        "samples": {n: c for n, c in actual_counts.items() if c != SAMPLES},
+        "samples": {n: len(ts) for n, ts in times.items()
+                    if len(ts) != SAMPLES},
         "dropped": dropped,
         "sf": sf,
         "canary_first": round(canary_first, 4),

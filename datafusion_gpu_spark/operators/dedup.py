@@ -20,8 +20,6 @@ Pipeline shapes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1045,6 +1043,11 @@ def semantic_dedup(
 # -- duplicate-cluster resolution -------------------------------------------
 
 
+#: Largest label relation (|V| rows, ~16 B each) the cluster path of
+#: ``connected_components`` broadcasts into each round's edge join.
+_CC_BROADCAST_MAX_NODES = 4_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     a: str = "doc_a",
@@ -1133,13 +1136,10 @@ def connected_components(
     # only after BOTH map stages materialize — i.e. the |E| edge side
     # pays a full shuffle write EVERY round before the planner can see
     # the small label side — so there the explicit hint (guarded: |V|
-    # must fit the broadcast budget, ~16 B/row; 0 disables) removes a
-    # data-sized write per round. One count() job prices the cluster
-    # guard against the checkpointed label RDD.
-    bc_max = int(
-        os.environ.get("SPARK_GRAFT_CC_BROADCAST_MAX_NODES", "4000000")
-    )
-    bcast = use_reliable and 0 < bc_max and labels.count() <= bc_max
+    # must fit the broadcast budget, ~16 B/row) removes a data-sized
+    # write per round. One count() job prices the cluster guard against
+    # the checkpointed label RDD.
+    bcast = use_reliable and labels.count() <= _CC_BROADCAST_MAX_NODES
     # Convergence via the label-sum invariant: hash-min only ever LOWERS
     # a node's label, so sum(component) is strictly decreasing until the
     # fixpoint — an unchanged sum proves convergence with one cheap
