@@ -13,11 +13,23 @@ Scale notes: watermark + windowed aggregation is incremental state in
 the executors (no unbounded buffering); ``complete`` output mode is for
 the bounded replay/test path, ``append`` + watermark is the production
 mode where only finalized windows emit.
+
+Stateful twin contract: an ``applyInPandasWithState`` twin is only its
+per-event arithmetic — a module-level ``step(key, state, row) -> (state,
+rows)`` plus an optional ``flush(key, state) -> rows`` emitted after each
+micro-batch's fold — run by ``_keyed_replay``, which owns the state
+read/write, the one (ts, event_id) sort per micro-batch and the output
+frame (the accumulator lifecycle the reference leaves to DataFusion,
+cudarc rs:115-161). Steps take no SparkSession, so ``_fold`` replays them
+on plain lists in tests.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from decimal import ROUND_HALF_UP, Decimal
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +77,85 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
+def _purchase_cents(
+    spark: SparkSession, sf_dir: str, scale: int = 100, *extra
+) -> DataFrame:
+    """The purchase stream as (user_id, ts, event_id, *extra, cents), with
+    ``value`` quantized JVM-SIDE by the batch twins' F.round(value*scale)
+    — Python's bankers' rounding would diverge from Spark's HALF_UP on
+    exact half-cents, so the automata downstream stay integer-only."""
+    return (
+        stream_events(spark, sf_dir)
+        .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
+        .select(
+            "user_id",
+            "ts",
+            "event_id",
+            *extra,
+            F.round(F.col("value") * scale).cast("long").alias("cents"),
+        )
+    )
+
+
+def _round_half_up(x: float) -> int:
+    """SQL ROUND(x, 0) on a DOUBLE: HALF_UP on the double's EXACT value
+    (Decimal(float) is exact binary->decimal, same as
+    java.math.BigDecimal(double)) — what both Spark's BigDecimal round and
+    DuckDB's round compute."""
+    return int(Decimal(x).quantize(Decimal(1), rounding=ROUND_HALF_UP))
+
+
+def _fold(key, state, chunks, step, flush=None):
+    """Fold ``step`` over one key's micro-batch chunks in (ts, event_id)
+    order, then ``flush`` once if any row arrived. Spark splits a key's input
+    across Arrow chunks (arrow.maxRecordsPerBatch); per-chunk sorting
+    would not give a global fold order, so all chunks are gathered and
+    sorted once — state is per-key bounded, so this is small. Returns
+    (new state, output rows)."""
+    import pandas as pd
+
+    out = []
+    chunks = [c for c in chunks if len(c)]
+    if chunks:
+        batch = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
+        for row in batch.itertuples(index=False):
+            state, rows = step(key, state, row)
+            out.extend(rows)
+        if flush is not None:
+            out.extend(flush(key, state))
+    return state, out
+
+
+def _keyed_replay(
+    ev: DataFrame, key: str, state_schema: str, out_schema: str, init, step, flush=None
+) -> DataFrame:
+    """Group ``ev`` by ``key`` and run ``_replay_batch`` per key and
+    micro-batch under applyInPandasWithState (update mode, no timeout).
+    Returns the unmaterialized stream."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    cols = [f.split()[0] for f in out_schema.split(",")]
+    return ev.groupBy(key).applyInPandasWithState(
+        partial(_replay_batch, cols, init, step, flush),
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _replay_batch(cols, init, step, flush, key, pdfs, state):
+    """One key's micro-batch: ``_fold`` from the key's stored state (or
+    ``init``), store the new state, and yield the rows — tuples in
+    ``cols`` order — as one frame."""
+    import pandas as pd
+
+    new, rows = _fold(key, state.get if state.exists else init, pdfs, step, flush)
+    state.update(new)
+    columns = list(zip(*rows)) or [()] * len(cols)
+    yield pd.DataFrame({c: list(v) for c, v in zip(cols, columns)})
+
+
 def stream_tumbling_counts(
     spark: SparkSession,
     sf_dir: str,
@@ -101,25 +192,25 @@ def stream_user_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     and emits the new running total; the state store partitions by
     user_id, so 10^9 users spread across executors.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ev = stream_events(spark, sf_dir)
-
-    def update(key, pdfs, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n_events long",
-        stateStructType="n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_replay(
+        stream_events(spark, sf_dir),
+        "user_id",
+        "n long",
+        "user_id long, n_events long",
+        (0,),
+        _count_step,
+        _key_and_count,
     )
+
+
+def _count_step(key, state, row):
+    return (state[0] + 1,), ()
+
+
+def _key_and_count(key, state):
+    """flush of the counter twins (events seen, funnel stage reached):
+    the key and its state's first slot."""
+    return [(key[0], state[0])]
 
 
 def run_stream_to_memory(df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
@@ -169,9 +260,6 @@ def stream_enriched_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch, so dim updates are picked up without restarting; Spark
     broadcasts it under the join threshold exactly as in batch.
     """
-    from datafusion_gpu_spark.context import read_parquet
-    import os
-
     ev = stream_events(spark, sf_dir).where(F.col("event_type") == "purchase")
     customer = read_parquet(spark, os.path.join(sf_dir, "customer.parquet"))
     return ev.join(
@@ -326,6 +414,11 @@ def materialize_stream(
       batch partitions.
     - ``complete``: each micro-batch rewrites the full state — read only
       the highest ``_batch_id`` partition (the final state).
+
+    The checkpoint dir is removed once the query stops. The ``out`` dir
+    outlives the call, because the returned DataFrame reads it lazily;
+    like the IVM and incremental-minhash base dirs it still has no owner
+    (ROADMAP.md open item 2).
     """
     import tempfile
 
@@ -338,6 +431,7 @@ def materialize_stream(
         query.processAllAvailable()
     finally:
         query.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
     spark = df.sparkSession
     result = spark.read.parquet(out)
     if output_mode == "complete":
@@ -548,40 +642,32 @@ def stream_funnel_progress(
     within each micro-batch — the same documented approximation as the
     EMA operator. State is two scalars per user, bounded forever.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     steps = list(steps or ["view", "click", "purchase"])
-
     ev = (
         stream_events(spark, sf_dir)
         .where(F.col("event_type").isin(steps))
         .select("user_id", "ts", "event_id", "event_type")
     )
-
-    def update(key, pdfs, state: GroupState):
-        stage, t_prev = state.get if state.exists else (0, -1)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for ts, et in zip(rows["ts"], rows["event_type"]):
-                if stage < len(steps) and et == steps[stage]:
-                    t = int(pd.Timestamp(ts).value)
-                    if stage == 0 or t > t_prev:
-                        stage += 1
-                        t_prev = t
-        state.update((stage, t_prev))
-        yield pd.DataFrame({"user_id": [key[0]], "stages_completed": [stage]})
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, stages_completed int",
-        stateStructType="stage int, t_prev long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_replay(
+        ev,
+        "user_id",
+        "stage int, t_prev long",
+        "user_id long, stages_completed int",
+        (0, -1),
+        partial(_funnel_step, steps),
+        _key_and_count,
     )
+
+
+def _funnel_step(steps, key, state, row):
+    import pandas as pd
+
+    stage, t_prev = state
+    if stage < len(steps) and row.event_type == steps[stage]:
+        t = int(pd.Timestamp(row.ts).value)
+        if stage == 0 or t > t_prev:
+            return (stage + 1, t), ()
+    return state, ()
 
 
 def materialized_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -735,51 +821,13 @@ def stream_ewma(
     within each micro-batch — the same documented approximation as the
     funnel automaton.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ev = (
-        stream_events(spark, sf_dir)
-        .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * scale).cast("long").alias("cents"),
-        )
-    )
-
-    def update(key, pdfs, state: GroupState):
-        hist = list(state.get[0]) if state.exists else []
-        out = {"user_id": [], "event_id": [], "num": [], "den": []}
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, c in zip(rows["event_id"], rows["cents"]):
-                hist.append(int(c))
-                if len(hist) > span:
-                    hist = hist[-span:]
-                num = sum(
-                    v << (span - 1 - k) for k, v in enumerate(reversed(hist))
-                )
-                den = sum(
-                    1 << (span - 1 - k) for k in range(len(hist))
-                )
-                out["user_id"].append(key[0])
-                out["event_id"].append(int(eid))
-                out["num"].append(num)
-                out["den"].append(den)
-        state.update((hist,))
-        yield pd.DataFrame(out)
-
-    prog = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, event_id long, num long, den long",
-        stateStructType="hist array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    prog = _keyed_replay(
+        _purchase_cents(spark, sf_dir, scale),
+        "user_id",
+        "hist array<long>",
+        "user_id long, event_id long, num long, den long",
+        ([],),
+        partial(_ewma_step, [1 << (span - 1 - k) for k in range(span)]),
     )
     exact = materialize_stream(prog, output_mode="update")
     return exact.select(
@@ -794,6 +842,17 @@ def stream_ewma(
             6,
         ).alias("ewma"),
     )
+
+
+def _wsum(rev, w):
+    """Exact weighted sum of a newest-first history and its normalizer:
+    (sum rev[k] * w[k], sum w[k]) over k < min(len(rev), len(w))."""
+    return sum(v * x for v, x in zip(rev, w)), sum(w[: len(rev)])
+
+
+def _ewma_step(w, key, state, row):
+    hist = [*state[0], int(row.cents)][-len(w):]
+    return (hist,), [(key[0], int(row.event_id), *_wsum(hist[::-1], w))]
 
 
 def stream_holt(
@@ -813,63 +872,19 @@ def stream_holt(
     so on an in-order replay the output is bit-for-bit the batch
     operator's and the BATCH ORACLE grades the stream (18th
     stream==batch twin)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from datafusion_gpu_spark.operators.events import (
         holt_terminal_exprs,
         holt_weights,
     )
 
-    w1, w2 = holt_weights(span)
-    cap = 2 * span - 1
-    ev = (
-        stream_events(spark, sf_dir)
-        .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * scale).cast("long").alias("cents"),
-        )
-    )
-
-    def update(key, pdfs, state: GroupState):
-        hist = list(state.get[0]) if state.exists else []
-        out = {
-            "user_id": [], "event_id": [],
-            "num1": [], "den1": [], "num2": [], "den2": [],
-        }
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, c in zip(rows["event_id"], rows["cents"]):
-                hist.append(int(c))
-                if len(hist) > cap:
-                    hist = hist[-cap:]
-                rev = hist[::-1]  # rev[j] == c_{i-j}
-                out["user_id"].append(key[0])
-                out["event_id"].append(int(eid))
-                out["num1"].append(
-                    sum(v * w1[k] for k, v in enumerate(rev[:span]))
-                )
-                out["den1"].append(sum(w1[: min(span, len(rev))]))
-                out["num2"].append(sum(v * w2[j] for j, v in enumerate(rev)))
-                out["den2"].append(sum(w2[: len(rev)]))
-        state.update((hist,))
-        yield pd.DataFrame(out)
-
-    prog = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id long, event_id long, "
-            "num1 long, den1 long, num2 long, den2 long"
-        ),
-        stateStructType="hist array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    prog = _keyed_replay(
+        _purchase_cents(spark, sf_dir, scale),
+        "user_id",
+        "hist array<long>",
+        "user_id long, event_id long, "
+        "num1 long, den1 long, num2 long, den2 long",
+        ([],),
+        partial(_holt_step, *holt_weights(span)),
     )
     exact = materialize_stream(prog, output_mode="update")
     terms = holt_terminal_exprs(scale)
@@ -882,6 +897,15 @@ def stream_holt(
         "den2",
         *[F.expr(sql).alias(name) for name, sql in terms.items()],
     )
+
+
+def _holt_step(w1, w2, key, state, row):
+    # the S'' kernel w2 reaches back 2*span - 1 cents
+    hist = [*state[0], int(row.cents)][-len(w2):]
+    rev = hist[::-1]  # rev[j] == c_{i-j}
+    return (hist,), [
+        (key[0], int(row.event_id), *_wsum(rev, w1), *_wsum(rev, w2))
+    ]
 
 
 def stream_holt_winters(
@@ -908,100 +932,26 @@ def stream_holt_winters(
     the SAME holt_winters_terminal_exprs strings, so on an in-order
     replay the output is the batch operator's bit-for-bit and the BATCH
     ORACLE grades the stream."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from datafusion_gpu_spark.operators.events import (
         holt_weights,
         holt_winters_terminal_exprs,
         holt_winters_weights,
     )
 
-    w1, w2 = holt_weights(span)
-    sw = holt_winters_weights(season_span)
-    cap = 2 * span - 1
-    ev = (
-        stream_events(spark, sf_dir)
-        .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.hour("ts").cast("int").alias("slot"),
-            F.round(F.col("value") * scale).cast("long").alias("cents"),
-        )
-    )
-
-    def _sq(s_num: int, s_den: int) -> int:
-        # SQL ROUND(CAST(s_num AS DOUBLE) / s_den): IEEE division, then
-        # HALF_UP on the double's EXACT value (Decimal(float) is exact
-        # binary->decimal, same as java.math.BigDecimal(double))
-        from decimal import ROUND_HALF_UP, Decimal
-
-        if s_den <= 0:
-            return 0
-        return int(
-            Decimal(s_num / s_den).quantize(Decimal(1), rounding=ROUND_HALF_UP)
-        )
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            slots, scents, dhist = (
-                list(state.get[0]), list(state.get[1]), list(state.get[2])
-            )
-        else:
-            slots, scents, dhist = [], [], []
-        out = {
-            "user_id": [], "event_id": [], "slot": [], "sq": [],
-            "num1": [], "den1": [], "num2": [], "den2": [],
-        }
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, h, c in zip(rows["event_id"], rows["slot"], rows["cents"]):
-                h, c = int(h), int(c)
-                prior = [v for s, v in zip(slots, scents) if s == h]
-                rev = prior[::-1]  # rev[k-1] == same-slot lag k
-                s_num = sum(v * sw[k] for k, v in enumerate(rev[:season_span]))
-                s_den = sum(sw[: min(season_span, len(rev))])
-                sq = _sq(s_num, s_den)
-                d = c - sq
-                dhist.append(d)
-                if len(dhist) > cap:
-                    dhist = dhist[-cap:]
-                drev = dhist[::-1]  # drev[j] == d_{i-j}
-                out["user_id"].append(key[0])
-                out["event_id"].append(int(eid))
-                out["slot"].append(h)
-                out["sq"].append(sq)
-                out["num1"].append(
-                    sum(v * w1[k] for k, v in enumerate(drev[:span]))
-                )
-                out["den1"].append(sum(w1[: min(span, len(drev))]))
-                out["num2"].append(sum(v * w2[j] for j, v in enumerate(drev)))
-                out["den2"].append(sum(w2[: len(drev)]))
-                slots.append(h)
-                scents.append(c)
-                if len(prior) + 1 > season_span:
-                    # trim this slot's OLDEST entry; others untouched
-                    idx = next(
-                        k for k, s in enumerate(slots) if s == h
-                    )
-                    del slots[idx], scents[idx]
-        state.update((slots, scents, dhist))
-        yield pd.DataFrame(out)
-
-    prog = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id long, event_id long, slot int, sq long, "
-            "num1 long, den1 long, num2 long, den2 long"
+    prog = _keyed_replay(
+        _purchase_cents(
+            spark, sf_dir, scale, F.hour("ts").cast("int").alias("slot")
         ),
-        stateStructType="slots array<long>, scents array<long>, dhist array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "user_id",
+        "slots array<long>, scents array<long>, dhist array<long>",
+        "user_id long, event_id long, slot int, sq long, "
+        "num1 long, den1 long, num2 long, den2 long",
+        ([], [], []),
+        partial(
+            _holt_winters_step,
+            *holt_weights(span),
+            holt_winters_weights(season_span),
+        ),
     )
     exact = materialize_stream(prog, output_mode="update")
     terms = holt_winters_terminal_exprs(scale)
@@ -1016,6 +966,26 @@ def stream_holt_winters(
         "den2",
         *[F.expr(sql).alias(name) for name, sql in terms.items()],
     )
+
+
+def _holt_winters_step(w1, w2, sw, key, state, row):
+    slots, scents = [*state[0]], [*state[1]]
+    h, c = int(row.slot), int(row.cents)
+    prior = [v for s, v in zip(slots, scents) if s == h]
+    s_num, s_den = _wsum(prior[::-1], sw)  # reversed: [k-1] == same-slot lag k
+    # SQL ROUND(CAST(s_num AS DOUBLE) / s_den): IEEE division first
+    sq = _round_half_up(s_num / s_den) if s_den > 0 else 0
+    dhist = [*state[2], c - sq][-len(w2):]
+    drev = dhist[::-1]  # drev[j] == d_{i-j}
+    slots.append(h)
+    scents.append(c)
+    if len(prior) + 1 > len(sw):
+        # trim this slot's OLDEST entry; others untouched
+        idx = slots.index(h)
+        del slots[idx], scents[idx]
+    return (slots, scents, dhist), [
+        (key[0], int(row.event_id), h, sq, *_wsum(drev, w1), *_wsum(drev, w2))
+    ]
 
 
 def stream_page_hinkley(
@@ -1040,11 +1010,6 @@ def stream_page_hinkley(
     decimal HALF_UP on the double's exact value). The int64 headroom
     guard (NULL ph/alarm once max|g| * t nears 2^63) and the $100
     alarm threshold are the batch expressions verbatim."""
-    import pandas as pd
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     ev = stream_events(spark, sf_dir).where(F.col("value").isNotNull()).select(
         "event_type",
         "ts",
@@ -1052,86 +1017,16 @@ def stream_page_hinkley(
         F.unix_timestamp(F.date_trunc("hour", "ts")).cast("long").alias("bkt"),
         F.round(F.col("value") * scale).cast("long").alias("cents"),
     )
-
-    def _gq(x: int, sx: int, t: int) -> int:
-        v = 1e6 * (float(x) - float(sx) / t)
-        return int(Decimal(v).quantize(Decimal(1), rounding=ROUND_HALF_UP))
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            t, sx, mt, minm, mg, open_b, open_x, open_n = state.get
-        else:
-            t, sx, mt, minm, mg, open_b, open_x, open_n = 0, 0, 0, 0, 0, -1, 0, 0
-        out = {
-            "event_type": [], "bkt": [], "x": [], "t": [], "gq": [],
-            "mt": [], "ph": [], "alarm": [], "n_seen": [],
-        }
-
-        def emit(bkt, x, tp, gq, mtp, minp, mgp, n_seen):
-            safe = float(mgp) * tp < 9e18
-            out["event_type"].append(key[0])
-            out["bkt"].append(bkt)
-            out["x"].append(x)
-            out["t"].append(tp)
-            out["gq"].append(gq)
-            out["mt"].append(mtp)
-            out["ph"].append(mtp - minp if safe else None)
-            out["alarm"].append((mtp - minp > 10000000000) if safe else None)
-            out["n_seen"].append(n_seen)
-
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            touched = False
-            for b, c in zip(rows["bkt"], rows["cents"]):
-                b, c = int(b), int(c)
-                if open_b == -1:
-                    open_b, open_x, open_n = b, 0, 0
-                elif b > open_b:
-                    # real close: advance the fold with the final sums and
-                    # emit the bucket's FINAL row (a bucket that opens and
-                    # closes inside one micro-batch would otherwise never
-                    # be emitted)
-                    t += 1
-                    sx += open_x
-                    gq = _gq(open_x, sx, t)
-                    mt += gq
-                    minm = min(minm, mt)
-                    mg = max(mg, abs(gq))
-                    emit(open_b, open_x, t, gq, mt, minm, mg, open_n)
-                    open_b, open_x, open_n = b, 0, 0
-                open_x += c
-                open_n += 1
-                touched = True
-            if touched:
-                # provisional close of the still-open bucket: identical
-                # arithmetic to a real close, so the last emit for a
-                # bucket IS its final row once fully absorbed
-                tp = t + 1
-                sxp = sx + open_x
-                gq = _gq(open_x, sxp, tp)
-                mtp = mt + gq
-                emit(
-                    open_b, open_x, tp, gq, mtp,
-                    min(minm, mtp), max(mg, abs(gq)), open_n,
-                )
-        state.update((t, sx, mt, minm, mg, open_b, open_x, open_n))
-        yield pd.DataFrame(out)
-
-    prog = ev.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "event_type string, bkt long, x long, t long, gq long, "
-            "mt long, ph long, alarm boolean, n_seen long"
-        ),
-        stateStructType=(
-            "t long, sx long, mt long, minm long, mg long, "
-            "open_b long, open_x long, open_n long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    prog = _keyed_replay(
+        ev,
+        "event_type",
+        "t long, sx long, mt long, minm long, mg long, "
+        "open_b long, open_x long, open_n long",
+        "event_type string, bkt long, x long, t long, gq long, "
+        "mt long, ph long, alarm boolean, n_seen long",
+        (0, 0, 0, 0, 0, -1, 0, 0),
+        _page_hinkley_step,
+        _page_hinkley_flush,
     )
     raw = materialize_stream(prog, output_mode="update")
     # batch finish: the last (highest-coverage) emit per (type, bucket)
@@ -1155,6 +1050,43 @@ def stream_page_hinkley(
     )
 
 
+def _page_hinkley_close(key, state):
+    """Close the open hour: the fold advanced by its sums, and its row."""
+    t, sx, mt, minm, mg, open_b, open_x, open_n = state
+    t, sx = t + 1, sx + open_x
+    gq = _round_half_up(1e6 * (float(open_x) - float(sx) / t))
+    mt += gq
+    minm, mg = min(minm, mt), max(mg, abs(gq))
+    safe = float(mg) * t < 9e18
+    ph = mt - minm if safe else None
+    alarm = (mt - minm > 10000000000) if safe else None
+    row = (key[0], open_b, open_x, t, gq, mt, ph, alarm, open_n)
+    return (t, sx, mt, minm, mg), row
+
+
+def _page_hinkley_step(key, state, row):
+    b, c = int(row.bkt), int(row.cents)
+    *fold, open_b, open_x, open_n = state
+    out = []
+    if open_b == -1:
+        open_b, open_x, open_n = b, 0, 0
+    elif b > open_b:
+        # real close: advance the fold with the final sums and emit the
+        # bucket's FINAL row (a bucket that opens and closes inside one
+        # micro-batch would otherwise never be emitted)
+        fold, closed = _page_hinkley_close(key, state)
+        out.append(closed)
+        open_b, open_x, open_n = b, 0, 0
+    return (*fold, open_b, open_x + c, open_n + 1), out
+
+
+def _page_hinkley_flush(key, state):
+    # provisional close of the still-open bucket: identical arithmetic to
+    # a real close, so the last emit for a bucket IS its final row once
+    # fully absorbed
+    return [_page_hinkley_close(key, state)[1]]
+
+
 def stream_croston(
     spark: SparkSession, sf_dir: str, span: int = 8, scale: int = 100
 ) -> DataFrame:
@@ -1169,69 +1101,15 @@ def stream_croston(
     after the sink with the operator's exact strings, so in-order
     replay is bit-for-bit the batch operator and the BATCH ORACLE
     grades the stream."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    weights = [1 << (span - 1 - k) for k in range(span)]
-    ev = (
-        stream_events(spark, sf_dir)
-        .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("tus"),
-            F.round(F.col("value") * scale).cast("long").alias("cents"),
-        )
-    )
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            zs, gs, last_t = list(state.get[0]), list(state.get[1]), state.get[2]
-        else:
-            zs, gs, last_t = [], [], -1
-        out = {
-            "user_id": [], "event_id": [],
-            "num_z": [], "den_z": [], "num_g": [], "den_g": [],
-        }
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, t, c in zip(rows["event_id"], rows["tus"], rows["cents"]):
-                t, c = int(t), int(c)
-                g = (t - last_t) if last_t >= 0 else -1  # -1 == batch NULL
-                last_t = t
-                zs.append(c)
-                gs.append(g)
-                if len(zs) > span:
-                    zs, gs = zs[-span:], gs[-span:]
-                zrev, grev = zs[::-1], gs[::-1]
-                out["user_id"].append(key[0])
-                out["event_id"].append(int(eid))
-                out["num_z"].append(
-                    sum(v * weights[k] for k, v in enumerate(zrev))
-                )
-                out["den_z"].append(sum(weights[: len(zrev)]))
-                out["num_g"].append(
-                    sum(v * weights[k] for k, v in enumerate(grev) if v >= 0)
-                )
-                out["den_g"].append(
-                    sum(weights[k] for k, v in enumerate(grev) if v >= 0)
-                )
-        state.update((zs, gs, last_t))
-        yield pd.DataFrame(out)
-
-    prog = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id long, event_id long, "
-            "num_z long, den_z long, num_g long, den_g long"
-        ),
-        stateStructType="zs array<long>, gs array<long>, last_t long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    tus = F.unix_micros(F.col("ts").cast("timestamp")).alias("tus")
+    prog = _keyed_replay(
+        _purchase_cents(spark, sf_dir, scale, tus),
+        "user_id",
+        "zs array<long>, gs array<long>, last_t long",
+        "user_id long, event_id long, "
+        "num_z long, den_z long, num_g long, den_g long",
+        ([], [], -1),
+        partial(_croston_step, [1 << (span - 1 - k) for k in range(span)]),
     )
     exact = materialize_stream(prog, output_mode="update")
     return exact.select(
@@ -1256,6 +1134,22 @@ def stream_croston(
     )
 
 
+def _croston_step(w, key, state, row):
+    zs, gs, last_t = state
+    t, c = int(row.tus), int(row.cents)
+    g = (t - last_t) if last_t >= 0 else -1  # -1 == batch NULL
+    zs, gs = [*zs, c][-len(w):], [*gs, g][-len(w):]
+    # a NULL gap's kernel slot contributes zero weight (the batch CASE)
+    gw = [(v, x) for v, x in zip(gs[::-1], w) if v >= 0]
+    return (zs, gs, t), [(
+        key[0],
+        int(row.event_id),
+        *_wsum(zs[::-1], w),
+        sum(v * x for v, x in gw),
+        sum(x for _, x in gw),
+    )]
+
+
 def stream_donchian(
     spark: SparkSession, sf_dir: str, window: int = 20, scale: int = 100
 ) -> DataFrame:
@@ -1267,53 +1161,14 @@ def stream_donchian(
     position-in-channel presentation expression runs in Spark after
     the sink with the batch query's exact string, and the BATCH ORACLE
     grades the stream."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ev = (
-        stream_events(spark, sf_dir)
-        .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * scale).cast("long").alias("cents"),
-        )
-    )
-
-    def update(key, pdfs, state: GroupState):
-        hist = list(state.get[0]) if state.exists else []
-        out = {
-            "user_id": [], "event_id": [], "c": [],
-            "hi20": [], "lo20": [], "n_win": [],
-        }
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, c in zip(rows["event_id"], rows["cents"]):
-                hist.append(int(c))
-                if len(hist) > window:
-                    hist = hist[-window:]
-                out["user_id"].append(key[0])
-                out["event_id"].append(int(eid))
-                out["c"].append(int(c))
-                out["hi20"].append(max(hist))
-                out["lo20"].append(min(hist))
-                out["n_win"].append(len(hist))
-        state.update((hist,))
-        yield pd.DataFrame(out)
-
-    prog = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id long, event_id long, c long, "
-            "hi20 long, lo20 long, n_win long"
-        ),
-        stateStructType="hist array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    prog = _keyed_replay(
+        _purchase_cents(spark, sf_dir, scale),
+        "user_id",
+        "hist array<long>",
+        "user_id long, event_id long, c long, "
+        "hi20 long, lo20 long, n_win long",
+        ([],),
+        partial(_donchian_step, window),
     )
     exact = materialize_stream(prog, output_mode="update")
     return exact.select(
@@ -1331,6 +1186,14 @@ def stream_donchian(
     )
 
 
+def _donchian_step(window, key, state, row):
+    c = int(row.cents)
+    hist = [*state[0], c][-window:]
+    return (hist,), [
+        (key[0], int(row.event_id), c, max(hist), min(hist), len(hist))
+    ]
+
+
 def stream_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the batch per-user max-drawdown query
     (_MAX_DRAWDOWN in queries/pipeline.py): drawdown is a pure
@@ -1343,46 +1206,14 @@ def stream_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     terminal fraction expression as the batch SQL — so on an in-order
     replay the result is bit-for-bit the batch query's and the BATCH
     ORACLE grades the stream (19th stream==batch twin)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ev = (
-        stream_events(spark, sf_dir)
-        .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-    )
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            peak, mdd, n = state.get
-        else:
-            peak, mdd, n = None, 0, 0
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for c in rows["cents"]:
-                c = int(c)
-                n += 1
-                peak = c if peak is None else max(peak, c)
-                mdd = max(mdd, peak - c)
-        state.update((peak, mdd, n))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n": [n], "peak": [peak], "mdd": [mdd]}
-        )
-
-    prog = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n long, peak long, mdd long",
-        stateStructType="peak long, mdd long, n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    prog = _keyed_replay(
+        _purchase_cents(spark, sf_dir),
+        "user_id",
+        "peak long, mdd long, n long",
+        "user_id long, n long, peak long, mdd long",
+        (None, 0, 0),
+        _max_drawdown_step,
+        _max_drawdown_flush,
     )
     updates = materialize_stream(prog, output_mode="update")
     final = updates.groupBy("user_id").agg(
@@ -1401,6 +1232,18 @@ def stream_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
                END"""
         ).alias("max_drawdown_frac"),
     )
+
+
+def _max_drawdown_step(key, state, row):
+    peak, mdd, n = state
+    c = int(row.cents)
+    peak = c if peak is None else max(peak, c)
+    return (peak, max(mdd, peak - c), n + 1), ()
+
+
+def _max_drawdown_flush(key, state):
+    peak, mdd, n = state
+    return [(key[0], n, peak, mdd)]
 
 
 def stream_ohlc(
@@ -1486,9 +1329,6 @@ def stream_cusum(
     (update mode); the final state per key is the row with the largest
     n_events.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     ev_b = (
         read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
         .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
@@ -1500,69 +1340,16 @@ def stream_cusum(
         F.round(F.lit(h_sigmas) * F.stddev_pop("__xq__")).cast("long").alias("h"),
     )
 
-    ev = (
-        stream_events(spark, sf_dir)
-        .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.round(F.col("value") * scale).cast("long").alias("cents"),
-        )
-        .join(F.broadcast(stats), "user_id")
-    )
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            cum, minc, n, n_alarms, peak, first_id, started = state.get
-        else:
-            cum, minc, n, n_alarms, peak, first_id, started = 0, 0, 0, 0, 0, -1, 0
-        out = {
-            "user_id": [],
-            "n_events": [],
-            "n_alarms": [],
-            "peak_cusum": [],
-            "first_alarm_id": [],
-        }
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for eid, c, mu, k, h in zip(
-                rows["event_id"], rows["cents"], rows["mu"], rows["k"], rows["h"]
-            ):
-                y = int(c) - int(mu) - int(k)
-                cum += y
-                minc = cum if not started else min(minc, cum)
-                started = 1
-                s = cum - min(0, minc)
-                n += 1
-                peak = max(peak, s)
-                if int(h) > 0 and s > int(h):
-                    n_alarms += 1
-                    if first_id < 0:
-                        first_id = int(eid)
-            out["user_id"].append(key[0])
-            out["n_events"].append(n)
-            out["n_alarms"].append(n_alarms)
-            out["peak_cusum"].append(peak)
-            out["first_alarm_id"].append(first_id)
-        state.update((cum, minc, n, n_alarms, peak, first_id, started))
-        yield pd.DataFrame(out)
-
-    prog = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "user_id long, n_events long, n_alarms long, "
-            "peak_cusum long, first_alarm_id long"
-        ),
-        stateStructType=(
-            "cum long, minc long, n long, n_alarms long, peak long, "
-            "first_id long, started long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    prog = _keyed_replay(
+        _purchase_cents(spark, sf_dir, scale).join(F.broadcast(stats), "user_id"),
+        "user_id",
+        "cum long, minc long, n long, n_alarms long, peak long, "
+        "first_id long, started long",
+        "user_id long, n_events long, n_alarms long, "
+        "peak_cusum long, first_alarm_id long",
+        (0, 0, 0, 0, 0, -1, 0),
+        _cusum_step,
+        _cusum_flush,
     )
     from pyspark.sql import Window as W
 
@@ -1586,6 +1373,25 @@ def stream_cusum(
             "first_alarm_id"
         ),
     )
+
+
+def _cusum_step(key, state, row):
+    cum, minc, n, n_alarms, peak, first_id, started = state
+    h = int(row.h)
+    cum += int(row.cents) - int(row.mu) - int(row.k)
+    minc = cum if not started else min(minc, cum)
+    s = cum - min(0, minc)
+    peak = max(peak, s)
+    if h > 0 and s > h:
+        n_alarms += 1
+        if first_id < 0:
+            first_id = int(row.event_id)
+    return (cum, minc, n + 1, n_alarms, peak, first_id, 1), ()
+
+
+def _cusum_flush(key, state):
+    cum, minc, n, n_alarms, peak, first_id, started = state
+    return [(key[0], n, n_alarms, peak, first_id)]
 
 
 def stream_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1766,6 +1572,11 @@ def stream_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: the SPRT's log-likelihood constants, pre-quantized to 1e-12 (success,
+#: failure, decision bound)
+_SPRT_AQ, _SPRT_BQ, _SPRT_UQ = 287682072452, -60624621816, 2944438979166
+
+
 def stream_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the batch SPRT query (_SPRT in
     queries/pipeline_stats.py) — the 24th stream==batch automaton.
@@ -1784,12 +1595,6 @@ def stream_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     division + the decision CASE) happens in Spark expressions after
     the sink, spelled identically to the batch SQL, and the BATCH
     ORACLE grades the stream."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    aq, bq, uq = 287682072452, -60624621816, 2944438979166
-
     ev = stream_events(spark, sf_dir).select(
         "ts",
         "event_id",
@@ -1797,88 +1602,24 @@ def stream_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp(F.date_trunc("hour", "ts")).cast("long").alias("bkt"),
         (F.col("event_type") == "purchase").cast("long").alias("x"),
     )
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            cn, cd, cn_up, cn_dn, open_b, open_n, open_d = state.get
-        else:
-            cn, cd, cn_up, cn_dn, open_b, open_n, open_d = 0, 0, 0, 0, -1, 0, 0
-        out = {
-            "bkt": [], "n": [], "d": [], "cn": [], "cd": [],
-            "up": [], "dn": [], "n_seen": [],
-        }
-
-        def emit(bkt, nn, dd, cnp, cdp, upp, dnp):
-            out["bkt"].append(bkt)
-            out["n"].append(nn)
-            out["d"].append(dd)
-            out["cn"].append(cnp)
-            out["cd"].append(cdp)
-            out["up"].append(upp)
-            out["dn"].append(dnp)
-            out["n_seen"].append(nn)
-
-        def crossings(cnp, cdp, upp, dnp):
-            # latch-or-provisional: the first crossing count, taking the
-            # already-latched value when set (MIN over history == first,
-            # since cn is strictly increasing)
-            llr = cdp * aq + (cnp - cdp) * bq
-            if upp == 0 and llr >= uq:
-                upp = cnp
-            if dnp == 0 and llr <= -uq:
-                dnp = cnp
-            return upp, dnp
-
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            touched = False
-            for b, x in zip(rows["bkt"], rows["x"]):
-                b, x = int(b), int(x)
-                if open_b == -1:
-                    open_b, open_n, open_d = b, 0, 0
-                elif b > open_b:
-                    # real close: advance the fold, PERSIST the latches,
-                    # emit the bucket's final row
-                    cn += open_n
-                    cd += open_d
-                    cn_up, cn_dn = crossings(cn, cd, cn_up, cn_dn)
-                    emit(open_b, open_n, open_d, cn, cd, cn_up, cn_dn)
-                    open_b, open_n, open_d = b, 0, 0
-                open_n += 1
-                open_d += x
-                touched = True
-            if touched:
-                # provisional close of the open bucket: same arithmetic,
-                # latches NOT persisted (a mid-hour excursion the full
-                # hour retracts must not stick)
-                cnp, cdp = cn + open_n, cd + open_d
-                upp, dnp = crossings(cnp, cdp, cn_up, cn_dn)
-                emit(open_b, open_n, open_d, cnp, cdp, upp, dnp)
-        state.update((cn, cd, cn_up, cn_dn, open_b, open_n, open_d))
-        yield pd.DataFrame(out)
-
-    prog = ev.groupBy("g").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "bkt long, n long, d long, cn long, cd long, "
-            "up long, dn long, n_seen long"
-        ),
-        stateStructType=(
-            "cn long, cd long, cn_up long, cn_dn long, "
-            "open_b long, open_n long, open_d long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    prog = _keyed_replay(
+        ev,
+        "g",
+        "cn long, cd long, cn_up long, cn_dn long, "
+        "open_b long, open_n long, open_d long",
+        "bkt long, n long, d long, cn long, cd long, "
+        "up long, dn long, n_seen long",
+        (0, 0, 0, 0, -1, 0, 0),
+        _sprt_step,
+        _sprt_flush,
     )
     raw = materialize_stream(prog, output_mode="update")
     from pyspark.sql import Window
 
     w = Window.partitionBy("bkt").orderBy(F.col("n_seen").desc())
-    llr_q = F.col("cd") * F.lit(aq) + (F.col("cn") - F.col("cd")) * F.lit(bq)
-    headroom = F.col("cn").cast("double") * F.lit(float(aq)) < F.lit(9e18)
+    cd, cn = F.col("cd"), F.col("cn")
+    llr_q = cd * F.lit(_SPRT_AQ) + (cn - cd) * F.lit(_SPRT_BQ)
+    headroom = cn.cast("double") * F.lit(float(_SPRT_AQ)) < F.lit(9e18)
     return (
         raw.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
@@ -1900,6 +1641,44 @@ def stream_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("decision"),
         )
     )
+
+
+def _sprt_close(state):
+    """Close the open hour: the fold advanced by its counts, and its row."""
+    cn, cd, cn_up, cn_dn, open_b, open_n, open_d = state
+    cn, cd = cn + open_n, cd + open_d
+    # latch-or-provisional: the first crossing count, taking the
+    # already-latched value when set (MIN over history == first, since cn
+    # is strictly increasing)
+    llr = cd * _SPRT_AQ + (cn - cd) * _SPRT_BQ
+    if cn_up == 0 and llr >= _SPRT_UQ:
+        cn_up = cn
+    if cn_dn == 0 and llr <= -_SPRT_UQ:
+        cn_dn = cn
+    row = (open_b, open_n, open_d, cn, cd, cn_up, cn_dn, open_n)
+    return (cn, cd, cn_up, cn_dn), row
+
+
+def _sprt_step(key, state, row):
+    b, x = int(row.bkt), int(row.x)
+    *fold, open_b, open_n, open_d = state
+    out = []
+    if open_b == -1:
+        open_b, open_n, open_d = b, 0, 0
+    elif b > open_b:
+        # real close: advance the fold, PERSIST the latches, emit the
+        # bucket's final row
+        fold, closed = _sprt_close(state)
+        out.append(closed)
+        open_b, open_n, open_d = b, 0, 0
+    return (*fold, open_b, open_n + 1, open_d + x), out
+
+
+def _sprt_flush(key, state):
+    # provisional close of the open bucket: same arithmetic, latches NOT
+    # persisted (a mid-hour excursion the full hour retracts must not
+    # stick) — the closed state is dropped
+    return [_sprt_close(state)[1]]
 
 
 def stream_mcnemar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,6 +4,8 @@ processAllAvailable)."""
 
 from __future__ import annotations
 
+import pytest
+
 from datafusion_gpu_spark.context import register_tables
 from datafusion_gpu_spark.streaming import (
     run_stream_to_memory,
@@ -710,3 +712,156 @@ def test_streaming_incremental_minhash_equals_batch(spark):
         ).collect()
     }
     assert got == want
+
+
+# --- micro-batch boundary: the keyed-replay harness without Spark --------
+
+class _HeldState:
+    """GroupState stand-in holding what Spark hands back between
+    micro-batches: the stored tuple (array fields as lists)."""
+
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return tuple(self.value)
+
+    def update(self, value):
+        self.value = tuple(list(v) if isinstance(v, list) else v for v in value)
+
+
+def _synthetic_events(n=240, seed=7):
+    """Three users' mixed events over ~30 hours, with timestamp ties
+    (broken by event_id) and every column a stateful twin's step reads."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(seed)
+    t0 = pd.Timestamp("2024-01-01")
+    minutes = sorted(rng.randrange(0, 30 * 60) for _ in range(n))
+    minutes[10:14] = [minutes[10]] * 4  # a run of equal timestamps
+    ev = pd.DataFrame(
+        {
+            "user_id": rng.choices([1, 2, 3], k=n),
+            "event_type": rng.choices(["view", "click", "purchase"], k=n),
+            "ts": [t0 + pd.Timedelta(minutes=m) for m in minutes],
+            "event_id": rng.sample(range(10_000), n),
+            "cents": rng.choices(range(2_000), k=n),
+        }
+    )
+    ev = ev.sort_values(["ts", "event_id"], ignore_index=True)
+    ev["slot"] = ev["ts"].dt.hour
+    ev["tus"] = ev["ts"].astype("int64") // 1_000
+    ev["bkt"] = ev["ts"].dt.floor("h").astype("int64") // 1_000_000_000
+    ev["x"] = (ev["event_type"] == "purchase").astype("int64")
+    ev["g"] = 1
+    # CUSUM's batch-trained per-user baseline, small enough to alarm
+    ev["mu"], ev["k"], ev["h"] = 900, 50, ev["user_id"] * 400
+    return ev
+
+
+def _twins():
+    """name -> (group column, init, step, flush, output width, number of
+    leading columns that identify an emit; None = per-row twin, where
+    every emit is kept)."""
+    from functools import partial
+
+    from datafusion_gpu_spark import streaming as S
+    from datafusion_gpu_spark.operators.events import (
+        holt_weights,
+        holt_winters_weights,
+    )
+
+    holt = partial(S._holt_step, *holt_weights(3))
+    hw = partial(S._holt_winters_step, *holt_weights(3), holt_winters_weights(2))
+    # a 30-stage funnel, so no synthetic user completes it in one batch
+    funnel = partial(S._funnel_step, ["view", "click", "purchase"] * 10)
+    return {
+        "ewma": ("user_id", ([],), partial(S._ewma_step, [8, 4, 2, 1]), None, 4, None),
+        "holt": ("user_id", ([],), holt, None, 6, None),
+        "holt_winters": ("user_id", ([], [], []), hw, None, 8, None),
+        "croston": (
+            "user_id", ([], [], -1), partial(S._croston_step, [4, 2, 1]), None, 6, None
+        ),
+        "donchian": ("user_id", ([],), partial(S._donchian_step, 4), None, 6, None),
+        "user_counts": ("user_id", (0,), S._count_step, S._key_and_count, 2, 1),
+        "funnel": ("user_id", (0, -1), funnel, S._key_and_count, 2, 1),
+        "max_drawdown": (
+            "user_id", (None, 0, 0), S._max_drawdown_step, S._max_drawdown_flush, 4, 1
+        ),
+        "cusum": (
+            "user_id", (0, 0, 0, 0, 0, -1, 0), S._cusum_step, S._cusum_flush, 5, 1
+        ),
+        "page_hinkley": (
+            "event_type",
+            (0, 0, 0, 0, 0, -1, 0, 0),
+            S._page_hinkley_step,
+            S._page_hinkley_flush,
+            9,
+            2,
+        ),
+        "sprt": ("g", (0, 0, 0, 0, -1, 0, 0), S._sprt_step, S._sprt_flush, 8, 1),
+    }
+
+
+def _replay(ev, twin, n_batches, scramble):
+    """Feed ``ev`` to the harness as ``n_batches`` contiguous micro-batches,
+    one _replay_batch call per key present, state held between batches the
+    way Spark holds it. ``scramble`` hands each key's rows over shuffled,
+    in three chunks plus an empty one."""
+    from datafusion_gpu_spark.streaming import _replay_batch
+
+    key, init, step, flush, width, ident = twin
+    cols = [f"c{i}" for i in range(width)]
+    held, out = {}, []
+    bounds = [len(ev) * i // n_batches for i in range(n_batches + 1)]
+    for lo, hi in zip(bounds, bounds[1:]):
+        for k, rows in ev.iloc[lo:hi].groupby(key, sort=True):
+            chunks = [rows]
+            if scramble:
+                rows = rows.sample(frac=1, random_state=lo)
+                a, b = len(rows) // 3, 2 * len(rows) // 3
+                chunks = [rows[:a], rows[:0], rows[a:b], rows[b:]]
+            state = held.setdefault(k, _HeldState())
+            batch = _replay_batch(cols, init, step, flush, (k,), iter(chunks), state)
+            for frame in batch:
+                out.extend(frame.itertuples(index=False, name=None))
+    if ident is None:
+        return sorted(out)
+    return {r[:ident]: r for r in out}  # the last emit per key (and bucket)
+
+
+@pytest.mark.parametrize("name", sorted(_twins()))
+def test_replay_is_micro_batch_boundary_invariant(name):
+    # every stream==batch test replays one file = ONE micro-batch, so the
+    # state carried across batches is only exercised here: 1, 2 and 7
+    # micro-batches, sorted or scrambled chunks, must give the one-batch
+    # result (per-row twins: every emit; flush twins: the last emit)
+    twin = _twins()[name]
+    ev = _synthetic_events()
+    want = _replay(ev, twin, 1, scramble=False)
+    assert len(want) > 2
+    for n_batches in (1, 2, 7):
+        for scramble in (False, True):
+            assert _replay(ev, twin, n_batches, scramble) == want, (n_batches, scramble)
+
+
+def test_materialize_stream_removes_its_checkpoint_dir(
+    spark, tmp_path, monkeypatch
+):
+    import tempfile
+
+    from datafusion_gpu_spark.streaming import materialize_stream, stream_events
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for _ in range(2):
+        materialize_stream(stream_events(spark, SF_DIR).select("event_id")).count()
+    assert not list(tmp_path.glob("dgs_stream_ckpt_*"))
+    # the read-back's own dir stays (the DataFrame reads it lazily)
+    assert len(list(tmp_path.glob("dgs_stream_out_*"))) == 2
