@@ -48,6 +48,22 @@ TESTDATA_TABLES = (
 #: which sees their actual size at runtime.
 BROADCAST_TABLES = {"region", "nation"}
 
+#: Entries in Spark's whole-stage codegen cache
+#: (``spark.sql.codegen.cache.maxEntries``, default 100). The cache is an
+#: LRU of compiled generated classes, and a warm query that misses it
+#: compiles its classes again (~6 ms each) and runs them interpreted
+#: until the JIT catches up. Measured working sets, sf0.01, 4 cores, ops
+#: repeated in order (compiles = ``CodegenMetrics`` compilation count):
+#: one pass of perfbench's ``sql_interactive`` (12 ops) compiles 123
+#: classes, ``pipeline_graph`` (11 ops) 197, bench.py's 31 sf rows 869.
+#: At 100 entries a warm pass recompiles 70 and ~194 of them; at 1000,
+#: 0 and 0 (bench.py's rows: 8). The conf is static and the cache
+#: JVM-global, built at the first compile: it reaches only sessions
+#: get_spark creates in a fresh JVM (perfbench, bench.py, the REPL,
+#: tools/, the test session). A plain session built elsewhere, such as
+#: the one the driver hands ``__spark_entry__.entry``, keeps Spark's 100.
+CODEGEN_CACHE_ENTRIES = 1024
+
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition UP when the input has fewer partitions than cores.
@@ -103,6 +119,7 @@ def get_spark(
         # rebuilds proper timestamps from the longs.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

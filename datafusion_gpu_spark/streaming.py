@@ -26,6 +26,7 @@ on plain lists in tests.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 from decimal import ROUND_HALF_UP, Decimal
@@ -34,37 +35,42 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datafusion_gpu_spark.context import read_parquet
+from datafusion_gpu_spark.context import (
+    _cached_scan,
+    _ns_timestamp_columns,
+    read_parquet,
+)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbounded view of the events table via the file streaming source.
 
-    Streams need an explicit schema: it is taken from one batch-read of
-    the same file (footer metadata only — no data scan), including the
-    ns-timestamp handling from context.read_parquet: the stream reads
-    raw int64 nanos and rebuilds the timestamp column in-plan.
+    Streams need an explicit schema: it is taken from the session's
+    cached batch scan of the same file (context._cached_scan; footer
+    metadata only — no data scan). A file with TIMESTAMP(NANOS) columns
+    also needs its raw schema, which one more batch read supplies: the
+    stream reads those columns as raw int64 nanos and rebuilds the
+    timestamps in-plan, mirroring context.read_parquet.
     """
     path = os.path.join(sf_dir, "events.parquet")
-    # ns-precision files require spark.sql.legacy.parquet.nanosAsLong at
-    # session BUILD time (context.get_spark sets it); no runtime conf
-    # mutation here — on a session without it, a ns file fails the batch
-    # read below with Spark's own message naming that conf.
-    raw_schema = spark.read.parquet(path).schema  # pre-conversion schema
-    converted = read_parquet(spark, path).schema
+    schema = _cached_scan(spark, path).schema
+    ns_cols = _ns_timestamp_columns(path)
+    if ns_cols:
+        # ns-precision files require spark.sql.legacy.parquet.nanosAsLong
+        # at session BUILD time (context.get_spark sets it); no runtime
+        # conf mutation here — on a session without it, a ns file fails
+        # this batch read with Spark's own message naming that conf.
+        schema = spark.read.parquet(path).schema  # pre-conversion schema
     # the file source requires a directory: stream the sf dir and select
     # just the events file via pathGlobFilter
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
     # rebuild ns-long columns into proper timestamps, mirroring read_parquet
-    for field in converted.fields:
-        if str(field.dataType) != str(raw_schema[field.name].dataType):
-            stream = stream.withColumn(
-                field.name, F.timestamp_micros(F.expr(f"`{field.name}` div 1000"))
-            )
+    for c in ns_cols:
+        stream = stream.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     # watermarks require TIMESTAMP (LTZ); parquet micro-precision columns
     # without UTC-adjustment metadata infer as TIMESTAMP_NTZ. The session
     # timezone is pinned to UTC (context.get_spark), so this cast keeps the
@@ -416,13 +422,16 @@ def materialize_stream(
       the highest ``_batch_id`` partition (the final state).
 
     The checkpoint dir is removed once the query stops. The ``out`` dir
-    outlives the call, because the returned DataFrame reads it lazily;
-    like the IVM and incremental-minhash base dirs it still has no owner
-    (ROADMAP.md open item 2).
+    outlives the call, because the returned DataFrame reads it lazily —
+    and so do DataFrames derived from it, after the returned object is
+    gone — so it is removed when the process exits (``atexit``), like the
+    IVM and incremental-minhash base dirs. A long-lived session still
+    accumulates one per call until then (ROADMAP.md open item 2).
     """
     import tempfile
 
     out = tempfile.mkdtemp(prefix="dgs_stream_out_")
+    atexit.register(shutil.rmtree, out, True)
     ckpt = tempfile.mkdtemp(prefix="dgs_stream_ckpt_")
     query = stream_to_parquet(
         df, out, ckpt, output_mode=output_mode, available_now=available_now
@@ -744,6 +753,7 @@ def materialized_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_gpu_spark.operators.layout import incremental_agg
 
     base = tempfile.mkdtemp(prefix="spark_graft_ivm_")
+    atexit.register(shutil.rmtree, base, True)
     orders = read_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
     feed_dir = os.path.join(base, "feed")
     orders.repartition(8).write.mode("overwrite").parquet(feed_dir)
@@ -1999,6 +2009,7 @@ def materialized_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
     base = tempfile.mkdtemp(prefix="spark_graft_inclsh_")
+    atexit.register(shutil.rmtree, base, True)
     docs = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
     history = docs.where(F.col("doc_id") % 10 < 8)
     batch = docs.where(F.col("doc_id") % 10 >= 8)

@@ -70,6 +70,29 @@ def test_readme_parity_queries_run_verbatim(spark):
         assert abs(base - got) / abs(base) < 1e-4
 
 
+def test_codegen_cache_holds_an_interleaved_working_set(spark):
+    """Warm queries reuse their compiled classes: 64 distinct shapes (2
+    generated classes each, 128 entries, beyond Spark's default cache of
+    100) run between two runs of shape 0, whose second run then compiles
+    nothing. Back-to-back repeats of one shape would pass at any size."""
+    from datafusion_gpu_spark.context import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME().getCount
+
+    def shape(i):
+        spark.range(4).select((F.col("id") * 3 + F.lit(i)).alias("x")).collect()
+
+    for i in range(64):
+        shape(i)
+    before = compiles()
+    shape(0)
+    assert compiles() == before
+
+
 def test_scan_cache_sweeps_stopped_sessions_and_clear_hook():
     """ADVICE r10 #1: the per-session registration state must not accrete
     dead sessions (swept on touch via the _jsc liveness probe) and must

@@ -865,3 +865,54 @@ def test_materialize_stream_removes_its_checkpoint_dir(
     assert not list(tmp_path.glob("dgs_stream_ckpt_*"))
     # the read-back's own dir stays (the DataFrame reads it lazily)
     assert len(list(tmp_path.glob("dgs_stream_out_*"))) == 2
+
+
+def test_materialize_stream_output_dir_is_removed_at_exit(spark, tmp_path, monkeypatch):
+    # the out dir outlives the call (derived DataFrames read it after the
+    # returned one is collected), so its owner is the process: an atexit
+    # rmtree, captured here instead of waiting for interpreter exit
+    import gc
+    import tempfile
+    import types
+
+    from datafusion_gpu_spark import streaming
+
+    callbacks = []
+    monkeypatch.setattr(
+        streaming, "atexit", types.SimpleNamespace(register=lambda *a: callbacks.append(a))
+    )
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    df = streaming.materialize_stream(streaming.stream_events(spark, SF_DIR))
+    keys = df.select("user_id", "event_type").distinct()
+    n_events = df.count()
+    del df
+    gc.collect()
+    [out] = tmp_path.glob("dgs_stream_out_*")
+    assert keys.count() > 0 and n_events > 0
+    [(rmtree, path, ignore_errors)] = callbacks
+    assert path == str(out) and ignore_errors
+    rmtree(path, ignore_errors)
+    assert not out.exists()
+
+
+def test_stream_events_rebuilds_nanosecond_timestamps(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from datafusion_gpu_spark.context import read_parquet
+    from datafusion_gpu_spark.streaming import materialize_stream, stream_events
+
+    table = pq.read_table(f"{SF_DIR}/events.parquet")
+    ts = table.schema.get_field_index("ts")
+    table = table.set_column(ts, "ts", table.column(ts).cast(pa.timestamp("ns")))
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(table, path, version="2.6")
+    assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
+
+    stream = stream_events(spark, str(tmp_path))
+    assert dict(stream.dtypes)["ts"] == "timestamp"
+    got = sorted(materialize_stream(stream.select("event_id", "ts")).collect())
+    micros = read_parquet(spark, f"{SF_DIR}/events.parquet")
+    want = sorted(micros.select("event_id", F.col("ts").cast("timestamp")).collect())
+    assert got == want and len(got) > 0
