@@ -20,11 +20,15 @@ so a 10^9-row table is as cheap to declare as the reference's 10^6.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
 from py4j.java_gateway import JavaObject
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -197,7 +201,7 @@ class _View(NamedTuple):
 
 @dataclass
 class _SessionState:
-    """What register_tables / register_aggregates set up in one session.
+    """What this package set up, and wrote, in one session.
 
     - ``scans``: constructed parquet-scan DataFrames by path. A DataFrame
       is an immutable lazy plan, so reusing one is semantically identical
@@ -207,12 +211,18 @@ class _SessionState:
     - ``views``: the :class:`_View` registered under each view name.
     - ``aggregates``: SQL name -> (JVM ``FunctionIdentifier``, the
       ``lookupFunctionBuilder`` Option right after registering).
+    - ``scratch``: the root of every directory :func:`scratch_dir` hands
+      out, created on first use.
+    - ``counted``: the relations ``operators.stats.cumsum_auto`` persisted
+      for its routing count, oldest first.
     """
 
     session: SparkSession
     scans: dict[str, DataFrame] = field(default_factory=dict)
     views: dict[str, _View] = field(default_factory=dict)
     aggregates: dict[str, tuple[JavaObject, JavaObject]] = field(default_factory=dict)
+    scratch: str | None = None
+    counted: list[DataFrame] = field(default_factory=list)
 
 
 #: Register once, then check: the star schema views and the custom sums
@@ -232,8 +242,28 @@ class _SessionState:
 #: probed, not inferred from refcounts). A scan captures the file listing
 #: at construction, so the parquet files must be static for the session's
 #: lifetime; callers that rewrite parquet at a registered path mid-session
-#: must call :func:`clear_scan_cache` first.
+#: must call :func:`clear_scan_cache` first. Dropping an entry (sweep or
+#: clear) removes its scratch root and unpersists its counted relations;
+#: one exit hook removes the roots left at exit.
 _SESSION_STATE: dict[int, _SessionState] = {}
+
+
+def _release(state: _SessionState) -> None:
+    if state.scratch is not None:
+        shutil.rmtree(state.scratch, ignore_errors=True)
+    for df in state.counted:
+        try:
+            df.unpersist(blocking=False)
+        except Py4JError:
+            pass  # session stopped — nothing left to release
+
+
+@atexit.register
+def _remove_scratch_roots() -> None:
+    # only the files: the JVM may already be gone at exit
+    for state in _SESSION_STATE.values():
+        if state.scratch is not None:
+            shutil.rmtree(state.scratch, ignore_errors=True)
 
 
 def clear_scan_cache(spark: SparkSession | None = None, path: str | None = None) -> None:
@@ -241,15 +271,19 @@ def clear_scan_cache(spark: SparkSession | None = None, path: str | None = None)
     (session, path) — its scan plan and the views over it, which the
     next register_tables re-creates from a fresh scan. Required before
     re-reading a parquet path whose files were REWRITTEN mid-session —
-    the cached plan holds the old file listing."""
+    the cached plan holds the old file listing. Forgetting a session
+    also removes its scratch root (:func:`scratch_dir`), so DataFrames
+    that read files under it must not run afterwards."""
     if spark is None:
+        for state in _SESSION_STATE.values():
+            _release(state)
         _SESSION_STATE.clear()
         return
     state = _SESSION_STATE.get(id(spark))
     if state is None or state.session is not spark:
         return
     if path is None:
-        del _SESSION_STATE[id(spark)]
+        _release(_SESSION_STATE.pop(id(spark)))
         return
     state.scans.pop(path, None)
     for name in [n for n, v in state.views.items() if v.path == path]:
@@ -269,11 +303,22 @@ def session_state(spark: SparkSession) -> _SessionState:
     of stopped sessions are swept on every call."""
     for key, st in list(_SESSION_STATE.items()):
         if st.session is not spark and _session_stopped(st.session):
-            del _SESSION_STATE[key]
+            _release(_SESSION_STATE.pop(key))
     state = _SESSION_STATE.get(id(spark))
     if state is None or state.session is not spark:
         state = _SESSION_STATE[id(spark)] = _SessionState(spark)
     return state
+
+
+def scratch_dir(spark: SparkSession, name: str) -> str:
+    """A new, empty directory for files a query writes and reads back,
+    under the session's scratch root (``tempfile.mkdtemp``, so it follows
+    ``TMPDIR``). Being fresh per call, building a query again never
+    touches the files an earlier DataFrame still reads."""
+    state = session_state(spark)
+    if state.scratch is None:
+        state.scratch = tempfile.mkdtemp(prefix="dgs_session_")
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=state.scratch)
 
 
 def _cached_scan(spark: SparkSession, path: str) -> DataFrame:

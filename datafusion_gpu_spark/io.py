@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from datafusion_gpu_spark.context import scratch_dir
+
 # -- native formats ----------------------------------------------------------
 
 
@@ -125,8 +127,6 @@ def write_arrow_ipc(df: DataFrame, out_dir: str) -> DataFrame:
     returned manifest (path, rows) is a local relation — re-evaluating
     it, task retries aside, can never append a second set of uuid part
     files into the already-cleaned directory."""
-    import shutil
-
     import pyarrow as pa
 
     # overwrite semantics like DataFrameWriter.mode("overwrite"): stale
@@ -192,8 +192,8 @@ def write_bucketed(
     num_buckets: int = 16,
     sort_by: list[str] | None = None,
 ) -> None:
-    """Persist a DataFrame as a bucketed (and optionally sorted) managed
-    table — the co-located-join layout for 100 TB fact tables.
+    """Persist a DataFrame as a bucketed (and optionally sorted) table —
+    the co-located-join layout for 100 TB fact tables.
 
     Two facts bucketed identically on their join key join WITHOUT a
     shuffle: each task reads bucket i of both sides (Spark requires
@@ -203,17 +203,17 @@ def write_bucketed(
     local merge per bucket; pick num_buckets so one bucket of the larger
     side fits an executor's memory (e.g. 100 TB / 2048 buckets ≈ 50 GB
     per bucket pre-compression).
+
+    The table is EXTERNAL: its files go to a fresh
+    ``context.scratch_dir``, not the warehouse, so re-saving the name
+    drops only the catalog entry, and a DataFrame read from the earlier
+    table keeps reading its own files.
     """
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # a table dir can survive from a PREVIOUS session whose catalog is
-    # gone (managed-table location with no catalog entry); overwrite
-    # then fails with LOCATION_ALREADY_EXISTS — remove the orphan
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = os.path.join(warehouse.removeprefix("file:"), table.lower())
-    if "." not in table and os.path.isdir(loc):
-        shutil.rmtree(loc)
-    w = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_by)
+    w = df.write.bucketBy(num_buckets, *bucket_by).option(
+        "path", scratch_dir(spark, table)
+    )
     if sort_by:
         w = w.sortBy(*sort_by)
     w.saveAsTable(table)

@@ -120,28 +120,27 @@ def bucketed_cumsum(
     )
 
 
-#: Bounded FIFO of relations persisted by :func:`cumsum_auto` for its
-#: routing count. Keeping the handle until a few more invocations have
-#: come through guarantees the downstream read hits the persisted
+#: Relations persisted by :func:`cumsum_auto` for its routing count
+#: stay persisted until a few more invocations in the same session have
+#: come through (``context._SessionState.counted``, oldest first).
+#: Keeping the handle guarantees the downstream read hits the persisted
 #: blocks (the count's materialization) instead of re-running the
 #: upstream aggregation; the bound keeps a long-lived session from
 #: accreting cached blocks. Evicting early is CORRECT, just slower —
 #: Spark recomputes an unpersisted plan from lineage.
 _COUNTED_KEEP = 8
-_counted_fifo: list[DataFrame] = []
 
 
 def _persist_for_count(df: DataFrame) -> DataFrame:
     from pyspark import StorageLevel
 
+    from datafusion_gpu_spark.context import session_state
+
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _counted_fifo.append(df)
-    while len(_counted_fifo) > _COUNTED_KEEP:
-        old = _counted_fifo.pop(0)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass  # session gone — nothing to release
+    counted = session_state(df.sparkSession).counted
+    counted.append(df)
+    while len(counted) > _COUNTED_KEEP:
+        counted.pop(0).unpersist(blocking=False)
     return df
 
 
@@ -158,7 +157,7 @@ def cumsum_auto(
     upstream value-level aggregation once. To make that single
     execution also serve the downstream read (rather than assuming
     Spark shuffle reuse), the input is persisted (MEMORY_AND_DISK)
-    before the count and released on a bounded FIFO
+    before the count and released on a bounded per-session FIFO
     (:data:`_COUNTED_KEEP` outstanding handles): the count
     materializes the blocks, the cumsum consumes them, and upstream
     work runs ONCE per invocation by construction.

@@ -6,6 +6,9 @@ the matching scan, and aggregates the re-read data; the DuckDB oracle
 computes the same aggregate on the ORIGINAL parquet table — so a pass
 proves the write+read pair is value-preserving, not just runnable.
 Aggregates are order-insensitive (files come back in arbitrary order).
+
+Every write goes to a fresh ``context.scratch_dir``, never a fixed path,
+so building a query again leaves an earlier DataFrame's files intact.
 """
 
 from __future__ import annotations
@@ -15,16 +18,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_gpu_spark import io
+from datafusion_gpu_spark.context import scratch_dir
 from datafusion_gpu_spark.queries import load
-
-#: Executor-visible scratch space (single shared FS on local mode; would
-#: be an object-store path on a real cluster).
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
 
 def _roundtrip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     load(spark, sf_dir)
-    out = os.path.join(SCRATCH, "nation_json")
+    out = scratch_dir(spark, "nation_json")
     io.write_json(spark.table("nation"), out)
     back = io.read_json(spark, out)
     back.createOrReplaceTempView("nation_rt")
@@ -47,7 +47,7 @@ FROM nation GROUP BY n_regionkey
 
 def _roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     load(spark, sf_dir)
-    out = os.path.join(SCRATCH, "supplier_csv")
+    out = scratch_dir(spark, "supplier_csv")
     io.write_csv(spark.table("supplier").select("s_suppkey", "s_name", "s_nationkey", "s_acctbal"), out)
     back = io.read_csv(spark, out)
     back.createOrReplaceTempView("supplier_rt")
@@ -69,7 +69,7 @@ FROM supplier GROUP BY s_nationkey
 
 def _roundtrip_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     load(spark, sf_dir)
-    out = os.path.join(SCRATCH, "customer_arrow")
+    out = scratch_dir(spark, "customer_arrow")
     manifest = io.write_arrow_ipc(
         spark.table("customer").select(
             "c_custkey", "c_name", "c_mktsegment", "c_acctbal"
@@ -98,7 +98,7 @@ def _roundtrip_json_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-scan demo (SURVEY §2.1 row 7): gzip NDJSON part files,
     decompressed transparently on read."""
     load(spark, sf_dir)
-    out = os.path.join(SCRATCH, "region_json_gz")
+    out = scratch_dir(spark, "region_json_gz")
     io.write_json(spark.table("region"), out, compression="gzip")
     back = io.read_json(spark, out)
     back.createOrReplaceTempView("region_rt")
@@ -118,7 +118,7 @@ FROM region
 def _roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC sink+scan round-trip (zstd-compressed part files)."""
     load(spark, sf_dir)
-    out = os.path.join(SCRATCH, "part_orc")
+    out = scratch_dir(spark, "part_orc")
     io.write_orc(
         spark.table("part").select("p_partkey", "p_brand", "p_size", "p_retailprice"),
         out,
@@ -150,7 +150,7 @@ def _partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py), and the aggregate must still match the
     oracle's WHERE on the unpartitioned source."""
     load(spark, sf_dir)
-    out = os.path.join(SCRATCH, "orders_partitioned")
+    out = scratch_dir(spark, "orders_partitioned")
     io.write_parquet(
         spark.table("orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority", "o_orderstatus"
@@ -178,7 +178,7 @@ FROM orders WHERE o_orderstatus = 'F' GROUP BY o_orderpriority
 
 def _bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed-table co-located join: both sides written bucketBy the
-    join key into the warehouse, then sort-merge-joined with ZERO
+    join key (io.write_bucketed), then sort-merge-joined with ZERO
     exchange on either side — the 100 TB idiom for a fact table joined
     repeatedly on the same key (pay the shuffle once at write time,
     never again). tests/test_plans.py pins the plan: the only exchange
@@ -238,7 +238,7 @@ def _csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     load(spark, sf_dir)
-    out = os.path.join(SCRATCH, "nation_csv_dialect")
+    out = scratch_dir(spark, "nation_csv_dialect")
     tricky = spark.table("nation").select(
         "n_nationkey",
         F.concat(
@@ -291,7 +291,7 @@ def _copy_to_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query result as parquet purely through SQL, no DataFrame API.
     The read-back aggregate must match the oracle's direct SELECT."""
     load(spark, sf_dir)
-    out = os.path.join(SCRATCH, "region_copy_sql")
+    out = scratch_dir(spark, "region_copy_sql")
     spark.sql(
         f"""
         INSERT OVERWRITE DIRECTORY '{out}' USING PARQUET
@@ -321,11 +321,8 @@ def _schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     new column) — the contract a long-lived 100 TB dataset depends on
     as producers upgrade. The oracle replays the union of the two
     projections on the original table."""
-    import shutil
-
     load(spark, sf_dir)
-    out = os.path.join(SCRATCH, "documents_evolved")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch_dir(spark, "documents_evolved")
     docs = spark.table("documents")
     docs.select("doc_id", "lang").write.parquet(os.path.join(out, "v1"))
     docs.select("doc_id", "lang", "n_chars").write.parquet(
@@ -401,16 +398,11 @@ def _compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-preservation graded against the original table. File-count
     assertions live in tests/test_io.py (they depend on physical sizes,
     which an SQL oracle can't replay)."""
-    import shutil
-
-    from datafusion_gpu_spark import io as dio
-
     load(spark, sf_dir)
-    frag = os.path.join(SCRATCH, "documents_fragmented")
-    out = os.path.join(SCRATCH, "documents_compacted")
-    shutil.rmtree(frag, ignore_errors=True)
+    base = scratch_dir(spark, "documents_compaction")
+    frag, out = os.path.join(base, "fragmented"), os.path.join(base, "compacted")
     spark.table("documents").repartition(32).write.parquet(frag)
-    dio.compact_parquet(spark, frag, out, target_file_mb=128)
+    io.compact_parquet(spark, frag, out, target_file_mb=128)
     back = spark.read.parquet(out)
     back.createOrReplaceTempView("documents_compacted")
     return spark.sql(
@@ -752,7 +744,7 @@ def _roundtrip_parquet_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     the footer codec via pyarrow metadata so the option provably
     reached the files."""
     load(spark, sf_dir)
-    out = os.path.join(SCRATCH, "orders_parquet_zstd")
+    out = scratch_dir(spark, "orders_parquet_zstd")
     io.write_parquet(
         spark.table("orders").select(
             "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"

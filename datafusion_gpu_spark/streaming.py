@@ -26,7 +26,6 @@ on plain lists in tests.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
 from decimal import ROUND_HALF_UP, Decimal
@@ -38,7 +37,7 @@ from pyspark.sql import functions as F
 from datafusion_gpu_spark.context import (
     _cached_scan,
     _ns_timestamp_columns,
-    read_parquet,
+    scratch_dir,
 )
 
 
@@ -267,7 +266,7 @@ def stream_enriched_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts it under the join threshold exactly as in batch.
     """
     ev = stream_events(spark, sf_dir).where(F.col("event_type") == "purchase")
-    customer = read_parquet(spark, os.path.join(sf_dir, "customer.parquet"))
+    customer = _cached_scan(spark, os.path.join(sf_dir, "customer.parquet"))
     return ev.join(
         customer, ev["user_id"] == customer["c_custkey"], "inner"
     ).select(
@@ -421,18 +420,16 @@ def materialize_stream(
     - ``complete``: each micro-batch rewrites the full state — read only
       the highest ``_batch_id`` partition (the final state).
 
-    The checkpoint dir is removed once the query stops. The ``out`` dir
-    outlives the call, because the returned DataFrame reads it lazily —
-    and so do DataFrames derived from it, after the returned object is
-    gone — so it is removed when the process exits (``atexit``), like the
-    IVM and incremental-minhash base dirs. A long-lived session still
-    accumulates one per call until then (ROADMAP.md open item 2).
+    Both dirs sit in one fresh ``context.scratch_dir``. The checkpoint
+    dir is removed once the query stops. The ``out`` dir outlives the
+    call, because the returned DataFrame reads it lazily — and so do
+    DataFrames derived from it, after the returned object is gone — so
+    it goes with the session's scratch root, like the IVM and
+    incremental-minhash base dirs.
     """
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="dgs_stream_out_")
-    atexit.register(shutil.rmtree, out, True)
-    ckpt = tempfile.mkdtemp(prefix="dgs_stream_ckpt_")
+    spark = df.sparkSession
+    base = scratch_dir(spark, "stream")
+    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
     query = stream_to_parquet(
         df, out, ckpt, output_mode=output_mode, available_now=available_now
     )
@@ -441,7 +438,6 @@ def materialize_stream(
     finally:
         query.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
-    spark = df.sparkSession
     result = spark.read.parquet(out)
     if output_mode == "complete":
         [last] = result.agg(F.max("_batch_id")).collect()[0][:1]
@@ -748,13 +744,10 @@ def materialized_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed: per-batch cost is O(|delta| + |view|), never a fact-history
     rescan.
     """
-    import tempfile
-
     from datafusion_gpu_spark.operators.layout import incremental_agg
 
-    base = tempfile.mkdtemp(prefix="spark_graft_ivm_")
-    atexit.register(shutil.rmtree, base, True)
-    orders = read_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
+    base = scratch_dir(spark, "ivm")
+    orders = _cached_scan(spark, os.path.join(sf_dir, "orders.parquet"))
     feed_dir = os.path.join(base, "feed")
     orders.repartition(8).write.mode("overwrite").parquet(feed_dir)
 
@@ -1340,7 +1333,7 @@ def stream_cusum(
     n_events.
     """
     ev_b = (
-        read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
+        _cached_scan(spark, os.path.join(sf_dir, "events.parquet"))
         .where((F.col("event_type") == "purchase") & F.col("value").isNotNull())
         .withColumn("__xq__", F.round(F.col("value") * scale).cast("long"))
     )
@@ -2001,16 +1994,13 @@ def materialized_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFr
     ingest loop verbatim: band the new docs, probe the stored index,
     verify candidates, never re-band the corpus.
     """
-    import tempfile
-
     from datafusion_gpu_spark.operators.dedup import (
         incremental_minhash_lsh,
         minhash_band_index,
     )
 
-    base = tempfile.mkdtemp(prefix="spark_graft_inclsh_")
-    atexit.register(shutil.rmtree, base, True)
-    docs = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+    base = scratch_dir(spark, "inclsh")
+    docs = _cached_scan(spark, os.path.join(sf_dir, "documents.parquet"))
     history = docs.where(F.col("doc_id") % 10 < 8)
     batch = docs.where(F.col("doc_id") % 10 >= 8)
 

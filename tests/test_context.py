@@ -93,11 +93,14 @@ def test_codegen_cache_holds_an_interleaved_working_set(spark):
     assert compiles() == before
 
 
-def test_scan_cache_sweeps_stopped_sessions_and_clear_hook():
+def test_scan_cache_sweeps_stopped_sessions_and_clear_hook(tmp_path):
     """ADVICE r10 #1: the per-session registration state must not accrete
     dead sessions (swept on touch via the _jsc liveness probe) and must
     expose a clear hook for callers that rewrite parquet at a registered
-    path mid-session."""
+    path mid-session. Dropping a session's state, by sweep or clear, also
+    removes its scratch root and unpersists its counted relations."""
+    import tempfile
+
     from datafusion_gpu_spark import context as ctx
 
     class _FakeSC:
@@ -108,6 +111,12 @@ def test_scan_cache_sweeps_stopped_sessions_and_clear_hook():
         def __init__(self, stopped=False):
             self._sc = _FakeSC(stopped)
 
+    class _Counted:
+        is_cached = True
+
+        def unpersist(self, blocking):
+            self.is_cached = False
+
     def state(session, **scans):
         return ctx._SessionState(
             session,
@@ -116,17 +125,21 @@ def test_scan_cache_sweeps_stopped_sessions_and_clear_hook():
                 f"v_{p}": ctx._View(f"{p}.parquet", df, "entry") for p, df in scans.items()
             },
             aggregates={"sum_cudarc": ("ident", "entry")},
+            scratch=tempfile.mkdtemp(dir=tmp_path),
+            counted=[_Counted()],
         )
 
     dead, live = _FakeSession(stopped=True), _FakeSession()
     try:
-        ctx._SESSION_STATE[id(dead)] = state(dead, p="dead-df")
+        dead_state = ctx._SESSION_STATE[id(dead)] = state(dead, p="dead-df")
         ctx._SESSION_STATE[id(live)] = state(live, p="live-df", q="other-df")
         # touch through the cache with the live session: cached path short-
         # circuits before any real read, and the dead entry is swept —
-        # scans, views and aggregates together
+        # scans, views, aggregates, scratch root and counted relations
         assert ctx._cached_scan(live, "p.parquet") == "live-df"
         assert id(dead) not in ctx._SESSION_STATE
+        assert not os.path.exists(dead_state.scratch)
+        assert not dead_state.counted[0].is_cached
         assert ctx.session_state(live) is ctx._SESSION_STATE[id(live)]
         # per-path clear drops that plan and the views over it, nothing else
         ctx.clear_scan_cache(live, "p.parquet")
@@ -134,12 +147,17 @@ def test_scan_cache_sweeps_stopped_sessions_and_clear_hook():
         assert live_state.scans == {"q.parquet": "other-df"}
         assert list(live_state.views) == ["v_q"]
         assert list(live_state.aggregates) == ["sum_cudarc"]
+        assert os.path.isdir(live_state.scratch) and live_state.counted[0].is_cached
         # per-session clear drops all of it; no-arg clear drops every session
         ctx.clear_scan_cache(live)
         assert id(live) not in ctx._SESSION_STATE
-        ctx._SESSION_STATE[id(live)] = state(live, p="live-df")
+        assert not os.path.exists(live_state.scratch)
+        assert not live_state.counted[0].is_cached
+        live_state = ctx._SESSION_STATE[id(live)] = state(live, p="live-df")
         ctx.clear_scan_cache()
         assert ctx._SESSION_STATE == {}
+        assert not os.path.exists(live_state.scratch)
+        assert not live_state.counted[0].is_cached
     finally:
         ctx._SESSION_STATE.pop(id(dead), None)
         ctx._SESSION_STATE.pop(id(live), None)

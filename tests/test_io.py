@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_gpu_spark import io
-from datafusion_gpu_spark.queries.io_q import SCRATCH
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture()
@@ -22,8 +22,8 @@ def small_df(spark):
     )
 
 
-def test_arrow_ipc_roundtrip(spark, small_df):
-    out = os.path.join(SCRATCH, "unit_arrow")
+def test_arrow_ipc_roundtrip(spark, small_df, tmp_path):
+    out = str(tmp_path / "unit_arrow")
     manifest = io.write_arrow_ipc(small_df.repartition(8), out).collect()
     assert sum(m.rows for m in manifest) == 37
     back = io.read_arrow_ipc(spark, out)
@@ -35,8 +35,8 @@ def test_arrow_ipc_roundtrip(spark, small_df):
     assert sorted(r.k for r in back.collect()) == list(range(37))
 
 
-def test_arrow_ipc_skips_empty_partitions(spark, small_df):
-    out = os.path.join(SCRATCH, "unit_arrow_sparse")
+def test_arrow_ipc_skips_empty_partitions(spark, small_df, tmp_path):
+    out = str(tmp_path / "unit_arrow_sparse")
     # 64 partitions for 37 rows -> many empty partitions must not produce files
     manifest = io.write_arrow_ipc(small_df.repartition(64), out).collect()
     assert all(m.rows > 0 for m in manifest)
@@ -44,8 +44,8 @@ def test_arrow_ipc_skips_empty_partitions(spark, small_df):
     assert back.count() == 37
 
 
-def test_json_roundtrip_preserves_values(spark, small_df):
-    out = os.path.join(SCRATCH, "unit_json")
+def test_json_roundtrip_preserves_values(spark, small_df, tmp_path):
+    out = str(tmp_path / "unit_json")
     io.write_json(small_df, out)
     back = io.read_json(spark, out)
     a = {(r.k, r.v, r.s) for r in small_df.collect()}
@@ -53,8 +53,8 @@ def test_json_roundtrip_preserves_values(spark, small_df):
     assert a == b
 
 
-def test_csv_roundtrip_with_inference(spark, small_df):
-    out = os.path.join(SCRATCH, "unit_csv")
+def test_csv_roundtrip_with_inference(spark, small_df, tmp_path):
+    out = str(tmp_path / "unit_csv")
     io.write_csv(small_df, out)
     back = io.read_csv(spark, out)
     assert back.count() == 37
@@ -317,7 +317,7 @@ def test_incremental_agg_empty_delta_is_identity(spark):
     assert got == {"a": (1, 1), "b": (1, 2)}
 
 
-def test_parquet_zstd_codec_reaches_files(spark):
+def test_parquet_zstd_codec_reaches_files(spark, tmp_path):
     """write_parquet(compression='zstd') must actually produce
     zstd-compressed column chunks (pyarrow footer check), and the
     round-trip must be lossless."""
@@ -325,10 +325,7 @@ def test_parquet_zstd_codec_reaches_files(spark):
 
     import pyarrow.parquet as pq
 
-    from datafusion_gpu_spark import io
-    from datafusion_gpu_spark.queries.io_q import SCRATCH
-
-    out = f"{SCRATCH}/zstd_codec_check"
+    out = str(tmp_path / "zstd_codec_check")
     df = spark.range(1000).selectExpr("id", "id * 2 AS dbl")
     io.write_parquet(df, out, compression="zstd")
     files = glob.glob(f"{out}/*.parquet")
@@ -343,3 +340,52 @@ def test_parquet_zstd_codec_reaches_files(spark):
     back = spark.read.parquet(out)
     assert back.count() == 1000
     assert back.agg({"dbl": "sum"}).collect()[0][0] == 999 * 1000
+
+
+# -- one owner for the files a query writes ------------------------------------
+
+#: Every registry query that writes files and reads them back.
+_WRITE_READ_QUERIES = (
+    "io_roundtrip_json",
+    "io_roundtrip_json_gzip",
+    "io_roundtrip_csv",
+    "io_roundtrip_orc",
+    "io_roundtrip_arrow",
+    "io_roundtrip_parquet_zstd",
+    "io_partitioned_parquet",
+    "io_csv_quoted_multiline",
+    "io_copy_to_sql",
+    "io_schema_evolution",
+    "io_compact_small_files",
+    "io_bucketed_join",
+    "io_incremental_agg_bucketed",
+)
+
+
+def _rows(df):
+    return sorted(
+        (tuple(round(v, 6) if isinstance(v, float) else v for v in r) for r in df.collect()),
+        key=repr,
+    )
+
+
+@pytest.mark.parametrize("name", _WRITE_READ_QUERIES)
+def test_rebuild_leaves_earlier_dataframe_readable(spark, name):
+    # one long-lived session builds a query twice: the second build must
+    # not overwrite or delete the files the first DataFrame still reads,
+    # and every file either reads lies under the session's scratch root
+    from urllib.parse import urlparse
+
+    from datafusion_gpu_spark.context import session_state
+    from datafusion_gpu_spark.queries import all_queries
+
+    build = all_queries()[name]
+    first, second = build(spark, SF_DIR), build(spark, SF_DIR)
+    assert _rows(first) == _rows(second)
+    root = session_state(spark).scratch
+    sf_dir = os.path.realpath(SF_DIR)
+    for df in (first, second):
+        for uri in df.inputFiles():
+            path = os.path.realpath(urlparse(uri).path)
+            if os.path.commonpath([path, sf_dir]) != sf_dir:
+                assert os.path.commonpath([path, root]) == root, path

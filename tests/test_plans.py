@@ -57,18 +57,15 @@ def test_two_stage_topk_has_local_prune(spark):
     assert "Window" in plan
 
 
-def test_partitioned_write_prunes_partitions(spark):
+def test_partitioned_write_prunes_partitions(spark, tmp_path):
     # hive-partitioned sink + filtered re-read must plan PartitionFilters,
     # i.e. prune directories instead of scanning them
-    import os
-
     from datafusion_gpu_spark import io
     from datafusion_gpu_spark.context import register_tables
-    from datafusion_gpu_spark.queries.io_q import SCRATCH
     from pyspark.sql import functions as F
 
     tables = register_tables(spark, SF_DIR)
-    out = os.path.join(SCRATCH, "orders_by_status")
+    out = str(tmp_path / "orders_by_status")
     io.write_parquet(tables["orders"], out, partition_by=["o_orderstatus"])
     back = spark.read.parquet(out).where(F.col("o_orderstatus") == "F")
     text = back._jdf.queryExecution().toString()
@@ -89,8 +86,7 @@ def test_scan_prunes_columns(spark, name):
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     # bucketing both sides on the join key removes the Exchange entirely
     # — the co-located join layout recurring fact-fact joins rely on at
-    # scale. Managed tables need a warehouse; bucket metadata lives in
-    # the session catalog.
+    # scale. Bucket metadata lives in the session catalog.
     from datafusion_gpu_spark.context import register_tables
     from datafusion_gpu_spark.io import write_bucketed
 

@@ -3129,3 +3129,26 @@ def test_jackknife_ratio_replay_and_homogeneous_zero(spark):
     same = plant([(2400, 4)] * 30)
     assert same.se_jackknife == 0.0
     assert same.ci_lo == same.revenue_per_event == same.ci_hi == 6.0
+
+
+def test_cumsum_auto_handles_belong_to_their_session(spark):
+    # the relations cumsum_auto keeps persisted are per session: another
+    # session's calls cannot evict them, and clearing that session
+    # unpersists its own
+    from datafusion_gpu_spark.context import clear_scan_cache, session_state
+    from datafusion_gpu_spark.operators.stats import _COUNTED_KEEP, cumsum_auto
+
+    schema = "c long, x long"
+    cumsum_auto(spark.createDataFrame([(v, 1) for v in range(20)], schema), "c", ("x",))
+    held = session_state(spark).counted[-1]
+    other = spark.newSession()
+    try:
+        for _ in range(_COUNTED_KEEP + 1):
+            theirs = other.createDataFrame([(v, 1) for v in range(20)], schema)
+            cumsum_auto(theirs, "c", ("x",))
+        counted = list(session_state(other).counted)
+        assert len(counted) == _COUNTED_KEEP
+        assert held.is_cached and any(df is held for df in session_state(spark).counted)
+    finally:
+        clear_scan_cache(other)
+    assert not any(df.is_cached for df in counted)

@@ -852,47 +852,74 @@ def test_replay_is_micro_batch_boundary_invariant(name):
             assert _replay(ev, twin, n_batches, scramble) == want, (n_batches, scramble)
 
 
-def test_materialize_stream_removes_its_checkpoint_dir(
-    spark, tmp_path, monkeypatch
-):
-    import tempfile
+def test_materialize_stream_removes_its_checkpoint_dir(spark):
+    import os
 
+    from datafusion_gpu_spark.context import clear_scan_cache, session_state
     from datafusion_gpu_spark.streaming import materialize_stream, stream_events
 
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    for _ in range(2):
-        materialize_stream(stream_events(spark, SF_DIR).select("event_id")).count()
-    assert not list(tmp_path.glob("dgs_stream_ckpt_*"))
-    # the read-back's own dir stays (the DataFrame reads it lazily)
-    assert len(list(tmp_path.glob("dgs_stream_out_*"))) == 2
+    s = spark.newSession()
+    try:
+        for _ in range(2):
+            materialize_stream(stream_events(s, SF_DIR).select("event_id")).count()
+        root = session_state(s).scratch
+        # one dir per call; the read-back's own out dir stays (the
+        # DataFrame reads it lazily), the checkpoint is gone
+        calls = sorted(os.listdir(root))
+        assert len(calls) == 2
+        for call in calls:
+            assert os.listdir(os.path.join(root, call)) == ["out"]
+    finally:
+        clear_scan_cache(s)
 
 
-def test_materialize_stream_output_dir_is_removed_at_exit(spark, tmp_path, monkeypatch):
+def test_materialize_stream_output_dir_lives_until_session_clear(spark):
     # the out dir outlives the call (derived DataFrames read it after the
-    # returned one is collected), so its owner is the process: an atexit
-    # rmtree, captured here instead of waiting for interpreter exit
+    # returned one is collected), so its owner is the session: it goes
+    # when the session's state is cleared
     import gc
-    import tempfile
-    import types
+    import os
 
     from datafusion_gpu_spark import streaming
+    from datafusion_gpu_spark.context import clear_scan_cache, session_state
 
-    callbacks = []
-    monkeypatch.setattr(
-        streaming, "atexit", types.SimpleNamespace(register=lambda *a: callbacks.append(a))
-    )
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    df = streaming.materialize_stream(streaming.stream_events(spark, SF_DIR))
-    keys = df.select("user_id", "event_type").distinct()
-    n_events = df.count()
-    del df
-    gc.collect()
-    [out] = tmp_path.glob("dgs_stream_out_*")
-    assert keys.count() > 0 and n_events > 0
-    [(rmtree, path, ignore_errors)] = callbacks
-    assert path == str(out) and ignore_errors
-    rmtree(path, ignore_errors)
-    assert not out.exists()
+    s = spark.newSession()
+    try:
+        df = streaming.materialize_stream(streaming.stream_events(s, SF_DIR))
+        keys = df.select("user_id", "event_type").distinct()
+        n_events = df.count()
+        del df
+        gc.collect()
+        assert keys.count() > 0 and n_events > 0
+        root = session_state(s).scratch
+    finally:
+        clear_scan_cache(s)
+    assert not os.path.exists(root)
+
+
+def test_streaming_writers_leave_no_temp_entries_after_clear(spark):
+    # every dir the streaming writers make sits under the session's
+    # scratch root, so clearing the session leaves the temp dir as it was
+    import os
+    import tempfile
+
+    from datafusion_gpu_spark import streaming
+    from datafusion_gpu_spark.context import clear_scan_cache
+
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
+    s = spark.newSession()
+    try:
+        for _ in range(2):
+            streaming.materialize_stream(
+                streaming.stream_events(s, SF_DIR).select("event_id")
+            ).count()
+            streaming.materialized_incremental_agg(s, SF_DIR).count()
+            streaming.materialized_incremental_minhash(s, SF_DIR).count()
+        assert set(os.listdir(tmp)) - before  # the session's scratch root
+    finally:
+        clear_scan_cache(s)
+    assert set(os.listdir(tmp)) - before == set()
 
 
 def test_stream_events_rebuilds_nanosecond_timestamps(spark, tmp_path):

@@ -33,7 +33,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from datafusion_gpu_spark.context import get_spark
+    from datafusion_gpu_spark.context import get_spark, scratch_dir
     from datafusion_gpu_spark.io import write_bucketed
     from datafusion_gpu_spark.operators.layout import incremental_agg
 
@@ -65,7 +65,9 @@ def main() -> int:
     delta.count()
 
     write_bucketed(view, "probe_view_bucketed", ["k"], num_buckets=n_buckets)
-    view.write.mode("overwrite").saveAsTable("probe_view_plain")
+    view.write.option("path", scratch_dir(spark, "probe_view_plain")).saveAsTable(
+        "probe_view_plain"
+    )
 
     for label, table in (
         ("plain-parquet view", "probe_view_plain"),

@@ -524,9 +524,9 @@ def probe_ivm(spark, sizes: list[int]) -> None:
 
     from pyspark.sql import functions as F
 
+    from datafusion_gpu_spark.context import scratch_dir
     from datafusion_gpu_spark.operators.layout import incremental_agg
 
-    import os as _os
     import shutil as _shutil
 
     d_rows = 200_000
@@ -537,7 +537,7 @@ def probe_ivm(spark, sizes: list[int]) -> None:
         n_keys = 50_000
         # the fact HISTORY lives on storage (parquet), as it would in a
         # lake — recompute must pay the scan; maintenance must not
-        fact_dir = _os.path.join(".scratch", f"ivm_facts_{n}")
+        fact_dir = scratch_dir(spark, f"ivm_facts_{n}")
         spark.range(n).select(
             (F.col("id") % n_keys).alias("k"),
             (F.col("id") % 1000).cast("long").alias("v"),
