@@ -29,6 +29,7 @@ from typing import NamedTuple
 
 from py4j.java_gateway import JavaObject
 from py4j.protocol import Py4JError
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,13 +59,13 @@ BROADCAST_TABLES = {"region", "nation"}
 #: compiles its classes again (~6 ms each) and runs them interpreted
 #: until the JIT catches up. Measured working sets, sf0.01, 4 cores, ops
 #: repeated in order (compiles = ``CodegenMetrics`` compilation count):
-#: one pass of perfbench's ``sql_interactive`` (12 ops) compiles 123
-#: classes, ``pipeline_graph`` (11 ops) 197, bench.py's 31 sf rows 869.
-#: At 100 entries a warm pass recompiles 70 and ~194 of them; at 1000,
-#: 0 and 0 (bench.py's rows: 8). The conf is static and the cache
-#: JVM-global, built at the first compile: it reaches only sessions
-#: get_spark creates in a fresh JVM (perfbench, bench.py, the REPL,
-#: tools/, the test session). A plain session built elsewhere, such as
+#: one pass of perfbench's ``sql_interactive`` (15 ops: 12 collect, 3
+#: REPL) compiles 131 classes, ``pipeline_graph`` (11 ops) 197, bench.py's
+#: 31 sf rows 869. At 100 entries a warm pass recompiles 70 and ~194 of
+#: them; at 1000, 0 and 0 (bench.py's rows: 8). The conf is static and
+#: the cache JVM-global, built at the first compile: it reaches only
+#: sessions get_spark creates in a fresh JVM (perfbench, bench.py, the
+#: REPL, tools/, the test session). A plain session built elsewhere, such as
 #: the one the driver hands ``__spark_entry__.entry``, keeps Spark's 100.
 CODEGEN_CACHE_ENTRIES = 1024
 
@@ -213,8 +214,9 @@ class _SessionState:
       ``lookupFunctionBuilder`` Option right after registering).
     - ``scratch``: the root of every directory :func:`scratch_dir` hands
       out, created on first use.
-    - ``counted``: the relations ``operators.stats.cumsum_auto`` persisted
-      for its routing count, oldest first.
+    - ``counted``: the relations :func:`persist_counted` persisted
+      (``operators.stats.cumsum_auto``'s routing count, the incremental
+      dedup operators' reused intermediates), oldest first.
     """
 
     session: SparkSession
@@ -319,6 +321,40 @@ def scratch_dir(spark: SparkSession, name: str) -> str:
     if state.scratch is None:
         state.scratch = tempfile.mkdtemp(prefix="dgs_session_")
     return tempfile.mkdtemp(prefix=f"{name}_", dir=state.scratch)
+
+
+#: Relations persisted through :func:`persist_counted` stay persisted
+#: until a few more have come through the same session (oldest first).
+#: Keeping the handle lets the caller's downstream reads hit the persisted
+#: blocks instead of re-running the upstream plan; the bound keeps a
+#: long-lived session from accreting cached blocks. Evicting early is
+#: CORRECT, just slower — Spark recomputes an unpersisted plan from lineage.
+_COUNTED_KEEP = 8
+
+
+def persist_counted(
+    spark: SparkSession,
+    df: DataFrame,
+    level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER,
+) -> DataFrame:
+    """Persist ``df`` (at ``level``, by default ``DataFrame.persist``'s)
+    as one of ``spark``'s ``counted`` relations: the oldest past
+    :data:`_COUNTED_KEEP` is unpersisted, and clearing or sweeping the
+    session releases the rest. For operators that read one intermediate
+    more than once and return a lazy plan over it, so they cannot
+    unpersist it themselves. ``spark`` is the owner, named by the caller
+    rather than taken from ``df``: inside a ``foreachBatch`` callback the
+    micro-batch's frames wrap a new session object per batch, which no
+    clear or sweep would ever reach."""
+    df = df.persist(level)
+    state = session_state(spark)
+    # handles over one plan share one cache entry (a rebuilt query's):
+    # keep only the newest, so evicting an older one cannot uncache it
+    state.counted = [old for old in state.counted if not old.sameSemantics(df)]
+    state.counted.append(df)
+    while len(state.counted) > _COUNTED_KEEP:
+        state.counted.pop(0).unpersist(blocking=False)
+    return df
 
 
 def _cached_scan(spark: SparkSession, path: str) -> DataFrame:

@@ -243,6 +243,7 @@ def incremental_dedup_bloom(
     per-call build is slower than the plain anti-join at 5M keys on
     local[32]; SCALE.md).
     """
+    from datafusion_gpu_spark.context import persist_counted
     from datafusion_gpu_spark.operators.sketches import (
         bloom_build,
         bloom_might_contain,
@@ -258,8 +259,13 @@ def incremental_dedup_bloom(
     )
     # persist: both slices consume `probed`, and without materialization
     # the groupBy + Python probe subtree would execute twice (the same
-    # double-executed-subtree trap BENCH_NOTES documents)
-    probed = bloom_might_contain(batch_first, "content_key", bits, k=k).persist()
+    # double-executed-subtree trap BENCH_NOTES documents); history's
+    # session owns the handle (context.persist_counted), so it is released
+    # later — `batch` may wrap a per-micro-batch session in foreachBatch
+    probed = persist_counted(
+        history.sparkSession,
+        bloom_might_contain(batch_first, "content_key", bits, k=k),
+    )
     definite_new = probed.where(~F.col("might_contain")).drop("might_contain")
     possible_dup = probed.where(F.col("might_contain")).drop("might_contain")
     survivors = possible_dup.join(hist_keys, "content_key", "left_anti")
@@ -700,7 +706,7 @@ def incremental_minhash_lsh(
     with the history:batch ratio because the full path re-processes
     text while the probe path only re-scans hashes.
     """
-    from datafusion_gpu_spark.context import ensure_parallelism
+    from datafusion_gpu_spark.context import ensure_parallelism, persist_counted
 
     batch = ensure_parallelism(batch)
     if index is None:
@@ -711,13 +717,14 @@ def incremental_minhash_lsh(
     # the verification join); without materialization the band-probe
     # subtree re-executes per consumer (the double-executed-subtree trap
     # BENCH_NOTES documents; incremental_dedup_bloom is the precedent —
-    # measured 14.0s -> 4.1s on the 100k/2k A/B probe)
-    candidates = (
+    # measured 14.0s -> 4.1s on the 100k/2k A/B probe); history's session
+    # owns the handle, as there
+    candidates = persist_counted(
+        history.sparkSession,
         probe.withColumnRenamed("doc_id", "batch_id")
         .join(index.withColumnRenamed("doc_id", "hist_id"), ["band", "bucket"])
         .select("hist_id", "batch_id")
         .distinct()
-        .persist()
     )
     # exact verification restricted to candidate docs on BOTH sides;
     # the second shingle join keys on (batch_id, shingle) — both
@@ -929,7 +936,7 @@ def incremental_embedding_lsh(
     each side via keyed joins. vec_id spaces are assumed disjoint
     across the sides (fresh ingest ids).
     """
-    from datafusion_gpu_spark.context import ensure_parallelism
+    from datafusion_gpu_spark.context import ensure_parallelism, persist_counted
     from datafusion_gpu_spark.operators.similarity import cosine_similarity
 
     batch = ensure_parallelism(batch)
@@ -937,13 +944,13 @@ def incremental_embedding_lsh(
         index = embedding_bucket_index(history, planes, num_tables, dim, seed)
     probe = embedding_bucket_index(batch, planes, num_tables, dim, seed)
     # persist: tiny candidate relation, two verification consumers (the
-    # incremental_minhash_lsh precedent)
-    candidates = (
+    # incremental_minhash_lsh precedent, owner included)
+    candidates = persist_counted(
+        history.sparkSession,
         probe.withColumnRenamed("vec_id", "batch_id")
         .join(index.withColumnRenamed("vec_id", "hist_id"), ["tbl", "bucket"])
         .select("hist_id", "batch_id")
         .distinct()
-        .persist()
     )
     ea = history.select(
         F.col("vec_id").alias("hist_id"), F.col("embedding").alias("ea")
@@ -1091,13 +1098,11 @@ def connected_components(
     Keeper convention downstream: keep ``node == component`` (the min
     doc_id of each cluster), drop the rest.
     """
+    from datafusion_gpu_spark.operators.util import lineage_truncator
+
     sc = pairs.sparkSession.sparkContext
     use_reliable = bool(sc.getCheckpointDir())
-    cut = (
-        (lambda df: df.checkpoint(eager=True))
-        if use_reliable
-        else (lambda df: df.localCheckpoint(eager=True))
-    )
+    cut = lineage_truncator(sc)
     fwd = pairs.select(
         F.col(a).cast("long").alias("src"), F.col(b).cast("long").alias("dst")
     )

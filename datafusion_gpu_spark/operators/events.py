@@ -8,9 +8,12 @@ watermark).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 
 def _epoch_us(ts_col: str) -> F.Column:
@@ -1300,6 +1303,174 @@ def merge_intervals(
     )
 
 
+# -- survival substrate ------------------------------------------------------
+# The 12 survival operators below are built from these pieces: one
+# data-sized groupBy for the per-time event/censor counts, suffix sums
+# for the at-risk counts, the quantized Kaplan-Meier log fold, the
+# hypergeometric E/V terms and the headroom guard + chi-square terminal.
+# Every float expression here is the IEEE spelling the DuckDB oracles
+# replay, so a change to one piece moves all of the family's rows.
+
+#: 1e-12 quantum of the Kaplan-Meier ln, hazard and Greenwood folds
+_QL = 1_000_000_000_000.0
+#: 1e-9 quantum of the log-rank E/V and Cox U/I folds
+_QH = 1_000_000_000.0
+_SUFFIX = (Window.currentRow, Window.unboundedFollowing)
+_RUN = (Window.unboundedPreceding, Window.currentRow)
+_PREV = (Window.unboundedPreceding, -1)
+_WHOLE = (Window.unboundedPreceding, Window.unboundedFollowing)
+
+
+def _q12(x: Column) -> Column:
+    """``x`` rounded once to an exact 1e-12 bigint."""
+    return F.round(x * F.lit(_QL), 0).cast("long")
+
+
+def _q9(x: Column) -> Column:
+    """``x`` rounded once to an exact 1e-9 bigint."""
+    return F.round(F.lit(_QH) * x, 0).cast("long")
+
+
+def _window(order: str = "t", part: str | None = None) -> WindowSpec:
+    """The family's window: distinct times in order, per ``part``. It
+    spans the distinct-time relation (thousands of rows for billions of
+    subjects), so one partition is fine when ``part`` is None."""
+    return (Window.partitionBy(part) if part else Window).orderBy(order)
+
+
+def _event_counts(
+    subjects: DataFrame,
+    keys: list[Column],
+    observed_col: str,
+    arms: dict[str, Column] | None = None,
+) -> DataFrame:
+    """The family's one data-sized shuffle: groupBy(``keys``) event and
+    censor counts d{a} = sum(x_a * obs), c{a} = sum(x_a * (1 - obs)) per
+    0/1 arm indicator x_a (one unnamed arm over all subjects when
+    ``arms`` is None). Exact bigints."""
+    obs = F.col(observed_col).cast("long")
+    cens = F.lit(1) - obs
+    aggs = []
+    for a, x in (arms or {"": None}).items():
+        aggs.append(F.sum(obs if x is None else x * obs).alias(f"d{a}"))
+        aggs.append(F.sum(cens if x is None else x * cens).alias(f"c{a}"))
+    return subjects.groupBy(*keys).agg(*aggs)
+
+
+def _at_risk(
+    counts: DataFrame,
+    risk: dict[str, tuple[str, ...]],
+    event: Column | None = None,
+    w: WindowSpec | None = None,
+    whole: dict[str, tuple[str, ...]] | None = None,
+) -> DataFrame:
+    """At-risk counts as suffix sums over the per-time counts: each
+    ``risk`` name is the sum of its count columns over the rows at or
+    after t (no driver-side count, one window pass); each ``whole`` name
+    the same sum over every row (cohort sizes, taken before ``event``
+    filters the relation down to event times)."""
+    w = w or _window()
+    for frame, sums in ((_SUFFIX, risk), (_WHOLE, whole or {})):
+        for name, cols in sums.items():
+            total = reduce(operator.add, map(F.col, cols))
+            counts = counts.withColumn(name, F.sum(total).over(w.rowsBetween(*frame)))
+    return counts if event is None else counts.where(event)
+
+
+def _risk_set(
+    subjects: DataFrame,
+    duration_col: str,
+    observed_col: str,
+    group_col: str | None = None,
+    strata_col: str | None = None,
+    whole: bool = False,
+) -> DataFrame:
+    """The per-duration risk set at event times: (t, d, c, n_risk), or
+    per arm of a 0/1 ``group_col`` (t, d1, c1, d0, c0, n1, n0) plus the
+    arm sizes n1_all/n0_all under ``whole``; ``strata_col`` adds a
+    leading stratum ``s`` that partitions the window."""
+    keys = [F.col(duration_col).alias("t")]
+    if strata_col:
+        keys.insert(0, F.col(strata_col).alias("s"))
+    w = _window(part="s" if strata_col else None)
+    if group_col is None:
+        counts = _event_counts(subjects, keys, observed_col)
+        return _at_risk(counts, {"n_risk": ("d", "c")}, F.col("d") > 0, w)
+    is1 = (F.col(group_col) == 1).cast("long")
+    counts = _event_counts(
+        subjects, keys, observed_col, {"1": is1, "0": F.lit(1) - is1}
+    )
+    risk = {"n1": ("d1", "c1"), "n0": ("d0", "c0")}
+    sizes = {f"{n}_all": cols for n, cols in risk.items()} if whole else None
+    return _at_risk(counts, risk, F.col("d1") + F.col("d0") > 0, w, sizes)
+
+
+def _km_fold(
+    rel: DataFrame,
+    d: Column,
+    n: Column,
+    w: WindowSpec,
+    frame: tuple[int, int] = _RUN,
+    sums: tuple[str, ...] = (),
+) -> tuple[DataFrame, Column]:
+    """The quantized Kaplan-Meier log fold over ``frame`` of ``w``:
+    __slnq sums ln(1 - d/n), each term rounded once to an exact 1e-12
+    bigint (0 where d = n, so ln(0) never forms) — exact integer
+    arithmetic in any fold order — and __dead is the d = n latch. The
+    same window pass replaces each column named in ``sums`` (per-row
+    terms the caller added) with its sum. Returns the relation and
+    S = exp(__slnq / 1e12): exactly 0 once the latch is set, 1 over an
+    empty (prefix) frame. S reads __slnq and __dead by name, so it is
+    valid only until the next fold on the same relation overwrites
+    them: a caller folding twice (competing_risks_cif) must turn the
+    first S into columns of its own before the second fold."""
+    wf = w.rowsBetween(*frame)
+    ln_q = _q12(F.log(F.lit(1.0) - d.cast("double") / n))
+    rel = rel.withColumn("__slnq", F.when(d < n, ln_q).otherwise(F.lit(0)))
+    rel = rel.withColumn("__dead", F.max((d == n).cast("int")).over(wf))
+    for name in ("__slnq", *sums):
+        rel = rel.withColumn(name, F.sum(name).over(wf))
+    surv = F.when(F.coalesce(F.col("__dead"), F.lit(0)) == 1, F.lit(0.0)).otherwise(
+        F.exp(F.coalesce(F.col("__slnq"), F.lit(0)) / F.lit(_QL))
+    )
+    return rel, surv
+
+
+def _greenwood(d: Column, n: Column) -> Column:
+    """Greenwood's per-time variance term d / (n (n - d)), rounded once
+    to an exact 1e-12 bigint (0 at d = n) for a :func:`_km_fold` sum.
+    The raw n(n-d) long multiply wraps past ~3e9 at-risk subjects, so
+    its readers guard on the running max at-risk count squared."""
+    return F.when(d < n, _q12(d.cast("double") / (n * (n - d)))).otherwise(F.lit(0))
+
+
+def _headroom(col: str, quantum: float | None = None) -> Column:
+    """The family's visible int64 guard: true while CAST(col AS DOUBLE)
+    times ``quantum`` (col itself when None) stays under 9e18. Outputs
+    go NULL past it instead of wrapping."""
+    x = F.col(col)
+    return x.cast("double") * (x if quantum is None else F.lit(quantum)) < F.lit(9e18)
+
+
+def _hypergeom(d: Column, n: Column, nj: Column, nl: Column) -> tuple[Column, Column]:
+    """Arm j's event count at one time under H0 (multivariate
+    hypergeometric): mean E_j = d * n_j / n and covariance factor
+    V_jl = d * (n_j/n) * (n_l/n) * (n-d)/(n-1), where V_jj takes
+    n_l = n - n_j. ``d`` and ``n`` are doubles."""
+    return d * nj / n, d * (nj / n) * (nl / n) * ((n - d) / (n - F.lit(1.0)))
+
+
+def _chi2_terminal(
+    ok: Column, chi2: Column, name: str, crit: float = 3.841459
+) -> tuple[Column, Column]:
+    """The chi-square terminal: the statistic rounded to 6 places and
+    ``reject_05`` = chi2 > ``crit``, both NULL where ``ok`` fails."""
+    return (
+        F.when(ok, F.round(chi2, 6)).alias(name),
+        F.when(ok, chi2 > F.lit(crit)).alias("reject_05"),
+    )
+
+
 def survival_km(
     subjects: DataFrame,
     duration_col: str = "duration",
@@ -1334,51 +1505,22 @@ def survival_km(
     Returns (t, n_risk, n_events, n_censored, survival, cum_hazard)
     ordered by t.
     """
-    q = F.lit(1_000_000_000_000.0)  # 1e-12 quantum
-    per_t = (
-        subjects.groupBy(F.col(duration_col).alias("t"))
-        .agg(
-            F.sum(F.col(observed_col).cast("long")).alias("d"),
-            F.sum(F.lit(1) - F.col(observed_col).cast("long")).alias("c"),
-        )
+    d, n = F.col("d"), F.col("n_risk")
+    at_risk = _risk_set(subjects, duration_col, observed_col)
+    scored, surv = _km_fold(
+        at_risk.withColumn("__shq", _q12(d.cast("double") / n)),
+        d,
+        n,
+        _window(),
+        sums=("__shq",),
     )
-    # n_risk(t) = subjects with duration >= t, as a suffix sum over the
-    # per-duration aggregate — no driver-side count(), single pass.
-    w_all = Window.orderBy("t")
-    at_risk = per_t.withColumn(
-        "n_risk",
-        F.sum(F.col("d") + F.col("c")).over(
-            w_all.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        ),
-    ).where(F.col("d") > 0)
-    frac = F.col("d").cast("double") / F.col("n_risk")
-    ln_q = F.when(
-        F.col("d") < F.col("n_risk"),
-        F.round(F.log(F.lit(1.0) - frac) * q, 0).cast("long"),
-    ).otherwise(F.lit(0))
-    haz_q = F.round(frac * q, 0).cast("long")
-    w_run = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    scored = (
-        at_risk.withColumn("__lnq", ln_q)
-        .withColumn("__hq", haz_q)
-        .withColumn(
-            "__dead",
-            F.max((F.col("d") == F.col("n_risk")).cast("int")).over(w_run),
-        )
-    )
-    survival = F.when(F.col("__dead") == 1, F.lit(0.0)).otherwise(
-        F.round(F.exp(F.sum("__lnq").over(w_run) / q), 6)
-    )
-    cum_hazard = F.round(F.sum("__hq").over(w_run) / q, 6)
     return scored.select(
         "t",
         "n_risk",
         F.col("d").alias("n_events"),
         F.col("c").alias("n_censored"),
-        survival.alias("survival"),
-        cum_hazard.alias("cum_hazard"),
+        F.round(surv, 6).alias("survival"),
+        F.round(F.col("__shq") / F.lit(_QL), 6).alias("cum_hazard"),
     ).orderBy("t")
 
 
@@ -1404,56 +1546,17 @@ def survival_km_greenwood(
     Greenwood bands, clipped to [0, 1] with GREATEST/LEAST — terminal
     IEEE only. Same plan shape: one groupBy(duration) + the
     distinct-duration window."""
-    q = F.lit(1_000_000_000_000.0)
-    per_t = subjects.groupBy(F.col(duration_col).alias("t")).agg(
-        F.sum(F.col(observed_col).cast("long")).alias("d"),
-        F.sum(F.lit(1) - F.col(observed_col).cast("long")).alias("c"),
+    d, n = F.col("d"), F.col("n_risk")
+    w = _window()
+    at_risk = _risk_set(subjects, duration_col, observed_col)
+    scored, surv = _km_fold(
+        at_risk.withColumn("__sgwq", _greenwood(d, n)), d, n, w, sums=("__sgwq",)
     )
-    w_all = Window.orderBy("t")
-    at_risk = per_t.withColumn(
-        "n_risk",
-        F.sum(F.col("d") + F.col("c")).over(
-            w_all.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        ),
-    ).where(F.col("d") > 0)
-    frac = F.col("d").cast("double") / F.col("n_risk")
-    ln_q = F.when(
-        F.col("d") < F.col("n_risk"),
-        F.round(F.log(F.lit(1.0) - frac) * q, 0).cast("long"),
-    ).otherwise(F.lit(0))
-    gw_q = F.when(
-        F.col("d") < F.col("n_risk"),
-        F.round(
-            F.col("d").cast("double")
-            / (F.col("n_risk") * (F.col("n_risk") - F.col("d")))
-            * q,
-            0,
-        ).cast("long"),
-    ).otherwise(F.lit(0))
-    w_run = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    scored = (
-        at_risk.withColumn("__lnq", ln_q)
-        .withColumn("__gwq", gw_q)
-        .withColumn(
-            "__dead",
-            F.max((F.col("d") == F.col("n_risk")).cast("int")).over(w_run),
-        )
-        .withColumn("__slnq", F.sum("__lnq").over(w_run))
-        .withColumn("__sgwq", F.sum("__gwq").over(w_run))
-        # running max at-risk (n_risk is non-increasing in t, so this is
-        # the largest n*(n-d) factor contaminating the running variance
-        # fold at or before this row) — drives the visible guard below
-        .withColumn("__nmax", F.max("n_risk").over(w_run))
-    )
-    surv = F.when(F.col("__dead") == 1, F.lit(0.0)).otherwise(
-        F.exp(F.col("__slnq") / q)
-    )
-    headroom = F.col("__nmax").cast("double") * F.col("__nmax") < F.lit(9e18)
-    se = F.when(~headroom, F.lit(None).cast("double")).when(
-        F.col("__dead") == 1, F.lit(0.0)
-    ).otherwise(F.exp(F.col("__slnq") / q) * F.sqrt(F.col("__sgwq") / q))
+    # running max at-risk: the largest n(n-d) factor in the variance fold
+    scored = scored.withColumn("__nmax", F.max("n_risk").over(w.rowsBetween(*_RUN)))
+    headroom = _headroom("__nmax")
+    # S = 0 past the dead latch makes se exactly 0 there too
+    se = F.when(headroom, surv * F.sqrt(F.col("__sgwq") / F.lit(_QL)))
     # CI columns guard on `headroom` EXPLICITLY rather than letting the
     # NULL se propagate: Spark's GREATEST/LEAST skip NULL operands while
     # other engines return NULL, so propagation is non-portable
@@ -1492,36 +1595,19 @@ def survival_na_bands(
     floored at 0 with GREATEST (hazard is unbounded above). Same plan
     shape: one groupBy(duration) + the distinct-duration window.
     Returns (t, n_risk, n_events, cum_hazard, se_na, ci_lo, ci_hi)."""
-    q = F.lit(1_000_000_000_000.0)
-    per_t = subjects.groupBy(F.col(duration_col).alias("t")).agg(
-        F.sum(F.col(observed_col).cast("long")).alias("d"),
-        F.sum(F.lit(1) - F.col(observed_col).cast("long")).alias("c"),
-    )
-    w_all = Window.orderBy("t")
-    at_risk = per_t.withColumn(
-        "n_risk",
-        F.sum(F.col("d") + F.col("c")).over(
-            w_all.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        ),
-    ).where(F.col("d") > 0)
-    frac = F.col("d").cast("double") / F.col("n_risk")
-    haz_q = F.round(frac * q, 0).cast("long")
-    var_q = F.round(
-        F.col("d").cast("double") / (F.col("n_risk") * F.col("n_risk")) * q, 0
-    ).cast("long")
-    w_run = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    d, n = F.col("d").cast("double"), F.col("n_risk")
+    run = _window().rowsBetween(*_RUN)
     scored = (
-        at_risk.withColumn("__hq", haz_q)
-        .withColumn("__vq", var_q)
-        .withColumn("__shq", F.sum("__hq").over(w_run))
-        .withColumn("__svq", F.sum("__vq").over(w_run))
-        .withColumn("__nmax", F.max("n_risk").over(w_run))
+        _risk_set(subjects, duration_col, observed_col)
+        .withColumn("__hq", _q12(d / n))
+        .withColumn("__vq", _q12(d / (n * n)))
+        .withColumn("__shq", F.sum("__hq").over(run))
+        .withColumn("__svq", F.sum("__vq").over(run))
+        .withColumn("__nmax", F.max("n_risk").over(run))
     )
-    headroom = F.col("__nmax").cast("double") * F.col("__nmax") < F.lit(9e18)
-    haz = F.col("__shq") / q
-    se = F.sqrt(F.col("__svq") / q)
+    headroom = _headroom("__nmax")
+    haz = F.col("__shq") / F.lit(_QL)
+    se = F.sqrt(F.col("__svq") / F.lit(_QL))
     return scored.select(
         "t",
         "n_risk",
@@ -1552,86 +1638,91 @@ def competing_risks_cif(
 
     Numeric contract: the overall KM folds exactly as
     :func:`survival_km` (1e-12-quantized log terms); S(t_{i-1}) is the
-    lagged exponential of that exact fold (one identical IEEE exp both
-    engines), each CIF increment quantizes ONCE to a 1e-12 bigint
-    before its running sum, and by construction
+    exponential of that exact fold over the preceding rows (one
+    identical IEEE exp both engines), each CIF increment quantizes ONCE
+    to a 1e-12 bigint before its running sum, and by construction
     CIF_1 + CIF_2 + S = 1 up to quantization. Same plan shape as the
     KM family: one groupBy(duration) shuffle + the distinct-duration
     window. Returns (t, n_risk, d1, d2, survival, cif_1, cif_2)
     ordered by t, rows at event times of either cause.
     """
-    q = F.lit(1_000_000_000_000.0)
     is_c = F.col(cause_col)
     per_t = subjects.groupBy(F.col(duration_col).alias("t")).agg(
         F.sum((is_c == 1).cast("long")).alias("d1"),
         F.sum((is_c == 2).cast("long")).alias("d2"),
         F.sum((is_c == 0).cast("long")).alias("c"),
     )
-    w_all = Window.orderBy("t")
-    at_risk = per_t.withColumn(
-        "n_risk",
-        F.sum(F.col("d1") + F.col("d2") + F.col("c")).over(
-            w_all.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        ),
-    ).where(F.col("d1") + F.col("d2") > 0)
-    d = (F.col("d1") + F.col("d2")).cast("double")
-    frac = d / F.col("n_risk")
-    ln_q = F.when(
-        F.col("d1") + F.col("d2") < F.col("n_risk"),
-        F.round(F.log(F.lit(1.0) - frac) * q, 0).cast("long"),
-    ).otherwise(F.lit(0))
-    w_run = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_prev = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow - 1
-    )
-    scored = (
-        at_risk.withColumn("__lnq", ln_q)
-        .withColumn(
-            "__dead",
-            F.max(
-                (F.col("d1") + F.col("d2") == F.col("n_risk")).cast("int")
-            ).over(w_prev),
-        )
-        .withColumn("__slnq_prev", F.sum("__lnq").over(w_prev))
-    )
-    # S at the PREVIOUS event time (1.0 before the first): dead-by-then
-    # forces exactly 0 (no ln(0) ever forms in the fold)
-    s_prev = F.when(F.coalesce(F.col("__dead"), F.lit(0)) == 1, F.lit(0.0)).otherwise(
-        F.exp(F.coalesce(F.col("__slnq_prev"), F.lit(0)) / q)
-    )
-    inc1_q = F.round(s_prev * F.col("d1").cast("double") / F.col("n_risk") * q, 0).cast(
-        "long"
-    )
-    inc2_q = F.round(s_prev * F.col("d2").cast("double") / F.col("n_risk") * q, 0).cast(
-        "long"
-    )
-    folded = (
-        scored.withColumn("__i1", inc1_q)
-        .withColumn("__i2", inc2_q)
-        .withColumn("__s1", F.sum("__i1").over(w_run))
-        .withColumn("__s2", F.sum("__i2").over(w_run))
-        .withColumn("__slnq", F.sum("__lnq").over(w_run))
-        .withColumn(
-            "__dead_now",
-            F.max(
-                (F.col("d1") + F.col("d2") == F.col("n_risk")).cast("int")
-            ).over(w_run),
-        )
-    )
-    surv = F.when(F.col("__dead_now") == 1, F.lit(0.0)).otherwise(
-        F.exp(F.col("__slnq") / q)
-    )
+    w = _window()
+    d, n = F.col("d1") + F.col("d2"), F.col("n_risk")
+    at_risk = _at_risk(per_t, {"n_risk": ("d1", "d2", "c")}, d > 0, w)
+    # S at the PREVIOUS event time (1.0 before the first)
+    scored, s_prev = _km_fold(at_risk, d, n, w, _PREV)
+    for k in (1, 2):
+        inc_q = _q12(s_prev * F.col(f"d{k}").cast("double") / n)
+        scored = scored.withColumn(f"__s{k}", inc_q)
+    # the running-frame fold (S at t) replaces the prefix one and sums
+    # the CIF increments in the same window pass
+    folded, surv = _km_fold(scored, d, n, w, sums=("__s1", "__s2"))
     return folded.select(
         "t",
         "n_risk",
         "d1",
         "d2",
         F.round(surv, 6).alias("survival"),
-        F.round(F.col("__s1") / q, 6).alias("cif_1"),
-        F.round(F.col("__s2") / q, 6).alias("cif_2"),
+        F.round(F.col("__s1") / F.lit(_QL), 6).alias("cif_1"),
+        F.round(F.col("__s2") / F.lit(_QL), 6).alias("cif_2"),
     ).orderBy("t")
+
+
+def _logrank(
+    subjects: DataFrame,
+    group_col: str,
+    duration_col: str,
+    observed_col: str,
+    strata_col: str | None,
+) -> DataFrame:
+    """The two-cohort log-rank fold and terminal that
+    :func:`survival_logrank` and :func:`survival_logrank_stratified`
+    share; strata only partition the risk-set window and replace the
+    cohort sizes with the stratum count."""
+    at_risk = _risk_set(
+        subjects, duration_col, observed_col, group_col, strata_col, not strata_col
+    )
+    n = (F.col("n1") + F.col("n0")).cast("double")
+    d = (F.col("d1") + F.col("d0")).cast("double")
+    e1_t, v_t = _hypergeom(d, n, F.col("n1"), F.col("n0"))
+    terms = [
+        F.col("d1"),
+        (F.col("d1") + F.col("d0")).alias("d"),
+        _q9(e1_t).alias("e1q"),
+        F.when(F.col("n1") + F.col("n0") > 1, _q9(v_t)).otherwise(F.lit(0)).alias("vq"),
+    ]
+    if strata_col:
+        lead = ["n_strata"]
+        terms.insert(0, F.col("s"))
+        sizes = [F.countDistinct("s").alias("n_strata")]
+    else:
+        lead = ["n1_subjects", "n0_subjects"]
+        terms += [F.col("n1_all"), F.col("n0_all")]
+        sizes = [F.max(f"n{j}_all").alias(f"n{j}_subjects") for j in (1, 0)]
+    folded = at_risk.select(*terms).groupBy().agg(
+        *sizes,
+        F.sum("d1").alias("o1"),
+        F.sum("d").alias("o_total"),
+        F.sum("e1q").alias("se1q"),
+        F.sum("vq").alias("svq"),
+    )
+    headroom = _headroom("o_total", _QH)
+    e1 = F.col("se1q") / F.lit(_QH)
+    v = F.col("svq") / F.lit(_QH)
+    chi2 = (F.col("o1") - e1) * (F.col("o1") - e1) / v
+    return folded.select(
+        *lead,
+        "o1",
+        F.when(headroom, F.round(e1, 6)).alias("e1"),
+        F.when(headroom, F.round(v, 6)).alias("var_lr"),
+        *_chi2_terminal(headroom & (F.col("svq") > 0), chi2, "chi2_lr"),
+    )
 
 
 def survival_logrank(
@@ -1668,76 +1759,7 @@ def survival_logrank(
     subjects), one global one-row aggregate. Returns one row
     (n1_subjects, n0_subjects, o1, e1, var_lr, chi2_lr, reject_05).
     """
-    q = F.lit(1_000_000_000.0)  # 1e-9 quantum
-    is1 = (F.col(group_col) == 1).cast("long")
-    obs = F.col(observed_col).cast("long")
-    per_t = subjects.groupBy(F.col(duration_col).alias("t")).agg(
-        F.sum(is1 * obs).alias("d1"),
-        F.sum(is1 * (F.lit(1) - obs)).alias("c1"),
-        F.sum((F.lit(1) - is1) * obs).alias("d0"),
-        F.sum((F.lit(1) - is1) * (F.lit(1) - obs)).alias("c0"),
-    )
-    w_suf = Window.orderBy("t").rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
-    w_all = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    at_risk = (
-        per_t.withColumn("n1", F.sum(F.col("d1") + F.col("c1")).over(w_suf))
-        .withColumn("n0", F.sum(F.col("d0") + F.col("c0")).over(w_suf))
-        # cohort sizes ride the SAME single-partition window pass (the
-        # first row's suffix sums), so no second aggregation of subjects
-        .withColumn("n1_all", F.sum(F.col("d1") + F.col("c1")).over(w_all))
-        .withColumn("n0_all", F.sum(F.col("d0") + F.col("c0")).over(w_all))
-        .where(F.col("d1") + F.col("d0") > 0)
-    )
-    n = (F.col("n1") + F.col("n0")).cast("double")
-    d = (F.col("d1") + F.col("d0")).cast("double")
-    e1_q = F.round(q * (d * F.col("n1") / n), 0).cast("long")
-    v_q = F.when(
-        F.col("n1") + F.col("n0") > 1,
-        F.round(
-            q
-            * (
-                d
-                * (F.col("n1") / n)
-                * (F.col("n0") / n)
-                * ((n - d) / (n - F.lit(1.0)))
-            ),
-            0,
-        ).cast("long"),
-    ).otherwise(F.lit(0))
-    folded = at_risk.select(
-        F.col("d1"),
-        (F.col("d1") + F.col("d0")).alias("d"),
-        e1_q.alias("e1q"),
-        v_q.alias("vq"),
-        F.col("n1_all"),
-        F.col("n0_all"),
-    ).groupBy().agg(
-        F.max("n1_all").alias("n1_subjects"),
-        F.max("n0_all").alias("n0_subjects"),
-        F.sum("d1").alias("o1"),
-        F.sum("d").alias("o_total"),
-        F.sum("e1q").alias("se1q"),
-        F.sum("vq").alias("svq"),
-    )
-    headroom = F.col("o_total").cast("double") * q < F.lit(9e18)
-    e1 = F.col("se1q") / q
-    v = F.col("svq") / q
-    chi2 = (F.col("o1") - e1) * (F.col("o1") - e1) / v
-    return folded.select(
-        "n1_subjects",
-        "n0_subjects",
-        "o1",
-        F.when(headroom, F.round(e1, 6)).alias("e1"),
-        F.when(headroom, F.round(v, 6)).alias("var_lr"),
-        F.when(headroom & (F.col("svq") > 0), F.round(chi2, 6)).alias("chi2_lr"),
-        F.when(
-            headroom & (F.col("svq") > 0), chi2 > F.lit(3.841459)
-        ).alias("reject_05"),
-    )
+    return _logrank(subjects, group_col, duration_col, observed_col, None)
 
 
 def survival_logrank_stratified(
@@ -1762,70 +1784,7 @@ def survival_logrank_stratified(
     (parallel across strata — strictly better than the unstratified
     single-partition window), one global one-row fold. Returns one row
     (n_strata, o1, e1, var_lr, chi2_lr, reject_05)."""
-    q = F.lit(1_000_000_000.0)
-    is1 = (F.col(group_col) == 1).cast("long")
-    obs = F.col(observed_col).cast("long")
-    per_t = subjects.groupBy(
-        F.col(strata_col).alias("s"), F.col(duration_col).alias("t")
-    ).agg(
-        F.sum(is1 * obs).alias("d1"),
-        F.sum(is1 * (F.lit(1) - obs)).alias("c1"),
-        F.sum((F.lit(1) - is1) * obs).alias("d0"),
-        F.sum((F.lit(1) - is1) * (F.lit(1) - obs)).alias("c0"),
-    )
-    w_suf = (
-        Window.partitionBy("s")
-        .orderBy("t")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    at_risk = (
-        per_t.withColumn("n1", F.sum(F.col("d1") + F.col("c1")).over(w_suf))
-        .withColumn("n0", F.sum(F.col("d0") + F.col("c0")).over(w_suf))
-        .where(F.col("d1") + F.col("d0") > 0)
-    )
-    n = (F.col("n1") + F.col("n0")).cast("double")
-    d = (F.col("d1") + F.col("d0")).cast("double")
-    e1_q = F.round(q * (d * F.col("n1") / n), 0).cast("long")
-    v_q = F.when(
-        F.col("n1") + F.col("n0") > 1,
-        F.round(
-            q
-            * (
-                d
-                * (F.col("n1") / n)
-                * (F.col("n0") / n)
-                * ((n - d) / (n - F.lit(1.0)))
-            ),
-            0,
-        ).cast("long"),
-    ).otherwise(F.lit(0))
-    folded = at_risk.select(
-        F.col("s"),
-        F.col("d1"),
-        (F.col("d1") + F.col("d0")).alias("d"),
-        e1_q.alias("e1q"),
-        v_q.alias("vq"),
-    ).groupBy().agg(
-        F.countDistinct("s").alias("n_strata"),
-        F.sum("d1").alias("o1"),
-        F.sum("d").alias("o_total"),
-        F.sum("e1q").alias("se1q"),
-        F.sum("vq").alias("svq"),
-    )
-    headroom = F.col("o_total").cast("double") * q < F.lit(9e18)
-    e1 = F.col("se1q") / q
-    v = F.col("svq") / q
-    chi2 = (F.col("o1") - e1) * (F.col("o1") - e1) / v
-    return folded.select(
-        "n_strata",
-        "o1",
-        F.when(headroom, F.round(e1, 6)).alias("e1"),
-        F.when(headroom, F.round(v, 6)).alias("var_lr"),
-        F.when(headroom & (F.col("svq") > 0), F.round(chi2, 6)).alias("chi2_lr"),
-        F.when(
-            headroom & (F.col("svq") > 0), chi2 > F.lit(3.841459)
-        ).alias("reject_05"),
-    )
+    return _logrank(subjects, group_col, duration_col, observed_col, strata_col)
 
 
 #: 5% chi-square critical values by degrees of freedom (k-group log-rank
@@ -1883,85 +1842,46 @@ def survival_logrank_k(
             "for wider panels run pairwise tests with FDR control"
         )
     m = k - 1
-    q = F.lit(1_000_000_000.0)
-    obs = F.col(observed_col).cast("long")
+    q = F.lit(_QH)
     gc = F.col(group_col)
-    per_t = subjects.groupBy(F.col(duration_col).alias("t")).agg(
-        *[
-            F.sum((gc == j).cast("long") * obs).alias(f"d{j}")
-            for j in range(k)
-        ],
-        *[
-            F.sum((gc == j).cast("long") * (F.lit(1) - obs)).alias(f"c{j}")
-            for j in range(k)
-        ],
-    )
-    w_suf = Window.orderBy("t").rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
-    w_all = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    at_risk = per_t
-    for j in range(k):
-        at_risk = at_risk.withColumn(
-            f"n{j}", F.sum(F.col(f"d{j}") + F.col(f"c{j}")).over(w_suf)
-        )
+    arms = {str(j): (gc == j).cast("long") for j in range(k)}
+    keys = [F.col(duration_col).alias("t")]
+    per_t = _event_counts(subjects, keys, observed_col, arms)
+    risk = {f"n{j}": (f"d{j}", f"c{j}") for j in range(k)}
     d_all = sum(F.col(f"d{j}") for j in range(k))
     n_all = sum(F.col(f"n{j}") for j in range(k))
-    subj_all = sum(F.col(f"d{j}") + F.col(f"c{j}") for j in range(k))
+    # total cohort size rides the SAME single-partition window pass
+    # (sum over ALL per-time rows, computed BEFORE the d>0 filter) —
+    # no second aggregation of subjects, no one-row cross join
+    whole = {"n_all": tuple(f"{x}{j}" for j in range(k) for x in "dc")}
     at_risk = (
-        at_risk.withColumn("d", d_all.cast("long"))
+        _at_risk(per_t, risk, whole=whole)
+        .withColumn("d", d_all.cast("long"))
         .withColumn("nr", n_all.cast("long"))
-        # total cohort size rides the SAME single-partition window pass
-        # (sum over ALL per-time rows, computed BEFORE the d>0 filter) —
-        # no second aggregation of subjects, no one-row cross join
-        .withColumn("n_all", F.sum(subj_all).over(w_all).cast("long"))
         .where(F.col("d") > 0)
     )
     n = F.col("nr").cast("double")
     d = F.col("d").cast("double")
-    tail = (n - d) / (n - F.lit(1.0))
-    terms = [F.col("d").alias("d_t")]
-    for j in range(1, k):
-        terms.append(F.col(f"d{j}").alias(f"o{j}t"))
-        terms.append(
-            F.round(q * (d * F.col(f"n{j}") / n), 0)
-            .cast("long")
-            .alias(f"e{j}q")
-        )
-        for l in range(j, k):  # noqa: E741
-            if j == l:
-                # n - n_j in exact bigints: for k=2 this IS n0, making the
-                # spelling identical to survival_logrank's V term
-                v_expr = (
-                    d
-                    * (F.col(f"n{j}") / n)
-                    * ((F.col("nr") - F.col(f"n{j}")) / n)
-                    * tail
-                )
-            else:
-                v_expr = -(
-                    d * (F.col(f"n{j}") / n) * (F.col(f"n{l}") / n) * tail
-                )
-            terms.append(
-                F.when(
-                    F.col("nr") > 1,
-                    F.round(q * v_expr, 0).cast("long"),
-                )
-                .otherwise(F.lit(0))
-                .alias(f"v{j}{l}q")
-            )
-    terms.append(F.col("n_all"))
+    terms = [F.col("d").alias("d_t"), F.col("n_all")]
     aggs = [
         F.count(F.lit(1)).alias("n_times"),
         F.sum("d_t").alias("o_total"),
         F.max("n_all").alias("n_subjects"),
     ]
     for j in range(1, k):
-        aggs.append(F.sum(f"o{j}t").alias(f"o{j}"))
-        aggs.append(F.sum(f"e{j}q").alias(f"se{j}q"))
+        nj = F.col(f"n{j}")
+        terms.append(F.col(f"d{j}").alias(f"o{j}t"))
+        terms.append(_q9(d * nj / n).alias(f"e{j}q"))
+        aggs += [F.sum(f"o{j}t").alias(f"o{j}"), F.sum(f"e{j}q").alias(f"se{j}q")]
         for l in range(j, k):  # noqa: E741
+            # diagonal: n - n_j in exact bigints — for k=2 this IS n0,
+            # making the spelling identical to survival_logrank's V term
+            if j == l:
+                v_expr = _hypergeom(d, n, nj, F.col("nr") - nj)[1]
+            else:
+                v_expr = -_hypergeom(d, n, nj, F.col(f"n{l}"))[1]
+            v_q = F.when(F.col("nr") > 1, _q9(v_expr)).otherwise(F.lit(0))
+            terms.append(v_q.alias(f"v{j}{l}q"))
             aggs.append(F.sum(f"v{j}{l}q").alias(f"sv{j}{l}q"))
     folded = at_risk.select(*terms).groupBy().agg(*aggs)
 
@@ -1998,16 +1918,16 @@ def survival_logrank_k(
             + F.lit(2.0) * z(1) * z(3) * c13
             + F.lit(2.0) * z(2) * z(3) * c23
         )
-    headroom = F.col("o_total").cast("double") * q < F.lit(9e18)
-    chi2 = quad / det
-    crit = F.lit(_CHI2_CRIT_05[m])
+    stat, reject = _chi2_terminal(
+        _headroom("o_total", _QH) & (det > 0), quad / det, "chi2_lr_k", _CHI2_CRIT_05[m]
+    )
     return folded.select(
         F.lit(k).alias("n_groups"),
         "n_subjects",
         "o_total",
-        F.when(headroom & (det > 0), F.round(chi2, 6)).alias("chi2_lr_k"),
+        stat,
         F.lit(m).alias("df"),
-        F.when(headroom & (det > 0), chi2 > crit).alias("reject_05"),
+        reject,
     )
 
 
@@ -2061,51 +1981,16 @@ def survival_logrank_weighted(
     extra width. Returns 4 rows (weight_fn, o1, z_w, var_w, chi2_w,
     reject_05) ordered by weight_fn.
     """
-    q = F.lit(1_000_000_000.0)
-    ql = F.lit(1_000_000_000_000.0)  # 1e-12 ln quantum (greenwood's)
-    is1 = (F.col(group_col) == 1).cast("long")
-    obs = F.col(observed_col).cast("long")
-    per_t = subjects.groupBy(F.col(duration_col).alias("t")).agg(
-        F.sum(is1 * obs).alias("d1"),
-        F.sum(is1 * (F.lit(1) - obs)).alias("c1"),
-        F.sum((F.lit(1) - is1) * obs).alias("d0"),
-        F.sum((F.lit(1) - is1) * (F.lit(1) - obs)).alias("c0"),
-    )
-    w_suf = Window.orderBy("t").rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
-    w_prev = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    at_risk = (
-        per_t.withColumn("n1", F.sum(F.col("d1") + F.col("c1")).over(w_suf))
-        .withColumn("n0", F.sum(F.col("d0") + F.col("c0")).over(w_suf))
-        .where(F.col("d1") + F.col("d0") > 0)
-    )
+    q = F.lit(_QH)
+    w = _window()
     n_big = F.col("n1") + F.col("n0")
-    n = n_big.cast("double")
     d_big = F.col("d1") + F.col("d0")
-    d = d_big.cast("double")
-    # pooled-KM left limit: quantized ln(1 - d/n) prefix fold + dead latch
-    lnq = F.when(
-        d_big < n_big,
-        F.round(ql * F.log(F.lit(1.0) - d / n), 0).cast("long"),
-    ).otherwise(F.lit(0))
-    dead_here = (d_big == n_big).cast("int")
-    scored = (
-        at_risk.withColumn("__lnq", lnq)
-        .withColumn("__dead", dead_here)
-        .withColumn("__slnq_prev", F.sum("__lnq").over(w_prev))
-        .withColumn("__dead_prev", F.max("__dead").over(w_prev))
-    )
-    s_prev = F.when(
-        F.coalesce(F.col("__dead_prev"), F.lit(0)) == 1, F.lit(0.0)
-    ).otherwise(F.exp(F.coalesce(F.col("__slnq_prev"), F.lit(0)) / ql))
+    n, d = n_big.cast("double"), d_big.cast("double")
+    at_risk = _risk_set(subjects, duration_col, observed_col, group_col)
+    # pooled-KM left limit: the quantized ln fold over the preceding rows
+    scored, s_prev = _km_fold(at_risk, d_big, n_big, w, _PREV)
     # n_total rides the first row's suffix sums (no second subjects pass)
-    w_all = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    n_tot = F.max(n_big).over(w_all).cast("double")
+    n_tot = F.max(n_big).over(w.rowsBetween(*_WHOLE)).cast("double")
     weights = {
         "logrank": F.lit(1.0),
         "gehan": n / n_tot,
@@ -2113,44 +1998,26 @@ def survival_logrank_weighted(
         f"fh_{rho:g}_{gamma:g}": F.pow(s_prev, F.lit(float(rho)))
         * F.pow(F.lit(1.0) - s_prev, F.lit(float(gamma))),
     }
-    e1_term = d * F.col("n1") / n
-    v_term = (
-        d
-        * (F.col("n1") / n)
-        * (F.col("n0") / n)
-        * ((n - d) / (n - F.lit(1.0)))
-    )
+    e1_term, v_term = _hypergeom(d, n, F.col("n1"), F.col("n0"))
     cols = []
-    for i, w in enumerate(weights.values()):
-        cols.append(
-            F.round(q * (w * F.col("d1").cast("double")), 0)
-            .cast("long")
-            .alias(f"zo{i}q")
-        )
-        cols.append(
-            F.round(q * (w * e1_term), 0).cast("long").alias(f"ze{i}q")
-        )
-        cols.append(
-            F.when(n_big > 1, F.round(q * (w * w * v_term), 0).cast("long"))
+    for i, wt in enumerate(weights.values()):
+        cols += [
+            _q9(wt * F.col("d1").cast("double")).alias(f"zo{i}q"),
+            _q9(wt * e1_term).alias(f"ze{i}q"),
+            F.when(n_big > 1, _q9(wt * wt * v_term))
             .otherwise(F.lit(0))
-            .alias(f"v{i}q")
-        )
-    folded = scored.select(
-        F.col("d1"), d_big.alias("d"), *cols
-    ).groupBy().agg(
+            .alias(f"v{i}q"),
+        ]
+    folded = scored.select(F.col("d1"), d_big.alias("d"), *cols).groupBy().agg(
         F.sum("d1").alias("o1"),
         F.sum("d").alias("o_total"),
         *[
-            s
+            F.sum(c).alias(f"s{c}")
             for i in range(len(weights))
-            for s in (
-                F.sum(f"zo{i}q").alias(f"szo{i}q"),
-                F.sum(f"ze{i}q").alias(f"sze{i}q"),
-                F.sum(f"v{i}q").alias(f"sv{i}q"),
-            )
+            for c in (f"zo{i}q", f"ze{i}q", f"v{i}q")
         ],
     )
-    headroom = F.col("o_total").cast("double") * q < F.lit(9e18)
+    headroom = _headroom("o_total", _QH)
     rows = []
     for i, name in enumerate(weights):
         # each quantized sum divides by q BEFORE the subtraction: with
@@ -2160,20 +2027,15 @@ def survival_logrank_weighted(
         # bit-for-bit reduction the identity test pins
         zw = F.col(f"szo{i}q") / q - F.col(f"sze{i}q") / q
         vw = F.col(f"sv{i}q") / q
-        chi2 = zw * zw / vw
         rows.append(
             F.struct(
                 F.lit(name).alias("weight_fn"),
                 F.col("o1").alias("o1"),
                 F.when(headroom, F.round(zw, 6)).alias("z_w"),
                 F.when(headroom, F.round(vw, 6)).alias("var_w"),
-                F.when(
-                    headroom & (F.col(f"sv{i}q") > 0), F.round(chi2, 6)
-                ).alias("chi2_w"),
-                F.when(
-                    headroom & (F.col(f"sv{i}q") > 0),
-                    chi2 > F.lit(3.841459),
-                ).alias("reject_05"),
+                *_chi2_terminal(
+                    headroom & (F.col(f"sv{i}q") > 0), zw * zw / vw, "chi2_w"
+                ),
             )
         )
     return (
@@ -2216,58 +2078,15 @@ def survival_diff_at(
     gather. Returns one row (tau, n1_subjects, n0_subjects, s1, se1,
     s0, se0, diff, se_diff, z_diff, reject_05).
     """
-    q = F.lit(1_000_000_000_000.0)
-    obs = F.col(observed_col).cast("long")
-    per_t = subjects.groupBy(
-        F.col(group_col).alias("g"), F.col(duration_col).alias("t")
-    ).agg(
-        F.sum(obs).alias("d"),
-        F.sum(F.lit(1) - obs).alias("c"),
+    keys = [F.col(group_col).alias("g"), F.col(duration_col).alias("t")]
+    per_t = _event_counts(subjects, keys, observed_col)
+    w = _window(part="g")
+    at_risk = _at_risk(per_t, {"n_risk": ("d", "c")}, F.col("d") > 0, w)
+    d, n = F.col("d"), F.col("n_risk")
+    scored, surv = _km_fold(
+        at_risk.withColumn("__sgwq", _greenwood(d, n)), d, n, w, sums=("__sgwq",)
     )
-    w_suf = (
-        Window.partitionBy("g")
-        .orderBy("t")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    w_run = (
-        Window.partitionBy("g")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    at_risk = per_t.withColumn(
-        "n_risk", F.sum(F.col("d") + F.col("c")).over(w_suf)
-    ).where(F.col("d") > 0)
-    frac = F.col("d").cast("double") / F.col("n_risk")
-    ln_q = F.when(
-        F.col("d") < F.col("n_risk"),
-        F.round(F.log(F.lit(1.0) - frac) * q, 0).cast("long"),
-    ).otherwise(F.lit(0))
-    gw_q = F.when(
-        F.col("d") < F.col("n_risk"),
-        F.round(
-            F.col("d").cast("double")
-            / (F.col("n_risk") * (F.col("n_risk") - F.col("d")))
-            * q,
-            0,
-        ).cast("long"),
-    ).otherwise(F.lit(0))
-    scored = (
-        at_risk.withColumn("__lnq", ln_q)
-        .withColumn("__gwq", gw_q)
-        .withColumn(
-            "__dead",
-            F.max((F.col("d") == F.col("n_risk")).cast("int")).over(w_run),
-        )
-        .withColumn("__slnq", F.sum("__lnq").over(w_run))
-        .withColumn("__sgwq", F.sum("__gwq").over(w_run))
-        .withColumn("__nmax", F.max("n_risk").over(w_run))
-    )
-    surv = F.when(F.col("__dead") == 1, F.lit(0.0)).otherwise(
-        F.exp(F.col("__slnq") / q)
-    )
-    se = F.when(F.col("__dead") == 1, F.lit(0.0)).otherwise(
-        F.exp(F.col("__slnq") / q) * F.sqrt(F.col("__sgwq") / q)
-    )
+    scored = scored.withColumn("__nmax", F.max("n_risk").over(w.rowsBetween(*_RUN)))
     w_last = Window.partitionBy("g").orderBy(F.col("t").desc())
     at_tau = (
         scored.where(F.col("t") <= F.lit(int(tau)))
@@ -2276,11 +2095,8 @@ def survival_diff_at(
         .select(
             "g",
             surv.alias("s"),
-            se.alias("se"),
-            (
-                F.col("__nmax").cast("double") * F.col("__nmax")
-                < F.lit(9e18)
-            ).alias("ok"),
+            (surv * F.sqrt(F.col("__sgwq") / F.lit(_QL))).alias("se"),
+            _headroom("__nmax").alias("ok"),
         )
     )
     # cohort sizes come from the PRE-FILTER per-time relation (a cohort
@@ -2289,20 +2105,17 @@ def survival_diff_at(
         F.sum(F.col("d") + F.col("c")).alias("n_subj")
     )
     gathered = sizes_all.join(at_tau, "g", "left").groupBy().agg(
-        F.max(F.when(F.col("g") == 1, F.col("n_subj"))).alias("n1_subjects"),
-        F.max(F.when(F.col("g") == 0, F.col("n_subj"))).alias("n0_subjects"),
-        F.max(F.when(F.col("g") == 1, F.coalesce(F.col("s"), F.lit(1.0)))).alias(
-            "s1r"
-        ),
-        F.max(F.when(F.col("g") == 1, F.coalesce(F.col("se"), F.lit(0.0)))).alias(
-            "se1r"
-        ),
-        F.max(F.when(F.col("g") == 0, F.coalesce(F.col("s"), F.lit(1.0)))).alias(
-            "s0r"
-        ),
-        F.max(F.when(F.col("g") == 0, F.coalesce(F.col("se"), F.lit(0.0)))).alias(
-            "se0r"
-        ),
+        *[
+            F.max(F.when(F.col("g") == g, F.col("n_subj"))).alias(f"n{g}_subjects")
+            for g in (1, 0)
+        ],
+        *[
+            F.max(
+                F.when(F.col("g") == g, F.coalesce(F.col(c), F.lit(dflt)))
+            ).alias(f"{c}{g}r")
+            for g in (1, 0)
+            for c, dflt in (("s", 1.0), ("se", 0.0))
+        ],
         F.min(F.coalesce(F.col("ok"), F.lit(True)).cast("int")).alias("okmin"),
     )
     se_diff = F.sqrt(
@@ -2314,10 +2127,10 @@ def survival_diff_at(
         F.lit(int(tau)).alias("tau"),
         "n1_subjects",
         "n0_subjects",
-        F.when(ok, F.round(F.col("s1r"), 6)).alias("s1"),
-        F.when(ok, F.round(F.col("se1r"), 6)).alias("se1"),
-        F.when(ok, F.round(F.col("s0r"), 6)).alias("s0"),
-        F.when(ok, F.round(F.col("se0r"), 6)).alias("se0"),
+        *[
+            F.when(ok, F.round(F.col(f"{c}r"), 6)).alias(c)
+            for c in ("s1", "se1", "s0", "se0")
+        ],
         F.when(ok, F.round(F.col("s1r") - F.col("s0r"), 6)).alias("diff"),
         F.when(ok, F.round(se_diff, 6)).alias("se_diff"),
         F.when(ok & (se_diff > 0), F.round(z, 6)).alias("z_diff"),
@@ -2325,6 +2138,55 @@ def survival_diff_at(
             "reject_05"
         ),
     )
+
+
+def _cox_risk_set(
+    subjects: DataFrame, group_col: str, duration_col: str, observed_col: str
+) -> DataFrame:
+    """The Cox fit's distinct-duration relation at event times:
+    (t, d1, d, n1, n0, n1_all, n0_all)."""
+    at_risk = _risk_set(subjects, duration_col, observed_col, group_col, whole=True)
+    d = (F.col("d1") + F.col("d0")).alias("d")
+    return at_risk.select("t", "d1", d, "n1", "n0", "n1_all", "n0_all")
+
+
+def _cox_terms(b: Column) -> tuple[Column, Column]:
+    """Per-time Breslow score and information terms at log hazard ratio
+    ``b``: r = n1 e^b / (n1 e^b + n0), U_t = d1 - d r, I_t = d r (1 - r)
+    — also the Schoenfeld residual and its variance."""
+    num = F.col("n1").cast("double") * F.exp(b)
+    rr = num / (num + F.col("n0").cast("double"))
+    d = F.col("d").cast("double")
+    return F.col("d1").cast("double") - d * rr, d * rr * (F.lit(1.0) - rr)
+
+
+def _cox_fold(ev: DataFrame, beta_df: DataFrame | None) -> DataFrame:
+    """One-row (su, si, o_total, n1_subjects, n0_subjects[, b_in]) fold
+    of the quantized per-time U/I terms at the scalar beta of
+    ``beta_df`` (b = 0 when None)."""
+    src = ev if beta_df is None else ev.crossJoin(beta_df)
+    u, i = _cox_terms(F.lit(0.0) if beta_df is None else F.col("b"))
+    aggs = [
+        F.sum(_q9(u)).alias("su"),
+        F.sum(_q9(i)).alias("si"),
+        F.sum("d").alias("o_total"),
+        F.max("n1_all").alias("n1_subjects"),
+        F.max("n0_all").alias("n0_subjects"),
+    ]
+    if beta_df is not None:
+        aggs.append(F.max("b").alias("b_in"))
+    return src.groupBy().agg(*aggs)
+
+
+def _cox_beta(ev: DataFrame, iters: int) -> DataFrame:
+    """The one-row (b) relation after ``iters`` Newton-Raphson updates
+    b <- b + U/I from b = 0, unrolled into the plan."""
+    q = F.lit(_QH)
+    step = F.when(F.col("si") > 0, (F.col("su") / q) / (F.col("si") / q))
+    beta = _cox_fold(ev, None).select((F.lit(0.0) + step).alias("b"))
+    for _ in range(iters - 1):
+        beta = _cox_fold(ev, beta).select((F.col("b_in") + step).alias("b"))
+    return beta
 
 
 def cox_ph_binary(
@@ -2378,79 +2240,11 @@ def cox_ph_binary(
     from datafusion_gpu_spark.operators.util import scale_truncator
 
     ckpt = scale_truncator(subjects.sparkSession.sparkContext)
-    q = F.lit(1_000_000_000.0)
-    is1 = (F.col(group_col) == 1).cast("long")
-    obs = F.col(observed_col).cast("long")
-    per_t = subjects.groupBy(F.col(duration_col).alias("t")).agg(
-        F.sum(is1 * obs).alias("d1"),
-        F.sum(is1 * (F.lit(1) - obs)).alias("c1"),
-        F.sum((F.lit(1) - is1) * obs).alias("d0"),
-        F.sum((F.lit(1) - is1) * (F.lit(1) - obs)).alias("c0"),
-    )
-    w_suf = Window.orderBy("t").rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
-    w_all = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ev = (
-        per_t.withColumn("n1", F.sum(F.col("d1") + F.col("c1")).over(w_suf))
-        .withColumn("n0", F.sum(F.col("d0") + F.col("c0")).over(w_suf))
-        .withColumn("n1_all", F.sum(F.col("d1") + F.col("c1")).over(w_all))
-        .withColumn("n0_all", F.sum(F.col("d0") + F.col("c0")).over(w_all))
-        .where(F.col("d1") + F.col("d0") > 0)
-        .select(
-            "d1",
-            (F.col("d1") + F.col("d0")).alias("d"),
-            "n1",
-            "n0",
-            "n1_all",
-            "n0_all",
-        )
-    )
-    # Reuse-vs-recompute gate (r16): checkpointed only on the cluster
-    # path (checkpoint dir configured); identity in local mode, where
-    # the r15 driver bench measured the eager cut +25% at sf0.1 — AQE
-    # exchange reuse already collapses the repeated groupBy(duration)
-    # exchange across the Newton folds there.
-    ev = ckpt(ev)
-
-    def fold(beta_df):
-        """One-row (su, si, o_total, n1_all, n0_all[, b]) fold of the
-        per-time U/I terms at the scalar beta (b = 0 when beta_df is
-        None)."""
-        src = ev if beta_df is None else ev.crossJoin(beta_df)
-        b = F.lit(0.0) if beta_df is None else F.col("b")
-        eb = F.exp(b)
-        num = F.col("n1").cast("double") * eb
-        rr = num / (num + F.col("n0").cast("double"))
-        u_q = F.round(
-            q * (F.col("d1").cast("double") - F.col("d").cast("double") * rr),
-            0,
-        ).cast("long")
-        i_q = F.round(
-            q * (F.col("d").cast("double") * rr * (F.lit(1.0) - rr)), 0
-        ).cast("long")
-        aggs = [
-            F.sum(u_q).alias("su"),
-            F.sum(i_q).alias("si"),
-            F.sum("d").alias("o_total"),
-            F.max("n1_all").alias("n1_subjects"),
-            F.max("n0_all").alias("n0_subjects"),
-        ]
-        if beta_df is not None:
-            aggs.append(F.max("b").alias("b_in"))
-        return src.groupBy().agg(*aggs)
-
-    step = F.when(
-        F.col("si") > 0,
-        (F.col("su") / q) / (F.col("si") / q),
-    )
-    beta = fold(None).select((F.lit(0.0) + step).alias("b"))
-    for _ in range(iters - 1):
-        beta = fold(beta).select((F.col("b_in") + step).alias("b"))
-    final = fold(beta)
-    headroom = F.col("o_total").cast("double") * q < F.lit(9e18)
+    ev = ckpt(_cox_risk_set(subjects, group_col, duration_col, observed_col))
+    final = _cox_fold(ev, _cox_beta(ev, iters))
+    q = F.lit(_QH)
+    headroom = _headroom("o_total", _QH)
+    ok = headroom & (F.col("si") > 0)
     b_fin = F.col("b_in")
     se = F.lit(1.0) / F.sqrt(F.col("si") / q)
     z = b_fin * F.sqrt(F.col("si") / q)
@@ -2460,21 +2254,13 @@ def cox_ph_binary(
         F.col("o_total").alias("n_events"),
         F.when(headroom, F.round(b_fin, 6)).alias("beta"),
         F.when(headroom, F.round(F.exp(b_fin), 6)).alias("hazard_ratio"),
-        F.when(headroom & (F.col("si") > 0), F.round(se, 6)).alias("se_beta"),
+        F.when(ok, F.round(se, 6)).alias("se_beta"),
         # Wald 95% interval on the LOG scale, exponentiated (the
         # standard spelling: symmetric in beta, asymmetric in HR)
-        F.when(
-            headroom & (F.col("si") > 0),
-            F.round(F.exp(b_fin - F.lit(1.959964) * se), 6),
-        ).alias("hr_lo"),
-        F.when(
-            headroom & (F.col("si") > 0),
-            F.round(F.exp(b_fin + F.lit(1.959964) * se), 6),
-        ).alias("hr_hi"),
-        F.when(headroom & (F.col("si") > 0), F.round(z, 6)).alias("z_wald"),
-        F.when(
-            headroom & (F.col("si") > 0), F.abs(z) > F.lit(1.959964)
-        ).alias("reject_05"),
+        F.when(ok, F.round(F.exp(b_fin - F.lit(1.959964) * se), 6)).alias("hr_lo"),
+        F.when(ok, F.round(F.exp(b_fin + F.lit(1.959964) * se), 6)).alias("hr_hi"),
+        F.when(ok, F.round(z, 6)).alias("z_wald"),
+        F.when(ok, F.abs(z) > F.lit(1.959964)).alias("reject_05"),
     )
 
 
@@ -2521,86 +2307,36 @@ def cox_schoenfeld_ph(
     var_theta, chi2_ph, reject_05) where reject_05 = TRUE means the
     PH assumption is VIOLATED at the 5% level (chi2 > 3.841459).
 
-    The Newton chain deliberately restates :func:`cox_ph_binary`'s
-    fold rather than calling into it: the fit's machinery stays
-    untouched (its driver row stays valid), and the survival family
-    already duplicates the per-time spelling across the log-rank
-    variants for the same reason.
+    The Newton chain is :func:`cox_ph_binary`'s own (the shared
+    ``_cox_beta``), so the beta tested here is the one the fit reports.
     """
-    q = F.lit(1_000_000_000.0)
-    is1 = (F.col(group_col) == 1).cast("long")
-    obs = F.col(observed_col).cast("long")
-    per_t = subjects.groupBy(F.col(duration_col).alias("t")).agg(
-        F.sum(is1 * obs).alias("d1"),
-        F.sum(is1 * (F.lit(1) - obs)).alias("c1"),
-        F.sum((F.lit(1) - is1) * obs).alias("d0"),
-        F.sum((F.lit(1) - is1) * (F.lit(1) - obs)).alias("c0"),
-    )
-    w_suf = Window.orderBy("t").rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
-    ev = (
-        per_t.withColumn("n1", F.sum(F.col("d1") + F.col("c1")).over(w_suf))
-        .withColumn("n0", F.sum(F.col("d0") + F.col("c0")).over(w_suf))
-        .where(F.col("d1") + F.col("d0") > 0)
-        .select("t", "d1", (F.col("d1") + F.col("d0")).alias("d"), "n1", "n0")
-    )
-
-    def fold(beta_df):
-        src = ev if beta_df is None else ev.crossJoin(beta_df)
-        b = F.lit(0.0) if beta_df is None else F.col("b")
-        eb = F.exp(b)
-        num = F.col("n1").cast("double") * eb
-        rr = num / (num + F.col("n0").cast("double"))
-        u_q = F.round(
-            q * (F.col("d1").cast("double") - F.col("d").cast("double") * rr),
-            0,
-        ).cast("long")
-        i_q = F.round(
-            q * (F.col("d").cast("double") * rr * (F.lit(1.0) - rr)), 0
-        ).cast("long")
-        aggs = [F.sum(u_q).alias("su"), F.sum(i_q).alias("si")]
-        if beta_df is not None:
-            aggs.append(F.max("b").alias("b_in"))
-        return src.groupBy().agg(*aggs)
-
-    step = F.when(F.col("si") > 0, (F.col("su") / q) / (F.col("si") / q))
-    beta = fold(None).select((F.lit(0.0) + step).alias("b"))
-    for _ in range(iters - 1):
-        beta = fold(beta).select((F.col("b_in") + step).alias("b"))
-    b_fin = beta  # after `iters` updates — the SAME beta cox_ph_binary reports
-
+    q = F.lit(_QH)
+    ev = _cox_risk_set(subjects, group_col, duration_col, observed_col)
     # GT fold at the converged beta: min-max-normalized event time as
     # the transform, per-time terms quantized exactly like the fit's.
-    w_all = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    whole = _window().rowsBetween(*_WHOLE)
     gt = (
-        ev.withColumn("tmin", F.min("t").over(w_all))
-        .withColumn("tmax", F.max("t").over(w_all))
-        .crossJoin(b_fin)
+        ev.withColumn("tmin", F.min("t").over(whole))
+        .withColumn("tmax", F.max("t").over(whole))
+        .crossJoin(_cox_beta(ev, iters))
     )
-    eb = F.exp(F.col("b"))
-    num = F.col("n1").cast("double") * eb
-    rr = num / (num + F.col("n0").cast("double"))
+    s, v = _cox_terms(F.col("b"))
     gtr = F.when(
         F.col("tmax") > F.col("tmin"),
         (F.col("t") - F.col("tmin")).cast("double")
         / (F.col("tmax") - F.col("tmin")).cast("double"),
     ).otherwise(F.lit(0.0))
-    s = F.col("d1").cast("double") - F.col("d").cast("double") * rr
-    v = F.col("d").cast("double") * rr * (F.lit(1.0) - rr)
     folded = gt.groupBy().agg(
-        F.sum(F.round(q * s, 0).cast("long")).alias("ssq"),
+        F.sum(_q9(s)).alias("ssq"),
         F.sum(F.round(q * gtr * s, 0).cast("long")).alias("sgsq"),
-        F.sum(F.round(q * v, 0).cast("long")).alias("svq"),
+        F.sum(_q9(v)).alias("svq"),
         F.sum(F.round(q * gtr * v, 0).cast("long")).alias("sgvq"),
         F.sum(F.round(q * gtr * gtr * v, 0).cast("long")).alias("sg2vq"),
         F.sum("d").alias("o_total"),
         F.count(F.lit(1)).alias("n_times"),
         F.max("b").alias("beta"),
     )
-    headroom = F.col("o_total").cast("double") * q < F.lit(9e18)
+    headroom = _headroom("o_total", _QH)
     u_theta = (
         F.col("sgsq") / q
         - (F.col("sgvq") / q) * (F.col("ssq") / q) / (F.col("svq") / q)
@@ -2609,7 +2345,6 @@ def cox_schoenfeld_ph(
         F.col("sg2vq") / q
         - (F.col("sgvq") / q) * (F.col("sgvq") / q) / (F.col("svq") / q)
     )
-    chi2 = u_theta * u_theta / var_theta
     ok = headroom & (F.col("svq") > 0)
     return folded.select(
         F.col("n_times").alias("n_event_times"),
@@ -2617,10 +2352,7 @@ def cox_schoenfeld_ph(
         F.when(headroom, F.round(F.col("beta"), 6) + F.lit(0.0)).alias("beta"),
         F.when(ok, F.round(u_theta, 6) + F.lit(0.0)).alias("u_theta"),
         F.when(ok, F.round(var_theta, 6) + F.lit(0.0)).alias("var_theta"),
-        F.when(ok & (var_theta > 0), F.round(chi2, 6)).alias("chi2_ph"),
-        F.when(ok & (var_theta > 0), chi2 > F.lit(3.841459)).alias(
-            "reject_05"
-        ),
+        *_chi2_terminal(ok & (var_theta > 0), u_theta * u_theta / var_theta, "chi2_ph"),
     )
 
 
@@ -2658,50 +2390,22 @@ def life_table(
     """
     if width <= 0:
         raise ValueError(f"interval width must be positive (got {width})")
-    obs = F.col(observed_col).cast("long")
     iv = F.expr(
         f"(CAST({duration_col} AS BIGINT) DIV {int(width)}) * {int(width)}"
     )
-    per_i = subjects.groupBy(iv.alias("interval_start")).agg(
-        F.sum(obs).alias("d"),
-        F.sum(F.lit(1) - obs).alias("c"),
-    )
-    w_suf = Window.orderBy("interval_start").rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
-    w_prev = Window.orderBy("interval_start").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    ql = F.lit(1_000_000_000_000.0)
-    at_risk = per_i.withColumn("n", F.sum(F.col("d") + F.col("c")).over(w_suf))
+    per_i = _event_counts(subjects, [iv.alias("interval_start")], observed_col)
+    w = _window("interval_start")
+    at_risk = _at_risk(per_i, {"n": ("d", "c")}, w=w)
     n_eff = F.col("n").cast("double") - F.col("c").cast("double") / F.lit(2.0)
-    q = F.col("d").cast("double") / n_eff
-    lnq = F.when(
-        F.col("d").cast("double") < n_eff,
-        F.round(ql * F.log(F.lit(1.0) - q), 0).cast("long"),
-    ).otherwise(F.lit(0))
-    dead = (F.col("d").cast("double") == n_eff).cast("int")
-    run = (
-        at_risk.withColumn("__lnq", lnq)
-        .withColumn("__dead", dead)
-        .withColumn("__slnq", F.sum("__lnq").over(w_prev))
-        .withColumn("__dead_prev", F.max("__dead").over(w_prev))
-    )
     # survival at the END of interval i includes interval i's own factor
-    s_end = F.when(
-        (F.coalesce(F.col("__dead_prev"), F.lit(0)) == 1)
-        | (F.col("__dead") == 1),
-        F.lit(0.0),
-    ).otherwise(
-        F.exp((F.coalesce(F.col("__slnq"), F.lit(0)) + F.col("__lnq")) / ql)
-    )
+    run, s_end = _km_fold(at_risk, F.col("d"), n_eff, w)
     return run.select(
         "interval_start",
         F.col("n").alias("n_enter"),
         F.col("d").alias("n_events"),
         F.col("c").alias("n_censored"),
         F.round(n_eff, 6).alias("effective_n"),
-        F.round(q, 6).alias("q"),
+        F.round(F.col("d").cast("double") / n_eff, 6).alias("q"),
         F.round(s_end, 6).alias("survival"),
     ).orderBy("interval_start")
 

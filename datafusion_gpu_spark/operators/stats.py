@@ -120,30 +120,6 @@ def bucketed_cumsum(
     )
 
 
-#: Relations persisted by :func:`cumsum_auto` for its routing count
-#: stay persisted until a few more invocations in the same session have
-#: come through (``context._SessionState.counted``, oldest first).
-#: Keeping the handle guarantees the downstream read hits the persisted
-#: blocks (the count's materialization) instead of re-running the
-#: upstream aggregation; the bound keeps a long-lived session from
-#: accreting cached blocks. Evicting early is CORRECT, just slower —
-#: Spark recomputes an unpersisted plan from lineage.
-_COUNTED_KEEP = 8
-
-
-def _persist_for_count(df: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    from datafusion_gpu_spark.context import session_state
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    counted = session_state(df.sparkSession).counted
-    counted.append(df)
-    while len(counted) > _COUNTED_KEEP:
-        counted.pop(0).unpersist(blocking=False)
-    return df
-
-
 def cumsum_auto(
     distinct_values: DataFrame,
     value_col: str,
@@ -158,7 +134,7 @@ def cumsum_auto(
     execution also serve the downstream read (rather than assuming
     Spark shuffle reuse), the input is persisted (MEMORY_AND_DISK)
     before the count and released on a bounded per-session FIFO
-    (:data:`_COUNTED_KEEP` outstanding handles): the count
+    (``context.persist_counted``): the count
     materializes the blocks, the cumsum consumes them, and upstream
     work runs ONCE per invocation by construction.
 
@@ -169,8 +145,14 @@ def cumsum_auto(
     no single task ever orders more than ``n / n_buckets`` rows. The
     two spellings are bit-identical on exact-integer inputs, so
     routing is purely a physical-plan decision."""
+    from pyspark import StorageLevel
+
+    from datafusion_gpu_spark.context import persist_counted
+
     limit = CUMSUM_ROUTE_THRESHOLD if threshold is None else threshold
-    distinct_values = _persist_for_count(distinct_values)
+    distinct_values = persist_counted(
+        distinct_values.sparkSession, distinct_values, StorageLevel.MEMORY_AND_DISK
+    )
     if distinct_values.count() <= limit:
         w = Window.orderBy(value_col).rowsBetween(
             Window.unboundedPreceding, Window.currentRow

@@ -719,10 +719,11 @@ def bpe_train(
     picks; the one documented divergence from pure sequential training
     (shared with other parallel BPE trainers) is that a merge can mint
     a brand-new pair mid-batch that one-at-a-time training would have
-    ranked before a later batch member. Lineage is
-    localCheckpoint-truncated every 8 rounds so the logical plan stays
-    O(1) in the round count instead of accreting one mapInPandas layer
-    per round.
+    ranked before a later batch member. Lineage is cut every 8 rounds
+    (:func:`~.util.lineage_truncator`: reliable ``checkpoint`` when a
+    checkpoint dir is set, ``localCheckpoint`` otherwise) so the logical
+    plan stays O(1) in the round count instead of accreting one
+    mapInPandas layer per round.
 
     Returns the learned merges as [(left, right, weighted_count)],
     rank-ordered — or (merges, final_state) when ``return_state`` is
@@ -730,8 +731,11 @@ def bpe_train(
     per-round cost is one aggregation over the vocabulary relation —
     the corpus is touched exactly once.
     """
+    from datafusion_gpu_spark.operators.util import lineage_truncator
+
     if merge_batch < 1:
         raise ValueError("merge_batch must be >= 1")
+    cut = lineage_truncator(docs.sparkSession.sparkContext)
     words = (
         docs.select(
             F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("w")
@@ -816,7 +820,7 @@ def bpe_train(
             )
             rounds += 1
             if rounds % 8 == 0:
-                nxt = nxt.localCheckpoint(eager=True)
+                nxt = cut(nxt)
             else:
                 nxt = nxt.persist()
                 nxt.count()

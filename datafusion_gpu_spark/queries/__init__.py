@@ -75,6 +75,12 @@ _CHANGED_SINCE_CHECK: tuple[str, ...] = (
     # r16 changed _signatures_of_shingles under both (set sizes fused
     # into the signature pass); last driver-green in r15.
     "dedup_incremental_minhash", "streaming_incremental_minhash",
+    # the survival family now builds on one shared risk-set substrate
+    # (operators/events.py); these rows' optimized plans changed (same
+    # values), the five whose plans stayed identical are not pinned
+    "events_survival_km", "events_survival_greenwood", "events_competing_risks",
+    "events_survival_median", "events_survival_rmst", "events_logrank_k",
+    "events_logrank_weighted", "events_life_table", "events_survival_diff_72h",
 )
 
 

@@ -42,6 +42,7 @@ from datafusion_gpu_spark.queries.pipeline_common import (  # noqa: F401
     _CUSUM_ORACLE,
     _NORM,
     _docs,
+    _purchase_subjects,
     _sparse_copurchase_edges,
 )
 
@@ -2630,26 +2631,7 @@ def _events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-12-quantized bigint log terms, so the oracle replays the window
     algebra exactly (see the operator docstring for the numeric
     contract)."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
-    )
+    subjects = _purchase_subjects(spark, sf_dir)
     return events.survival_km(subjects, "duration", "observed")
 
 

@@ -24,6 +24,36 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("documents")
 
 
+def _purchase_subjects(spark: SparkSession, sf_dir: str, **cohorts) -> DataFrame:
+    """Time-to-first-purchase subjects for the survival rows, one per
+    user: ``duration`` = whole hours from the user's first event to the
+    first purchase (``observed`` = 1) or to the last event (right-
+    censored, ``observed`` = 0) — exact integer division of epoch
+    micros, as the oracles' ``life`` CTE spells it. ``cohorts`` name
+    leading columns computed from ``user_id`` (a cohort, a stratum)."""
+    load(spark, sf_dir)
+    ep = F.unix_micros(F.col("ts").cast("timestamp"))
+    life = (
+        spark.table("events")
+        .select(
+            "user_id",
+            ep.alias("us"),
+            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
+        )
+        .groupBy("user_id")
+        .agg(
+            F.min("us").alias("start"),
+            F.min("pus").alias("fp"),
+            F.max("us").alias("last"),
+        )
+    )
+    return life.select(
+        *[col.alias(name) for name, col in cohorts.items()],
+        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
+        F.col("fp").isNotNull().cast("int").alias("observed"),
+    )
+
+
 def _sparse_copurchase_edges(spark: SparkSession) -> DataFrame:
     """Shared edge list for the link-prediction and k-core entries: the
     co-purchase graph restricted to HIGH-QUANTITY lines (both endpoints

@@ -18,7 +18,11 @@ from pyspark.sql import functions as F
 
 from datafusion_gpu_spark.operators import events, similarity
 from datafusion_gpu_spark.queries import load
-from datafusion_gpu_spark.queries.pipeline_common import _NORM, _docs
+from datafusion_gpu_spark.queries.pipeline_common import (
+    _NORM,
+    _docs,
+    _purchase_subjects,
+)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -1069,26 +1073,7 @@ def _events_survival_greenwood(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve omits — same subjects, same 1e-12 quantized log fold, one
     more quantized running sum for the variance factor. See the
     operator docstring for the numeric contract."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
-    )
+    subjects = _purchase_subjects(spark, sf_dir)
     return events.survival_km_greenwood(subjects, "duration", "observed")
 
 
@@ -1180,27 +1165,7 @@ def _events_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-rank test of time-to-first-purchase between the user_id
     parity cohorts (events.survival_logrank): exact bigint O1, 1e-9
     quantized E1/V folds, terminal chi-square vs 3.841459 (5%, 1 df)."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        (F.col("user_id") % 2).alias("grp"),
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
-    )
+    subjects = _purchase_subjects(spark, sf_dir, grp=F.col("user_id") % 2)
     return events.survival_logrank(subjects, "grp", "duration", "observed")
 
 
@@ -1484,27 +1449,8 @@ def _events_logrank_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds summed into one 1-df chi-square. The distinct-duration window
     is partitioned by stratum, so unlike the pooled test it
     parallelizes across strata."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        (F.col("user_id") % 3).alias("stratum"),
-        (F.col("user_id") % 2).alias("grp"),
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
+    subjects = _purchase_subjects(
+        spark, sf_dir, stratum=F.col("user_id") % 3, grp=F.col("user_id") % 2
     )
     return events.survival_logrank_stratified(
         subjects, "stratum", "grp", "duration", "observed"
@@ -1584,26 +1530,7 @@ def _events_survival_na_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events.survival_na_bands) — the hazard-side uncertainty beside the
     Greenwood survival bands, same subjects, same 1e-12 quantized
     folds, same visible ~3e9-at-risk guard."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
-    )
+    subjects = _purchase_subjects(spark, sf_dir)
     return events.survival_na_bands(subjects, "duration", "observed")
 
 
@@ -1949,26 +1876,7 @@ def _events_survival_km_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     used by the median/RMST scalar gates — survival_km over the same
     subjects as the greenwood gate, with d1d aliasing n_events for the
     scalar aggregates."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
-    )
+    subjects = _purchase_subjects(spark, sf_dir)
     return events.survival_km(subjects, "duration", "observed").select(
         "t", "survival", F.col("n_events").alias("d1d")
     )
@@ -2065,27 +1973,7 @@ def _events_logrank_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id mod-3 cohorts (events.survival_logrank_k): exact bigint
     O_j, 1e-9 quantized E/V folds, closed-form quadratic-form chi2 on
     2 df vs 5.991465."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        (F.col("user_id") % 3).alias("grp"),
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
-    )
+    subjects = _purchase_subjects(spark, sf_dir, grp=F.col("user_id") % 3)
     return events.survival_logrank_k(subjects, 3, "grp", "duration", "observed")
 
 
@@ -2210,27 +2098,7 @@ def _events_logrank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events.survival_logrank_weighted, rho=0 gamma=1): 4 rows
     (logrank / gehan / tarone_ware / fh_0_1), each Z_w^2/V_w on 1 df
     vs 3.841459."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        (F.col("user_id") % 2).alias("grp"),
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
-    )
+    subjects = _purchase_subjects(spark, sf_dir, grp=F.col("user_id") % 2)
     return events.survival_logrank_weighted(
         subjects, "grp", "duration", "observed", rho=0.0, gamma=1.0
     )
@@ -2399,27 +2267,7 @@ def _events_cox_ph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cox PH fit of cohort (user_id parity) on time-to-first-purchase
     (events.cox_ph_binary, 5 Newton iterations): beta, hazard ratio,
     Wald z vs 1.959964."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        (F.col("user_id") % 2).alias("grp"),
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
-    )
+    subjects = _purchase_subjects(spark, sf_dir, grp=F.col("user_id") % 2)
     return events.cox_ph_binary(subjects, "grp", "duration", "observed", iters=5)
 
 
@@ -2583,27 +2431,7 @@ def _events_schoenfeld_ph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grambsch-Therneau PH check of the cohort Cox fit on
     time-to-first-purchase (events.cox_schoenfeld_ph, 5 Newton
     iterations): chi2_ph vs 3.841459; reject_05 = PH violated."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        (F.col("user_id") % 2).alias("grp"),
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
-    )
+    subjects = _purchase_subjects(spark, sf_dir, grp=F.col("user_id") % 2)
     return events.cox_schoenfeld_ph(
         subjects, "grp", "duration", "observed", iters=5
     )
@@ -2762,26 +2590,7 @@ def _events_life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """12-hour actuarial life table of time-to-first-purchase
     (events.life_table): per-interval n/d/c, effective exposure,
     conditional mortality q, end-of-interval survival."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
-    )
+    subjects = _purchase_subjects(spark, sf_dir)
     return events.life_table(subjects, "duration", "observed", width=12)
 
 
@@ -2856,27 +2665,7 @@ QUERIES["events_life_table"] = _events_life_table
 def _events_survival_diff_72h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KM survival difference between the user_id-parity cohorts at
     tau = 72h with Greenwood-combined z (events.survival_diff_at)."""
-    load(spark, sf_dir)
-    ep = F.unix_micros(F.col("ts").cast("timestamp"))
-    life = (
-        spark.table("events")
-        .select(
-            "user_id",
-            ep.alias("us"),
-            F.when(F.col("event_type") == "purchase", ep).alias("pus"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("start"),
-            F.min("pus").alias("fp"),
-            F.max("us").alias("last"),
-        )
-    )
-    subjects = life.select(
-        (F.col("user_id") % 2).alias("grp"),
-        F.expr("(coalesce(fp, last) - start) DIV 3600000000").alias("duration"),
-        F.col("fp").isNotNull().cast("int").alias("observed"),
-    )
+    subjects = _purchase_subjects(spark, sf_dir, grp=F.col("user_id") % 2)
     return events.survival_diff_at(subjects, 72, "grp", "duration", "observed")
 
 

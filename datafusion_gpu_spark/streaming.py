@@ -218,27 +218,6 @@ def _key_and_count(key, state):
     return [(key[0], state[0])]
 
 
-def run_stream_to_memory(df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
-    """Drain a (bounded) stream into an in-memory table and return it.
-
-    ``processAllAvailable`` blocks until every pending file is processed,
-    making the replay deterministic; the returned DataFrame is a normal
-    batch view of the sink table.
-    """
-    query = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return df.sparkSession.table(name)
-
-
 def stream_dedup_events(
     spark: SparkSession, sf_dir: str, watermark: str = "2 hours"
 ) -> DataFrame:
@@ -417,6 +396,8 @@ def materialize_stream(
 
     - ``append``: every row lands in exactly one micro-batch — read all
       batch partitions.
+    - ``update``: each micro-batch emits the rows it changed — read all
+      batch partitions (a key's last emission is its final value).
     - ``complete``: each micro-batch rewrites the full state — read only
       the highest ``_batch_id`` partition (the final state).
 

@@ -197,6 +197,33 @@ def _view_dirs(spark, names):
     }
 
 
+def test_persist_counted_keeps_a_rebuilt_plan_cached(spark):
+    # a query rebuilt after _COUNTED_KEEP - 1 others persists the same
+    # plan as its oldest handle; evicting that handle must not uncache
+    # the entry the rebuilt query's consumers read
+    from pyspark import StorageLevel
+
+    from datafusion_gpu_spark.context import (
+        _COUNTED_KEEP,
+        clear_scan_cache,
+        persist_counted,
+    )
+
+    session = spark.newSession()
+    try:
+        def plan(i):
+            return session.range(10).withColumn("k", F.col("id") + i)
+
+        persist_counted(session, plan(0))
+        for i in range(1, _COUNTED_KEEP):
+            persist_counted(session, plan(i))
+        again = persist_counted(session, plan(0))
+        assert again.storageLevel != StorageLevel.NONE
+    finally:
+        clear_scan_cache(session)
+    assert again.storageLevel == StorageLevel.NONE
+
+
 def test_warm_load_registers_nothing(spark, registration_calls):
     from datafusion_gpu_spark.context import TESTDATA_TABLES
     from datafusion_gpu_spark.queries import load

@@ -563,6 +563,39 @@ def test_incremental_minhash_explicit_index_equals_inline(planted):
     assert a == b and a
 
 
+def test_incremental_minhash_candidates_are_released_by_the_session(planted):
+    # one call per ingest batch persists that batch's candidate relation;
+    # the session owns the handles: at most _COUNTED_KEEP stay cached,
+    # and clearing the session releases them all
+    from datafusion_gpu_spark.context import _COUNTED_KEEP, clear_scan_cache
+    from datafusion_gpu_spark.operators.dedup import incremental_minhash_lsh
+
+    session = planted.sparkSession.newSession()
+    persistent = session.sparkContext._jsc.getPersistentRDDs
+    # ids, not a count: earlier tests' RDDs may be cleaned up meanwhile
+    before = set(persistent().keySet())
+
+    def cached() -> int:
+        return len(set(persistent().keySet()) - before)
+
+    docs = session.createDataFrame(planted.collect(), planted.schema)
+    history = docs.where(F.col("doc_id").isin(0, 2, 3))
+    try:
+        for i in range(_COUNTED_KEEP + 2):
+            # a distinct batch per call: shifted ingest ids
+            batch = docs.where(F.col("doc_id").isin(1, 4)).withColumn(
+                "doc_id", F.col("doc_id") + 100 * (i + 1)
+            )
+            pairs = incremental_minhash_lsh(history, batch, threshold=0.5)
+            assert (0, 100 * (i + 1) + 1) in {
+                (r.hist_id, r.batch_id) for r in pairs.collect()
+            }
+            assert cached() <= _COUNTED_KEEP
+    finally:
+        clear_scan_cache(session)
+    assert cached() == 0
+
+
 def _emb_df(spark, rows):
     # rows: [(vec_id, numpy-able 64-dim vector)]
     return spark.createDataFrame(

@@ -9,6 +9,28 @@ from pyspark.sql import functions as F
 from datafusion_gpu_spark.operators.graph import pagerank
 
 
+@pytest.fixture
+def truncator_cuts(monkeypatch):
+    """The counting seam over ``util.lineage_truncator``, the one
+    lineage-cut policy: ``["n"]`` counts the cuts made through it."""
+    from datafusion_gpu_spark.operators import util
+
+    calls = {"n": 0}
+    real = util.lineage_truncator
+
+    def counting(sc, **kw):
+        ckpt = real(sc, **kw)
+
+        def wrapped(df):
+            calls["n"] += 1
+            return ckpt(df)
+
+        return wrapped
+
+    monkeypatch.setattr(util, "lineage_truncator", counting)
+    return calls
+
+
 def _ranks(df):
     return {r.node: r.rank for r in df.collect()}
 
@@ -356,26 +378,13 @@ def test_kcore_monotone_rounds_converge(spark):
     assert more == done
 
 
-def test_kcore_early_stop_exits_at_cascade_depth(spark, monkeypatch):
+def test_kcore_early_stop_exits_at_cascade_depth(spark, truncator_cuts):
     """The peel loop must exit when a round removes nothing — paying
     cascade-depth rounds, not the ``rounds`` upper bound. Counted via
     the lineage_truncator seam: 1 initial cut + 1 per executed round."""
-    from datafusion_gpu_spark.operators import util
     from datafusion_gpu_spark.operators.graph import k_core
 
-    calls = {"n": 0}
-    real = util.lineage_truncator
-
-    def counting(sc):
-        ckpt = real(sc)
-
-        def wrapped(df):
-            calls["n"] += 1
-            return ckpt(df)
-
-        return wrapped
-
-    monkeypatch.setattr(util, "lineage_truncator", counting)
+    calls = truncator_cuts
     # chain 0-1-2-3 peels from BOTH ends at once (round 1 drops nodes
     # 0 and 3, round 2 drops 1 and 2), the triangle is the 2-core;
     # round 3 removes nothing and breaks.
@@ -490,23 +499,10 @@ def test_time_travel_rejects_missing_log_columns(spark):
         time_travel(base, bad, "k", 1)
 
 
-def test_bfs_distances_chain_and_early_stop(spark, monkeypatch):
-    from datafusion_gpu_spark.operators import util
+def test_bfs_distances_chain_and_early_stop(spark, truncator_cuts):
     from datafusion_gpu_spark.operators.graph import bfs_distances
 
-    calls = {"n": 0}
-    real = util.lineage_truncator
-
-    def counting(sc):
-        ckpt = real(sc)
-
-        def wrapped(df):
-            calls["n"] += 1
-            return ckpt(df)
-
-        return wrapped
-
-    monkeypatch.setattr(util, "lineage_truncator", counting)
+    calls = truncator_cuts
     # chain 0-1-2-3-4 plus an unreachable pair (10, 11); seed = {0}
     edges = [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)]
     df = spark.createDataFrame(edges, "a long, b long")
@@ -517,6 +513,32 @@ def test_bfs_distances_chain_and_early_stop(spark, monkeypatch):
     # rounds 1..4 produce a frontier (2 cuts each), round 5 is empty
     # (1 cut, no union) and breaks; 50 never runs.
     assert calls["n"] == 2 + 4 * 2 + 1
+
+
+def test_bpe_train_cuts_through_lineage_truncator(spark, tmp_path, truncator_cuts):
+    """bpe_train's every-8-rounds cut is the shared policy's, so a
+    configured checkpoint dir puts it on the reliable path."""
+    from datafusion_gpu_spark.operators.text import bpe_train
+
+    texts = [
+        "low low low low low lower lower",
+        "newest newest newest newest widest widest lowest",
+        "highest highest higher high low",
+    ]
+    docs = spark.createDataFrame([(t,) for t in texts], "text string")
+    local = bpe_train(docs, num_merges=10)
+    assert truncator_cuts["n"] == 1  # 10 rounds: one cut, at round 8
+    sc = spark.sparkContext
+    ckdir = tmp_path / "bpe_ckpt"
+    sc.setCheckpointDir(str(ckdir))
+    try:
+        assert bpe_train(docs, num_merges=10) == local
+    finally:
+        sc._jsc.sc().setCheckpointDir(None)
+    assert not sc.getCheckpointDir()
+    assert truncator_cuts["n"] == 2
+    # the reliable cut wrote the round-8 state under the checkpoint dir
+    assert any(p.is_file() for p in ckdir.rglob("*"))
 
 
 def test_bfs_distances_min_hop_not_first_path(spark):
@@ -657,23 +679,10 @@ def test_bellman_ford_prefers_cheap_long_path_and_truncates(spark):
     assert one == {0: 0, 1: 1, 3: 10}  # detour not yet relaxed
 
 
-def test_bellman_ford_early_stop_at_fixpoint(spark, monkeypatch):
-    from datafusion_gpu_spark.operators import util
+def test_bellman_ford_early_stop_at_fixpoint(spark, truncator_cuts):
     from datafusion_gpu_spark.operators.graph import bellman_ford
 
-    calls = {"n": 0}
-    real = util.lineage_truncator
-
-    def counting(sc):
-        ckpt = real(sc)
-
-        def wrapped(df):
-            calls["n"] += 1
-            return ckpt(df)
-
-        return wrapped
-
-    monkeypatch.setattr(util, "lineage_truncator", counting)
+    calls = truncator_cuts
     # path 0-1-2: labels stabilize after round 2; round 3 confirms and
     # breaks — rounds=50 never runs. ckpt: adj + seed + 3 rounds.
     edges = [(0, 1, 2), (1, 2, 2)]

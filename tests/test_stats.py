@@ -3135,8 +3135,12 @@ def test_cumsum_auto_handles_belong_to_their_session(spark):
     # the relations cumsum_auto keeps persisted are per session: another
     # session's calls cannot evict them, and clearing that session
     # unpersists its own
-    from datafusion_gpu_spark.context import clear_scan_cache, session_state
-    from datafusion_gpu_spark.operators.stats import _COUNTED_KEEP, cumsum_auto
+    from datafusion_gpu_spark.context import (
+        _COUNTED_KEEP,
+        clear_scan_cache,
+        session_state,
+    )
+    from datafusion_gpu_spark.operators.stats import cumsum_auto
 
     schema = "c long, x long"
     cumsum_auto(spark.createDataFrame([(v, 1) for v in range(20)], schema), "c", ("x",))

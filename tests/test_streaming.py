@@ -8,7 +8,7 @@ import pytest
 
 from datafusion_gpu_spark.context import register_tables
 from datafusion_gpu_spark.streaming import (
-    run_stream_to_memory,
+    materialize_stream,
     stream_tumbling_counts,
     stream_user_event_counts,
 )
@@ -22,8 +22,8 @@ def test_stateful_user_counts_equal_batch(spark):
         r.user_id: r.n
         for r in tables["events"].groupBy("user_id").count().withColumnRenamed("count", "n").collect()
     }
-    out = run_stream_to_memory(
-        stream_user_event_counts(spark, SF_DIR), "test_user_counts", mode="update"
+    out = materialize_stream(
+        stream_user_event_counts(spark, SF_DIR), output_mode="update"
     ).toPandas()
     # update mode re-emits per micro-batch; the LAST emission per user is
     # the running total — with availableNow replay it must equal batch
@@ -34,8 +34,8 @@ def test_stateful_user_counts_equal_batch(spark):
 def test_stream_tumbling_equals_batch(spark):
     tables = register_tables(spark, SF_DIR)
     batch = tumbling_window_agg(tables["events"]).toPandas()
-    stream = run_stream_to_memory(
-        stream_tumbling_counts(spark, SF_DIR), "test_evt_stream"
+    stream = materialize_stream(
+        stream_tumbling_counts(spark, SF_DIR), output_mode="complete"
     ).toPandas()
     key = lambda d: d.sort_values(["window_start", "event_type"]).reset_index(  # noqa: E731
         drop=True
@@ -51,8 +51,8 @@ def test_stream_dedup_keeps_one_row_per_key(spark):
         (r.user_id, r.event_type)
         for r in tables["events"].select("user_id", "event_type").distinct().collect()
     }
-    out = run_stream_to_memory(
-        stream_dedup_events(spark, SF_DIR), "test_dedup_stream", mode="append"
+    out = materialize_stream(
+        stream_dedup_events(spark, SF_DIR), output_mode="append"
     ).toPandas()
     # which row survives per key is engine-chosen; the contract is the
     # key set and exactly-one-row-per-key
@@ -72,9 +72,8 @@ def test_stream_static_join_equals_batch(spark):
         .select("event_id", "c_mktsegment")
         .toPandas()
     )
-    stream = run_stream_to_memory(
-        stream_enriched_purchases(spark, SF_DIR), "test_enrich_stream",
-        mode="append",
+    stream = materialize_stream(
+        stream_enriched_purchases(spark, SF_DIR), output_mode="append"
     ).toPandas()
     assert len(stream) == len(batch)
     key = lambda d: d.sort_values("event_id").reset_index(drop=True)  # noqa: E731
@@ -180,8 +179,8 @@ def test_transform_with_state_ema_equals_batch(spark):
         pytest.skip("transformWithState runner needs protobuf (env-blocked)")
 
     sf = "/root/testdata/sf0.001"
-    out = streaming.run_stream_to_memory(
-        streaming.stream_user_value_ema(spark, sf), "ema_sink", mode="update"
+    out = streaming.materialize_stream(
+        streaming.stream_user_value_ema(spark, sf), output_mode="update"
     )
     # update mode can emit once per (batch, key); the LAST emission per
     # user is the final state — with the single-file replay there is one
@@ -899,15 +898,23 @@ def test_materialize_stream_output_dir_lives_until_session_clear(spark):
 
 def test_streaming_writers_leave_no_temp_entries_after_clear(spark):
     # every dir the streaming writers make sits under the session's
-    # scratch root, so clearing the session leaves the temp dir as it was
+    # scratch root, and every relation they persist (incremental
+    # minhash's per-micro-batch candidates) is the session's, so clearing
+    # the session leaves the temp dir, the session registry and the
+    # cached RDDs as they were — a foreachBatch callback's per-batch
+    # session object must not register state of its own
     import os
     import tempfile
 
     from datafusion_gpu_spark import streaming
-    from datafusion_gpu_spark.context import clear_scan_cache
+    from datafusion_gpu_spark.context import _SESSION_STATE, clear_scan_cache
 
     tmp = tempfile.gettempdir()
     before = set(os.listdir(tmp))
+    states_before = set(_SESSION_STATE)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    # ids, not a count: earlier tests' RDDs may be cleaned up meanwhile
+    rdds_before = set(persistent().keySet())
     s = spark.newSession()
     try:
         for _ in range(2):
@@ -917,9 +924,13 @@ def test_streaming_writers_leave_no_temp_entries_after_clear(spark):
             streaming.materialized_incremental_agg(s, SF_DIR).count()
             streaming.materialized_incremental_minhash(s, SF_DIR).count()
         assert set(os.listdir(tmp)) - before  # the session's scratch root
+        assert set(persistent().keySet()) - rdds_before  # the candidates
     finally:
         clear_scan_cache(s)
     assert set(os.listdir(tmp)) - before == set()
+    # stopped sessions may be swept meanwhile, so a subset, not equality
+    assert set(_SESSION_STATE) <= states_before
+    assert set(persistent().keySet()) - rdds_before == set()
 
 
 def test_stream_events_rebuilds_nanosecond_timestamps(spark, tmp_path):
