@@ -217,6 +217,11 @@ class _SessionState:
     - ``counted``: the relations :func:`persist_counted` persisted
       (``operators.stats.cumsum_auto``'s routing count, the incremental
       dedup operators' reused intermediates), oldest first.
+    - ``cuts``: ids of the ``localCheckpoint`` RDDs that operators'
+      returned DataFrames read (``operators.util.owns_cuts``). Ids, not
+      handles, so Spark's ContextCleaner can still free one earlier; and
+      no eviction bound, since a released local checkpoint cannot be
+      recomputed (a later read fails instead).
     """
 
     session: SparkSession
@@ -225,6 +230,7 @@ class _SessionState:
     aggregates: dict[str, tuple[JavaObject, JavaObject]] = field(default_factory=dict)
     scratch: str | None = None
     counted: list[DataFrame] = field(default_factory=list)
+    cuts: list[int] = field(default_factory=list)
 
 
 #: Register once, then check: the star schema views and the custom sums
@@ -245,19 +251,24 @@ class _SessionState:
 #: at construction, so the parquet files must be static for the session's
 #: lifetime; callers that rewrite parquet at a registered path mid-session
 #: must call :func:`clear_scan_cache` first. Dropping an entry (sweep or
-#: clear) removes its scratch root and unpersists its counted relations;
-#: one exit hook removes the roots left at exit.
+#: clear) removes its scratch root and unpersists its counted relations
+#: and kept cuts; one exit hook removes the roots left at exit.
 _SESSION_STATE: dict[int, _SessionState] = {}
 
 
 def _release(state: _SessionState) -> None:
     if state.scratch is not None:
         shutil.rmtree(state.scratch, ignore_errors=True)
-    for df in state.counted:
-        try:
+    try:
+        for df in state.counted:
             df.unpersist(blocking=False)
-        except Py4JError:
-            pass  # session stopped — nothing left to release
+        # a stopped session's cut blocks went with its SparkContext
+        if state.cuts and not _session_stopped(state.session):
+            sc = state.session.sparkContext._jsc.sc()
+            for rdd_id in state.cuts:
+                sc.unpersistRDD(rdd_id, False)
+    except Py4JError:
+        pass  # session stopped — nothing left to release
 
 
 @atexit.register

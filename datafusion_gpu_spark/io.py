@@ -89,34 +89,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-# -- object stores -----------------------------------------------------------
-
-
-def configure_s3a(
-    spark: SparkSession,
-    endpoint: str | None = None,
-    access_key: str | None = None,
-    secret_key: str | None = None,
-    path_style: bool = False,
-) -> None:
-    """Object-store access (SURVEY §2.1 row 8): Spark reads ``s3a://…``
-    through the Hadoop S3A connector; this sets the per-session Hadoop
-    conf. Untestable in this offline container (no network, no S3 jars on
-    the classpath) — on a real cluster the hadoop-aws bundle ships with
-    the distribution and every reader/sink in this module accepts
-    ``s3a://bucket/prefix`` paths unchanged.
-    """
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    if endpoint:
-        hconf.set("fs.s3a.endpoint", endpoint)
-    if access_key:
-        hconf.set("fs.s3a.access.key", access_key)
-    if secret_key:
-        hconf.set("fs.s3a.secret.key", secret_key)
-    if path_style:
-        hconf.set("fs.s3a.path.style.access", "true")
-
-
 # -- Arrow IPC (custom thin path) -------------------------------------------
 
 

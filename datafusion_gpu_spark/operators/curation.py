@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datafusion_gpu_spark.operators.util import cuts, owns_cuts
+
 #: hash-space granularity: assignments resolve to 1e-6 of probability
 _BUCKETS = 1_000_000
 
@@ -295,6 +297,7 @@ def curate_corpus(
     return packed.select("doc_id", "n_tokens", "shard", "bin")
 
 
+@owns_cuts
 def dsir_weights(
     docs: DataFrame,
     target: Column,
@@ -331,10 +334,9 @@ def dsir_weights(
     """
     from datafusion_gpu_spark.context import ensure_parallelism
     from datafusion_gpu_spark.operators.dedup import normalize_text, word_hash60
-    from datafusion_gpu_spark.operators.util import lineage_truncator
 
     docs = ensure_parallelism(docs)
-    ckpt = lineage_truncator(docs.sparkSession.sparkContext)
+    ckpt = cuts(docs)
     doc_buckets = ckpt(
         docs.select(
             "doc_id",

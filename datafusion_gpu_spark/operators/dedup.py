@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datafusion_gpu_spark.operators.util import cuts, owns_cuts
+
 # -- normalization / shingling ----------------------------------------------
 
 
@@ -310,6 +312,7 @@ def segment_lines(
     )
 
 
+@owns_cuts
 def line_dedup(lines: DataFrame, max_line_docs: int = 1) -> DataFrame:
     """CCNet-style line-level deduplication (Wenzek et al. 2020: dedup
     identical lines across the corpus before language modeling; also the
@@ -335,10 +338,7 @@ def line_dedup(lines: DataFrame, max_line_docs: int = 1) -> DataFrame:
     segmentation (scan + normalize + split + posexplode + slice for
     :func:`segment_lines` input) three times per query.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(lines.sparkSession.sparkContext)
-    hashed = ckpt(
+    hashed = cuts(lines)(
         lines.select(
             "doc_id", "pos", "line", F.md5(F.col("line")).alias("lh")
         )
@@ -533,6 +533,7 @@ def _signatures_of_shingles(
     return sig.select(*cols)
 
 
+@owns_cuts
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
@@ -567,18 +568,18 @@ def minhash_lsh_pairs(
 
     Building the DataFrame therefore runs one Spark job: the signature
     cut (``localCheckpoint``, or a reliable ``checkpoint`` when a
-    checkpoint dir is set — :func:`~.util.lineage_truncator`). Planning-
-    only callers (EXPLAIN, plan capture) run it too, and in local mode
-    each call's doc-sized signature block stays pinned in the block
-    manager until the JVM garbage-collects the Dataset.
+    checkpoint dir is set — :func:`~.util.cuts`). Planning-only callers
+    (EXPLAIN, plan capture) run it too. In local mode each call's
+    doc-sized signature block stays pinned in the block manager until
+    ``context.clear_scan_cache`` clears the session (or Spark's
+    ContextCleaner frees the unreachable RDD first).
     """
     from datafusion_gpu_spark.context import ensure_parallelism
-    from datafusion_gpu_spark.operators.util import lineage_truncator
 
     docs = ensure_parallelism(docs)
     bands = num_hashes // rows_per_band
     sh = exploded_shingles(docs, n)
-    sig = lineage_truncator(docs.sparkSession.sparkContext)(
+    sig = cuts(docs)(
         _signatures_of_shingles(sh, num_hashes, with_n_sh=True)
     )
     band_cols = [
@@ -1055,6 +1056,7 @@ def semantic_dedup(
 _CC_BROADCAST_MAX_NODES = 4_000_000
 
 
+@owns_cuts
 def connected_components(
     pairs: DataFrame,
     a: str = "doc_a",
@@ -1098,11 +1100,8 @@ def connected_components(
     Keeper convention downstream: keep ``node == component`` (the min
     doc_id of each cluster), drop the rest.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    sc = pairs.sparkSession.sparkContext
-    use_reliable = bool(sc.getCheckpointDir())
-    cut = lineage_truncator(sc)
+    use_reliable = bool(pairs.sparkSession.sparkContext.getCheckpointDir())
+    cut = cuts(pairs)
     fwd = pairs.select(
         F.col(a).cast("long").alias("src"), F.col(b).cast("long").alias("dst")
     )
@@ -1118,13 +1117,12 @@ def connected_components(
         # measured ~6x on dedup_components), THEN repartition+persist:
         # the InMemoryRelation on top of the tiny truncated scan keeps
         # its dst hash-partitioning and real stats, so the per-round
-        # join never re-shuffles the edge side
-        edges = cut(sym).repartition("dst").persist()
-    # initial labels cut ONCE (r16): the guard's count() below and round
-    # 1's union/join both consume them — lazy, the |V| distinct would
-    # execute twice; cut, it is one job and every consumer reads the
-    # materialized RDD
-    labels = cut(
+        # join never re-shuffles the edge side; the owner unpersists it
+        # at return (the result labels are cut, with no lineage back)
+        edges = cut.persist(cut(sym).repartition("dst"))
+    # initial labels cut ONCE (r16), their count observed in the same
+    # job for the guard below
+    labels, n_labels = cut.counted(
         edges.select(F.col("src").alias("node")).distinct().withColumn(
             "component", F.col("node")
         )
@@ -1142,14 +1140,13 @@ def connected_components(
     # pays a full shuffle write EVERY round before the planner can see
     # the small label side — so there the explicit hint (guarded: |V|
     # must fit the broadcast budget, ~16 B/row) removes a data-sized
-    # write per round. One count() job prices the cluster guard against
-    # the checkpointed label RDD.
-    bcast = use_reliable and labels.count() <= _CC_BROADCAST_MAX_NODES
+    # write per round. The label count observed in the initial cut's
+    # job prices the cluster guard.
+    bcast = use_reliable and n_labels <= _CC_BROADCAST_MAX_NODES
     # Convergence via the label-sum invariant: hash-min only ever LOWERS
     # a node's label, so sum(component) is strictly decreasing until the
-    # fixpoint — an unchanged sum proves convergence with one cheap
-    # aggregate on the already-materialized result instead of a
-    # self-join + isEmpty pass per round.
+    # fixpoint — an unchanged sum, observed in the job that cuts the
+    # round, proves convergence without a self-join + isEmpty pass.
     prev_sum = None
     converged = False
     rounds = 0
@@ -1167,18 +1164,17 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("component").alias("component"))
         )
-        labels = cut(step)
+        labels, seen = cut.observed(step, s=F.sum("component"))
         if stats is not None and rounds == 1:
             # post-execution physical plan of the first round (the cut
             # above ran it eagerly) — the broadcast-guard evidence
             stats["round1_plan"] = (
-                step._jdf.queryExecution().executedPlan().toString()
+                cut.last_run._jdf.queryExecution().executedPlan().toString()
             )
-        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
-        if cur_sum == prev_sum:
+        if seen["s"] == prev_sum:
             converged = True
             break
-        prev_sum = cur_sum
+        prev_sum = seen["s"]
     if not converged:
         # silent unconverged labels would let dedup_resolution keep
         # multiple "keepers" inside one long-diameter cluster
@@ -1198,10 +1194,6 @@ def connected_components(
         stats["rounds"] = rounds
         stats["converged"] = converged
         stats["label_join"] = "broadcast-hint" if bcast else "aqe"
-    if not use_reliable:
-        # the result labels are already localCheckpointed (no lineage
-        # back to the edge cache), so the cache can be released now
-        edges.unpersist()
     return labels
 
 

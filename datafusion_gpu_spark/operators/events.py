@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
+from datafusion_gpu_spark.operators.util import cuts, owns_cuts
+
 
 def _epoch_us(ts_col: str) -> F.Column:
     # NTZ-safe (session tz is pinned UTC by register_tables)
@@ -2189,6 +2191,7 @@ def _cox_beta(ev: DataFrame, iters: int) -> DataFrame:
     return beta
 
 
+@owns_cuts
 def cox_ph_binary(
     subjects: DataFrame,
     group_col: str = "grp",
@@ -2227,9 +2230,9 @@ def cox_ph_binary(
     relation, each joined to the previous scalar beta (exempt one-row
     cross joins). The distinct-duration relation ``ev`` is reliably
     checkpointed ONLY on the cluster path (checkpoint dir configured —
-    util.scale_truncator, r16): there, one cut runs the data-sized
-    work exactly once and leaves each fold a one-row aggregate over a
-    distinct-duration-sized RDD. In local mode ev stays lazy — AQE
+    ``util.cuts(reuse_only=True)``, r16): there, one cut runs the
+    data-sized work exactly once and leaves each fold a one-row
+    aggregate over a distinct-duration-sized RDD. In local mode ev stays lazy — AQE
     exchange reuse collapses the repeated groupBy(duration) exchange
     across the nested fold plans, and the r15 driver bench measured
     the eager localCheckpoint +25% at sf0.1 (the cut's synchronous job
@@ -2237,9 +2240,7 @@ def cox_ph_binary(
     Returns one row (n1_subjects, n0_subjects,
     n_events, beta, hazard_ratio, se_beta, z_wald, reject_05).
     """
-    from datafusion_gpu_spark.operators.util import scale_truncator
-
-    ckpt = scale_truncator(subjects.sparkSession.sparkContext)
+    ckpt = cuts(subjects, reuse_only=True)
     ev = ckpt(_cox_risk_set(subjects, group_col, duration_col, observed_col))
     final = _cox_fold(ev, _cox_beta(ev, iters))
     q = F.lit(_QH)
@@ -2488,6 +2489,7 @@ def siegel_trend(
     return _ts_intercept(pts, med)
 
 
+@owns_cuts
 def theil_sen_trend_bucketed(
     series: DataFrame,
     order_col: str = "bucket",
@@ -2517,9 +2519,8 @@ def theil_sen_trend_bucketed(
     plain ranked selection is already the right plan.
     """
     from datafusion_gpu_spark.operators.stats import bucketed_cumsum
-    from datafusion_gpu_spark.operators.util import lineage_truncator
 
-    cut = lineage_truncator(series.sparkSession.sparkContext)
+    cut = cuts(series)
     x = F.col(order_col).cast("long")
     y = F.col(value_col).cast("long")
     pts = series.select(x.alias("x"), y.alias("y"))

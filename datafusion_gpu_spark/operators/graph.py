@@ -36,7 +36,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from datafusion_gpu_spark.operators.util import cuts, owns_cuts
 
+
+@owns_cuts
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
@@ -66,9 +69,7 @@ def pagerank(
     edge side's exchange is reused across rounds by AQE where possible
     (the classic co-partitioned PageRank).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     # setup is TWO materializations (was three): the deduped edge list,
     # then one shuffle that yields BOTH the node set and the out-degrees
     # (sources contribute 1, destinations 0 — every endpoint appears).
@@ -135,6 +136,7 @@ def pagerank(
     return ranks
 
 
+@owns_cuts
 def triangle_count(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     """Global triangle count of the UNDIRECTED graph given as a pair
     stream (either orientation, self-loops and duplicates tolerated).
@@ -160,9 +162,7 @@ def triangle_count(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     re-derives the whole dedup + degree-join chain per consumer (audited:
     32 shuffles instead of ~7 on the co-purchase gate graph).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     # canonical undirected edge set (lo, hi), self-loops dropped —
     # materialized once: both the degree aggregation and the orientation
     # join read it
@@ -211,6 +211,7 @@ def triangle_count(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     return closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
 
 
+@owns_cuts
 def common_neighbors(
     edges: DataFrame,
     a: str = "a",
@@ -246,9 +247,7 @@ def common_neighbors(
     vs 6 shuffles + 1 SMJ with the cut). The degree relation is |V|
     rows and broadcast into the cap filter and the Jaccard projection.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     lo = F.least(F.col(a), F.col(b)).alias("lo")
     hi = F.greatest(F.col(a), F.col(b)).alias("hi")
     und = ckpt(
@@ -292,6 +291,7 @@ def common_neighbors(
     )
 
 
+@owns_cuts
 def k_core(
     edges: DataFrame,
     k: int = 3,
@@ -311,19 +311,18 @@ def k_core(
     all equality-keyed, O(|E|). Peeling is monotone (the edge set only
     shrinks), so as soon as a round removes no edge the result IS the
     exact k-core and the remaining rounds are skipped — the per-round
-    count() is one cheap job over the just-checkpointed (already
-    materialized) edge set, far cheaper than a wasted agg+semi-join
-    round. ``rounds`` stays the hard upper bound for a cascade deeper
-    than expected (tests verify the loop exits at cascade depth, not
-    at ``rounds`` — the gate graph converges in 3).
+    edge count is observed in the cut's own job (no extra job), far
+    cheaper than a wasted agg+semi-join round. ``rounds`` stays the
+    hard upper bound for a cascade deeper than expected (tests verify
+    the loop exits at cascade depth, not at ``rounds`` — the gate graph
+    converges in 3).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     lo = F.least(F.col(a), F.col(b)).alias("lo")
     hi = F.greatest(F.col(a), F.col(b)).alias("hi")
-    e = ckpt(edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct())
-    n_edges = e.count()
+    e, n_edges = ckpt.counted(
+        edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct()
+    )
     for _ in range(rounds):
         deg = (
             e.select(F.col("lo").alias("node"))
@@ -332,11 +331,10 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.where(F.col("deg") >= k).select("node")
-        e = ckpt(
+        e, remaining = ckpt.counted(
             e.join(keep.withColumnRenamed("node", "lo"), "lo", "left_semi")
             .join(keep.withColumnRenamed("node", "hi"), "hi", "left_semi")
         )
-        remaining = e.count()
         if remaining == n_edges:
             break  # monotone: nothing removed => exact k-core reached
         n_edges = remaining
@@ -366,6 +364,7 @@ def degree_histogram(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
+@owns_cuts
 def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
@@ -386,14 +385,12 @@ def bfs_distances(
     anti-joins the visited set — per-round work is
     O(frontier x avg_degree), never O(|E| x rounds) re-derivation,
     because both the visited set and the next frontier are
-    checkpoint-truncated. Early stop: the frontier's checkpoint
-    materializes it anyway, so an empty frontier costs one cheap count
-    and ends the loop at the graph's true eccentricity instead of
+    checkpoint-truncated. Early stop: the frontier's size is observed in
+    the job that cuts it, so an empty frontier costs no extra job and
+    ends the loop at the graph's true eccentricity instead of
     paying the full ``rounds`` bound (same contract as k_core).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"))
     rev = edges.select(F.col(b).alias("s"), F.col(a).alias("d"))
     adj = ckpt(fwd.unionAll(rev).where(F.col("s") != F.col("d")).distinct())
@@ -406,20 +403,21 @@ def bfs_distances(
     )
     frontier = visited.select("node")
     for depth in range(1, rounds + 1):
-        nxt = ckpt(
+        nxt, n_new = ckpt.counted(
             adj.join(frontier.withColumnRenamed("node", "s"), "s")
             .select(F.col("d").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
             .withColumn("dist", F.lit(depth))
         )
-        if nxt.isEmpty():
+        if n_new == 0:
             break
         visited = ckpt(visited.unionAll(nxt))
         frontier = nxt.select("node")
     return visited
 
 
+@owns_cuts
 def all_pairs_distances(
     edges: DataFrame, max_dist: int = 6, a: str = "a", b: str = "b"
 ) -> DataFrame:
@@ -434,9 +432,7 @@ def all_pairs_distances(
     Same frontier mechanics as :func:`bfs_distances` (adjacency
     materialized once, per-round checkpoint truncation, empty-frontier
     early stop), keyed by (src, node)."""
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"))
     rev = edges.select(F.col(b).alias("s"), F.col(a).alias("d"))
     adj = ckpt(fwd.unionAll(rev).where(F.col("s") != F.col("d")).distinct())
@@ -448,14 +444,14 @@ def all_pairs_distances(
     )
     frontier = visited.select("src", "node")
     for depth in range(1, max_dist + 1):
-        nxt = ckpt(
+        nxt, n_new = ckpt.counted(
             adj.join(frontier.withColumnRenamed("node", "s"), "s")
             .select("src", F.col("d").alias("node"))
             .distinct()
             .join(visited, ["src", "node"], "left_anti")
             .withColumn("dist", F.lit(depth))
         )
-        if nxt.isEmpty():
+        if n_new == 0:
             break
         visited = ckpt(visited.unionAll(nxt))
         frontier = nxt.select("src", "node")
@@ -479,6 +475,7 @@ def harmonic_exact(
     )
 
 
+@owns_cuts
 def harmonic_hyperball(
     edges: DataFrame,
     max_dist: int = 6,
@@ -507,9 +504,7 @@ def harmonic_hyperball(
     Estimate clamping: F.greatest(growth, 0) guards the counter against
     the (tiny, bias-correction) non-monotonicity HLL++ estimates can
     show even over monotone registers."""
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"))
     rev = edges.select(F.col(b).alias("s"), F.col(a).alias("d"))
     adj = ckpt(fwd.unionAll(rev).where(F.col("s") != F.col("d")).distinct())
@@ -556,6 +551,7 @@ def harmonic_hyperball(
     return state.select("node", "harmonic", "ball")
 
 
+@owns_cuts
 def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
@@ -582,9 +578,7 @@ def personalized_pagerank(
     table is never re-shuffled after setup, rounds are
     checkpoint-truncated.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     e = ckpt(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     )
@@ -641,6 +635,7 @@ def personalized_pagerank(
     return ranks
 
 
+@owns_cuts
 def bellman_ford(
     edges: DataFrame,
     seeds: DataFrame,
@@ -664,8 +659,8 @@ def bellman_ford(
     min aggregation, both keyed — O(|labeled| x avg_degree) work,
     checkpoint-truncated. Early stop: labels only ever ADD nodes or
     DECREASE costs, so an unchanged (count, sum-of-costs) pair —
-    computed on the just-materialized checkpoint, exact on integer
-    weights — certifies a fixpoint and skips the remaining rounds.
+    observed in the job that cuts the round, exact on integer weights
+    — certifies a fixpoint and skips the remaining rounds.
 
     ``work`` (optional dict) accumulates the relaxation work actually
     paid — ``relaxed_rows`` (label rows driven through relax joins)
@@ -673,22 +668,21 @@ def bellman_ford(
     check already collects (no extra jobs); the delta-stepping A/B
     probe reads it.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"), F.col(w).alias("w"))
     rev = edges.select(F.col(b).alias("s"), F.col(a).alias("d"), F.col(w).alias("w"))
     adj = ckpt(fwd.unionAll(rev).where(F.col("s") != F.col("d")).distinct())
     node = seeds.columns[0]
-    dist = ckpt(
+    label_stats = {
+        "n": F.count(F.lit(1)), "s": F.coalesce(F.sum("cost"), F.lit(0))
+    }
+    dist, seen = ckpt.observed(
         seeds.select(F.col(node).alias("node"))
         .distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
+        .withColumn("cost", F.lit(0).cast("long")),
+        **label_stats,
     )
-    stats = dist.agg(
-        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("cost"), F.lit(0)).alias("s")
-    ).collect()[0]
-    prev = (stats["n"], stats["s"])
+    prev = (seen["n"], seen["s"])
     for _ in range(rounds):
         if work is not None:
             work["relaxed_rows"] = work.get("relaxed_rows", 0) + prev[0]
@@ -696,14 +690,11 @@ def bellman_ford(
         cand = adj.join(dist.withColumnRenamed("node", "s"), "s").select(
             F.col("d").alias("node"), (F.col("cost") + F.col("w")).alias("cost")
         )
-        dist = ckpt(
-            dist.unionAll(cand).groupBy("node").agg(F.min("cost").alias("cost"))
+        dist, seen = ckpt.observed(
+            dist.unionAll(cand).groupBy("node").agg(F.min("cost").alias("cost")),
+            **label_stats,
         )
-        stats = dist.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("cost"), F.lit(0)).alias("s"),
-        ).collect()[0]
-        cur = (stats["n"], stats["s"])
+        cur = (seen["n"], seen["s"])
         if cur == prev:
             break  # monotone labels: unchanged (count, sum) == fixpoint
         prev = cur
@@ -750,6 +741,7 @@ def modularity(
     return intra / two_m - sq / (two_m * two_m)
 
 
+@owns_cuts
 def louvain(
     edges: DataFrame,
     passes: int = 2,
@@ -791,15 +783,13 @@ def louvain(
     monotone-Q + planted-floor contract instead (the
     agg_approx_error_bounded pattern).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
     # reset_stats: each round references the previous assignment in
     # several join branches, so preserved checkpoint statistics compound
     # geometrically and stall the planner in BigInt arithmetic after a
     # dozen rounds (see util.stats_barrier); every join this operator
     # wants broadcast carries an explicit hint, so losing auto-broadcast
     # costs nothing
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext, reset_stats=True)
+    ckpt = cuts(edges, reset_stats=True)
     wcol = F.col(weight).cast("double") if weight else F.lit(1.0)
     und = edges.select(
         F.least(F.col(a), F.col(b)).alias("i"),
@@ -817,8 +807,11 @@ def louvain(
             )
         )
     )
-    deg = ckpt(sym.groupBy(F.col("i").alias("node")).agg(F.sum("w").alias("k")))
-    two_m = float(deg.agg(F.sum("k")).first()[0] or 0.0)
+    deg, seen = ckpt.observed(
+        sym.groupBy(F.col("i").alias("node")).agg(F.sum("w").alias("k")),
+        two_m=F.sum("k"),
+    )
+    two_m = float(seen["two_m"] or 0.0)
     if two_m == 0.0:
         empty = deg.select("node", F.col("node").alias("comm"))
         return empty, [0.0]
@@ -955,6 +948,7 @@ def louvain(
     return membership, qs
 
 
+@owns_cuts
 def delta_stepping(
     edges: DataFrame,
     seeds: DataFrame,
@@ -998,9 +992,7 @@ def delta_stepping(
     collecting it turns the emptiness probe into a count, so leave it
     None in production.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"), F.col(w).alias("w"))
     rev = edges.select(F.col(b).alias("s"), F.col(a).alias("d"), F.col(w).alias("w"))
     adj = ckpt(fwd.unionAll(rev).where(F.col("s") != F.col("d")).distinct())
@@ -1068,10 +1060,11 @@ def delta_stepping(
             work["relaxed_rows"] = work.get("relaxed_rows", 0) + nb
             work["rounds"] = work.get("rounds", 0) + 1
         improved = relax(bucket_nodes, heavy, dist)
-        dist = ckpt(
-            dist.unionAll(improved).groupBy("node").agg(F.min("cost").alias("cost"))
+        dist, seen = ckpt.observed(
+            dist.unionAll(improved).groupBy("node").agg(F.min("cost").alias("cost")),
+            mx=F.max("cost"),
         )
-        top = dist.agg(F.max("cost").alias("mx")).first()["mx"]
+        top = seen["mx"]
         if top is not None and top < hi:
             break  # every label below the next bucket floor: all settled
     else:
@@ -1082,6 +1075,7 @@ def delta_stepping(
     return dist
 
 
+@owns_cuts
 def resource_allocation(
     edges: DataFrame,
     a: str = "a",
@@ -1113,9 +1107,7 @@ def resource_allocation(
     gate spelling (AA is a one-line weight swap for library callers who
     accept contract-style checking).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     lo = F.least(F.col(a), F.col(b)).alias("lo")
     hi = F.greatest(F.col(a), F.col(b)).alias("hi")
     und = ckpt(
@@ -1155,6 +1147,7 @@ def resource_allocation(
     )
 
 
+@owns_cuts
 def strongly_connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -1195,27 +1188,25 @@ def strongly_connected_components(
     Every hop is a keyed equality join + aggregation, checkpoint-
     truncated with the stats barrier (rounds reference the previous
     checkpoint in multiple join branches — the louvain geometric-stats
-    lesson); driver traffic is one scalar row per hop for the early
-    stops. Raises if the loop budgets are exhausted before convergence
-    rather than returning a silently partial answer.
+    lesson); each early stop's scalar is observed in the job that cuts
+    its hop, never a job of its own. Raises if the loop budgets are
+    exhausted before convergence rather than returning a silently
+    partial answer.
 
     Returns (node, scc_id) with scc_id = min member id, the canonical
     labeling the oracle's mutual-reachability closure replays.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext, reset_stats=True)
+    ckpt = cuts(edges, reset_stats=True)
     e = ckpt(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .where(F.col("s") != F.col("d"))
         .distinct()
     )
-    nodes = ckpt(
+    nodes, n_remaining = ckpt.counted(
         e.select(F.col("s").alias("node"))
         .unionAll(e.select(F.col("d").alias("node")))
         .distinct()
     )
-    n_remaining = nodes.count()
     assigned: list[DataFrame] = []
 
     for _outer in range(max_outer):
@@ -1225,12 +1216,11 @@ def strongly_connected_components(
         for _trim in range(max_trim_rounds):
             has_out = e.select(F.col("s").alias("node")).distinct()
             has_in = e.select(F.col("d").alias("node")).distinct()
-            core = ckpt(
+            core, n_core = ckpt.counted(
                 nodes.join(has_out, "node", "left_semi").join(
                     has_in, "node", "left_semi"
                 )
             )
-            n_core = core.count()
             if n_core == n_remaining:
                 break
             assigned.append(
@@ -1263,25 +1253,24 @@ def strongly_connected_components(
                 .groupBy(F.col("d").alias("node"))
                 .agg(F.min("c_in").alias("c_min"))
             )
-            color = ckpt(
+            color, seen = ckpt.observed(
                 color.join(msgs, "node", "left").select(
                     "node",
                     F.least(
                         F.col("color"), F.coalesce(F.col("c_min"), F.col("color"))
                     ).alias("color"),
-                )
+                ),
+                s=F.sum("color"),
             )
-            cur_sum = color.agg(F.sum("color").alias("s")).collect()[0]["s"]
-            if cur_sum == prev_sum:
+            if seen["s"] == prev_sum:
                 break  # monotone non-increasing labels: fixpoint
-            prev_sum = cur_sum
+            prev_sum = seen["s"]
         else:
             raise RuntimeError("scc: forward propagation budget exhausted")
         # 3. backward reachability from roots within each color class
-        reached = ckpt(
+        reached, n_reached = ckpt.counted(
             color.where(F.col("node") == F.col("color")).select("node", "color")
         )
-        n_reached = reached.count()
         for _hop in range(max_prop_rounds):
             preds = (
                 e.join(
@@ -1297,8 +1286,7 @@ def strongly_connected_components(
                 .where(F.col("color") == F.col("c_own"))
                 .select("node", "color")
             )
-            reached = ckpt(reached.unionAll(preds).distinct())
-            n_new = reached.count()
+            reached, n_new = ckpt.counted(reached.unionAll(preds).distinct())
             if n_new == n_reached:
                 break  # monotone frontier: fixpoint
             n_reached = n_new
@@ -1323,6 +1311,7 @@ def strongly_connected_components(
     return out.select("node", "scc_id")
 
 
+@owns_cuts
 def topo_layers(
     edges: DataFrame,
     src: str = "src",
@@ -1347,31 +1336,27 @@ def topo_layers(
     combined with the raise-free path, this IS the distributed cycle
     detector; run SCC first when the input may legitimately cycle.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     e = ckpt(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .where(F.col("s") != F.col("d"))
         .distinct()
     )
-    remaining = ckpt(
+    remaining, n_remaining = ckpt.counted(
         e.select(F.col("s").alias("node"))
         .unionAll(e.select(F.col("d").alias("node")))
         .distinct()
     )
-    n_remaining = remaining.count()
     layers: list[DataFrame] = []
     for rnd in range(max_rounds):
         if n_remaining == 0:
             break
         targets = e.select(F.col("d").alias("node")).distinct()
-        peeled = ckpt(
+        peeled, n_peeled = ckpt.counted(
             remaining.join(targets, "node", "left_anti").withColumn(
                 "layer", F.lit(rnd)
             )
         )
-        n_peeled = peeled.count()
         if n_peeled == 0:
             raise ValueError(
                 f"topo_layers: cycle detected ({n_remaining} nodes never peel)"
@@ -1392,6 +1377,7 @@ def topo_layers(
     return out.select("node", "layer")
 
 
+@owns_cuts
 def boruvka_mst(
     edges: DataFrame,
     a: str = "a",
@@ -1430,9 +1416,7 @@ def boruvka_mst(
     Returns canonical MST edges (lo, hi, w).
     """
     from datafusion_gpu_spark.operators.dedup import connected_components
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext, reset_stats=True)
+    ckpt = cuts(edges, reset_stats=True)
     und = ckpt(
         edges.select(
             F.least(F.col(a), F.col(b)).alias("lo"),
@@ -1453,10 +1437,10 @@ def boruvka_mst(
     for _ in range(max_rounds):
         cl = comp.select(F.col("node").alias("lo"), F.col("comp").alias("c_lo"))
         ch = comp.select(F.col("node").alias("hi"), F.col("comp").alias("c_hi"))
-        live = ckpt(
+        live, n_live = ckpt.counted(
             und.join(cl, "lo").join(ch, "hi").where(F.col("c_lo") != F.col("c_hi"))
         )
-        if live.count() == 0:
+        if n_live == 0:
             break
         inc = live.select(F.col("c_lo").alias("c"), "w", "lo", "hi").unionAll(
             live.select(F.col("c_hi").alias("c"), "w", "lo", "hi")
@@ -1498,6 +1482,7 @@ def boruvka_mst(
     return out.distinct()
 
 
+@owns_cuts
 def local_clustering(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     """Per-node local clustering coefficient of the undirected graph
     (Watts & Strogatz 1998): lcc(v) = 2 * tri(v) / (deg(v) * (deg(v)-1))
@@ -1518,9 +1503,7 @@ def local_clustering(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
 
     Returns (node, deg, n_tri, lcc).
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     lo = F.least(F.col(a), F.col(b)).alias("lo")
     hi = F.greatest(F.col(a), F.col(b)).alias("hi")
     und = ckpt(edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct())
@@ -1572,6 +1555,7 @@ def local_clustering(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     )
 
 
+@owns_cuts
 def label_propagation(
     edges: DataFrame, rounds: int = 3, a: str = "a", b: str = "b"
 ) -> DataFrame:
@@ -1596,9 +1580,7 @@ def label_propagation(
 
     Returns (node, label) after ``rounds`` synchronous rounds.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
-    ckpt = lineage_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges)
     lo = F.least(F.col(a), F.col(b)).alias("lo")
     hi = F.greatest(F.col(a), F.col(b)).alias("hi")
     und = edges.select(lo, hi).where(F.col("lo") != F.col("hi")).distinct()
@@ -1689,6 +1671,7 @@ def degree_assortativity(
     )
 
 
+@owns_cuts
 def hits(
     edges: DataFrame, iters: int = 2, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -1715,7 +1698,7 @@ def hits(
     branch, so at scale the lazy spelling re-runs the upstream edge
     construction (for graph_hits: the orders x lineitem join +
     distinct) once per branch; with a checkpoint dir configured (the
-    cluster spelling — util.scale_truncator, r16) one reliable
+    cluster spelling — ``util.cuts(reuse_only=True)``, r16) one reliable
     checkpoint turns those 2k+1 passes over the raw input into one.
     In local mode e stays lazy: the r15 driver bench measured the
     eager localCheckpoint +15% at sf0.1, and the lazy spelling pins
@@ -1723,16 +1706,7 @@ def hits(
 
     Returns (side, node, raw, score): side in ('hub', 'authority').
     """
-    from datafusion_gpu_spark.operators.util import scale_truncator
-
-    # Reuse-vs-recompute gate (r16): the deduplicated edge list is
-    # reliably checkpointed only on the cluster path (checkpoint dir
-    # configured) where each of the 2k join branches would otherwise
-    # re-run the upstream edge construction; identity in local mode,
-    # where the r15 driver bench measured the eager cut +15% at sf0.1
-    # (extra synchronous job + pinned blocks > the broadcast-join
-    # re-execution it removes), and nothing pins an RDD after return.
-    ckpt = scale_truncator(edges.sparkSession.sparkContext)
+    ckpt = cuts(edges, reuse_only=True)
     e = ckpt(edges.select(src, dst).distinct())
     h = (
         e.select(F.col(src).alias("node"))

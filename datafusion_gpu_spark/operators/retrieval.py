@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datafusion_gpu_spark.operators.dedup import normalize_text
+from datafusion_gpu_spark.operators.util import cuts, owns_cuts
 
 
 def tfidf_top_terms(
@@ -67,6 +68,7 @@ def tfidf_top_terms(
     )
 
 
+@owns_cuts
 def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
@@ -96,10 +98,9 @@ def bm25_topk(
     oracle's fold order can't flip ties; doc_id breaks remaining ties.
     """
     from datafusion_gpu_spark.context import ensure_parallelism
-    from datafusion_gpu_spark.operators.util import lineage_truncator
 
     docs = ensure_parallelism(docs)
-    ckpt = lineage_truncator(docs.sparkSession.sparkContext)
+    ckpt = cuts(docs)
     terms = list(dict.fromkeys(query_terms))  # dedupe, keep order
 
     # normalize+split ONCE per row into a real column so the regex-heavy

@@ -10,6 +10,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datafusion_gpu_spark.operators.dedup import normalize_text
+from datafusion_gpu_spark.operators.util import cuts, owns_cuts
 
 #: Tiny deterministic stopword profiles for the n-gram/stopword heuristic.
 #: (The corpus is synthetic; the operator contract is the deterministic
@@ -360,6 +361,7 @@ def contamination(
     )
 
 
+@owns_cuts
 def perplexity_filter(
     docs: DataFrame,
     alpha: float = 0.5,
@@ -396,10 +398,9 @@ def perplexity_filter(
     one map-side tokenize — a bad trade at any scale.)
     """
     from datafusion_gpu_spark.context import ensure_parallelism
-    from datafusion_gpu_spark.operators.util import lineage_truncator
 
     docs = ensure_parallelism(docs)
-    ckpt = lineage_truncator(docs.sparkSession.sparkContext)
+    ckpt = cuts(docs)
     words = docs.select(
         "doc_id",
         F.explode(
@@ -688,6 +689,7 @@ def c4_rules(
 # -- BPE tokenizer training --------------------------------------------------
 
 
+@owns_cuts
 def bpe_train(
     docs: DataFrame,
     num_merges: int = 6,
@@ -720,22 +722,22 @@ def bpe_train(
     (shared with other parallel BPE trainers) is that a merge can mint
     a brand-new pair mid-batch that one-at-a-time training would have
     ranked before a later batch member. Lineage is cut every 8 rounds
-    (:func:`~.util.lineage_truncator`: reliable ``checkpoint`` when a
-    checkpoint dir is set, ``localCheckpoint`` otherwise) so the logical
-    plan stays O(1) in the round count instead of accreting one
-    mapInPandas layer per round.
+    (:func:`~.util.cuts`: reliable ``checkpoint`` when a checkpoint dir
+    is set, ``localCheckpoint`` otherwise) so the logical plan stays
+    O(1) in the round count instead of accreting one mapInPandas layer
+    per round; the rounds between persist their state. At return the
+    cuts and persisted states are released (:func:`~.util.owns_cuts`),
+    except what the returned state reads.
 
     Returns the learned merges as [(left, right, weighted_count)],
     rank-ordered — or (merges, final_state) when ``return_state`` is
-    set (the caller owns unpersisting the state). At 100 TB the
+    set (a persisted final state is the caller's to unpersist). At 100 TB the
     per-round cost is one aggregation over the vocabulary relation —
     the corpus is touched exactly once.
     """
-    from datafusion_gpu_spark.operators.util import lineage_truncator
-
     if merge_batch < 1:
         raise ValueError("merge_batch must be >= 1")
-    cut = lineage_truncator(docs.sparkSession.sparkContext)
+    cut = cuts(docs)
     words = (
         docs.select(
             F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("w")
@@ -748,90 +750,81 @@ def bpe_train(
             "freq",
         )
     )
-    state = words.persist()
+    state = cut.persist(words)
     state.count()
     merges: list[tuple[str, str, int]] = []
     rounds = 0
-    try:
-        while len(merges) < num_merges:
-            want = min(merge_batch, num_merges - len(merges))
-            # over-fetch: symbol-disjointness filtering discards some
-            pairs = (
-                state.select(
-                    F.posexplode(
-                        F.expr(
-                            "transform(slice(syms, 1, size(syms) - 1),"
-                            " (s, i) -> struct(s as l, syms[i + 1] as r))"
-                        )
-                    ).alias("pos", "p"),
-                    "freq",
-                )
-                .groupBy("p.l", "p.r")
-                .agg(F.sum("freq").alias("n"))
-                .orderBy(F.col("n").desc(), "l", "r")
-                .limit(4 * want)
-                .collect()
+    while len(merges) < num_merges:
+        want = min(merge_batch, num_merges - len(merges))
+        # over-fetch: symbol-disjointness filtering discards some
+        pairs = (
+            state.select(
+                F.posexplode(
+                    F.expr(
+                        "transform(slice(syms, 1, size(syms) - 1),"
+                        " (s, i) -> struct(s as l, syms[i + 1] as r))"
+                    )
+                ).alias("pos", "p"),
+                "freq",
             )
-            if not pairs:
+            .groupBy("p.l", "p.r")
+            .agg(F.sum("freq").alias("n"))
+            .orderBy(F.col("n").desc(), "l", "r")
+            .limit(4 * want)
+            .collect()
+        )
+        if not pairs:
+            break
+        batch: list[tuple[str, str, int]] = []
+        touched: set[str] = set()
+        for row in pairs:
+            left, right = row["l"], row["r"]
+            if batch and (
+                left in touched
+                or right in touched
+                or (left + right) in touched
+            ):
+                continue
+            batch.append((left, right, int(row["n"])))
+            touched.update((left, right, left + right))
+            if len(batch) >= want:
                 break
-            batch: list[tuple[str, str, int]] = []
-            touched: set[str] = set()
-            for row in pairs:
-                left, right = row["l"], row["r"]
-                if batch and (
-                    left in touched
-                    or right in touched
-                    or (left + right) in touched
-                ):
-                    continue
-                batch.append((left, right, int(row["n"])))
-                touched.update((left, right, left + right))
-                if len(batch) >= want:
-                    break
-            merges.extend(batch)
-            batch_pairs = [(l, r) for l, r, _ in batch]
+        merges.extend(batch)
+        batch_pairs = [(l, r) for l, r, _ in batch]
 
-            def apply_batch(batches, batch_pairs=batch_pairs):
-                for pdf in batches:
-                    out = []
-                    for syms in pdf["syms"]:
-                        syms = list(syms)
-                        for left, right in batch_pairs:  # rank order
-                            merged, i = [], 0
-                            while i < len(syms):
-                                if (
-                                    i + 1 < len(syms)
-                                    and syms[i] == left
-                                    and syms[i + 1] == right
-                                ):
-                                    merged.append(left + right)
-                                    i += 2
-                                else:
-                                    merged.append(syms[i])
-                                    i += 1
-                            syms = merged
-                        out.append(syms)
-                    pdf = pdf.copy()
-                    pdf["syms"] = out
-                    yield pdf
+        def apply_batch(batches, batch_pairs=batch_pairs):
+            for pdf in batches:
+                out = []
+                for syms in pdf["syms"]:
+                    syms = list(syms)
+                    for left, right in batch_pairs:  # rank order
+                        merged, i = [], 0
+                        while i < len(syms):
+                            if (
+                                i + 1 < len(syms)
+                                and syms[i] == left
+                                and syms[i + 1] == right
+                            ):
+                                merged.append(left + right)
+                                i += 2
+                            else:
+                                merged.append(syms[i])
+                                i += 1
+                        syms = merged
+                    out.append(syms)
+                pdf = pdf.copy()
+                pdf["syms"] = out
+                yield pdf
 
-            nxt = state.mapInPandas(
-                apply_batch, "syms array<string>, freq long"
-            )
-            rounds += 1
-            if rounds % 8 == 0:
-                nxt = cut(nxt)
-            else:
-                nxt = nxt.persist()
-                nxt.count()
-            state.unpersist()
-            state = nxt
-        if return_state:
-            return merges, state
-        return merges
-    finally:
-        if not return_state:
-            state.unpersist()
+        nxt = state.mapInPandas(apply_batch, "syms array<string>, freq long")
+        rounds += 1
+        if rounds % 8 == 0:
+            nxt = cut(nxt)
+        else:
+            cut.persist(nxt).count()
+        state.unpersist()  # nxt is materialized: the next round reads only it
+        state = nxt
+    return (merges, state) if return_state else merges
 
 
 def _bpe_merge_word(

@@ -197,6 +197,21 @@ def _view_dirs(spark, names):
     }
 
 
+def test_release_of_a_stopped_session_skips_its_kept_cuts(tmp_path):
+    # the stopped-session sweep releases a dead session's state: its
+    # scratch root goes, but its kept cuts went with its SparkContext
+    # (``_jsc`` is None), so nothing reaches for the JVM
+    from types import SimpleNamespace
+
+    from datafusion_gpu_spark.context import _release, _SessionState
+
+    root = tmp_path / "dgs_session_x"
+    root.mkdir()
+    stopped = SimpleNamespace(_sc=SimpleNamespace(_jsc=None))
+    _release(_SessionState(stopped, scratch=str(root), cuts=[7]))
+    assert not root.exists()
+
+
 def test_persist_counted_keeps_a_rebuilt_plan_cached(spark):
     # a query rebuilt after _COUNTED_KEEP - 1 others persists the same
     # plan as its oldest handle; evicting that handle must not uncache

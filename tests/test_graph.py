@@ -10,24 +10,19 @@ from datafusion_gpu_spark.operators.graph import pagerank
 
 
 @pytest.fixture
-def truncator_cuts(monkeypatch):
-    """The counting seam over ``util.lineage_truncator``, the one
-    lineage-cut policy: ``["n"]`` counts the cuts made through it."""
+def owner_cuts(monkeypatch):
+    """The counting seam over ``util.Cuts._cut``, the one lineage-cut
+    path of the per-call cut owner: ``["n"]`` counts the cuts made."""
     from datafusion_gpu_spark.operators import util
 
     calls = {"n": 0}
-    real = util.lineage_truncator
+    real = util.Cuts._cut
 
-    def counting(sc, **kw):
-        ckpt = real(sc, **kw)
+    def counting(self, df):
+        calls["n"] += 1
+        return real(self, df)
 
-        def wrapped(df):
-            calls["n"] += 1
-            return ckpt(df)
-
-        return wrapped
-
-    monkeypatch.setattr(util, "lineage_truncator", counting)
+    monkeypatch.setattr(util.Cuts, "_cut", counting)
     return calls
 
 
@@ -378,13 +373,13 @@ def test_kcore_monotone_rounds_converge(spark):
     assert more == done
 
 
-def test_kcore_early_stop_exits_at_cascade_depth(spark, truncator_cuts):
+def test_kcore_early_stop_exits_at_cascade_depth(spark, owner_cuts):
     """The peel loop must exit when a round removes nothing — paying
     cascade-depth rounds, not the ``rounds`` upper bound. Counted via
-    the lineage_truncator seam: 1 initial cut + 1 per executed round."""
+    the cut owner's seam: 1 initial cut + 1 per executed round."""
     from datafusion_gpu_spark.operators.graph import k_core
 
-    calls = truncator_cuts
+    calls = owner_cuts
     # chain 0-1-2-3 peels from BOTH ends at once (round 1 drops nodes
     # 0 and 3, round 2 drops 1 and 2), the triangle is the 2-core;
     # round 3 removes nothing and breaks.
@@ -499,10 +494,10 @@ def test_time_travel_rejects_missing_log_columns(spark):
         time_travel(base, bad, "k", 1)
 
 
-def test_bfs_distances_chain_and_early_stop(spark, truncator_cuts):
+def test_bfs_distances_chain_and_early_stop(spark, owner_cuts):
     from datafusion_gpu_spark.operators.graph import bfs_distances
 
-    calls = truncator_cuts
+    calls = owner_cuts
     # chain 0-1-2-3-4 plus an unreachable pair (10, 11); seed = {0}
     edges = [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)]
     df = spark.createDataFrame(edges, "a long, b long")
@@ -515,7 +510,7 @@ def test_bfs_distances_chain_and_early_stop(spark, truncator_cuts):
     assert calls["n"] == 2 + 4 * 2 + 1
 
 
-def test_bpe_train_cuts_through_lineage_truncator(spark, tmp_path, truncator_cuts):
+def test_bpe_train_cuts_through_the_cut_owner(spark, tmp_path, owner_cuts):
     """bpe_train's every-8-rounds cut is the shared policy's, so a
     configured checkpoint dir puts it on the reliable path."""
     from datafusion_gpu_spark.operators.text import bpe_train
@@ -527,7 +522,7 @@ def test_bpe_train_cuts_through_lineage_truncator(spark, tmp_path, truncator_cut
     ]
     docs = spark.createDataFrame([(t,) for t in texts], "text string")
     local = bpe_train(docs, num_merges=10)
-    assert truncator_cuts["n"] == 1  # 10 rounds: one cut, at round 8
+    assert owner_cuts["n"] == 1  # 10 rounds: one cut, at round 8
     sc = spark.sparkContext
     ckdir = tmp_path / "bpe_ckpt"
     sc.setCheckpointDir(str(ckdir))
@@ -536,9 +531,110 @@ def test_bpe_train_cuts_through_lineage_truncator(spark, tmp_path, truncator_cut
     finally:
         sc._jsc.sc().setCheckpointDir(None)
     assert not sc.getCheckpointDir()
-    assert truncator_cuts["n"] == 2
+    assert owner_cuts["n"] == 2
     # the reliable cut wrote the round-8 state under the checkpoint dir
     assert any(p.is_file() for p in ckdir.rglob("*"))
+
+
+def _persistent(session) -> set[int]:
+    return set(session.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_bpe_train_releases_its_cuts_and_states(spark):
+    """Every cut and persisted round state is released at return; with
+    ``return_state`` only the returned state (and the cut it reads)
+    stays, and clearing the session releases the cut."""
+    from datafusion_gpu_spark.context import clear_scan_cache
+    from datafusion_gpu_spark.operators.text import bpe_train
+    from datafusion_gpu_spark.operators.util import _read_rdds
+
+    session = spark.newSession()
+    texts = [
+        "low low low low low lower lower",
+        "newest newest newest newest widest widest lowest",
+        "highest highest higher high low",
+    ]
+    docs = session.createDataFrame([(t,) for t in texts], "text string")
+    # ids, not a count: earlier tests' RDDs may be cleaned up meanwhile
+    before = _persistent(session)
+    merges = bpe_train(docs, num_merges=20)
+    assert len(merges) >= 16  # the corpus runs out at 18: cuts at 8 and 16
+    assert _persistent(session) - before == set()
+    merges2, state = bpe_train(docs, num_merges=10, return_state=True)
+    assert merges2 == merges[:10]
+    kept = _persistent(session) - before
+    # the returned state's own cache, plus the round-8 cut under it
+    assert len(kept - _read_rdds(state)) == 1 and len(kept) == 2
+    state.unpersist()
+    clear_scan_cache(session)
+    assert _persistent(session) - before == set()
+
+
+def _fixture_graph(session):
+    """300 nodes, 900 weighted edges (``random.seed(1)``), seed {0}."""
+    import random
+
+    random.seed(1)
+    rows = [
+        (random.randrange(300), random.randrange(300), random.randrange(1, 6))
+        for _ in range(900)
+    ]
+    edges = session.createDataFrame(rows, "a long, b long, w long")
+    return edges, session.createDataFrame([(0,)], "node long")
+
+
+def test_early_stop_operators_jobs_and_released_cuts(spark):
+    """The early-stop operators read their stop statistic in the job
+    that cuts the round (construction-time jobs pinned at most at the
+    counts measured when that landed: k_core 18, bellman_ford 24,
+    components 24, scc 222, topo_layers 109, mst 154-159 (pinned at
+    160), bfs 51 — with a separate action per round they were 28, 34,
+    36, 280, 129, 209-211 and 57), and keep only the cuts their result
+    reads: a returned DataFrame collects twice, the same each call, and
+    clearing the session releases what was kept."""
+    from datafusion_gpu_spark.context import clear_scan_cache
+    from datafusion_gpu_spark.operators import graph
+    from datafusion_gpu_spark.operators.dedup import connected_components
+    from datafusion_gpu_spark.operators.util import _read_rdds
+
+    session = spark.newSession()
+    sc = session.sparkContext
+    edges, seeds = _fixture_graph(session)
+    dag = edges.where(F.col("a") < F.col("b"))
+    ops = {
+        "k_core": (lambda: graph.k_core(edges), 18),
+        "bellman_ford": (lambda: graph.bellman_ford(edges, seeds), 24),
+        "components": (lambda: connected_components(edges, a="a", b="b"), 24),
+        "scc": (
+            lambda: graph.strongly_connected_components(edges, src="a", dst="b"),
+            222,
+        ),
+        "topo_layers": (lambda: graph.topo_layers(dag, src="a", dst="b"), 109),
+        "mst": (lambda: graph.boruvka_mst(edges), 160),
+        "bfs": (lambda: graph.bfs_distances(edges, seeds), 51),
+    }
+    before = _persistent(session)
+    try:
+        for name, (op, max_jobs) in ops.items():
+            values = None
+            for call in range(2):
+                pre = _persistent(session)
+                sc.setJobGroup(name, name)
+                try:
+                    df = op()
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                if call == 0:
+                    jobs = len(sc.statusTracker().getJobIdsForGroup(name))
+                    assert jobs <= max_jobs, (name, jobs)
+                assert _persistent(session) - pre <= _read_rdds(df), name
+                got = sorted(map(tuple, df.collect()))
+                assert got == sorted(map(tuple, df.collect())), name
+                assert values in (None, got), name
+                values = got
+    finally:
+        clear_scan_cache(session)
+    assert _persistent(session) - before == set()
 
 
 def test_bfs_distances_min_hop_not_first_path(spark):
@@ -679,10 +775,10 @@ def test_bellman_ford_prefers_cheap_long_path_and_truncates(spark):
     assert one == {0: 0, 1: 1, 3: 10}  # detour not yet relaxed
 
 
-def test_bellman_ford_early_stop_at_fixpoint(spark, truncator_cuts):
+def test_bellman_ford_early_stop_at_fixpoint(spark, owner_cuts):
     from datafusion_gpu_spark.operators.graph import bellman_ford
 
-    calls = truncator_cuts
+    calls = owner_cuts
     # path 0-1-2: labels stabilize after round 2; round 3 confirms and
     # breaks — rounds=50 never runs. ckpt: adj + seed + 3 rounds.
     edges = [(0, 1, 2), (1, 2, 2)]

@@ -909,6 +909,11 @@ def test_streaming_writers_leave_no_temp_entries_after_clear(spark):
     from datafusion_gpu_spark import streaming
     from datafusion_gpu_spark.context import _SESSION_STATE, clear_scan_cache
 
+    # warm-up on a throwaway session: the JVM's first write creates its
+    # snappy/lz4 native-lib files and artifacts root in the temp dir
+    warm = spark.newSession()
+    streaming.materialized_incremental_minhash(warm, SF_DIR).count()
+    clear_scan_cache(warm)
     tmp = tempfile.gettempdir()
     before = set(os.listdir(tmp))
     states_before = set(_SESSION_STATE)

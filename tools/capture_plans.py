@@ -3,7 +3,7 @@
 Usage: python tools/capture_plans.py <tag> <suffix> [query ...]
 Writes plans/<tag>/<query>_<suffix>.txt for each query (default: the
 benched SF set). Capture itself only plans, but CONSTRUCTING a query
-whose operator eagerly materializes an intermediate (lineage_truncator
+whose operator eagerly materializes an intermediate (``operators.util.cuts``
 sites: retrieval_bm25, text_perplexity, dedup_lines,
 curation_dsir_resample, dedup_minhash_lsh) runs those Spark jobs at
 capture time. Uses the private df._sc/_jvm handles to reach
