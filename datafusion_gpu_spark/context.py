@@ -222,6 +222,8 @@ class _SessionState:
       handles, so Spark's ContextCleaner can still free one earlier; and
       no eviction bound, since a released local checkpoint cannot be
       recomputed (a later read fails instead).
+    - ``checkpoints``: the same for reliable ``checkpoint`` RDDs; their
+      files under the checkpoint dir are deleted on release.
     """
 
     session: SparkSession
@@ -231,6 +233,7 @@ class _SessionState:
     scratch: str | None = None
     counted: list[DataFrame] = field(default_factory=list)
     cuts: list[int] = field(default_factory=list)
+    checkpoints: list[int] = field(default_factory=list)
 
 
 #: Register once, then check: the star schema views and the custom sums
@@ -252,7 +255,8 @@ class _SessionState:
 #: lifetime; callers that rewrite parquet at a registered path mid-session
 #: must call :func:`clear_scan_cache` first. Dropping an entry (sweep or
 #: clear) removes its scratch root and unpersists its counted relations
-#: and kept cuts; one exit hook removes the roots left at exit.
+#: and kept cuts (deleting the files of reliable ones); one exit hook
+#: removes the roots left at exit.
 _SESSION_STATE: dict[int, _SessionState] = {}
 
 
@@ -262,13 +266,28 @@ def _release(state: _SessionState) -> None:
     try:
         for df in state.counted:
             df.unpersist(blocking=False)
-        # a stopped session's cut blocks went with its SparkContext
-        if state.cuts and not _session_stopped(state.session):
+        # a stopped session's cut blocks went with its SparkContext; its
+        # kept checkpoint files stay (the checkpoint dir went with it too)
+        if (state.cuts or state.checkpoints) and not _session_stopped(state.session):
             sc = state.session.sparkContext._jsc.sc()
             for rdd_id in state.cuts:
                 sc.unpersistRDD(rdd_id, False)
+            _remove_checkpoint_files(state.session, state.checkpoints)
     except Py4JError:
         pass  # session stopped — nothing left to release
+
+
+def _remove_checkpoint_files(spark: SparkSession, rdd_ids: list[int]) -> None:
+    """Delete the reliable-checkpoint files of the RDDs ``rdd_ids`` (the
+    ``rdd-<id>`` dirs under the session's checkpoint dir). Spark deletes
+    them only with ``spark.cleaner.referenceTracking.cleanCheckpoints``,
+    which is off by default."""
+    if not rdd_ids:
+        return
+    sc = spark.sparkContext._jsc.sc()
+    data = spark._jvm.org.apache.spark.rdd.ReliableRDDCheckpointData
+    for i in rdd_ids:
+        data.cleanCheckpoint(sc, i)
 
 
 @atexit.register

@@ -32,7 +32,7 @@ pinned against a numpy reference in tests).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -978,19 +978,20 @@ def delta_stepping(
 
     Per step: one keyed equality join (frontier x light/heavy
     adjacency) + one min aggregation + one improvement anti-check
-    against the current labels, all checkpoint-truncated. Driver
-    traffic per step is a 3-scalar (frontier count, label count+sum)
-    fixpoint certificate — the bellman_ford pattern, never data.
-    Buckets advance until the bucket floor passes the current maximum
-    tentative cost, which certifies every label settled (costs only
-    decrease; a settled bucket can never be re-opened because any
-    path through a later bucket is already >= its floor).
+    against the current labels, all checkpoint-truncated. The labels
+    carry a ``fresh`` flag (improved this step), and each step's cut
+    reads, in its own job, the two counts that drive the loop: the
+    improved nodes inside the bucket (the next light frontier, taken
+    from the cut) and the bucket's size (the next bucket's, after the
+    heavy step) — no other action runs. Buckets advance until the
+    bucket floor passes the current maximum tentative cost, which
+    certifies every label settled (costs only decrease; a settled
+    bucket can never be re-opened because any path through a later
+    bucket is already >= its floor).
 
     ``work`` (optional dict) accumulates ``relaxed_rows`` (frontier/
     bucket rows driven through relax joins) and ``rounds`` so the A/B
-    probe can compare the work bound against :func:`bellman_ford`'s;
-    collecting it turns the emptiness probe into a count, so leave it
-    None in production.
+    probe can compare the work bound against :func:`bellman_ford`'s.
     """
     ckpt = cuts(edges)
     fwd = edges.select(F.col(a).alias("s"), F.col(b).alias("d"), F.col(w).alias("w"))
@@ -999,11 +1000,12 @@ def delta_stepping(
     light = ckpt(adj.where(F.col("w") <= delta))
     heavy = ckpt(adj.where(F.col("w") > delta))
     node = seeds.columns[0]
-    dist = ckpt(
-        seeds.select(F.col(node).alias("node"))
-        .distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
-    )
+
+    def in_bucket(k: int) -> Column:
+        return (F.col("cost") >= k * delta) & (F.col("cost") < (k + 1) * delta)
+
+    def n_where(cond: Column) -> Column:
+        return F.count(F.when(cond, 1))
 
     def relax(frontier: DataFrame, rel: DataFrame, cur: DataFrame):
         """Candidates one hop from ``frontier`` through ``rel`` that
@@ -1020,59 +1022,71 @@ def delta_stepping(
             .select("node", "cost")
         )
 
+    def merged(cur: DataFrame, improved: DataFrame) -> DataFrame:
+        """``cur`` labels lowered by ``improved``; ``fresh`` marks the
+        improved nodes (an improvement is strict, so it is the min)."""
+        return (
+            cur.select("node", "cost", F.lit(False).alias("fresh"))
+            .unionAll(improved.withColumn("fresh", F.lit(True)))
+            .groupBy("node")
+            .agg(F.min("cost").alias("cost"), F.max("fresh").alias("fresh"))
+        )
+
+    def tally(rows: int) -> None:
+        if work is not None:
+            work["relaxed_rows"] = work.get("relaxed_rows", 0) + rows
+            work["rounds"] = work.get("rounds", 0) + 1
+
+    dist, seen = ckpt.observed(
+        seeds.select(F.col(node).alias("node"))
+        .distinct()
+        .withColumn("cost", F.lit(0).cast("long")),
+        n=n_where(in_bucket(0)),
+    )
+    n_bucket = seen["n"]
     for bucket in range(max_buckets):
-        lo = bucket * delta
-        hi = lo + delta
-        in_bucket = (F.col("cost") >= lo) & (F.col("cost") < hi)
-        frontier = dist.where(in_bucket)
+        here = in_bucket(bucket)
+        frontier, n_frontier = dist.where(here), n_bucket
         for _ in range(light_rounds):
-            if work is not None:
-                nf = frontier.count()
-                if nf == 0:
-                    break
-                work["relaxed_rows"] = work.get("relaxed_rows", 0) + nf
-                work["rounds"] = work.get("rounds", 0) + 1
-            elif not frontier.take(1):
+            if n_frontier == 0:
                 break
-            improved = relax(frontier, light, dist)
-            dist = ckpt(
-                dist.unionAll(improved)
-                .groupBy("node")
-                .agg(F.min("cost").alias("cost"))
+            tally(n_frontier)
+            fresh = here & F.col("fresh")
+            dist, seen = ckpt.observed(
+                merged(dist, relax(frontier, light, dist)),
+                n=n_where(fresh),
+                nb=n_where(here),
             )
+            n_frontier, n_bucket = seen["n"], seen["nb"]
             # only improvements that landed INSIDE the bucket re-relax;
             # the rest wait for their own bucket
-            frontier = improved.where(in_bucket)
+            frontier = dist.where(fresh)
         else:
-            # the loop ran out of rounds without the empty-frontier
-            # break: a non-empty frontier here means light edges inside
-            # this bucket still improve labels, and the bucket never
-            # reopens — returning would be silently NON-shortest paths
-            if frontier.take(1):
+            # the loop ran out of rounds with a non-empty frontier: light
+            # edges inside this bucket still improve labels, and the
+            # bucket never reopens — returning would be silently
+            # NON-shortest paths
+            if n_frontier:
                 raise RuntimeError(
                     "delta_stepping: light-relaxation budget exhausted inside "
                     f"bucket {bucket} — raise light_rounds (chains of light "
                     "edges within one bucket need one round per hop)"
                 )
-        bucket_nodes = dist.where(in_bucket)
-        if work is not None:
-            nb = bucket_nodes.count()
-            work["relaxed_rows"] = work.get("relaxed_rows", 0) + nb
-            work["rounds"] = work.get("rounds", 0) + 1
-        improved = relax(bucket_nodes, heavy, dist)
+        tally(n_bucket)
         dist, seen = ckpt.observed(
-            dist.unionAll(improved).groupBy("node").agg(F.min("cost").alias("cost")),
+            merged(dist, relax(dist.where(here), heavy, dist)),
             mx=F.max("cost"),
+            n=n_where(in_bucket(bucket + 1)),
         )
-        top = seen["mx"]
-        if top is not None and top < hi:
+        n_bucket, top = seen["n"], seen["mx"]
+        if top is not None and top < (bucket + 1) * delta:
             break  # every label below the next bucket floor: all settled
     else:
         raise RuntimeError(
             "delta_stepping: bucket budget exhausted before settlement — "
             "raise max_buckets (buckets needed ~ max distance / delta)"
         )
-    return dist
+    return dist.select("node", "cost")
 
 
 @owns_cuts

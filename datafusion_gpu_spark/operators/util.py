@@ -2,7 +2,8 @@
 owner — every lineage cut an operator makes goes through :func:`cuts`
 inside an :func:`owns_cuts` call, which picks the cut policy, reads the
 round's statistics in the cut's own job, and releases the cuts the
-returned DataFrame does not read."""
+returned DataFrame does not read (their blocks, or on the reliable path
+their checkpoint files)."""
 
 from __future__ import annotations
 
@@ -54,29 +55,36 @@ class _Call:
     def __init__(self) -> None:
         self.spark: SparkSession | None = None
         self.cut_ids: list[int] = []  # localCheckpointed RDDs
+        self.checkpoint_ids: list[int] = []  # reliably checkpointed RDDs
         self.persisted: list[DataFrame] = []
 
     def settle(self, out: Any) -> None:
-        if not (self.cut_ids or self.persisted):
+        if not (self.cut_ids or self.checkpoint_ids or self.persisted):
             return
         outs = out if isinstance(out, tuple) else (out,)
         frames = [x for x in outs if isinstance(x, DataFrame)]
         read = set().union(*(_read_rdds(df) for df in frames))
+        from datafusion_gpu_spark.context import _remove_checkpoint_files, session_state
+
         jsc = self.spark.sparkContext._jsc
         try:
             for i in self.cut_ids:
                 if i not in read:
                     jsc.sc().unpersistRDD(i, False)
+            _remove_checkpoint_files(
+                self.spark, [i for i in self.checkpoint_ids if i not in read]
+            )
             for df in self.persisted:
                 if not any(df is f for f in frames):
                     df.unpersist(blocking=False)
         except Py4JError:
             return  # session stopped: nothing left to release
         kept = [i for i in self.cut_ids if i in read]
-        if kept:
-            from datafusion_gpu_spark.context import session_state
-
-            session_state(self.spark).cuts.extend(kept)
+        kept_files = [i for i in self.checkpoint_ids if i in read]
+        if kept or kept_files:
+            state = session_state(self.spark)
+            state.cuts.extend(kept)
+            state.checkpoints.extend(kept_files)
 
 
 _RDD_ID = re.compile(r"RDD\d?\[(\d+)\] at ")
@@ -165,9 +173,11 @@ class Cuts:
         self.last_run = df
         if self._reliable:
             out = df.checkpoint(eager=True)
+            ids = self._call.checkpoint_ids
         else:
             out = df.localCheckpoint(eager=True)
-            self._call.cut_ids.append(out._jdf.logicalPlan().rdd().id())
+            ids = self._call.cut_ids
+        ids.append(out._jdf.logicalPlan().rdd().id())
         return stats_barrier(out) if self._reset_stats else out
 
 

@@ -39,11 +39,22 @@ from datafusion_gpu_spark.operators import (
 )
 from datafusion_gpu_spark.queries import load
 from datafusion_gpu_spark.queries.pipeline_common import (  # noqa: F401
+    _AUDIO_BITS,
+    _COS_RANK,
     _CUSUM_ORACLE,
+    _KM_RUN,
+    _LAG_MOMENTS,
+    _LAGGED,
+    _LIFE,
+    _NEXT_PART,
     _NORM,
+    _PER_T,
+    _copurchase,
     _docs,
     _purchase_subjects,
     _sparse_copurchase_edges,
+    _subj,
+    _with,
 )
 
 # ---------------------------------------------------------------------------
@@ -249,8 +260,8 @@ def _lsh_ann_oracle(
     """Replays similarity.lsh_ann_topk exactly: same bucket relation,
     same multi-table candidate union, same (cosine DESC, vec_id) rerank."""
     cos = _cos_sql("q.embedding", "c.embedding")
-    return f"""
-WITH cb AS (
+    return _with(
+        f"""cb AS (
 {_lsh_buckets_cte(planes, num_tables, dim, seed)}
 ),
 qb AS (SELECT vec_id AS query_id, tbl, bucket FROM cb WHERE vec_id < 8),
@@ -264,16 +275,12 @@ scored AS (
   FROM cand
   JOIN embeddings c ON c.vec_id = cand.vec_id
   JOIN embeddings q ON q.vec_id = cand.query_id
-),
-r AS (
-  SELECT query_id, vec_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, vec_id) AS "rank"
-  FROM scored
-)
+)""",
+        _COS_RANK,
+        f"""
 SELECT query_id, vec_id, ROUND(cos, 6) AS cosine, "rank"::INT AS "rank" FROM r
 WHERE "rank" <= {k}
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -3362,13 +3369,7 @@ SELECT doc_id, length(raw) AS n_raw, length(clean) AS n_clean,
        md5(clean) AS clean_md5
 FROM cleaned
 """,
-    "graph_bellman_ford": """
-WITH RECURSIVE e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 40 AND b.l_quantity >= 40
-),
+    "graph_bellman_ford": _with(_copurchase("e0 AS MATERIALIZED", "a", "b"), """
 adj AS MATERIALIZED (
   SELECT a AS s, b AS d, (a + b) % 5 + 1 AS w FROM e0
   UNION
@@ -3385,14 +3386,8 @@ walk(node, cost, hops) AS (
   WHERE walk.hops < 4
 )
 SELECT node, MIN(cost) AS cost FROM walk GROUP BY node
-""",
-    "graph_harmonic_exact": """
-WITH RECURSIVE e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 40 AND b.l_quantity >= 40
-),
+""", recursive=True),
+    "graph_harmonic_exact": _with(_copurchase("e0 AS MATERIALIZED", "a", "b"), """
 adj AS MATERIALIZED (
   SELECT a AS s, b AS d FROM e0 UNION SELECT b AS s, a AS d FROM e0
 ),
@@ -3406,17 +3401,11 @@ walk(src, node, dist) AS (
 md AS (SELECT src, node, MIN(dist) AS dist FROM walk GROUP BY src, node)
 SELECT src AS node, ROUND(SUM(1.0 / dist), 6) AS harmonic
 FROM md WHERE dist > 0 GROUP BY src
-""",
-    "graph_harmonic_hyperball": """
-WITH e0 AS (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 40 AND b.l_quantity >= 40
-),
+""", recursive=True),
+    "graph_harmonic_hyperball": _with(_copurchase("e0 AS", "a", "b"), """
 adj AS (SELECT a AS s, b AS d FROM e0 UNION SELECT b AS s, a AS d FROM e0)
 SELECT COUNT(DISTINCT s) AS n_nodes, TRUE AS ok FROM adj
-""",
+"""),
     "join_geo_radius": """
 WITH c AS (
   SELECT c_custkey AS custkey,
@@ -3438,13 +3427,7 @@ WHERE 2 * 6371.0088 * asin(sqrt(
           * pow(sin(radians(s.lon - c.lon) / 2), 2)
       )) <= 25.0
 """,
-    "graph_bfs": """
-WITH RECURSIVE e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 40 AND b.l_quantity >= 40
-),
+    "graph_bfs": _with(_copurchase("e0 AS MATERIALIZED", "a", "b"), """
 adj AS MATERIALIZED (
   SELECT a AS s, b AS d FROM e0 UNION SELECT b AS s, a AS d FROM e0
 ),
@@ -3459,7 +3442,7 @@ walk(node, dist) AS (
   WHERE walk.dist < 6
 )
 SELECT node, MIN(dist) AS dist FROM walk GROUP BY node
-""",
+""", recursive=True),
     "graph_degree_hist": """
 WITH e AS (
   SELECT DISTINCT a.l_partkey AS lo, b.l_partkey AS hi
@@ -3474,13 +3457,7 @@ deg AS (
 )
 SELECT degree, COUNT(*) AS n_nodes FROM deg GROUP BY degree
 """,
-    "graph_common_neighbors": """
-WITH e AS (
-  SELECT DISTINCT a.l_partkey AS lo, b.l_partkey AS hi
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 40 AND b.l_quantity >= 40
-),
+    "graph_common_neighbors": _with(_copurchase("e AS"), """
 deg AS (SELECT node, COUNT(*) AS d FROM (
           SELECT lo AS node FROM e UNION ALL SELECT hi FROM e
         ) GROUP BY node),
@@ -3498,17 +3475,11 @@ SELECT np.x AS a, np.y AS b, np.common AS common,
        ROUND(np.common::DOUBLE / (dx.d + dy.d - np.common), 6) AS jaccard
 FROM np JOIN deg dx ON dx.node = np.x
         JOIN deg dy ON dy.node = np.y
-""",
+"""),
     # the peel rounds are MATERIALIZED: each round references its
     # predecessor three times, so DuckDB's default CTE inlining would
     # make the plan exponential in the round count
-    "graph_kcore": """
-WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS lo, b.l_partkey AS hi
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 40 AND b.l_quantity >= 40
-),
+    "graph_kcore": _with(_copurchase("e0 AS MATERIALIZED"), """
 d1 AS MATERIALIZED (SELECT node, COUNT(*) AS d FROM (
   SELECT lo AS node FROM e0 UNION ALL SELECT hi FROM e0) GROUP BY node),
 k1 AS MATERIALIZED (SELECT node FROM d1 WHERE d >= 3),
@@ -3537,7 +3508,7 @@ e5 AS MATERIALIZED (SELECT lo, hi FROM e4
 SELECT node, COUNT(*) AS degree FROM (
   SELECT lo AS node FROM e5 UNION ALL SELECT hi FROM e5
 ) GROUP BY node HAVING COUNT(*) >= 3
-""",
+"""),
     "graph_pagerank": """
 WITH edges AS (
   SELECT src, dst FROM (
@@ -3805,35 +3776,27 @@ SELECT x_id, y_id, ROUND(c, 6) AS cosine, ROUND(margin, 6) AS margin
 FROM best WHERE rn = 1 AND ROUND(margin, 6) >= 1.0
 """,
     # exact kNN graph: all-pairs cosine, top-5 per vector, self excluded
-    "sim_knn_graph": f"""
-WITH scored AS (
+    "sim_knn_graph": _with(
+        f"""scored AS (
   SELECT a.vec_id AS query_id, b.vec_id AS vec_id, {_COS_AB} AS cos
   FROM embeddings a JOIN embeddings b ON a.vec_id != b.vec_id
-),
-r AS (
-  SELECT query_id, vec_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, vec_id) AS "rank"
-  FROM scored
-)
+)""",
+        _COS_RANK,
+        """
 SELECT query_id, vec_id, ROUND(cos, 6) AS cosine, "rank"::BIGINT AS "rank"
 FROM r WHERE "rank" <= 5
-""",
-    "sim_topk_bruteforce": f"""
-WITH scored AS (
+"""),
+    "sim_topk_bruteforce": _with(
+        f"""scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS vec_id, {_COS_QC} AS cos
   FROM embeddings q
   JOIN embeddings c ON q.vec_id < 8 AND c.vec_id != q.vec_id
-),
-r AS (
-  SELECT query_id, vec_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, vec_id) AS "rank"
-  FROM scored
-)
+)""",
+        _COS_RANK,
+        """
 SELECT query_id, vec_id, ROUND(cos, 6) AS cosine, "rank"::INT AS "rank" FROM r
 WHERE "rank" <= 5
-""",
+"""),
     # rank-1 of the same-label and different-label maskings of the same
     # exact-cosine CTE, joined per query; margin mirrors the Spark
     # round(round - round) exactly
@@ -3864,37 +3827,29 @@ WHERE p.rn = 1 AND n.rn = 1
 """,
     # same exact-cosine CTE with the label mask applied BEFORE ranking —
     # the top-k among different-label neighbors, not a post-filter
-    "retrieval_hard_negatives": f"""
-WITH scored AS (
+    "retrieval_hard_negatives": _with(
+        f"""scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS vec_id, {_COS_QC} AS cos
   FROM embeddings q
   JOIN embeddings c
     ON q.vec_id < 8 AND c.vec_id != q.vec_id AND c.label != q.label
-),
-r AS (
-  SELECT query_id, vec_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, vec_id) AS "rank"
-  FROM scored
-)
+)""",
+        _COS_RANK,
+        """
 SELECT query_id, vec_id, ROUND(cos, 6) AS cosine, "rank"::INT AS "rank" FROM r
 WHERE "rank" <= 5
-""",
-    "sim_topk_vectorized": f"""
-WITH scored AS (
+"""),
+    "sim_topk_vectorized": _with(
+        f"""scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS vec_id, {_COS_QC} AS cos
   FROM embeddings q
   JOIN embeddings c ON q.vec_id < 8 AND c.vec_id != q.vec_id
-),
-r AS (
-  SELECT query_id, vec_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, vec_id) AS "rank"
-  FROM scored
-)
+)""",
+        _COS_RANK,
+        """
 SELECT query_id, vec_id, ROUND(cos, 6) AS cosine, "rank"::INT AS "rank" FROM r
 WHERE "rank" <= 5
-""",
+"""),
     "sim_topk_lsh": _lsh_ann_oracle(),
     # PQ-ADC replay: same deterministic codebooks (L2-normalized
     # vec_id < 16 rows sliced into 8 subvectors of 8), same argmin
@@ -3987,8 +3942,8 @@ FROM embeddings
 """,
     # IVF replay: same deterministic centroids (vec_id < 16), same
     # assignment tiebreak (cosine DESC, cid), same n_probe=4, same rerank
-    "sim_topk_ivf": f"""
-WITH cent AS (
+    "sim_topk_ivf": _with(
+        f"""cent AS (
   SELECT vec_id AS cid, embedding AS cemb FROM embeddings WHERE vec_id < 16
 ),
 ac AS (
@@ -4021,16 +3976,12 @@ scored AS (
   FROM cand
   JOIN embeddings c ON c.vec_id = cand.vec_id
   JOIN embeddings q ON q.vec_id = cand.query_id
-),
-r AS (
-  SELECT query_id, vec_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, vec_id) AS "rank"
-  FROM scored
-)
+)""",
+        _COS_RANK,
+        """
 SELECT query_id, vec_id, ROUND(cos, 6) AS cosine, "rank"::INT AS "rank" FROM r
 WHERE "rank" <= 5
-""",
+"""),
     # k-means IVF cannot be SQL-replayed (iterative fit); the query
     # instead emits its deterministic output CONTRACT on a planted
     # corpus (exactly k results, cosine descending, recall >= 0.8 where
@@ -5147,14 +5098,20 @@ def _delta_stepping_oracle(rounds: int = 24) -> str:
     weights keep both engines exact; a RECURSIVE CTE would have to
     enumerate paths, which explodes on a weighted graph with no hop
     bound)."""
-    parts = ["""
-WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 40 AND b.l_quantity >= 40
-),
-adj AS MATERIALIZED (
+    steps = [
+        f"""d{r} AS MATERIALIZED (
+  SELECT node, MIN(cost) AS cost FROM (
+    SELECT node, cost FROM d{r - 1}
+    UNION ALL
+    SELECT adj.d AS node, d{r - 1}.cost + adj.w AS cost
+    FROM d{r - 1} JOIN adj ON adj.s = d{r - 1}.node
+  ) GROUP BY node
+)"""
+        for r in range(1, rounds + 1)
+    ]
+    return _with(
+        _copurchase("e0 AS MATERIALIZED", "a", "b"),
+        """adj AS MATERIALIZED (
   SELECT a AS s, b AS d, (a * 7 + b) % 9 + 1 AS w FROM e0
   UNION
   SELECT b AS s, a AS d, (a * 7 + b) % 9 + 1 AS w FROM e0
@@ -5162,19 +5119,10 @@ adj AS MATERIALIZED (
 d0 AS MATERIALIZED (
   SELECT DISTINCT s AS node, CAST(0 AS BIGINT) AS cost
   FROM adj WHERE s % 97 = 0
-)"""]
-    for r in range(1, rounds + 1):
-        parts.append(f""",
-d{r} AS MATERIALIZED (
-  SELECT node, MIN(cost) AS cost FROM (
-    SELECT node, cost FROM d{r - 1}
-    UNION ALL
-    SELECT adj.d AS node, d{r - 1}.cost + adj.w AS cost
-    FROM d{r - 1} JOIN adj ON adj.s = d{r - 1}.node
-  ) GROUP BY node
-)""")
-    parts.append(f"\nSELECT node, cost FROM d{rounds}")
-    return "".join(parts)
+)""",
+        *steps,
+        f"SELECT node, cost FROM d{rounds}",
+    )
 
 
 ORACLES["graph_delta_stepping"] = _delta_stepping_oracle(24)
@@ -5252,13 +5200,7 @@ FROM l
 # Resource-Allocation link prediction: common_neighbors' wedge algebra
 # with the 1/deg middle discount quantized to bigint nano-units before
 # the (order-free) sum.
-ORACLES["graph_resource_allocation"] = """
-WITH e AS (
-  SELECT DISTINCT a.l_partkey AS lo, b.l_partkey AS hi
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 40 AND b.l_quantity >= 40
-),
+ORACLES["graph_resource_allocation"] = _with(_copurchase("e AS"), """
 deg AS (SELECT node, COUNT(*) AS d FROM (
           SELECT lo AS node FROM e UNION ALL SELECT hi FROM e
         ) GROUP BY node),
@@ -5276,18 +5218,13 @@ np AS (SELECT p.* FROM p LEFT JOIN e ON e.lo = p.x AND e.hi = p.y
 SELECT x AS a, y AS b, common, ra_units,
        ROUND(ra_units / 1e9, 6) AS ra
 FROM np
-"""
+""")
 
 # SCC: the oracle has no iteration budget to coordinate with the
 # operator — DuckDB's recursive UNION computes the exact transitive
 # closure, mutual reachability is its self-join, and the canonical id
 # is the min mutually-reachable node (self included).
-ORACLES["graph_scc"] = """
-WITH s AS (
-  SELECT l_partkey,
-         lead(l_partkey) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber) AS nxt
-  FROM lineitem WHERE l_quantity >= 40
-),
+ORACLES["graph_scc"] = _with(_NEXT_PART, """
 e AS (
   SELECT DISTINCT l_partkey AS src, nxt AS dst FROM s
   WHERE nxt IS NOT NULL AND nxt <> l_partkey
@@ -5307,7 +5244,7 @@ mut AS (
 SELECT n.node, LEAST(n.node, COALESCE(MIN(m.v), n.node)) AS scc_id
 FROM n LEFT JOIN mut m ON m.u = n.node
 GROUP BY n.node
-"""
+""")
 
 # pHash: every pixel is rebuilt arithmetically, the DCT runs through a
 # 64-row integer coefficient relation generated from the SAME Python
@@ -5324,8 +5261,8 @@ _PHASH_COEF_ROWS = ", ".join(
 # sample from the gate generator's closed form, replay the integer
 # two-band frame-energy transform, median-threshold per band (31
 # frames — odd, so MEDIAN is the exact middle element), pack bits.
-ORACLES["multimodal_audio_fp"] = """
-WITH d AS (
+ORACLES["multimodal_audio_fp"] = _with(
+    """d AS (
   SELECT doc_id, 8 + doc_id % 23 AS n_f
   FROM documents WHERE doc_id < 300
 ),
@@ -5333,45 +5270,22 @@ samples AS (
   SELECT doc_id, n_f, i,
          ((doc_id * 13 + i * 7919) % 4096) - 2048 AS s
   FROM d, LATERAL (SELECT unnest(range(0, 31 * n_f)) AS i) gen
-),
-terms AS (
-  SELECT x.doc_id, x.i // x.n_f AS f,
-         (y.s + x.s) AS a, (y.s - x.s) AS dd
-  FROM samples x
-  JOIN samples y ON y.doc_id = x.doc_id AND y.i = x.i + 1
-  WHERE (x.i % x.n_f) < x.n_f - 1
-),
-energy AS (
-  SELECT doc_id, f,
-         CAST(SUM(a * a) AS BIGINT) AS L,
-         CAST(SUM(dd * dd) AS BIGINT) AS H
-  FROM terms GROUP BY 1, 2
-),
-med AS (
-  SELECT doc_id,
-         CAST(MEDIAN(L) AS BIGINT) AS mL,
-         CAST(MEDIAN(H) AS BIGINT) AS mH
-  FROM energy GROUP BY doc_id
-),
-bits AS (
-  SELECT e.doc_id, f,
-         CASE WHEN L > mL THEN 1 ELSE 0 END AS lb,
-         CASE WHEN H > mH THEN 1 ELSE 0 END AS hb
-  FROM energy e JOIN med USING (doc_id)
-)
+)""",
+    _AUDIO_BITS,
+    """
 SELECT doc_id,
        CAST(SUM(lb * (CAST(1 AS BIGINT) << f)
               + hb * (CAST(1 AS BIGINT) << (31 + f))) AS BIGINT) AS afp,
        CAST(SUM(lb + hb) AS INTEGER) AS n_bits
 FROM bits GROUP BY doc_id
-"""
+""")
 
 # Pair twin: rebuild each clip's fingerprint from the gate generator's
 # seeded closed form (doc_id % 5 == 4 -> gain-2 copy of seed doc_id-4),
 # then the exact all-pairs hamming <= 3 slice. All-pairs is fine for
 # the ORACLE (300 docs); the Spark side is the chunked pigeonhole.
-ORACLES["multimodal_audio_neardup"] = """
-WITH d AS (
+ORACLES["multimodal_audio_neardup"] = _with(
+    """d AS (
   SELECT doc_id,
          CASE WHEN doc_id % 5 = 4 THEN doc_id - 4 ELSE doc_id END AS seed,
          CASE WHEN doc_id % 5 = 4 THEN 2 ELSE 1 END AS gain
@@ -5383,32 +5297,9 @@ samples AS (
          gain * ((((2 * seed + 1) * (i * i * 31 + i * 7919) + seed * 13)
                   % 4096) - 2048) AS s
   FROM d2, LATERAL (SELECT unnest(range(0, 31 * n_f)) AS i) gen
-),
-terms AS (
-  SELECT x.doc_id, x.i // x.n_f AS f,
-         (y.s + x.s) AS a, (y.s - x.s) AS dd
-  FROM samples x
-  JOIN samples y ON y.doc_id = x.doc_id AND y.i = x.i + 1
-  WHERE (x.i % x.n_f) < x.n_f - 1
-),
-energy AS (
-  SELECT doc_id, f,
-         CAST(SUM(a * a) AS BIGINT) AS L,
-         CAST(SUM(dd * dd) AS BIGINT) AS H
-  FROM terms GROUP BY 1, 2
-),
-med AS (
-  SELECT doc_id,
-         CAST(MEDIAN(L) AS BIGINT) AS mL,
-         CAST(MEDIAN(H) AS BIGINT) AS mH
-  FROM energy GROUP BY doc_id
-),
-bits AS (
-  SELECT e.doc_id, f,
-         CASE WHEN L > mL THEN 1 ELSE 0 END AS lb,
-         CASE WHEN H > mH THEN 1 ELSE 0 END AS hb
-  FROM energy e JOIN med USING (doc_id)
-),
+)""",
+    _AUDIO_BITS,
+    """
 fp AS (
   SELECT doc_id,
          CAST(SUM(lb * (CAST(1 AS BIGINT) << f)
@@ -5419,7 +5310,7 @@ SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.afp, b.afp)) AS INTEGER) AS hamming
 FROM fp a JOIN fp b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.afp, b.afp)) <= 3
-"""
+""")
 
 ORACLES["multimodal_phash"] = f"""
 WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 300),
@@ -5462,12 +5353,7 @@ FROM bits GROUP BY doc_id
 
 # Kahn layer == longest path from any source: every path extends back
 # to a source, so MAX(depth) over all paths ending at v is the layer.
-ORACLES["graph_toposort"] = """
-WITH s AS (
-  SELECT l_partkey,
-         lead(l_partkey) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber) AS nxt
-  FROM lineitem WHERE l_quantity >= 40
-),
+ORACLES["graph_toposort"] = _with(_NEXT_PART, """
 e AS (
   SELECT DISTINCT l_partkey AS src, nxt AS dst FROM s
   WHERE nxt IS NOT NULL AND nxt > l_partkey
@@ -5481,7 +5367,7 @@ lp AS (
   ) SELECT * FROM r
 )
 SELECT node, CAST(MAX(d) AS INTEGER) AS layer FROM lp GROUP BY node
-"""
+""")
 
 # Interval merge: running-max-of-previous-ends island flag, identical
 # ordering tiebreaks, all bigint epoch-micros.
@@ -5549,12 +5435,7 @@ WHERE r.rn <= a.alloc
 # Condensation: SCC labeling from the recursive closure (as graph_scc),
 # then longest path over the contracted inter-SCC edges; isolated SCCs
 # default to layer 0 via the same LEFT JOIN + COALESCE.
-ORACLES["graph_condensation"] = """
-WITH s AS (
-  SELECT l_partkey,
-         lead(l_partkey) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber) AS nxt
-  FROM lineitem WHERE l_quantity >= 40
-),
+ORACLES["graph_condensation"] = _with(_NEXT_PART, """
 e AS (
   SELECT DISTINCT l_partkey AS src, nxt AS dst FROM s
   WHERE nxt IS NOT NULL AND nxt <> l_partkey
@@ -5594,7 +5475,7 @@ SELECT sz.scc_id,
        sz.n_members
 FROM (SELECT scc_id, COUNT(*) AS n_members FROM scc GROUP BY scc_id) sz
 LEFT JOIN lp ON lp.node = sz.scc_id
-"""
+""")
 
 # The streaming EWMA twin shares the batch oracle verbatim: on an
 # in-order replay the stateful automaton's output IS the batch
@@ -5664,85 +5545,17 @@ ORACLES["agg_chi_squared"] = _CHI2
 # Same life-table derivation (epoch-micros integer division), same
 # suffix-sum risk set, same 1e-12 bigint quantization of the per-time
 # ln and hazard terms as operators.events.survival_km.
-ORACLES["events_survival_km"] = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj AS (
-  SELECT (COALESCE(fp, last) - start) // 3600000000 AS t,
-         CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS obs
-  FROM life
-),
-per_t AS (
-  SELECT t, CAST(SUM(obs) AS BIGINT) AS d,
-         CAST(SUM(1 - obs) AS BIGINT) AS c
-  FROM subj GROUP BY t
-),
-risk AS (
-  SELECT t, d, c,
-         CAST(SUM(d + c) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW
-                               AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk
-  FROM per_t
-),
-ev AS (
-  SELECT t, n_risk, d, c,
-         CASE WHEN d < n_risk
-              THEN CAST(ROUND(LN(1 - CAST(d AS DOUBLE) / n_risk) * 1e12, 0)
-                        AS BIGINT)
-              ELSE 0 END AS lnq,
-         CAST(ROUND(CAST(d AS DOUBLE) / n_risk * 1e12, 0) AS BIGINT) AS hq
-  FROM risk WHERE d > 0
-),
-run AS (
-  SELECT t, n_risk, d, c,
-         CAST(SUM(lnq) OVER w AS BIGINT) AS slnq,
-         CAST(SUM(hq) OVER w AS BIGINT) AS shq,
-         MAX(CASE WHEN d = n_risk THEN 1 ELSE 0 END) OVER w AS dead
-  FROM ev
-  WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
+ORACLES["events_survival_km"] = _with(_LIFE, _subj(), _PER_T, _KM_RUN, """
 SELECT t, n_risk, d AS n_events, c AS n_censored,
        CASE WHEN dead = 1 THEN CAST(0 AS DOUBLE)
             ELSE ROUND(EXP(slnq / 1e12), 6) END AS survival,
        ROUND(shq / 1e12, 6) AS cum_hazard
 FROM run
-"""
+""")
 
 # Identical hourly cents series, identical lag pairing, identical
 # six-moment Pearson expression over exactly-converted bigints.
-ORACLES["events_autocorr"] = """
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS bucket,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v_c
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-),
-lagged AS (
-  SELECT event_type, v_c AS y,
-         LAG(v_c, 1) OVER w AS x1,
-         LAG(v_c, 2) OVER w AS x2,
-         LAG(v_c, 3) OVER w AS x3
-  FROM hourly
-  WINDOW w AS (PARTITION BY event_type ORDER BY bucket)
-),
-pairs AS (
-  SELECT event_type, 1 AS lag_k, x1 AS x, y FROM lagged WHERE x1 IS NOT NULL
-  UNION ALL
-  SELECT event_type, 2 AS lag_k, x2 AS x, y FROM lagged WHERE x2 IS NOT NULL
-  UNION ALL
-  SELECT event_type, 3 AS lag_k, x3 AS x, y FROM lagged WHERE x3 IS NOT NULL
-),
-m AS (
-  SELECT event_type, lag_k, COUNT(*) AS n_pairs,
-         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-         CAST(SUM(x * x) AS BIGINT) AS sxx,
-         CAST(SUM(y * y) AS BIGINT) AS syy,
-         CAST(SUM(x * y) AS BIGINT) AS sxy
-  FROM pairs GROUP BY 1, 2
-)
+ORACLES["events_autocorr"] = _with(_LAGGED, _LAG_MOMENTS, """
 SELECT event_type, lag_k, n_pairs,
   CASE WHEN (CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)
              - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
@@ -5756,7 +5569,7 @@ SELECT event_type, lag_k, n_pairs,
                             - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
        END AS r
 FROM m
-"""
+""")
 
 
 # Identical hourly series, identical frame, identical six-moment

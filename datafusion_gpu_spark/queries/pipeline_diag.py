@@ -23,6 +23,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_gpu_spark.queries import load
+from datafusion_gpu_spark.queries.pipeline_common import (
+    _CENTS_GRP,
+    _CENTS_POS,
+    _HOURLY_PURCHASE,
+    _LAG_MOMENTS,
+    _LAG_R,
+    _LAGGED,
+    _LIFE,
+    _LIFE_N_EV,
+    _ORDER_CELLS,
+    _PER_T,
+    _PER_T2,
+    _PV_POS,
+    _SEGMENTS,
+    _SUBJ_CENSORED,
+    _subj,
+    _with,
+)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -133,15 +151,7 @@ ORACLES["agg_jarque_bera"] = _JARQUE_BERA
 # 2 * O * ln(N) <= 2 * N * 43 nano-scaled, so outputs go NULL once
 # CAST(nt AS DOUBLE) * 86e9 reaches 9e18 (~1e8 orders).
 # ---------------------------------------------------------------------------
-_G_TEST = """
-WITH obs AS (
-  SELECT o_orderpriority AS r, o_orderstatus AS c,
-         CAST(COUNT(*) AS BIGINT) AS o
-  FROM orders GROUP BY o_orderpriority, o_orderstatus
-),
-rt AS (SELECT r, CAST(SUM(o) AS BIGINT) AS nr FROM obs GROUP BY r),
-ct AS (SELECT c, CAST(SUM(o) AS BIGINT) AS nc FROM obs GROUP BY c),
-tot AS (SELECT CAST(SUM(o) AS BIGINT) AS nt FROM obs),
+_G_TEST = _with(_ORDER_CELLS, """
 q AS (
   SELECT CAST(ROUND(1e9 * 2.0 * o
               * LN(CAST(o AS DOUBLE) * nt
@@ -162,7 +172,7 @@ SELECT n_cells, (kr - 1) * (kc - 1) AS df,
              AND CAST(nt AS DOUBLE) * 86e9 < 9e18
             THEN ROUND(sgq / 1e9, 6) END AS g_stat
 FROM s CROSS JOIN tot CROSS JOIN d
-"""
+""")
 
 
 def _agg_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -483,11 +493,7 @@ ORACLES["agg_kendall_w"] = _KENDALL_W
 # the same bigint-cubic bound documented at _KRUSKAL_WALLIS, which
 # divides tie3 in DOUBLE for the same reason).
 # ---------------------------------------------------------------------------
-_DUNN_POSTHOC = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-),
+_DUNN_POSTHOC = _with(_CENTS_GRP, """
 vg AS (
   SELECT grp, c, CAST(COUNT(*) AS BIGINT) AS cnt
   FROM t GROUP BY grp, c
@@ -564,7 +570,7 @@ SELECT g1, g2, n1, n2,
             WHEN k_max IS NOT NULL AND rn <= k_max THEN TRUE
             ELSE FALSE END AS rejected
 FROM kstar ORDER BY p_rank, g1, g2
-"""
+""")
 
 
 def _agg_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,17 +602,7 @@ ORACLES["agg_dunn_posthoc"] = _DUNN_POSTHOC
 # (terms <= dp_b, so the fold is bounded by 1e9*N — VISIBLE guard
 # CAST(n_pos AS DOUBLE) * 1e9 < 9e18 on the final division's scale).
 # ---------------------------------------------------------------------------
-_AVG_PRECISION = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
-pv AS (
-  SELECT c, CAST(SUM(pos) AS BIGINT) AS dp, CAST(COUNT(*) AS BIGINT) AS tc
-  FROM t GROUP BY c
-),
+_AVG_PRECISION = _with(_CENTS_POS, _PV_POS, """
 cum AS (
   SELECT dp, tc,
          CAST(SUM(dp) OVER (ORDER BY c DESC
@@ -634,7 +630,7 @@ SELECT n_pos, n_neg,
             THEN ROUND(CAST(n_pos AS DOUBLE) / (n_pos + n_neg), 6)
        END AS prevalence_baseline
 FROM s CROSS JOIN np
-"""
+""")
 
 
 def _agg_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -664,17 +660,7 @@ ORACLES["agg_average_precision"] = _AVG_PRECISION
 # |ln p| <= ln(1e6) ~ 13.9, so the fold is bounded by 14e9 * N —
 # outputs NULL once CAST(n AS DOUBLE) * 14e9 reaches 9e18 (~6e8 rows).
 # ---------------------------------------------------------------------------
-_LOG_LOSS = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
-pv AS (
-  SELECT c, CAST(SUM(pos) AS BIGINT) AS dp, CAST(COUNT(*) AS BIGINT) AS tc
-  FROM t GROUP BY c
-),
+_LOG_LOSS = _with(_CENTS_POS, _PV_POS, """
 q AS (
   SELECT dp, tc,
          CAST(ROUND(1e9 * LN(LEAST(GREATEST(
@@ -695,7 +681,7 @@ SELECT n, n_pos,
        CASE WHEN n > 0 AND CAST(n AS DOUBLE) * 14e9 < 9e18
             THEN ROUND(-(sll / 1e9) / n, 6) END AS log_loss
 FROM s
-"""
+""")
 
 
 def _agg_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -726,54 +712,15 @@ ORACLES["agg_log_loss"] = _LOG_LOSS
 # bucket count per series. Guard: r_k NULL (degenerate variance)
 # propagates to Q; n > 3 required for the df.
 # ---------------------------------------------------------------------------
-_LJUNG_BOX = """
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS bucket,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v_c
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-),
-lagged AS (
-  SELECT event_type, v_c AS y,
-         LAG(v_c, 1) OVER w AS x1,
-         LAG(v_c, 2) OVER w AS x2,
-         LAG(v_c, 3) OVER w AS x3
-  FROM hourly
-  WINDOW w AS (PARTITION BY event_type ORDER BY bucket)
-),
-nbuckets AS (
+_LJUNG_BOX = _with(
+    _LAGGED,
+    """nbuckets AS (
   SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
   FROM hourly GROUP BY event_type
-),
-pairs AS (
-  SELECT event_type, 1 AS lag_k, x1 AS x, y FROM lagged WHERE x1 IS NOT NULL
-  UNION ALL
-  SELECT event_type, 2 AS lag_k, x2 AS x, y FROM lagged WHERE x2 IS NOT NULL
-  UNION ALL
-  SELECT event_type, 3 AS lag_k, x3 AS x, y FROM lagged WHERE x3 IS NOT NULL
-),
-m AS (
-  SELECT event_type, lag_k, COUNT(*) AS n_pairs,
-         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-         CAST(SUM(x * x) AS BIGINT) AS sxx,
-         CAST(SUM(y * y) AS BIGINT) AS syy,
-         CAST(SUM(x * y) AS BIGINT) AS sxy
-  FROM pairs GROUP BY 1, 2
-),
-r AS (
-  SELECT event_type, lag_k,
-    CASE WHEN (CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)
-               - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-          AND (CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)
-               - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-         THEN (CAST(n_pairs AS DOUBLE) * CAST(sxy AS DOUBLE)
-               - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-              / SQRT((CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                     * (CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)
-                        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-         END AS rk
-  FROM m
-),
+)""",
+    _LAG_MOMENTS,
+    _LAG_R,
+    """
 q AS (
   SELECT r.event_type, nb.n,
          CAST(nb.n AS DOUBLE) * (nb.n + 2)
@@ -787,7 +734,7 @@ SELECT event_type, n AS n_buckets,
        CASE WHEN q_lb IS NOT NULL
             THEN q_lb > 7.814728 END AS reject_white_noise_05
 FROM q ORDER BY event_type
-"""
+""")
 
 
 def _events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1084,28 +1031,7 @@ ORACLES["events_classical_decomp"] = _CLASSICAL_DECOMP
 # one terminal division. One groupBy(user), one groupBy(duration), one
 # window over distinct durations — the survival family's plan shape.
 # ---------------------------------------------------------------------------
-_HARRELL_C = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj AS (
-  SELECT user_id % 2 AS grp,
-         (COALESCE(fp, last) - start) // 3600000000 AS t,
-         CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS obs
-  FROM life
-),
-per_t AS (
-  SELECT t,
-         CAST(SUM(CASE WHEN grp = 1 THEN obs ELSE 0 END) AS BIGINT) AS d1,
-         CAST(SUM(CASE WHEN grp = 1 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c1,
-         CAST(SUM(CASE WHEN grp = 0 THEN obs ELSE 0 END) AS BIGINT) AS d0,
-         CAST(SUM(CASE WHEN grp = 0 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c0
-  FROM subj GROUP BY t
-),
+_HARRELL_C = _with(_LIFE, _subj("user_id % 2"), _PER_T2, """
 sfx AS (
   SELECT t, d1, c1, d0, c0,
          COALESCE(CAST(SUM(d1 + c1) OVER wl AS BIGINT), 0) AS later1,
@@ -1129,7 +1055,7 @@ SELECT n AS n_subjects, conc AS concordant, disc AS discordant,
                        / (conc + disc + tied), 6)
        END AS c_index
 FROM folds
-"""
+""")
 
 #: Spark twin — identical except the epoch spelling and DIV
 #: (the _HURST dialect-replace precedent).
@@ -1179,15 +1105,7 @@ ORACLES["events_harrell_c"] = _HARRELL_C
 # < 9e18), one terminal division. One groupBy(user), one
 # groupBy(t, s), windows over the grid — the survival family's shape.
 # ---------------------------------------------------------------------------
-_HARRELL_C_CONT = f"""
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last,
-         CAST(COUNT(*) AS BIGINT) AS n_ev
-  FROM events GROUP BY user_id
-),
+_HARRELL_C_CONT = _with(_LIFE_N_EV, f"""
 subj AS (
   SELECT CASE WHEN n_ev > 64 THEN 64 ELSE n_ev END AS s,
          (COALESCE(fp, last) - start) // 3600000000 AS t,
@@ -1242,7 +1160,7 @@ SELECT n AS n_subjects, max_level, conc AS concordant, disc AS discordant,
                        / (conc + disc + tied), 6)
        END AS c_index
 FROM folds, nn
-"""
+""")
 
 #: Spark twin — the _HARRELL_C dialect replaces.
 _HARRELL_C_CONT_SPARK = _HARRELL_C_CONT.replace(
@@ -1309,35 +1227,18 @@ ORACLES["events_harrell_c_cont"] = _HARRELL_C_CONT
 # Plan: one groupBy(user), one groupBy(t), windows over distinct
 # durations — the survival family's shape, zero pair materialization.
 # ---------------------------------------------------------------------------
-_UNO_C = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj0 AS (
+_UNO_C = _with(
+    _LIFE,
+    """subj0 AS (
   SELECT user_id % 2 AS grp,
          (COALESCE(fp, last) - start) // 3600000000 AS tr,
          CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS orr,
          CAST(24 + (user_id * 37) % 120 AS BIGINT) AS ct
   FROM life
-),
-subj AS (
-  SELECT grp,
-         CASE WHEN tr <= ct THEN tr ELSE ct END AS t,
-         CASE WHEN orr = 1 AND tr <= ct THEN 1 ELSE 0 END AS obs
-  FROM subj0
-),
-per_t AS (
-  SELECT t,
-         CAST(SUM(CASE WHEN grp = 1 THEN obs ELSE 0 END) AS BIGINT) AS d1,
-         CAST(SUM(CASE WHEN grp = 1 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c1,
-         CAST(SUM(CASE WHEN grp = 0 THEN obs ELSE 0 END) AS BIGINT) AS d0,
-         CAST(SUM(CASE WHEN grp = 0 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c0
-  FROM subj GROUP BY t
-),
+)""",
+    _SUBJ_CENSORED,
+    _PER_T2,
+    """
 sfx AS (
   SELECT t, d1, c1, d0, c0,
          CAST(SUM(d1 + c1 + d0 + c0) OVER (ORDER BY t
@@ -1396,7 +1297,7 @@ SELECT n AS n_subjects, o_h AS n_events_h,
             THEN ROUND(CAST(numq AS DOUBLE) / denq, 6)
        END AS c_uno
 FROM folds
-"""
+""")
 
 #: Spark twin — the _HARRELL_C dialect replaces.
 _UNO_C_SPARK = _UNO_C.replace(
@@ -1446,16 +1347,9 @@ ORACLES["events_uno_c"] = _UNO_C
 # harrell_c_cont (plan-visibly bounded); one terminal division.
 # VISIBLE guards: n^2 < 9e18 and n_times * w_max * 1e9 < 9e18.
 # ---------------------------------------------------------------------------
-_AUC_TD = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last,
-         CAST(COUNT(*) AS BIGINT) AS n_ev
-  FROM events GROUP BY user_id
-),
-subj0 AS (
+_AUC_TD = _with(
+    _LIFE_N_EV,
+    """subj0 AS (
   SELECT CASE WHEN n_ev > 64 THEN 64 ELSE n_ev END AS s,
          (COALESCE(fp, last) - start) // 3600000000 AS tr,
          CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS orr,
@@ -1467,13 +1361,9 @@ subj AS (
          CASE WHEN tr <= ct THEN tr ELSE ct END AS t,
          CASE WHEN orr = 1 AND tr <= ct THEN 1 ELSE 0 END AS obs
   FROM subj0
-),
-per_t AS (
-  SELECT t,
-         CAST(SUM(obs) AS BIGINT) AS d,
-         CAST(SUM(1 - obs) AS BIGINT) AS c
-  FROM subj GROUP BY t
-),
+)""",
+    _PER_T,
+    """
 wts AS (
   SELECT t, d,
          COALESCE(CAST(SUM(CASE WHEN c > 0 AND c < n_risk
@@ -1550,7 +1440,7 @@ SELECT n AS n_subjects, m_controls AS n_controls,
             THEN ROUND(CAST(numq AS DOUBLE) / denq, 6)
        END AS auc_td
 FROM folds
-""".replace(
+""").replace(
     "{LEVELS}", ",".join(f"({i})" for i in range(1, 65))
 )
 
@@ -1601,35 +1491,18 @@ ORACLES["events_auc_td"] = _AUC_TD
 # G(tau) hits exact zero (all remaining subjects censored inside the
 # horizon — weights undefined) or a cohort KM dies before tau.
 # ---------------------------------------------------------------------------
-_BRIER_IPCW = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj0 AS (
+_BRIER_IPCW = _with(
+    _LIFE,
+    """subj0 AS (
   SELECT user_id % 2 AS grp,
          (COALESCE(fp, last) - start) // 3600000000 AS tr,
          CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS orr,
          CAST(6 + (user_id * 37) % 120 AS BIGINT) AS ct
   FROM life
-),
-subj AS (
-  SELECT grp,
-         CASE WHEN tr <= ct THEN tr ELSE ct END AS t,
-         CASE WHEN orr = 1 AND tr <= ct THEN 1 ELSE 0 END AS obs
-  FROM subj0
-),
-per_t AS (
-  SELECT t,
-         CAST(SUM(CASE WHEN grp = 1 THEN obs ELSE 0 END) AS BIGINT) AS d1,
-         CAST(SUM(CASE WHEN grp = 1 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c1,
-         CAST(SUM(CASE WHEN grp = 0 THEN obs ELSE 0 END) AS BIGINT) AS d0,
-         CAST(SUM(CASE WHEN grp = 0 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c0
-  FROM subj GROUP BY t
-),
+)""",
+    _SUBJ_CENSORED,
+    _PER_T2,
+    """
 sfx AS (
   SELECT t, d1, c1, d0, c0,
          CAST(SUM(d1 + c1) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW
@@ -1717,7 +1590,7 @@ SELECT s.n AS n_subjects, s.o_h AS n_events_h,
                    / (EXP(s.gq / 1e9) * s.n)), 6)
        END AS brier_ipcw
 FROM scalars s CROSS JOIN evt e
-"""
+""")
 
 #: Spark twin — the _HARRELL_C dialect replaces.
 _BRIER_IPCW_SPARK = _BRIER_IPCW.replace(
@@ -1754,35 +1627,18 @@ ORACLES["events_brier_ipcw"] = _BRIER_IPCW
 # events_brier_ipcw; the terminal difference carries the + 0.0
 # signed-zero normalization (it CAN be ±tiny by construction).
 # ---------------------------------------------------------------------------
-_SURV_CALIB = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj0 AS (
+_SURV_CALIB = _with(
+    _LIFE,
+    """subj0 AS (
   SELECT user_id % 2 AS grp,
          (COALESCE(fp, last) - start) // 3600000000 AS tr,
          CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS orr,
          CAST(6 + (user_id * 37) % 120 AS BIGINT) AS ct
   FROM life
-),
-subj AS (
-  SELECT grp,
-         CASE WHEN tr <= ct THEN tr ELSE ct END AS t,
-         CASE WHEN orr = 1 AND tr <= ct THEN 1 ELSE 0 END AS obs
-  FROM subj0
-),
-per_t AS (
-  SELECT t,
-         CAST(SUM(CASE WHEN grp = 1 THEN obs ELSE 0 END) AS BIGINT) AS d1,
-         CAST(SUM(CASE WHEN grp = 1 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c1,
-         CAST(SUM(CASE WHEN grp = 0 THEN obs ELSE 0 END) AS BIGINT) AS d0,
-         CAST(SUM(CASE WHEN grp = 0 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c0
-  FROM subj GROUP BY t
-),
+)""",
+    _SUBJ_CENSORED,
+    _PER_T2,
+    """
 sfx AS (
   SELECT t, d1, c1, d0, c0,
          CAST(SUM(d1 + c1) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW
@@ -1847,7 +1703,7 @@ SELECT n1_tot + n0_tot AS n_subjects,
                     / (n1_tot + n0_tot)), 6)
        END AS calib_ratio
 FROM scalars
-"""
+""")
 
 #: Spark twin — the _HARRELL_C dialect replaces.
 _SURV_CALIB_SPARK = _SURV_CALIB.replace(
@@ -1964,11 +1820,7 @@ ORACLES["streaming_jarque_bera"] = _JARQUE_BERA
 # once w*(m-xw)^2 ~ n*delta^2/v reaches 9e15 — NULL via the guard on
 # the folded magnitudes.
 # ---------------------------------------------------------------------------
-_WELCH_ANOVA = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-),
+_WELCH_ANOVA = _with(_CENTS_GRP, """
 g AS (
   SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(c) AS BIGINT) AS s1,
@@ -2021,7 +1873,7 @@ SELECT k AS k_used, k - 1 AS df1,
          ROUND((CAST(k AS DOUBLE) * k - 1) / (3e0 * (h12 / 1e12)), 2)
        END AS df2
 FROM f2
-"""
+""")
 
 
 def _agg_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2053,11 +1905,7 @@ ORACLES["agg_welch_anova"] = _WELCH_ANOVA
 # VISIBLE guard: the 1e3-quantized SSW fold wraps at ~9e15 cents^2
 # of pooled squared error — NULL past it.
 # ---------------------------------------------------------------------------
-_BARTLETT = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-),
+_BARTLETT = _with(_CENTS_GRP, """
 g AS (
   SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(c) AS BIGINT) AS s1,
@@ -2099,7 +1947,7 @@ SELECT k AS k_used, nt AS n_total, k - 1 AS df,
          / (1e0 + (rin12 / 1e12 - 1e0 / (nt - k)) / (3e0 * (k - 1)))
          > 9.487729 END AS reject_05
 FROM f
-"""
+""")
 
 
 def _agg_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2277,12 +2125,7 @@ ORACLES["agg_bland_altman"] = _BLAND_ALTMAN
 # VISIBLE guard: n^3 * 2 < 9e18 bounds the variance folds (~1.6e6
 # buckets — 190 years of hours).
 # ---------------------------------------------------------------------------
-_MANN_KENDALL = """
-WITH hourly AS (
-  SELECT epoch_us(ts) // 3600000000 AS x,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS y
-  FROM events WHERE event_type = 'purchase' GROUP BY 1
-),
+_MANN_KENDALL = _with(_HOURLY_PURCHASE, """
 pairs AS (
   SELECT CASE WHEN b.y > a.y THEN 1 WHEN b.y < a.y THEN -1 ELSE 0 END AS sgn
   FROM hourly a JOIN hourly b ON a.x < b.x
@@ -2312,7 +2155,7 @@ SELECT n AS n_buckets, s_mk,
               - CASE WHEN s_mk > 0 THEN 1 WHEN s_mk < 0 THEN -1 ELSE 0 END)
              / SQRT(var_s)) > 1.959964 END AS reject_05
 FROM v
-"""
+""")
 
 #: Spark twin — identical except the epoch spelling (the _HURST
 #: dialect-replace precedent).
@@ -2353,22 +2196,7 @@ ORACLES["events_mann_kendall"] = _MANN_KENDALL
 # directional by construction — documented). VISIBLE guard: m * 36
 # bounds L2, so outputs NULL once CAST(m AS DOUBLE) * 36 >= 9e18.
 # ---------------------------------------------------------------------------
-_PAGE_TREND = """
-WITH seg AS (
-  SELECT user_id,
-         CASE WHEN CAST(ts AS DATE) < DATE '2024-01-11' THEN 1
-              WHEN CAST(ts AS DATE) < DATE '2024-01-21' THEN 2
-              ELSE 3 END AS j,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events WHERE value IS NOT NULL
-  GROUP BY user_id,
-           CASE WHEN CAST(ts AS DATE) < DATE '2024-01-11' THEN 1
-                WHEN CAST(ts AS DATE) < DATE '2024-01-21' THEN 2
-                ELSE 3 END
-),
-blocks AS (
-  SELECT user_id FROM seg GROUP BY user_id HAVING COUNT(*) = 3
-),
+_PAGE_TREND = _with(_SEGMENTS, """
 rk AS (
   SELECT s.user_id, s.j,
          CAST(2 * RANK() OVER (PARTITION BY s.user_id ORDER BY s.v)
@@ -2385,7 +2213,7 @@ SELECT m AS n_blocks, l2,
          (l2 - 24e0 * m) / (2e0 * SQRT(2e0 * m)) > 1.644854
        END AS reject_increasing_05
 FROM lsum CROSS JOIN nb
-"""
+""")
 
 
 def _events_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2595,22 +2423,7 @@ ORACLES["agg_cohens_h"] = _COHENS_H
 # documented) as terminal expressions. VISIBLE guard: the s2 folds
 # wrap once n * mx^2 reaches 9e18 (mx = max |segment cents|, folded).
 # ---------------------------------------------------------------------------
-_CRONBACH_ALPHA = """
-WITH seg AS (
-  SELECT user_id,
-         CASE WHEN CAST(ts AS DATE) < DATE '2024-01-11' THEN 1
-              WHEN CAST(ts AS DATE) < DATE '2024-01-21' THEN 2
-              ELSE 3 END AS j,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events WHERE value IS NOT NULL
-  GROUP BY user_id,
-           CASE WHEN CAST(ts AS DATE) < DATE '2024-01-11' THEN 1
-                WHEN CAST(ts AS DATE) < DATE '2024-01-21' THEN 2
-                ELSE 3 END
-),
-blocks AS (
-  SELECT user_id FROM seg GROUP BY user_id HAVING COUNT(*) = 3
-),
+_CRONBACH_ALPHA = _with(_SEGMENTS, """
 items AS (
   SELECT s.user_id, s.j, s.v
   FROM seg s JOIN blocks b ON s.user_id = b.user_id
@@ -2649,7 +2462,7 @@ SELECT t.n AS n_blocks, i.k AS k_items,
                      / (CAST(t.n AS DOUBLE) * (t.n - 1)))), 6)
        END AS cronbach_alpha
 FROM itemvar i CROSS JOIN totals t
-"""
+""")
 
 
 def _agg_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2677,22 +2490,7 @@ ORACLES["agg_cronbach_alpha"] = _CRONBACH_ALPHA
 # ICC terminal. VISIBLE guard: the t^2 fold wraps once n * mxt^2
 # reaches 9e18.
 # ---------------------------------------------------------------------------
-_ICC = """
-WITH seg AS (
-  SELECT user_id,
-         CASE WHEN CAST(ts AS DATE) < DATE '2024-01-11' THEN 1
-              WHEN CAST(ts AS DATE) < DATE '2024-01-21' THEN 2
-              ELSE 3 END AS j,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v
-  FROM events WHERE value IS NOT NULL
-  GROUP BY user_id,
-           CASE WHEN CAST(ts AS DATE) < DATE '2024-01-11' THEN 1
-                WHEN CAST(ts AS DATE) < DATE '2024-01-21' THEN 2
-                ELSE 3 END
-),
-blocks AS (
-  SELECT user_id FROM seg GROUP BY user_id HAVING COUNT(*) = 3
-),
+_ICC = _with(_SEGMENTS, """
 items AS (
   SELECT s.user_id, s.v
   FROM seg s JOIN blocks b ON s.user_id = b.user_id
@@ -2723,7 +2521,7 @@ SELECT n AS n_blocks, CAST(3 AS BIGINT) AS k_measurements,
        CASE WHEN headroom AND msb + 2 * msw > 0 THEN
          ROUND((msb - msw) / (msb + 2 * msw), 6) END AS icc_1_1
 FROM ms
-"""
+""")
 
 
 def _agg_icc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2773,13 +2571,7 @@ ORACLES["streaming_log_loss"] = _LOG_LOSS
 # 4N^3 — outputs NULL once CAST(n AS DOUBLE)*n*n*4 reaches 9e18
 # (~1.3e6 rows; the same cubic bound _KRUSKAL_WALLIS documents).
 # ---------------------------------------------------------------------------
-_BRUNNER_MUNZEL = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
+_BRUNNER_MUNZEL = _with(_CENTS_POS, """
 pv AS (
   SELECT c, CAST(SUM(pos) AS BIGINT) AS b,
          CAST(SUM(1 - pos) AS BIGINT) AS a,
@@ -2851,7 +2643,7 @@ SELECT n1, n2,
                 * SQRT(CAST(n1 AS DOUBLE) * v1 + CAST(n2 AS DOUBLE) * v2)))
          > 1.959964 END AS reject_05_normal
 FROM v
-"""
+""")
 
 
 def _agg_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,7 +18,17 @@ from pyspark.sql import functions as F
 
 from datafusion_gpu_spark.operators import dedup
 from datafusion_gpu_spark.queries import load
-from datafusion_gpu_spark.queries.pipeline_common import _NORM, _docs
+from datafusion_gpu_spark.queries.pipeline_common import (
+    _CENTS_AB,
+    _CENTS_POS,
+    _CENTS_PURCHASE,
+    _CONFUSION_5000,
+    _NORM,
+    _PV_AB,
+    _PV_POS,
+    _docs,
+    _with,
+)
 from datafusion_gpu_spark.queries.pipeline_stats import _SEASONAL_ANOM
 
 QUERIES: dict = {}
@@ -402,19 +412,7 @@ ORACLES["streaming_seasonal_anomaly"] = _SEASONAL_ANOM
 # statistic is exact to the last ulp — no sampling, no approximation,
 # unlike the trapezoid-over-binned-scores spelling every ML library
 # defaults to at scale.
-_AUC = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
-pv AS (
-  SELECT c,
-         CAST(SUM(pos) AS BIGINT) AS dp,
-         CAST(COUNT(*) AS BIGINT) AS tc
-  FROM t GROUP BY c
-),
+_AUC = _with(_CENTS_POS, _PV_POS, """
 cw AS (
   SELECT dp, tc,
          CAST(COALESCE(SUM(tc) OVER (ORDER BY c
@@ -435,7 +433,7 @@ SELECT n_pos, n_neg,
                / (2.0 * n_pos * n_neg), 6)
        END AS auc
 FROM s
-"""
+""")
 
 
 def _agg_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -459,20 +457,7 @@ ORACLES["agg_auc_exact"] = _AUC
 # ratios are terminal divisions behind integer-positivity guards; F1 is
 # spelled from the raw counts (2tp/(2tp+fp+fn)) so it needs ONE division
 # instead of composing two already-rounded ratios.
-_PR_AT_T = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
-m AS (
-  SELECT CAST(SUM(CASE WHEN c >= 5000 AND pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-         CAST(SUM(CASE WHEN c >= 5000 AND pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-         CAST(SUM(CASE WHEN c < 5000 AND pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-         CAST(SUM(CASE WHEN c < 5000 AND pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
-  FROM t
-)
+_PR_AT_T = _with(_CENTS_POS, _CONFUSION_5000, """
 SELECT tp, fp, fn, tn,
        CASE WHEN tp + fp > 0
             THEN ROUND(CAST(tp AS DOUBLE) / (tp + fp), 6) END AS precision_,
@@ -482,7 +467,7 @@ SELECT tp, fp, fn, tn,
             THEN ROUND(CAST(2 * tp AS DOUBLE) / (2 * tp + fp + fn), 6)
             END AS f1
 FROM m
-"""
+""")
 
 
 def _agg_pr_at_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -504,13 +489,7 @@ def _agg_pr_at_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per bin the row count, positive count, observed positive rate and mean
 # score — what a monitoring pipeline plots to see whether "higher value"
 # still means "more likely purchase" after a data shift.
-_CALIBRATION = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
+_CALIBRATION = _with(_CENTS_POS, """
 rng AS (
   SELECT lo, hi,
          CAST(((hi - lo) - (hi - lo) % 10) / 10 AS BIGINT) + 1 AS wd
@@ -527,7 +506,7 @@ SELECT bin,
        ROUND(CAST(SUM(pos) AS DOUBLE) / COUNT(*), 6) AS obs_rate,
        ROUND(CAST(SUM(c) AS DOUBLE) / COUNT(*) / 100, 4) AS mean_score
 FROM b GROUP BY bin
-"""
+""")
 
 
 def _agg_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -692,11 +671,7 @@ def _agg_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integer weights 9/1, so pinball_num is an exact bigint and dollars =
 # num / (1000*N). The quantile CTE is a GLOBAL aggregate, so both its
 # pick join and the loss join are the audited-exempt one-row-build class.
-_PINBALL = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
-),
+_PINBALL = _with(_CENTS_PURCHASE, """
 v AS (SELECT c, CAST(COUNT(*) AS BIGINT) AS cnt FROM t GROUP BY c),
 cum AS (
   SELECT c, CAST(SUM(cnt) OVER (ORDER BY c
@@ -721,7 +696,7 @@ SELECT nr AS n, rk AS k_rank,
        num AS pinball_num,
        ROUND(CAST(num AS DOUBLE) / (1000.0 * nr), 6) AS pinball
 FROM l
-"""
+""")
 
 
 def _agg_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -798,19 +773,7 @@ ORACLES["agg_hosmer_lemeshow"] = _HOSMER_LEMESHOW
 # distinct-value cumulative as MW/KS/CvM: #{a>b} = sum_v da_v * (b's
 # strict-below cumulative) — never a pair enumeration. Exact bigints;
 # visible n_a*n_b int64 guard; Romano et al. 2006 magnitude labels.
-_CLIFF_DELTA = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
-pv AS (
-  SELECT c,
-         CAST(SUM(CASE WHEN grp = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS da,
-         CAST(SUM(CASE WHEN grp = 'purchase' THEN 1 ELSE 0 END) AS BIGINT)
-           AS db
-  FROM t GROUP BY c
-),
+_CLIFF_DELTA = _with(_CENTS_AB, _PV_AB, """
 cum AS (
   SELECT da, db,
          CAST(SUM(da) OVER (ORDER BY c) AS BIGINT) AS ca,
@@ -845,7 +808,7 @@ SELECT *,
             WHEN ABS(cliff_delta) < 0.474 THEN 'medium'
             ELSE 'large' END AS magnitude
 FROM d
-"""
+""")
 
 
 def _agg_cliff_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -867,12 +830,7 @@ def _agg_cliff_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # analysis consumes). Exact bigint moment folds (n, sum, sum of squares
 # per group); variances/pooled sd/d/g are terminal IEEE expressions in
 # the established CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * s1 / n shape.
-_COHENS_D = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
+_COHENS_D = _with(_CENTS_AB, """
 g AS (
   SELECT grp, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c) AS BIGINT) AS s1,
          CAST(SUM(c * c) AS BIGINT) AS s2
@@ -903,7 +861,7 @@ SELECT n_a, n_b,
                * (1.0 - 3.0 / (4.0 * (n_a + n_b) - 9.0)), 6)
        END AS hedges_g
 FROM v
-"""
+""")
 
 
 def _agg_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,9 +19,18 @@ from pyspark.sql import functions as F
 from datafusion_gpu_spark.operators import events, similarity
 from datafusion_gpu_spark.queries import load
 from datafusion_gpu_spark.queries.pipeline_common import (
+    _CENTS_AB,
+    _HOURLY_PURCHASE,
+    _KM_RUN,
+    _LIFE,
     _NORM,
+    _PER_T,
+    _PER_T2,
+    _cox_newton,
     _docs,
     _purchase_subjects,
+    _subj,
+    _with,
 )
 
 QUERIES: dict = {}
@@ -1013,12 +1022,7 @@ ORACLES["text_token_hhi"] = _TOKEN_HHI
 # equivalence). Two one-sided large-sample z tests at delta = $0.50 on
 # the Welch standard error; exact bigint moment folds, terminal IEEE
 # only, NULL when a group is degenerate.
-_TOST = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
+_TOST = _with(_CENTS_AB, """
 g AS (
   SELECT grp, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c) AS BIGINT) AS s1,
          CAST(SUM(c * c) AS BIGINT) AS s2
@@ -1052,7 +1056,7 @@ SELECT n_a, n_b,
          ((mdiff + 50.0) / se > 1.644854 AND (50.0 - mdiff) / se > 1.644854)
        END AS equivalent_05
 FROM v
-"""
+""")
 
 
 def _agg_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1077,24 +1081,7 @@ def _events_survival_greenwood(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.survival_km_greenwood(subjects, "duration", "observed")
 
 
-ORACLES["events_survival_greenwood"] = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj AS (
-  SELECT (COALESCE(fp, last) - start) // 3600000000 AS t,
-         CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS obs
-  FROM life
-),
-per_t AS (
-  SELECT t, CAST(SUM(obs) AS BIGINT) AS d,
-         CAST(SUM(1 - obs) AS BIGINT) AS c
-  FROM subj GROUP BY t
-),
+ORACLES["events_survival_greenwood"] = _with(_LIFE, _subj(), _PER_T, """
 risk AS (
   SELECT t, d,
          CAST(SUM(d + c) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW
@@ -1143,7 +1130,7 @@ SELECT t, n_risk, d AS n_events,
          ROUND(LEAST(CAST(1 AS DOUBLE), sv + 1.959964 * sev), 6)
        END AS ci_hi
 FROM fin
-"""
+""")
 QUERIES["events_survival_greenwood"] = _events_survival_greenwood
 
 
@@ -1169,28 +1156,7 @@ def _events_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.survival_logrank(subjects, "grp", "duration", "observed")
 
 
-ORACLES["events_logrank"] = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj AS (
-  SELECT user_id % 2 AS grp,
-         (COALESCE(fp, last) - start) // 3600000000 AS t,
-         CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS obs
-  FROM life
-),
-per_t AS (
-  SELECT t,
-         CAST(SUM(CASE WHEN grp = 1 THEN obs ELSE 0 END) AS BIGINT) AS d1,
-         CAST(SUM(CASE WHEN grp = 1 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c1,
-         CAST(SUM(CASE WHEN grp = 0 THEN obs ELSE 0 END) AS BIGINT) AS d0,
-         CAST(SUM(CASE WHEN grp = 0 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c0
-  FROM subj GROUP BY t
-),
+ORACLES["events_logrank"] = _with(_LIFE, _subj("user_id % 2"), _PER_T2, """
 risk AS (
   SELECT t, d1, d0,
          CAST(SUM(d1 + c1) OVER ws AS BIGINT) AS n1,
@@ -1236,7 +1202,7 @@ SELECT n1_subjects, n0_subjects, o1,
             THEN (o1 - se1q / 1e9) * (o1 - se1q / 1e9) / (svq / 1e9)
                  > 3.841459 END AS reject_05
 FROM folded
-"""
+""")
 QUERIES["events_logrank"] = _events_logrank
 
 
@@ -1457,14 +1423,7 @@ def _events_logrank_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["events_logrank_stratified"] = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
+ORACLES["events_logrank_stratified"] = _with(_LIFE, """
 subj AS (
   SELECT user_id % 3 AS s,
          user_id % 2 AS grp,
@@ -1521,7 +1480,7 @@ SELECT n_strata, o1,
             THEN (o1 - se1q / 1e9) * (o1 - se1q / 1e9) / (svq / 1e9)
                  > 3.841459 END AS reject_05
 FROM folded
-"""
+""")
 QUERIES["events_logrank_stratified"] = _events_logrank_stratified
 
 
@@ -1534,24 +1493,7 @@ def _events_survival_na_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.survival_na_bands(subjects, "duration", "observed")
 
 
-ORACLES["events_survival_na_bands"] = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj AS (
-  SELECT (COALESCE(fp, last) - start) // 3600000000 AS t,
-         CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS obs
-  FROM life
-),
-per_t AS (
-  SELECT t, CAST(SUM(obs) AS BIGINT) AS d,
-         CAST(SUM(1 - obs) AS BIGINT) AS c
-  FROM subj GROUP BY t
-),
+ORACLES["events_survival_na_bands"] = _with(_LIFE, _subj(), _PER_T, """
 risk AS (
   SELECT t, d,
          CAST(SUM(d + c) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW
@@ -1584,7 +1526,7 @@ SELECT t, n_risk, d AS n_events,
             THEN ROUND(shq / 1e12 + 1.959964 * SQRT(svq / 1e12), 6)
        END AS ci_hi
 FROM run
-"""
+""")
 QUERIES["events_survival_na_bands"] = _events_survival_na_bands
 
 
@@ -1882,54 +1824,16 @@ def _events_survival_km_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["events_survival_rmst"] = """
-WITH km AS (
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj AS (
-  SELECT (COALESCE(fp, last) - start) // 3600000000 AS t,
-         CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS obs
-  FROM life
-),
-per_t AS (
-  SELECT t, CAST(SUM(obs) AS BIGINT) AS d,
-         CAST(SUM(1 - obs) AS BIGINT) AS c
-  FROM subj GROUP BY t
-),
-risk AS (
-  SELECT t, d, c,
-         CAST(SUM(d + c) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW
-                               AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk
-  FROM per_t
-),
-ev AS (
-  SELECT t, n_risk, d, c,
-         CASE WHEN d < n_risk
-              THEN CAST(ROUND(LN(1 - CAST(d AS DOUBLE) / n_risk) * 1e12, 0)
-                        AS BIGINT)
-              ELSE 0 END AS lnq,
-         CAST(ROUND(CAST(d AS DOUBLE) / n_risk * 1e12, 0) AS BIGINT) AS hq
-  FROM risk WHERE d > 0
-),
-run AS (
-  SELECT t, n_risk, d, c,
-         CAST(SUM(lnq) OVER w AS BIGINT) AS slnq,
-         CAST(SUM(hq) OVER w AS BIGINT) AS shq,
-         MAX(CASE WHEN d = n_risk THEN 1 ELSE 0 END) OVER w AS dead
-  FROM ev
-  WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
+ORACLES["events_survival_rmst"] = _with(
+    "km AS ("
+    + _with(_LIFE, _subj(), _PER_T, _KM_RUN, """
 SELECT t, n_risk, d AS n_events, c AS n_censored,
        CASE WHEN dead = 1 THEN CAST(0 AS DOUBLE)
             ELSE ROUND(EXP(slnq / 1e12), 6) END AS survival,
        ROUND(shq / 1e12, 6) AS cum_hazard
-FROM run
-),
+FROM run""")
+    + ")",
+    """
 stepped AS (
   SELECT t, survival, n_events,
          COALESCE(LEAD(t) OVER (ORDER BY t), 72) AS t_next
@@ -1953,7 +1857,7 @@ SELECT CAST(72 AS INT) AS tau,
          AS n_event_times,
        ROUND(LEAST(CAST(MIN(t) AS DOUBLE), 72.0) + MAX(rsum), 6) AS rmst
 FROM run
-"""
+""")
 # the km CTE chain above is the events_survival_km oracle verbatim
 # (nested WITH — DuckDB-side only; the greenwood/na oracles set the
 # duplication precedent, and test_rmst_oracle_chain_in_sync pins it)
@@ -1977,14 +1881,7 @@ def _events_logrank_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.survival_logrank_k(subjects, 3, "grp", "duration", "observed")
 
 
-ORACLES["events_logrank_k"] = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
+ORACLES["events_logrank_k"] = _with(_LIFE, """
 subj AS (
   SELECT user_id % 3 AS grp,
          (COALESCE(fp, last) - start) // 3600000000 AS t,
@@ -2079,7 +1976,7 @@ SELECT CAST(3 AS INT) AS n_groups, n_subjects, o_total,
             THEN (z1 * z1 * v22 - 2.0 * z1 * z2 * v12 + z2 * z2 * v11)
                  / (v11 * v22 - v12 * v12) > 5.991465 END AS reject_05
 FROM quadform
-"""
+""")
 QUERIES["events_logrank_k"] = _events_logrank_k
 
 
@@ -2104,28 +2001,7 @@ def _events_logrank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["events_logrank_weighted"] = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj AS (
-  SELECT user_id % 2 AS grp,
-         (COALESCE(fp, last) - start) // 3600000000 AS t,
-         CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS obs
-  FROM life
-),
-per_t AS (
-  SELECT t,
-         CAST(SUM(CASE WHEN grp = 1 THEN obs ELSE 0 END) AS BIGINT) AS d1,
-         CAST(SUM(CASE WHEN grp = 1 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c1,
-         CAST(SUM(CASE WHEN grp = 0 THEN obs ELSE 0 END) AS BIGINT) AS d0,
-         CAST(SUM(CASE WHEN grp = 0 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c0
-  FROM subj GROUP BY t
-),
+ORACLES["events_logrank_weighted"] = _with(_LIFE, _subj("user_id % 2"), _PER_T2, """
 risk AS (
   SELECT t, d1, d0,
          CAST(SUM(d1 + c1) OVER ws AS BIGINT) AS n1,
@@ -2250,7 +2126,7 @@ SELECT weight_fn, o1,
             THEN (szoq / 1e9 - szeq / 1e9) * (szoq / 1e9 - szeq / 1e9)
                  / (svq / 1e9) > 3.841459 END AS reject_05
 FROM rows ORDER BY weight_fn
-"""
+""")
 QUERIES["events_logrank_weighted"] = _events_logrank_weighted
 
 
@@ -2271,29 +2147,11 @@ def _events_cox_ph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.cox_ph_binary(subjects, "grp", "duration", "observed", iters=5)
 
 
-ORACLES["events_cox_ph"] = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj AS (
-  SELECT user_id % 2 AS grp,
-         (COALESCE(fp, last) - start) // 3600000000 AS t,
-         CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS obs
-  FROM life
-),
-per_t AS (
-  SELECT t,
-         CAST(SUM(CASE WHEN grp = 1 THEN obs ELSE 0 END) AS BIGINT) AS d1,
-         CAST(SUM(CASE WHEN grp = 1 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c1,
-         CAST(SUM(CASE WHEN grp = 0 THEN obs ELSE 0 END) AS BIGINT) AS d0,
-         CAST(SUM(CASE WHEN grp = 0 THEN 1 - obs ELSE 0 END) AS BIGINT) AS c0
-  FROM subj GROUP BY t
-),
-ev AS (
+ORACLES["events_cox_ph"] = _with(
+    _LIFE,
+    _subj("user_id % 2"),
+    _PER_T2,
+    """ev AS (
   SELECT t, d1, CAST(d1 + d0 AS BIGINT) AS d, n1, n0, n1_all, n0_all
   FROM (
     SELECT t, d1, d0,
@@ -2308,77 +2166,9 @@ ev AS (
                   AND UNBOUNDED FOLLOWING)
   ) r WHERE d1 + d0 > 0
 ),
-b0 AS (SELECT CAST(0.0 AS DOUBLE) AS b),
-it1 AS (
-  SELECT CAST(SUM(CAST(ROUND(1e9 * (CAST(d1 AS DOUBLE)
-              - CAST(d AS DOUBLE) * rr), 0) AS BIGINT)) AS BIGINT) AS su,
-         CAST(SUM(CAST(ROUND(1e9 * (CAST(d AS DOUBLE) * rr * (1.0 - rr)),
-              0) AS BIGINT)) AS BIGINT) AS si,
-         MAX(b) AS b_in
-  FROM (SELECT d1, d, b,
-               (CAST(n1 AS DOUBLE) * EXP(b))
-                 / (CAST(n1 AS DOUBLE) * EXP(b)
-                    + CAST(n0 AS DOUBLE)) AS rr
-        FROM ev CROSS JOIN b0) s
-),
-b1 AS (SELECT b_in + (CASE WHEN si > 0
-                           THEN (su / 1e9) / (si / 1e9) END) AS b FROM it1),
-it2 AS (
-  SELECT CAST(SUM(CAST(ROUND(1e9 * (CAST(d1 AS DOUBLE)
-              - CAST(d AS DOUBLE) * rr), 0) AS BIGINT)) AS BIGINT) AS su,
-         CAST(SUM(CAST(ROUND(1e9 * (CAST(d AS DOUBLE) * rr * (1.0 - rr)),
-              0) AS BIGINT)) AS BIGINT) AS si,
-         MAX(b) AS b_in
-  FROM (SELECT d1, d, b,
-               (CAST(n1 AS DOUBLE) * EXP(b))
-                 / (CAST(n1 AS DOUBLE) * EXP(b)
-                    + CAST(n0 AS DOUBLE)) AS rr
-        FROM ev CROSS JOIN b1) s
-),
-b2 AS (SELECT b_in + (CASE WHEN si > 0
-                           THEN (su / 1e9) / (si / 1e9) END) AS b FROM it2),
-it3 AS (
-  SELECT CAST(SUM(CAST(ROUND(1e9 * (CAST(d1 AS DOUBLE)
-              - CAST(d AS DOUBLE) * rr), 0) AS BIGINT)) AS BIGINT) AS su,
-         CAST(SUM(CAST(ROUND(1e9 * (CAST(d AS DOUBLE) * rr * (1.0 - rr)),
-              0) AS BIGINT)) AS BIGINT) AS si,
-         MAX(b) AS b_in
-  FROM (SELECT d1, d, b,
-               (CAST(n1 AS DOUBLE) * EXP(b))
-                 / (CAST(n1 AS DOUBLE) * EXP(b)
-                    + CAST(n0 AS DOUBLE)) AS rr
-        FROM ev CROSS JOIN b2) s
-),
-b3 AS (SELECT b_in + (CASE WHEN si > 0
-                           THEN (su / 1e9) / (si / 1e9) END) AS b FROM it3),
-it4 AS (
-  SELECT CAST(SUM(CAST(ROUND(1e9 * (CAST(d1 AS DOUBLE)
-              - CAST(d AS DOUBLE) * rr), 0) AS BIGINT)) AS BIGINT) AS su,
-         CAST(SUM(CAST(ROUND(1e9 * (CAST(d AS DOUBLE) * rr * (1.0 - rr)),
-              0) AS BIGINT)) AS BIGINT) AS si,
-         MAX(b) AS b_in
-  FROM (SELECT d1, d, b,
-               (CAST(n1 AS DOUBLE) * EXP(b))
-                 / (CAST(n1 AS DOUBLE) * EXP(b)
-                    + CAST(n0 AS DOUBLE)) AS rr
-        FROM ev CROSS JOIN b3) s
-),
-b4 AS (SELECT b_in + (CASE WHEN si > 0
-                           THEN (su / 1e9) / (si / 1e9) END) AS b FROM it4),
-it5 AS (
-  SELECT CAST(SUM(CAST(ROUND(1e9 * (CAST(d1 AS DOUBLE)
-              - CAST(d AS DOUBLE) * rr), 0) AS BIGINT)) AS BIGINT) AS su,
-         CAST(SUM(CAST(ROUND(1e9 * (CAST(d AS DOUBLE) * rr * (1.0 - rr)),
-              0) AS BIGINT)) AS BIGINT) AS si,
-         MAX(b) AS b_in
-  FROM (SELECT d1, d, b,
-               (CAST(n1 AS DOUBLE) * EXP(b))
-                 / (CAST(n1 AS DOUBLE) * EXP(b)
-                    + CAST(n0 AS DOUBLE)) AS rr
-        FROM ev CROSS JOIN b4) s
-),
-b5 AS (SELECT b_in + (CASE WHEN si > 0
-                           THEN (su / 1e9) / (si / 1e9) END) AS b FROM it5),
+b0 AS (SELECT CAST(0.0 AS DOUBLE) AS b)""",
+    *map(_cox_newton, range(1, 6)),
+    """
 fin AS (
   SELECT CAST(SUM(CAST(ROUND(1e9 * (CAST(d1 AS DOUBLE)
               - CAST(d AS DOUBLE) * rr), 0) AS BIGINT)) AS BIGINT) AS su,
@@ -2412,7 +2202,7 @@ SELECT n1_subjects, n0_subjects, o_total AS n_events,
        CASE WHEN CAST(o_total AS DOUBLE) * 1e9 < 9e18 AND si > 0
             THEN ABS(b_in * SQRT(si / 1e9)) > 1.959964 END AS reject_05
 FROM fin
-"""
+""")
 QUERIES["events_cox_ph"] = _events_cox_ph
 
 
@@ -2533,12 +2323,7 @@ def _events_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.theil_sen_trend(hourly, "bucket", "v_c")
 
 
-ORACLES["events_theil_sen"] = """
-WITH hourly AS (
-  SELECT epoch_us(ts) // 3600000000 AS x,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS y
-  FROM events WHERE event_type = 'purchase' GROUP BY 1
-),
+ORACLES["events_theil_sen"] = _with(_HOURLY_PURCHASE, """
 pairs AS (
   SELECT a.x AS x1, b.x AS x2,
          CAST(b.y - a.y AS DOUBLE) / CAST(b.x - a.x AS DOUBLE) AS slope
@@ -2574,7 +2359,7 @@ SELECT CAST(MAX(np2) AS BIGINT) AS n_points,
               + MAX(CASE WHEN rn = (np2 + 2) // 2 THEN r END)) / 2.0, 6)
          AS intercept
 FROM rranked
-"""
+""")
 QUERIES["events_theil_sen"] = _events_theil_sen
 
 
@@ -2594,19 +2379,7 @@ def _events_life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.life_table(subjects, "duration", "observed", width=12)
 
 
-ORACLES["events_life_table"] = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
-subj AS (
-  SELECT (COALESCE(fp, last) - start) // 3600000000 AS t,
-         CASE WHEN fp IS NULL THEN 0 ELSE 1 END AS obs
-  FROM life
-),
+ORACLES["events_life_table"] = _with(_LIFE, _subj(), """
 per_i AS (
   SELECT (CAST(t AS BIGINT) // 12) * 12 AS interval_start,
          CAST(SUM(obs) AS BIGINT) AS d,
@@ -2650,7 +2423,7 @@ SELECT interval_start, n AS n_enter, d AS n_events, c AS n_censored,
                   ELSE EXP((COALESCE(slnq, 0) + lnq) / 1e12) END, 6)
          AS survival
 FROM run ORDER BY interval_start
-"""
+""")
 QUERIES["events_life_table"] = _events_life_table
 
 
@@ -2669,14 +2442,7 @@ def _events_survival_diff_72h(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.survival_diff_at(subjects, 72, "grp", "duration", "observed")
 
 
-ORACLES["events_survival_diff_72h"] = """
-WITH life AS (
-  SELECT user_id,
-         MIN(epoch_us(ts)) AS start,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp,
-         MAX(epoch_us(ts)) AS last
-  FROM events GROUP BY user_id
-),
+ORACLES["events_survival_diff_72h"] = _with(_LIFE, """
 subj AS (
   SELECT user_id % 2 AS g,
          (COALESCE(fp, last) - start) // 3600000000 AS t,
@@ -2757,7 +2523,7 @@ SELECT CAST(72 AS INT) AS tau, n1_subjects, n0_subjects,
             THEN ABS((s1r - s0r) / SQRT(se1r * se1r + se0r * se0r))
                  > 1.959964 END AS reject_05
 FROM gathered
-"""
+""")
 QUERIES["events_survival_diff_72h"] = _events_survival_diff_72h
 
 
@@ -2824,12 +2590,7 @@ def _events_siegel_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.siegel_trend(hourly, "bucket", "v_c")
 
 
-ORACLES["events_siegel_trend"] = """
-WITH hourly AS (
-  SELECT epoch_us(ts) // 3600000000 AS x,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS y
-  FROM events WHERE event_type = 'purchase' GROUP BY 1
-),
+ORACLES["events_siegel_trend"] = _with(_HOURLY_PURCHASE, """
 dirs AS (
   SELECT a.x AS xa, b.x AS xb,
          CAST(b.y - a.y AS DOUBLE) / CAST(b.x - a.x AS DOUBLE) AS slope
@@ -2877,7 +2638,7 @@ SELECT CAST(MAX(np2) AS BIGINT) AS n_points,
               + MAX(CASE WHEN rn = (np2 + 2) // 2 THEN r END)) / 2.0, 6)
          AS intercept
 FROM rranked
-"""
+""")
 QUERIES["events_siegel_trend"] = _events_siegel_trend
 
 

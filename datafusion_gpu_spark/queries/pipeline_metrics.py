@@ -17,6 +17,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_gpu_spark.queries import load
+from datafusion_gpu_spark.queries.pipeline_common import (
+    _CENTS_POS,
+    _CENTS_PURCHASE,
+    _CHI2_CELLS,
+    _CONFUSION_5000,
+    _LAG_MOMENTS,
+    _LAG_R,
+    _LAGGED,
+    _ORDER_CELLS,
+    _with,
+)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -35,20 +46,7 @@ ORACLES: dict = {}
 # exact integer operands (n^4 territory — far past bigint, harmless in
 # double: each marginal is exact below 2^53 and the terminal relative
 # error is ~1e-16).
-_MCC = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
-m AS (
-  SELECT CAST(SUM(CASE WHEN c >= 5000 AND pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-         CAST(SUM(CASE WHEN c >= 5000 AND pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-         CAST(SUM(CASE WHEN c < 5000 AND pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-         CAST(SUM(CASE WHEN c < 5000 AND pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
-  FROM t
-)
+_MCC = _with(_CENTS_POS, _CONFUSION_5000, """
 SELECT tp, fp, fn, tn,
        CASE WHEN (tp + fp) > 0 AND (tp + fn) > 0
              AND (tn + fp) > 0 AND (tn + fn) > 0 THEN
@@ -57,7 +55,7 @@ SELECT tp, fp, fn, tn,
                       * (tn + fp) * (tn + fn)), 6)
        END AS mcc
 FROM m
-"""
+""")
 
 # Cohen's kappa on the same 2x2 (threshold rater vs. ground truth):
 # chance-corrected agreement — the gate for "is the cheap heuristic
@@ -66,20 +64,7 @@ FROM m
 # division of integer-exact numerators: kappa = (po - pe) / (1 - pe)
 # = 2*(tp*tn - fp*fn) / ((tp+fp)*(fp+tn) + (tp+fn)*(fn+tn)) — the
 # closed 2x2 form, exact bigint numerator/denominator up to ~2e9 rows.
-_COHEN_KAPPA = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
-m AS (
-  SELECT CAST(SUM(CASE WHEN c >= 5000 AND pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-         CAST(SUM(CASE WHEN c >= 5000 AND pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-         CAST(SUM(CASE WHEN c < 5000 AND pos = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-         CAST(SUM(CASE WHEN c < 5000 AND pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
-  FROM t
-)
+_COHEN_KAPPA = _with(_CENTS_POS, _CONFUSION_5000, """
 SELECT tp, fp, fn, tn,
        CASE WHEN (tp + fp) * (fp + tn) + (tp + fn) * (fn + tn) > 0 THEN
          ROUND(CAST(2 * (tp * tn - fp * fn) AS DOUBLE)
@@ -87,7 +72,7 @@ SELECT tp, fp, fn, tn,
                   + CAST(tp + fn AS DOUBLE) * (fn + tn)), 6)
        END AS kappa
 FROM m
-"""
+""")
 
 
 # Cramér's V effect size for the priority x status contingency — the
@@ -96,30 +81,7 @@ FROM m
 # [0, 1]). Same CTE fold and the same visible quantization-headroom
 # guard as _CHI2_INDEP; GREATEST clamps the identity's tiny negative
 # quantization residual before the SQRT.
-_CRAMERS_V = """
-WITH obs AS (
-  SELECT o_orderpriority AS r, o_orderstatus AS c,
-         CAST(COUNT(*) AS BIGINT) AS o
-  FROM orders GROUP BY o_orderpriority, o_orderstatus
-),
-rt AS (SELECT r, CAST(SUM(o) AS BIGINT) AS nr FROM obs GROUP BY r),
-ct AS (SELECT c, CAST(SUM(o) AS BIGINT) AS nc FROM obs GROUP BY c),
-tot AS (SELECT CAST(SUM(o) AS BIGINT) AS nt FROM obs),
-q AS (
-  SELECT CAST(ROUND(CAST(o.o AS DOUBLE) * o.o
-                    / (CAST(rt.nr AS DOUBLE) * ct.nc) * 1e12, 0) AS BIGINT)
-           AS term_q
-  FROM obs o JOIN rt ON o.r = rt.r JOIN ct ON o.c = ct.c
-),
-s AS (
-  SELECT CAST(SUM(term_q) AS BIGINT) AS sq,
-         CAST(COUNT(*) AS BIGINT) AS n_cells
-  FROM q
-),
-d AS (
-  SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM rt) AS kr,
-         (SELECT CAST(COUNT(*) AS BIGINT) FROM ct) AS kc
-)
+_CRAMERS_V = _with(_ORDER_CELLS, _CHI2_CELLS, """
 SELECT n_cells, LEAST(kr - 1, kc - 1) AS k_min,
        CASE WHEN kr > 1 AND kc > 1
              AND CAST(nt AS DOUBLE) * n_cells * 5e-13 < 5e-5 THEN
@@ -128,7 +90,7 @@ SELECT n_cells, LEAST(kr - 1, kc - 1) AS k_min,
                     / (CAST(nt AS DOUBLE) * LEAST(kr - 1, kc - 1))), 6)
        END AS cramers_v
 FROM s CROSS JOIN tot CROSS JOIN d
-"""
+""")
 
 # NDCG at k=100 for value-ranks-purchases (binary relevance): the
 # position-discounted retrieval gate next to precision@k's undiscounted
@@ -328,13 +290,7 @@ ORACLES["events_theil_index"] = _THEIL
 # to 1e9 bigints BEFORE the count-weighted fold (bias <= 0.5e-9 per
 # row against a [0,1] statistic — invisible at 6dp; int64-safe to
 # ~9e9 rows, the quantum is the knob).
-_BRIER = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
+_BRIER = _with(_CENTS_POS, """
 v AS (
   SELECT c, CAST(SUM(pos) AS BIGINT) AS dp, CAST(COUNT(*) AS BIGINT) AS tc
   FROM t GROUP BY c
@@ -361,7 +317,7 @@ SELECT n, np,
                / (CAST(np AS DOUBLE) / n * (1.0 - CAST(np AS DOUBLE) / n)), 6)
        END AS brier_skill
 FROM q
-"""
+""")
 
 # Two-proportion power analysis: given the OBSERVED conversion rates of
 # the two salted-hash arms (events_ab_srm's split), the per-arm sample
@@ -572,11 +528,7 @@ FROM g GROUP BY source
 # 2*fence_hi = 5*q3 - 3*q1), outliers counted by exact predicates on
 # 2c. The classic box-plot audit next to events_anomaly_mad (median
 # robust) and events_winsorize (quantile clamp).
-_TUKEY = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
-),
+_TUKEY = _with(_CENTS_PURCHASE, """
 v AS (SELECT c, CAST(COUNT(*) AS BIGINT) AS cnt FROM t GROUP BY c),
 cum AS (
   SELECT c, cnt,
@@ -610,7 +562,7 @@ SELECT nr AS n, q1, q3, (q3 - q1) AS iqr,
          AS outlier_rate
 FROM v CROSS JOIN qs CROSS JOIN n
 GROUP BY nr, q1, q3
-"""
+""")
 
 # Maximum drawdown of each user's purchase-value path: the largest
 # peak-to-trough drop max_t (max_{s<=t} v_s - v_t) — the worst-case
@@ -875,50 +827,7 @@ ORACLES["curation_class_balance"] = _CLASS_BALANCE.replace(
 # phi21 = r1 (1 - phi22). All r_k come from exact bigint folds, so the
 # terminal float pipeline is the identical IEEE sequence on both
 # engines; degenerate denominators emit NULL.
-_PACF = """
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS bucket,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS v_c
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-),
-lagged AS (
-  SELECT event_type, v_c AS y,
-         LAG(v_c, 1) OVER w AS x1,
-         LAG(v_c, 2) OVER w AS x2,
-         LAG(v_c, 3) OVER w AS x3
-  FROM hourly
-  WINDOW w AS (PARTITION BY event_type ORDER BY bucket)
-),
-pairs AS (
-  SELECT event_type, 1 AS lag_k, x1 AS x, y FROM lagged WHERE x1 IS NOT NULL
-  UNION ALL
-  SELECT event_type, 2 AS lag_k, x2 AS x, y FROM lagged WHERE x2 IS NOT NULL
-  UNION ALL
-  SELECT event_type, 3 AS lag_k, x3 AS x, y FROM lagged WHERE x3 IS NOT NULL
-),
-m AS (
-  SELECT event_type, lag_k, COUNT(*) AS n_pairs,
-         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-         CAST(SUM(x * x) AS BIGINT) AS sxx,
-         CAST(SUM(y * y) AS BIGINT) AS syy,
-         CAST(SUM(x * y) AS BIGINT) AS sxy
-  FROM pairs GROUP BY 1, 2
-),
-r AS (
-  SELECT event_type, lag_k,
-    CASE WHEN (CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)
-               - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-          AND (CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)
-               - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-         THEN (CAST(n_pairs AS DOUBLE) * CAST(sxy AS DOUBLE)
-               - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-              / SQRT((CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                     * (CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)
-                        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-         END AS rk
-  FROM m
-),
+_PACF = _with(_LAGGED, _LAG_MOMENTS, _LAG_R, """
 p AS (
   SELECT event_type,
          MAX(CASE WHEN lag_k = 1 THEN rk END) AS r1,
@@ -945,7 +854,7 @@ SELECT event_type,
                / (1.0 - phi21 * r1 - phi22 * r2), 6)
        END AS pacf3
 FROM e
-"""
+""")
 
 
 def _events_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -968,11 +877,7 @@ ORACLES["events_pacf"] = _PACF
 # targets are two CEIL'd doubles computed identically on both engines,
 # the three picks run on the distinct-value cumulative (the equidepth
 # machinery), never a global sort.
-_MEDIAN_CI = """
-WITH t AS (
-  SELECT CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
-),
+_MEDIAN_CI = _with(_CENTS_PURCHASE, """
 v AS (SELECT c, CAST(COUNT(*) AS BIGINT) AS cnt FROM t GROUP BY c),
 cum AS (
   SELECT c, cnt,
@@ -1006,7 +911,7 @@ SELECT nr AS n,
        ROUND(CAST(MAX(CASE WHEN which = 'hi' THEN val END) AS DOUBLE) / 100,
              2) AS ci_hi
 FROM pick GROUP BY nr
-"""
+""")
 
 # Wald-Wolfowitz runs test for randomness of the hourly value series
 # around its median, per event type: too FEW runs = persistence /

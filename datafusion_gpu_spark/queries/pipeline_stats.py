@@ -20,8 +20,16 @@ from pyspark.sql import functions as F
 from datafusion_gpu_spark.operators import events, graph, text
 from datafusion_gpu_spark.queries import load
 from datafusion_gpu_spark.queries.pipeline_common import (
+    _CENTS_AB,
+    _CENTS_GRP,
+    _CHI2_CELLS,
     _CUSUM_ORACLE,
+    _ORDER_CELLS,
+    _PV_AB,
+    _STRATA_2X2,
+    _copurchase,
     _sparse_copurchase_edges,
+    _with,
 )
 
 QUERIES: dict = {}
@@ -51,12 +59,7 @@ ORACLES: dict = {}
 # value, so the guard is nv > 1 on the distinct-value count — the
 # algebraically equivalent N^3 - N > tie3 spelling overflows bigint at
 # N ~ 2.1e6 rows (caught by the 10M-distinct-value window probe).
-_MANN_WHITNEY = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
+_MANN_WHITNEY = _with(_CENTS_AB, """
 pv AS (
   SELECT c,
          CAST(SUM(CASE WHEN grp = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS da,
@@ -91,7 +94,7 @@ SELECT n_a, n_b,
                          / (CAST(n_a + n_b AS DOUBLE) * (n_a + n_b - 1)))),
              4) END AS z_stat
 FROM s
-"""
+""")
 
 
 def _agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,19 +116,7 @@ def _agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 # m^2 > c^2 * (n_a+n_b) * n_a * n_b with c^2 = 1.844164 — one float
 # comparison of identically-spelled products of exact operands (m <= n_a*n_b
 # stays double-exact through m^2 up to n_a*n_b ~ 9e7; the gate is 4e6).
-_KS_TEST = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
-pv AS (
-  SELECT c,
-         CAST(SUM(CASE WHEN grp = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS da,
-         CAST(SUM(CASE WHEN grp = 'purchase' THEN 1 ELSE 0 END) AS BIGINT)
-           AS db
-  FROM t GROUP BY c
-),
+_KS_TEST = _with(_CENTS_AB, _PV_AB, """
 cum AS (
   SELECT CAST(SUM(da) OVER (ORDER BY c) AS BIGINT) AS ca,
          CAST(SUM(db) OVER (ORDER BY c) AS BIGINT) AS cb
@@ -148,7 +139,7 @@ SELECT n_a, n_b, m AS d_num,
             > 1.844164 * (n_a + n_b) * CAST(n_a AS DOUBLE) * n_b)
        END AS reject_05
 FROM mx CROSS JOIN nn
-"""
+""")
 
 
 def _events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -335,13 +326,7 @@ def _graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["graph_assortativity"] = _graph_assortativity
-ORACLES["graph_assortativity"] = """
-WITH e AS (
-  SELECT DISTINCT a.l_partkey AS lo, b.l_partkey AS hi
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 40 AND b.l_quantity >= 40
-),
+ORACLES["graph_assortativity"] = _with(_copurchase("e AS"), """
 bo AS (SELECT lo AS u, hi AS v FROM e UNION ALL SELECT hi AS u, lo AS v FROM e),
 deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM bo GROUP BY u),
 p AS (
@@ -364,7 +349,7 @@ SELECT CAST(m2 / 2 AS BIGINT) AS n_edges,
                  6)
             END AS r
 FROM m
-"""
+""")
 
 
 def _streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -509,19 +494,7 @@ QUERIES["events_ks_test_bucketed"] = _events_ks_test_bucketed
 # fold with the VISIBLE N >= 9e6 headroom guard; asymptotic 0.461
 # critical value (Anderson & Darling 1952). Spark side runs
 # operators/stats.cvm_two_sample (cumsum_auto-routed).
-_CVM_TEST = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
-pv AS (
-  SELECT c,
-         CAST(SUM(CASE WHEN grp = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS da,
-         CAST(SUM(CASE WHEN grp = 'purchase' THEN 1 ELSE 0 END) AS BIGINT)
-           AS db
-  FROM t GROUP BY c
-),
+_CVM_TEST = _with(_CENTS_AB, _PV_AB, """
 cum AS (
   SELECT CAST(SUM(da) OVER (ORDER BY c) AS BIGINT) AS ca,
          CAST(SUM(db) OVER (ORDER BY c) AS BIGINT) AS cb,
@@ -555,7 +528,7 @@ SELECT n_a, n_b,
             * (CAST(s_q AS DOUBLE) / 1e12) > 0.461)
        END AS reject_05
 FROM s CROSS JOIN nn
-"""
+""")
 
 
 def _events_cvm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -671,12 +644,7 @@ ORACLES["events_ks_test_bucketed"] = _KS_TEST
 # predicates: n>=2 per group, and pooled squared-error > 0 via distinct-
 # value counts (variance is zero iff a group has ONE distinct value — the
 # overflow-free nv spelling, same lesson as agg_mann_whitney's guard).
-_WELCH_T = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events
-  WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-),
+_WELCH_T = _with(_CENTS_AB, """
 m AS (
   SELECT
     CAST(SUM(CASE WHEN grp = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -709,7 +677,7 @@ SELECT n_a, n_b,
                / (vn_a * vn_a / (n_a - 1) + vn_b * vn_b / (n_b - 1)), 2)
        END AS df
 FROM v
-"""
+""")
 
 
 def _agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -737,30 +705,7 @@ def _agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (round-10 ADVICE; the knob is the 1e12 quantum — see _MOOD_MEDIAN's
 # note). The existing agg_chi_squared is goodness-of-fit against fixed
 # probabilities; this is the two-margin independence test.
-_CHI2_INDEP = """
-WITH obs AS (
-  SELECT o_orderpriority AS r, o_orderstatus AS c,
-         CAST(COUNT(*) AS BIGINT) AS o
-  FROM orders GROUP BY o_orderpriority, o_orderstatus
-),
-rt AS (SELECT r, CAST(SUM(o) AS BIGINT) AS nr FROM obs GROUP BY r),
-ct AS (SELECT c, CAST(SUM(o) AS BIGINT) AS nc FROM obs GROUP BY c),
-tot AS (SELECT CAST(SUM(o) AS BIGINT) AS nt FROM obs),
-q AS (
-  SELECT CAST(ROUND(CAST(o.o AS DOUBLE) * o.o
-                    / (CAST(rt.nr AS DOUBLE) * ct.nc) * 1e12, 0) AS BIGINT)
-           AS term_q
-  FROM obs o JOIN rt ON o.r = rt.r JOIN ct ON o.c = ct.c
-),
-s AS (
-  SELECT CAST(SUM(term_q) AS BIGINT) AS sq,
-         CAST(COUNT(*) AS BIGINT) AS n_cells
-  FROM q
-),
-d AS (
-  SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM rt) AS kr,
-         (SELECT CAST(COUNT(*) AS BIGINT) FROM ct) AS kc
-)
+_CHI2_INDEP = _with(_ORDER_CELLS, _CHI2_CELLS, """
 SELECT n_cells,
        (kr - 1) * (kc - 1) AS df,
        CASE WHEN kr > 1 AND kc > 1
@@ -768,7 +713,7 @@ SELECT n_cells,
          ROUND(CAST(nt AS DOUBLE) * (CAST(sq AS DOUBLE) / 1e12 - 1), 4)
        END AS chi2
 FROM s CROSS JOIN tot CROSS JOIN d
-"""
+""")
 
 
 def _agg_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -815,11 +760,7 @@ ORACLES["agg_chi2_independence"] = _CHI2_INDEP
 # divides by 1 - tie3/(N^3-N) computed in double (the bigint N^3
 # spelling overflows at N~2.1e6 — the r9 probe lesson); e_g itself is
 # exact bigint up to n_g*N ~ 9.2e18, i.e. N ~ 3e9 rows.
-_KRUSKAL_WALLIS = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-),
+_KRUSKAL_WALLIS = _with(_CENTS_GRP, """
 vg AS (
   SELECT grp, c, CAST(COUNT(*) AS BIGINT) AS cnt
   FROM t GROUP BY grp, c
@@ -861,7 +802,7 @@ SELECT n AS n_total, k AS k_groups, (k - 1) AS df, tie3,
                         / (CAST(n AS DOUBLE) * n * n - n)), 4)
        END AS h_stat
 FROM q CROSS JOIN tot
-"""
+""")
 
 
 def _agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -885,11 +826,7 @@ def _agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cents {1,2} give s1^2/n = 4.5 -> tq 5 == s2). When quantization eats
 # a sub-cent SSW the query emits NULL — conservative and identical on
 # both engines.
-_ANOVA_F = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-),
+_ANOVA_F = _with(_CENTS_GRP, """
 g AS (
   SELECT grp,
          CAST(COUNT(*) AS BIGINT) AS n_g,
@@ -915,7 +852,7 @@ SELECT n AS n_total, k AS k_groups,
                / ((CAST(s2 AS DOUBLE) - tq) / (n - k)), 4)
        END AS f_stat
 FROM q
-"""
+""")
 
 
 def _agg_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -935,11 +872,7 @@ def _agg_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
 # algebra (F is scale-invariant: the 2x cancels). The one engine float
 # is percentile/median itself, whose interpolated value is exactly
 # representable, CAST back to bigint identically on both engines.
-_BROWN_FORSYTHE = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-),
+_BROWN_FORSYTHE = _with(_CENTS_GRP, """
 med AS (
   SELECT grp, CAST(ROUND(2 * MEDIAN(c), 0) AS BIGINT) AS m2
   FROM t GROUP BY grp
@@ -973,7 +906,7 @@ SELECT n AS n_total, k AS k_groups,
                / ((CAST(s2 AS DOUBLE) - tq) / (n - k)), 4)
        END AS f_stat
 FROM q
-"""
+""")
 
 
 def _agg_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1278,11 +1211,7 @@ ORACLES["text_jsd_drift"] = _JSD_DUCK
 # 5e-5, i.e. N * cells >= 1e8 — around sf10 for these shapes) the
 # statistic is NULL rather than silently drifting. The knob is the
 # 1e12 quantum: each 10x raise buys 10x N at ~one fewer safe digit.
-_MOOD_MEDIAN = """
-WITH t AS (
-  SELECT event_type AS grp, CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events WHERE value IS NOT NULL
-),
+_MOOD_MEDIAN = _with(_CENTS_GRP, """
 med AS (SELECT CAST(ROUND(2 * MEDIAN(c), 0) AS BIGINT) AS m2 FROM t),
 obs AS (
   SELECT grp, CASE WHEN 2 * c > m2 THEN 1 ELSE 0 END AS above,
@@ -1312,7 +1241,7 @@ SELECT nt AS n_total, kr AS k_groups, n_above, (kr - 1) * (kc - 1) AS df,
        END AS chi2
 FROM q CROSS JOIN tot CROSS JOIN d
 GROUP BY nt, kr, kc, n_above
-"""
+""")
 
 
 def _agg_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1564,23 +1493,7 @@ ORACLES["events_mcnemar"] = _MCNEMAR
 # taken raw and one divided by 1e9). VISIBLE guard: each E term
 # is <= the stratum's exposed count, so sums are bounded by total users
 # * 1e9 — outputs go NULL past ~9e9 users instead of wrapping.
-_CMH = """
-WITH u AS (
-  SELECT user_id % 3 AS s,
-         user_id % 2 AS x,
-         MAX(CASE WHEN event_type = 'purchase'
-                   AND CAST(ts AS DATE) = DATE '2024-01-16'
-                  THEN 1 ELSE 0 END) AS y
-  FROM events GROUP BY user_id
-),
-tab AS (
-  SELECT s,
-         CAST(SUM(CASE WHEN x = 1 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS a,
-         CAST(SUM(CASE WHEN x = 1 AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS b,
-         CAST(SUM(CASE WHEN x = 0 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c,
-         CAST(SUM(CASE WHEN x = 0 AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS d
-  FROM u GROUP BY s
-),
+_CMH = _with(_STRATA_2X2, """
 terms AS (
   SELECT s, a, a + b + c + d AS n,
          CAST(ROUND(1e9 * (CAST(a + b AS DOUBLE) * (a + c)
@@ -1668,7 +1581,7 @@ SELECT n_strata, n_users, sa,
                        / (2e0 * ssq * (ssq / 1e9)))), 6)
        END AS or_ci_hi
 FROM folded
-"""
+""")
 
 
 def _events_cmh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1867,23 +1780,7 @@ ORACLES["agg_kendall_tau"] = _KENDALL_TAU
 # variance sum fold as the same 1e-9-quantized bigints. reject_05
 # stays on the plain BD statistic (documented; Tarone emitted beside
 # it for the reader).
-_BRESLOW_DAY = """
-WITH u AS (
-  SELECT user_id % 3 AS s,
-         user_id % 2 AS x,
-         MAX(CASE WHEN event_type = 'purchase'
-                   AND CAST(ts AS DATE) = DATE '2024-01-16'
-                  THEN 1 ELSE 0 END) AS y
-  FROM events GROUP BY user_id
-),
-tab AS (
-  SELECT s,
-         CAST(SUM(CASE WHEN x = 1 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS a,
-         CAST(SUM(CASE WHEN x = 1 AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS b,
-         CAST(SUM(CASE WHEN x = 0 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c,
-         CAST(SUM(CASE WHEN x = 0 AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS d
-  FROM u GROUP BY s
-),
+_BRESLOW_DAY = _with(_STRATA_2X2, """
 mh AS (
   SELECT CAST(SUM(CAST(ROUND(1e9 * (CAST(a AS DOUBLE) * d
                       / CAST(a + b + c + d AS DOUBLE)), 0) AS BIGINT))
@@ -1976,7 +1873,7 @@ SELECT k_used, k_used - 1 AS df,
             WHEN k_used - 1 = 5 THEN schi2q / 1e9 > 11.070498
             ELSE NULL END AS reject_05
 FROM fold
-"""
+""")
 
 
 def _events_breslow_day(spark: SparkSession, sf_dir: str) -> DataFrame:

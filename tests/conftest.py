@@ -40,6 +40,22 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A checkpoint dir on the shared SparkContext for one test, so its
+    operators cut on the reliable (cluster) path; reset at teardown so
+    later tests take the ``localCheckpoint`` path again."""
+    sc = spark.sparkContext
+    path = tmp_path / "checkpoints"
+    sc.setCheckpointDir(str(path))
+    yield path
+    # Scala's setCheckpointDir(null) resets to None (Option(null)); a
+    # clear that silently failed would switch every later cutting
+    # operator in the suite onto the reliable path
+    sc._jsc.sc().setCheckpointDir(None)
+    assert sc.getCheckpointDir() is None
+
+
 @pytest.fixture(scope="session")
 def duck():
     from tools.check_oracle import duck_connect

@@ -112,7 +112,7 @@ def test_connected_components_long_diameter_path(spark):
     assert stats["rounds"] >= n // 2  # genuinely a deep loop
 
 
-def test_connected_components_label_broadcast_guard(spark, tmp_path, monkeypatch):
+def test_connected_components_label_broadcast_guard(spark, monkeypatch, request):
     # r16: in LOCAL mode the per-round label join is left to AQE, which
     # converts it to broadcast at runtime (the explicit hint measured
     # +6% at sf0.1 — one extra broadcast-build dispatch per round); on
@@ -138,23 +138,16 @@ def test_connected_components_label_broadcast_guard(spark, tmp_path, monkeypatch
     assert "BroadcastHashJoin" in stats["round1_plan"]
     assert "SortMergeJoin" not in stats["round1_plan"]
 
-    sc = spark.sparkContext
-    sc.setCheckpointDir(str(tmp_path / "cc_ckpt"))
-    try:
-        stats2: dict = {}
-        comp2 = {
-            r.node: r.component
-            for r in connected_components(pairs, stats=stats2).collect()
-        }
-        assert comp2 == expected
-        assert stats2["label_join"] == "broadcast-hint"
-        assert "BroadcastHashJoin" in stats2["round1_plan"]
-        assert "SortMergeJoin" not in stats2["round1_plan"]
-    finally:
-        sc._jsc.sc().setCheckpointDir(None)
-    # a clear that silently failed would switch every later truncating
-    # operator in the suite onto the reliable-checkpoint path
-    assert not sc.getCheckpointDir()
+    request.getfixturevalue("checkpoint_dir")  # the cluster path from here on
+    stats2: dict = {}
+    comp2 = {
+        r.node: r.component
+        for r in connected_components(pairs, stats=stats2).collect()
+    }
+    assert comp2 == expected
+    assert stats2["label_join"] == "broadcast-hint"
+    assert "BroadcastHashJoin" in stats2["round1_plan"]
+    assert "SortMergeJoin" not in stats2["round1_plan"]
 
 
 def test_connected_components_collapse_transitive_chain(spark):
@@ -303,7 +296,7 @@ def test_segment_lines_width_partitions_all_words(spark):
     assert segs[2][1].split() == ["w20", "w21", "w22"]  # ragged tail kept
 
 
-def test_connected_components_uses_cluster_checkpoint_dir(spark, tmp_path):
+def test_connected_components_uses_cluster_checkpoint_dir(spark, checkpoint_dir):
     # with a checkpoint dir configured (the cluster spelling), rounds
     # checkpoint reliably to it instead of executor-local storage —
     # same labels, and the dir actually receives checkpoint data
@@ -311,31 +304,23 @@ def test_connected_components_uses_cluster_checkpoint_dir(spark, tmp_path):
 
     from datafusion_gpu_spark.operators.dedup import connected_components
 
-    ckdir = str(tmp_path / "ck")
-    spark.sparkContext.setCheckpointDir(ckdir)
-    try:
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)],
-            "doc_a long, doc_b long",
-        )
-        got = {
-            (r.node, r.component) for r in connected_components(pairs).collect()
-        }
-        assert got == {
-            (1, 1), (2, 1), (3, 1),
-            (10, 10), (11, 10),
-            (20, 20), (21, 20), (22, 20),
-        }
-        walked = [
-            os.path.join(d, f) for d, _, fs in os.walk(ckdir) for f in fs
-        ]
-        assert walked, "checkpoint dir received no data"
-    finally:
-        # restore the shared session's local-mode behavior: Scala's
-        # setCheckpointDir(null) resets to None (Option(null)), so later
-        # tests exercise the localCheckpoint path again
-        spark.sparkContext._jsc.sc().setCheckpointDir(None)
-        assert spark.sparkContext.getCheckpointDir() is None
+    ckdir = str(checkpoint_dir)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)],
+        "doc_a long, doc_b long",
+    )
+    got = {
+        (r.node, r.component) for r in connected_components(pairs).collect()
+    }
+    assert got == {
+        (1, 1), (2, 1), (3, 1),
+        (10, 10), (11, 10),
+        (20, 20), (21, 20), (22, 20),
+    }
+    walked = [
+        os.path.join(d, f) for d, _, fs in os.walk(ckdir) for f in fs
+    ]
+    assert walked, "checkpoint dir received no data"
 
 
 def test_canonicalize_url_collapses_crawl_variants(spark):

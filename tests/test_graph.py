@@ -12,14 +12,16 @@ from datafusion_gpu_spark.operators.graph import pagerank
 @pytest.fixture
 def owner_cuts(monkeypatch):
     """The counting seam over ``util.Cuts._cut``, the one lineage-cut
-    path of the per-call cut owner: ``["n"]`` counts the cuts made."""
+    path of the per-call cut owner: ``["n"]`` counts the cuts made,
+    ``["reliable"]`` those on the reliable (checkpoint dir) path."""
     from datafusion_gpu_spark.operators import util
 
-    calls = {"n": 0}
+    calls = {"n": 0, "reliable": 0}
     real = util.Cuts._cut
 
     def counting(self, df):
         calls["n"] += 1
+        calls["reliable"] += self._reliable
         return real(self, df)
 
     monkeypatch.setattr(util.Cuts, "_cut", counting)
@@ -510,9 +512,11 @@ def test_bfs_distances_chain_and_early_stop(spark, owner_cuts):
     assert calls["n"] == 2 + 4 * 2 + 1
 
 
-def test_bpe_train_cuts_through_the_cut_owner(spark, tmp_path, owner_cuts):
+def test_bpe_train_cuts_through_the_cut_owner(spark, owner_cuts, request):
     """bpe_train's every-8-rounds cut is the shared policy's, so a
-    configured checkpoint dir puts it on the reliable path."""
+    configured checkpoint dir puts it on the reliable path — and the
+    owner deletes its files at return, since the merges it returns read
+    no cut."""
     from datafusion_gpu_spark.operators.text import bpe_train
 
     texts = [
@@ -523,17 +527,41 @@ def test_bpe_train_cuts_through_the_cut_owner(spark, tmp_path, owner_cuts):
     docs = spark.createDataFrame([(t,) for t in texts], "text string")
     local = bpe_train(docs, num_merges=10)
     assert owner_cuts["n"] == 1  # 10 rounds: one cut, at round 8
-    sc = spark.sparkContext
-    ckdir = tmp_path / "bpe_ckpt"
-    sc.setCheckpointDir(str(ckdir))
-    try:
-        assert bpe_train(docs, num_merges=10) == local
-    finally:
-        sc._jsc.sc().setCheckpointDir(None)
-    assert not sc.getCheckpointDir()
+    assert owner_cuts["reliable"] == 0
+    ckdir = request.getfixturevalue("checkpoint_dir")
+    assert bpe_train(docs, num_merges=10) == local
     assert owner_cuts["n"] == 2
-    # the reliable cut wrote the round-8 state under the checkpoint dir
-    assert any(p.is_file() for p in ckdir.rglob("*"))
+    # the round-8 cut took the reliable path, and its files are gone
+    assert owner_cuts["reliable"] == 1
+    assert not list(ckdir.rglob("rdd-*"))
+
+
+def test_reliable_cuts_keep_only_the_files_their_result_reads(spark, checkpoint_dir):
+    """On the reliable path connected_components keeps the checkpoint
+    files of the cuts its result reads and deletes the rest at return;
+    clearing the session deletes the kept ones."""
+    from datafusion_gpu_spark.context import clear_scan_cache
+    from datafusion_gpu_spark.operators.dedup import connected_components
+    from datafusion_gpu_spark.operators.util import _read_rdds
+
+    session = spark.newSession()
+    pairs = session.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (20, 21), (21, 22)],
+        "doc_a long, doc_b long",
+    )
+
+    def files() -> set[int]:
+        return {int(p.name[4:]) for p in checkpoint_dir.rglob("rdd-*")}
+
+    labels = connected_components(pairs)
+    kept = files()
+    assert kept and kept <= _read_rdds(labels)
+    assert {(r.node, r.component) for r in labels.collect()} == {
+        (1, 1), (2, 1), (3, 1), (4, 1), (5, 1),
+        (10, 10), (11, 10), (20, 20), (21, 20), (22, 20),
+    }
+    clear_scan_cache(session)
+    assert files() == set()
 
 
 def _persistent(session) -> set[int]:
@@ -589,9 +617,10 @@ def test_early_stop_operators_jobs_and_released_cuts(spark):
     counts measured when that landed: k_core 18, bellman_ford 24,
     components 24, scc 222, topo_layers 109, mst 154-159 (pinned at
     160), bfs 51 — with a separate action per round they were 28, 34,
-    36, 280, 129, 209-211 and 57), and keep only the cuts their result
-    reads: a returned DataFrame collects twice, the same each call, and
-    clearing the session releases what was kept."""
+    36, 280, 129, 209-211 and 57; delta_stepping 134, where its
+    per-round ``take(1)`` emptiness probes gave 267), and keep only the
+    cuts their result reads: a returned DataFrame collects twice, the
+    same each call, and clearing the session releases what was kept."""
     from datafusion_gpu_spark.context import clear_scan_cache
     from datafusion_gpu_spark.operators import graph
     from datafusion_gpu_spark.operators.dedup import connected_components
@@ -612,6 +641,7 @@ def test_early_stop_operators_jobs_and_released_cuts(spark):
         "topo_layers": (lambda: graph.topo_layers(dag, src="a", dst="b"), 109),
         "mst": (lambda: graph.boruvka_mst(edges), 160),
         "bfs": (lambda: graph.bfs_distances(edges, seeds), 51),
+        "delta_stepping": (lambda: graph.delta_stepping(edges, seeds), 134),
     }
     before = _persistent(session)
     try:
