@@ -70,15 +70,25 @@ BROADCAST_TABLES = {"region", "nation"}
 CODEGEN_CACHE_ENTRIES = 1024
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition UP when the input has fewer partitions than cores.
 
     A small table read from one parquet file arrives as one partition and
     would serialize every downstream operator onto a single task; at real
-    scale inputs already carry hundreds of splits and this is a no-op
-    (the partition count check costs only plan analysis, no job).
+    scale inputs already carry hundreds of splits and this is a no-op.
+
+    Decided from the physical plan, never by running it. AQE wraps only
+    plans that hold an exchange or a subquery, and there the shuffle
+    already sets the partitioning, so such an input comes back unchanged:
+    asking its RDD for a partition count would run every shuffle stage of
+    the input now, and the later action would run them again. Any other
+    plan's count comes from its RDD, built from the same executed plan
+    the action reuses; for a scan that is split planning, no job.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

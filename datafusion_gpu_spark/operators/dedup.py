@@ -8,17 +8,26 @@ work per node is bounded by bucket size, not corpus size. Everything is
 built-in JVM expressions (split/transform/xxhash64/groupBy); no Python in
 the hot path.
 
-Pipeline shapes:
+Pipeline shapes — each near-dup operator is one candidate-and-verify
+pipeline over the private substrate below (``_capped`` drops hot keys,
+``_self_pairs`` is the key-equality self-join, ``_attach`` joins per-id
+relations to both ends of a pair for the exact check):
 - exact:        normalize -> md5 -> groupBy(key)            (1 shuffle)
-- ngram:        shingle -> explode -> self-join on shingle -> jaccard
-- minhash+LSH:  shingle -> 64 x min(xxhash64) signature -> band buckets ->
-                candidate pairs -> exact-jaccard verification
+- ngram:        shingle -> explode -> _capped -> _self_pairs on shingle ->
+                _jaccard_verified
+- minhash+LSH:  shingle -> 64 x min(xxhash64) signature -> _band_buckets ->
+                _self_pairs on (band, bucket) -> _jaccard_verified
+- incremental:  batch buckets -> _index_probe of the persisted index ->
+                _jaccard_verified / _cosine_verified
 - simhash:      word hashes -> 64 weighted-bit-majority signature ->
-                chunk pigeonhole buckets -> hamming verification
-- embedding:    block on a coarse key (label) -> in-block cosine pairs
+                _hamming_pairs (chunk pigeonhole -> hamming verification)
+- embedding:    block on a key (label, LSH bucket, cell) -> _self_pairs ->
+                _cosine_verified
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -177,6 +186,205 @@ def shingle_set_sizes(sh: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
 
+# -- candidate-and-verify substrate ------------------------------------------
+#
+# Every near-dup operator below filters, then verifies: candidate pairs
+# come only from a key-equality join (a self-join, or a batch probing a
+# persisted index), and an exact check on per-id relations attached to
+# both ends of each pair removes every false positive.
+
+_ENDS = ("doc_a", "doc_b")
+_VECS = ("vec_a", "vec_b")
+_SIDES = ("hist_id", "batch_id")
+
+
+def _capped(
+    rel: DataFrame, keys: list[str], cap: int | None, count: str | None = None
+) -> DataFrame:
+    """``rel`` without its hot keys: every row whose ``keys`` group holds
+    more than ``cap`` rows (distinct ``count`` values, when given) is
+    dropped BEFORE the self-join, the skew guard for a key whose bucket
+    alone is quadratic. Stopword-removal semantics: the similarity is
+    computed over the surviving key space, which the oracles replay.
+    None keeps every row."""
+    if cap is None:
+        return rel
+    n = F.count_distinct(count) if count else F.count(F.lit(1))
+    keep = rel.groupBy(*keys).agg(n.alias("df")).where(F.col("df") <= cap)
+    return rel.join(keep.select(*keys), keys)
+
+
+def _self_pairs(
+    rel: DataFrame,
+    keys: list[str],
+    ident: str = "doc_id",
+    ends: tuple[str, str] = _ENDS,
+    carry: tuple[str, ...] = (),
+    cond: Column | None = None,
+    ordered: bool = True,
+) -> DataFrame:
+    """(end_a, end_b, <carry>_a..., <carry>_b...): ``rel`` self-joined on
+    equal ``keys``, each pair once with a's ``ident`` below b's
+    (``ordered=False``: both orders, self-pairs excluded). ``cond`` adds
+    a join predicate over the ``a.`` / ``b.`` columns."""
+    a, b = rel.alias("a"), rel.alias("b")
+    ia, ib = F.col(f"a.{ident}"), F.col(f"b.{ident}")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(ia < ib if ordered else ia != ib)
+    if cond is not None:
+        on.append(cond)
+    return a.join(b, on).select(
+        ia.alias(ends[0]),
+        ib.alias(ends[1]),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for s in "ab" for c in carry],
+    )
+
+
+def _attach(
+    pairs: DataFrame,
+    rel: DataFrame,
+    cols: list[str],
+    ident: str = "doc_id",
+    ends: tuple[str, ...] = _ENDS,
+    rel_b: DataFrame | None = None,
+) -> DataFrame:
+    """``pairs`` with ``rel``'s ``cols`` joined to each of its ``ends`` on
+    ``ident``, named ``<col>_a`` / ``<col>_b``; ``rel_b`` serves the b
+    end when the two ends come from different relations."""
+    for end, s, r in zip(ends, "ab", (rel, rel if rel_b is None else rel_b)):
+        side = r.select(
+            F.col(ident).alias(end), *[F.col(c).alias(f"{c}_{s}") for c in cols]
+        )
+        pairs = pairs.join(side, end)
+    return pairs
+
+
+def _n_common(pairs: DataFrame, ends: tuple[str, str] = _ENDS) -> DataFrame:
+    """(end_a, end_b, n_common): one row per pair of a pair-per-match
+    relation."""
+    return pairs.groupBy(*ends).agg(F.count(F.lit(1)).alias("n_common"))
+
+
+def _shared_shingles(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, ends=_ENDS
+) -> DataFrame:
+    """(end_a, end_b, n_common) of the candidate pairs. The second join
+    keys on (end_b, shingle), BOTH columns, so only genuinely shared
+    shingles materialize; joining on end_b alone and post-filtering would
+    build the |sh_a| x |sh_b| cross product per candidate pair (~10^5
+    rows/pair on real documents) before throwing it away."""
+    a, b = ends
+    return _n_common(
+        cand.join(sh_a.withColumnRenamed("doc_id", a), a).join(
+            sh_b.withColumnRenamed("doc_id", b), [b, "shingle"]
+        ),
+        ends,
+    )
+
+
+def _jaccard_verified(
+    common: DataFrame,
+    sizes: DataFrame,
+    threshold: float,
+    ends: tuple[str, str] = _ENDS,
+    sizes_b: DataFrame | None = None,
+) -> DataFrame:
+    """(end_a, end_b, jaccard >= threshold) from shared-shingle counts and
+    the (doc_id, n_sh) set sizes of both ends."""
+    jacc = F.col("n_common") / (
+        F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_common")
+    )
+    return (
+        _attach(common, sizes, ["n_sh"], ends=ends, rel_b=sizes_b)
+        .select(*ends, F.round(jacc, 6).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def _cosine_verified(
+    pairs: DataFrame,
+    threshold: float,
+    embs: DataFrame | None = None,
+    embs_b: DataFrame | None = None,
+    ends: tuple[str, str] = _VECS,
+    carry: tuple[Column, ...] = (),
+) -> DataFrame:
+    """(end_a, end_b, *carry, cosine >= threshold): exact float64 cosine of
+    the pairs' ``embedding_a`` / ``embedding_b``, attached from ``embs``
+    (and ``embs_b``) by vec_id when given."""
+    from datafusion_gpu_spark.operators.similarity import cosine_similarity
+
+    if embs is not None:
+        pairs = _attach(pairs, embs, ["embedding"], "vec_id", ends, embs_b)
+    cs = cosine_similarity(F.col("embedding_a"), F.col("embedding_b"))
+    return pairs.select(*ends, *carry, F.round(cs, 6).alias("cosine")).where(
+        F.col("cosine") >= threshold
+    )
+
+
+def _index_probe(
+    history: DataFrame,
+    batch: DataFrame,
+    index: DataFrame | None,
+    bucket_index,
+    keys: list[str],
+    ident: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(batch, candidates) of an incremental near-dup ingest: the batch
+    spread over the cores, and the (hist_id, batch_id) pairs whose
+    ``bucket_index`` rows share ``keys`` — the batch's buckets probing
+    ``index`` (default: ``history`` bucketed in-plan).
+
+    The candidate relation (tiny: true near-dups + bucket collisions)
+    is persisted: it feeds several verification consumers, and without
+    materialization the probe subtree re-executes per consumer (the
+    double-executed-subtree trap BENCH_NOTES documents;
+    incremental_dedup_bloom is the precedent — measured 14.0s -> 4.1s
+    on the 100k/2k minhash A/B probe). History's session owns the
+    handle (context.persist_counted): ``batch`` may wrap a
+    per-micro-batch session in foreachBatch."""
+    from datafusion_gpu_spark.context import ensure_parallelism, persist_counted
+
+    batch = ensure_parallelism(batch)
+    if index is None:
+        index = bucket_index(history)
+    cand = (
+        bucket_index(batch)
+        .withColumnRenamed(ident, "batch_id")
+        .join(index.withColumnRenamed(ident, "hist_id"), keys)
+        .select(*_SIDES)
+        .distinct()
+    )
+    return batch, persist_counted(history.sparkSession, cand)
+
+
+def _hamming_pairs(
+    sig: DataFrame, col: str, width: int, chunks: int, max_hamming: int
+) -> DataFrame:
+    """(doc_a, doc_b, hamming <= max_hamming) over the bit signatures in
+    ``col``. Pigeonhole: hamming < ``chunks`` implies one of the
+    ``chunks`` ``width``-bit slices identical, so candidates come from
+    the (chunk, val) equality join and verification is one
+    bit_count(xor) — complete for max_hamming <= chunks - 1. Bits above
+    ``chunks * width`` only ADD candidates (a flip there breaks no
+    slice)."""
+    mask = F.lit((1 << width) - 1)
+    slices = [
+        F.shiftrightunsigned(F.col(col), i * width).bitwiseAND(mask)
+        for i in range(chunks)
+    ]
+    buckets = sig.select(
+        "doc_id", col, F.posexplode(F.array(*slices)).alias("chunk", "val")
+    )
+    xor = F.col(f"{col}_a").bitwiseXOR(F.col(f"{col}_b"))
+    return (
+        _self_pairs(buckets, ["chunk", "val"], carry=(col,))
+        .select(*_ENDS, F.bit_count(xor).alias("hamming"))
+        .distinct()
+        .where(F.col("hamming") <= max_hamming)
+    )
+
+
 # -- exact dedup -------------------------------------------------------------
 
 
@@ -198,6 +406,17 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
+def _content_keys(
+    history: DataFrame, batch: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(history keys, batch firsts): ``history`` projected to its md5
+    content key, and ``batch`` deduped to one (content_key, doc_id) row
+    per key, keeper = min doc_id."""
+    key = F.md5(normalize_text(F.col("text"))).alias("content_key")
+    firsts = batch.select(key, "doc_id").groupBy("content_key")
+    return history.select(key), firsts.agg(F.min("doc_id").alias("doc_id"))
+
+
 def incremental_dedup(history: DataFrame, batch: DataFrame) -> DataFrame:
     """Dedup an INCOMING batch against an already-ingested corpus — the
     shape a 100 TB pipeline actually runs daily (nobody re-dedupes the
@@ -215,13 +434,7 @@ def incremental_dedup(history: DataFrame, batch: DataFrame) -> DataFrame:
     the anti-join probes one row per distinct key, and the only payload
     ever shuffled is 32-char keys + one long.
     """
-    key = F.md5(normalize_text(F.col("text"))).alias("content_key")
-    hist_keys = history.select(key)
-    batch_first = (
-        batch.select(key, "doc_id")
-        .groupBy("content_key")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
+    hist_keys, batch_first = _content_keys(history, batch)
     return batch_first.join(hist_keys, "content_key", "left_anti")
 
 
@@ -251,14 +464,8 @@ def incremental_dedup_bloom(
         bloom_might_contain,
     )
 
-    key = F.md5(normalize_text(F.col("text"))).alias("content_key")
-    hist_keys = history.select(key)
+    hist_keys, batch_first = _content_keys(history, batch)
     bits = bloom_build(hist_keys, "content_key", n_bits=n_bits, k=k)
-    batch_first = (
-        batch.select(key, "doc_id")
-        .groupBy("content_key")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
     # persist: both slices consume `probed`, and without materialization
     # the groupBy + Python probe subtree would execute twice (the same
     # double-executed-subtree trap BENCH_NOTES documents); history's
@@ -405,40 +612,12 @@ def ngram_jaccard_pairs(
     the result stays a well-defined similarity and the DuckDB oracle can
     replay it exactly. None (default) keeps exact full-space Jaccard.
     """
-    sh = exploded_shingles(docs, n, carry_cols=(block_col,) if block_col else ())
-    if max_doc_freq is not None:
-        # sh is distinct per (doc, shingle), so count(*) == doc frequency
-        keep = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") <= max_doc_freq)
-            .select("shingle")
-        )
-        sh = sh.join(keep, "shingle")
-    sizes = shingle_set_sizes(sh)
-
-    a, b = sh.alias("a"), sh.alias("b")
-    cond = (F.col("a.shingle") == F.col("b.shingle")) & (
-        F.col("a.doc_id") < F.col("b.doc_id")
-    )
-    if block_col:
-        cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-    common = (
-        a.join(b, cond)
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a")
-    sb = sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b")
-    jacc = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    keys = ["shingle", block_col] if block_col else ["shingle"]
+    sh = exploded_shingles(docs, n, carry_cols=tuple(keys[1:]))
+    # sh is distinct per (doc, shingle), so count(*) == doc frequency
+    sh = _capped(sh, ["shingle"], max_doc_freq)
+    common = _n_common(_self_pairs(sh, keys))
+    return _jaccard_verified(common, shingle_set_sizes(sh), threshold)
 
 
 def containment_pairs(
@@ -462,36 +641,12 @@ def containment_pairs(
     semantics the oracle replays. Both orders of each pair are emitted
     (containment is directional); self-pairs excluded.
     """
-    sh = exploded_shingles(docs, n)
-    if max_doc_freq is not None:
-        keep = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") <= max_doc_freq)
-            .select("shingle")
-        )
-        sh = sh.join(keep, "shingle")
-    sizes = shingle_set_sizes(sh)
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a")
+    sh = _capped(exploded_shingles(docs, n), ["shingle"], max_doc_freq)
+    common = _n_common(_self_pairs(sh, ["shingle"], ordered=False))
+    ratio = F.round(F.col("n_common") / F.col("n_sh_a"), 6)
     return (
-        common.join(sa, "doc_a")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("n_common") / F.col("n_a"), 6).alias("containment"),
-        )
+        _attach(common, shingle_set_sizes(sh), ["n_sh"], ends=("doc_a",))
+        .select(*_ENDS, ratio.alias("containment"))
         .where(F.col("containment") >= threshold)
     )
 
@@ -577,53 +732,31 @@ def minhash_lsh_pairs(
     from datafusion_gpu_spark.context import ensure_parallelism
 
     docs = ensure_parallelism(docs)
-    bands = num_hashes // rows_per_band
     sh = exploded_shingles(docs, n)
     sig = cuts(docs)(
         _signatures_of_shingles(sh, num_hashes, with_n_sh=True)
     )
-    band_cols = [
-        F.xxhash64(
-            F.lit(j), *[F.element_at("sig", j * rows_per_band + r + 1) for r in range(rows_per_band)]
-        )
-        for j in range(bands)
+    buckets = _band_buckets(sig, num_hashes, rows_per_band)
+    candidates = _self_pairs(buckets, ["band", "bucket"]).distinct()
+    # exact verification restricted to the candidate set; set sizes ride
+    # the signature pass (with_n_sh above) instead of a fourth corpus
+    # explode (r16, guide §1.2)
+    common = _shared_shingles(candidates, sh, sh)
+    return _jaccard_verified(common, sig.select("doc_id", "n_sh"), threshold)
+
+
+def _band_buckets(sig: DataFrame, num_hashes: int, rows_per_band: int) -> DataFrame:
+    """(doc_id, band, bucket): band j of each signature hashed as
+    xxhash64(j, its ``rows_per_band`` elements). The one banding spelling
+    of the full-recompute path and the persisted index: the two must
+    bucket identically or the incremental A/B equivalence breaks."""
+    r = rows_per_band
+    bands = [
+        F.xxhash64(F.lit(j), *[F.element_at("sig", j * r + i + 1) for i in range(r)])
+        for j in range(num_hashes // r)
     ]
-    buckets = sig.select(
-        "doc_id", F.posexplode(F.array(*band_cols)).alias("band", "bucket")
-    )
-    x, y = buckets.alias("x"), buckets.alias("y")
-    candidates = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # exact verification restricted to the candidate set. The second join
-    # keys on (doc_b, shingle) — BOTH columns — so only genuinely shared
-    # shingles materialize; joining on doc_b alone and post-filtering
-    # would build the |sh_a| x |sh_b| cross product per candidate pair
-    # (~10^5 rows/pair on real documents) before throwing it away.
-    # Set sizes ride the signature pass (with_n_sh above) instead of a
-    # fourth corpus explode (r16, guide §1.2).
-    sizes = sig.select("doc_id", "n_sh")
-    common = (
-        candidates.join(sh.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_b"), ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a")
-    sb = sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b")
-    jacc = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
+    return sig.select(
+        "doc_id", F.posexplode(F.array(*bands)).alias("band", "bucket")
     )
 
 
@@ -641,25 +774,12 @@ def minhash_band_index(
     shuffle): the index scan is ``Bucketed: true`` with ZERO exchange,
     and the only (band, bucket) repartition in the plan is the
     batch-sized probe side, so per-ingest shuffle IO is independent of
-    corpus size. The banding
-    spelling is kept IDENTICAL to minhash_lsh_pairs' inline bands
-    (xxhash64(band_j, sig elements) — the index and the full-recompute
-    path must bucket identically or the A/B equivalence breaks; the
-    restatement-over-refactor choice follows the documented family
-    precedent, and test_incremental_minhash_matches_full_recompute
-    pins the two spellings together).
+    corpus size. It bands through the same ``_band_buckets`` as
+    minhash_lsh_pairs, so the index and the full-recompute path bucket
+    identically (test_incremental_minhash_matches_full_recompute).
     """
-    bands = num_hashes // rows_per_band
     sig = minhash_signatures(docs, num_hashes, n)
-    band_cols = [
-        F.xxhash64(
-            F.lit(j), *[F.element_at("sig", j * rows_per_band + r + 1) for r in range(rows_per_band)]
-        )
-        for j in range(bands)
-    ]
-    return sig.select(
-        "doc_id", F.posexplode(F.array(*band_cols)).alias("band", "bucket")
-    )
+    return _band_buckets(sig, num_hashes, rows_per_band)
 
 
 def incremental_minhash_lsh(
@@ -707,56 +827,27 @@ def incremental_minhash_lsh(
     with the history:batch ratio because the full path re-processes
     text while the probe path only re-scans hashes.
     """
-    from datafusion_gpu_spark.context import ensure_parallelism, persist_counted
-
-    batch = ensure_parallelism(batch)
-    if index is None:
-        index = minhash_band_index(history, num_hashes, rows_per_band, n)
-    probe = minhash_band_index(batch, num_hashes, rows_per_band, n)
-    # persist: the candidate relation (tiny — true near-dups + band
-    # collisions) feeds THREE consumers (both semi-join restrictions and
-    # the verification join); without materialization the band-probe
-    # subtree re-executes per consumer (the double-executed-subtree trap
-    # BENCH_NOTES documents; incremental_dedup_bloom is the precedent —
-    # measured 14.0s -> 4.1s on the 100k/2k A/B probe); history's session
-    # owns the handle, as there
-    candidates = persist_counted(
-        history.sparkSession,
-        probe.withColumnRenamed("doc_id", "batch_id")
-        .join(index.withColumnRenamed("doc_id", "hist_id"), ["band", "bucket"])
-        .select("hist_id", "batch_id")
-        .distinct()
+    band = partial(
+        minhash_band_index, num_hashes=num_hashes, rows_per_band=rows_per_band, n=n
     )
-    # exact verification restricted to candidate docs on BOTH sides;
-    # the second shingle join keys on (batch_id, shingle) — both
-    # columns — for the same reason as minhash_lsh_pairs (doc-only key
-    # would build the per-pair shingle cross product before filtering)
-    hist_cand = history.join(
-        candidates.select(F.col("hist_id").alias("doc_id")).distinct(),
-        "doc_id",
-        "left_semi",
+    batch, candidates = _index_probe(
+        history, batch, index, band, ["band", "bucket"], "doc_id"
     )
-    batch_cand = batch.join(
-        candidates.select(F.col("batch_id").alias("doc_id")).distinct(),
-        "doc_id",
-        "left_semi",
+    # exact verification re-shingles only the candidate docs of each side
+    hist_sh, batch_sh = (
+        exploded_shingles(
+            side.join(
+                candidates.select(F.col(end).alias("doc_id")).distinct(),
+                "doc_id",
+                "left_semi",
+            ),
+            n,
+        )
+        for side, end in zip((history, batch), _SIDES)
     )
-    hist_sh = exploded_shingles(hist_cand, n)
-    batch_sh = exploded_shingles(batch_cand, n)
-    common = (
-        candidates.join(hist_sh.withColumnRenamed("doc_id", "hist_id"), "hist_id")
-        .join(batch_sh.withColumnRenamed("doc_id", "batch_id"), ["batch_id", "shingle"])
-        .groupBy("hist_id", "batch_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sh_a = shingle_set_sizes(hist_sh).withColumnRenamed("doc_id", "hist_id").withColumnRenamed("n_sh", "n_a")
-    sh_b = shingle_set_sizes(batch_sh).withColumnRenamed("doc_id", "batch_id").withColumnRenamed("n_sh", "n_b")
-    jacc = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    return (
-        common.join(sh_a, "hist_id")
-        .join(sh_b, "batch_id")
-        .select("hist_id", "batch_id", F.round(jacc, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
+    common = _shared_shingles(candidates, hist_sh, batch_sh, _SIDES)
+    return _jaccard_verified(
+        common, shingle_set_sizes(hist_sh), threshold, _SIDES, shingle_set_sizes(batch_sh)
     )
 
 
@@ -806,34 +897,8 @@ def simhash_pairs(
     chunk_value) and verification is one bit_count(xor) — no pair scan.
     Requires max_hamming <= chunks - 1 for completeness.
     """
-    width = bits // chunks
-    mask = (1 << width) - 1
     sig = simhash_signatures(docs, bits)
-    chunk_cols = [
-        (F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(F.lit(mask)))
-        for i in range(chunks)
-    ]
-    buckets = sig.select(
-        "doc_id", "simhash", F.posexplode(F.array(*chunk_cols)).alias("chunk", "val")
-    )
-    x, y = buckets.alias("x"), buckets.alias("y")
-    pairs = (
-        x.join(
-            y,
-            (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.val") == F.col("y.val"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("x.simhash").bitwiseXOR(F.col("y.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-    )
-    return pairs.where(F.col("hamming") <= max_hamming)
+    return _hamming_pairs(sig, "simhash", bits // chunks, chunks, max_hamming)
 
 
 # -- embedding near-dup --------------------------------------------------------
@@ -853,37 +918,9 @@ def embedding_near_dup_lsh(
     (planes, num_tables). Emitted pairs are exact-cosine verified, so
     precision is 1.0 by construction.
     """
-    from datafusion_gpu_spark.operators.similarity import (
-        _hyperplanes,
-        cosine_similarity,
-        lsh_bucket,
-    )
-
-    tables = [_hyperplanes(dim, planes, seed + t) for t in range(num_tables)]
-    per_table = F.array(*[lsh_bucket(F.col("embedding"), hp) for hp in tables])
-    buckets = embs.select(
-        "vec_id", F.posexplode(per_table).alias("tbl", "bucket")
-    )
-    x, y = buckets.alias("x"), buckets.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.tbl") == F.col("y.tbl"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.vec_id") < F.col("y.vec_id")),
-        )
-        .select(F.col("x.vec_id").alias("vec_a"), F.col("y.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    ea = embs.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
-    eb = embs.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-    cs = cosine_similarity(F.col("ea"), F.col("eb"))
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select("vec_a", "vec_b", F.round(cs, 6).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
+    buckets = embedding_bucket_index(embs, planes, num_tables, dim, seed)
+    cand = _self_pairs(buckets, ["tbl", "bucket"], "vec_id", _VECS).distinct()
+    return _cosine_verified(cand, threshold, embs)
 
 
 def embedding_bucket_index(
@@ -937,35 +974,13 @@ def incremental_embedding_lsh(
     each side via keyed joins. vec_id spaces are assumed disjoint
     across the sides (fresh ingest ids).
     """
-    from datafusion_gpu_spark.context import ensure_parallelism, persist_counted
-    from datafusion_gpu_spark.operators.similarity import cosine_similarity
-
-    batch = ensure_parallelism(batch)
-    if index is None:
-        index = embedding_bucket_index(history, planes, num_tables, dim, seed)
-    probe = embedding_bucket_index(batch, planes, num_tables, dim, seed)
-    # persist: tiny candidate relation, two verification consumers (the
-    # incremental_minhash_lsh precedent, owner included)
-    candidates = persist_counted(
-        history.sparkSession,
-        probe.withColumnRenamed("vec_id", "batch_id")
-        .join(index.withColumnRenamed("vec_id", "hist_id"), ["tbl", "bucket"])
-        .select("hist_id", "batch_id")
-        .distinct()
+    bucket = partial(
+        embedding_bucket_index, planes=planes, num_tables=num_tables, dim=dim, seed=seed
     )
-    ea = history.select(
-        F.col("vec_id").alias("hist_id"), F.col("embedding").alias("ea")
+    batch, candidates = _index_probe(
+        history, batch, index, bucket, ["tbl", "bucket"], "vec_id"
     )
-    eb = batch.select(
-        F.col("vec_id").alias("batch_id"), F.col("embedding").alias("eb")
-    )
-    cs = cosine_similarity(F.col("ea"), F.col("eb"))
-    return (
-        candidates.join(ea, "hist_id")
-        .join(eb, "batch_id")
-        .select("hist_id", "batch_id", F.round(cs, 6).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
+    return _cosine_verified(candidates, threshold, history, batch, _SIDES)
 
 
 def embedding_near_dup_pairs(
@@ -977,23 +992,11 @@ def embedding_near_dup_pairs(
     LSH bucket instead of a label — embedding_near_dup_lsh above); the
     cosine itself is a JVM fold (zip_with + aggregate) in float64.
     """
-    from datafusion_gpu_spark.operators.similarity import cosine_similarity
-
-    a = embs.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col(block_col).alias("blk"),
-        F.col("embedding").alias("ea"),
+    pairs = _self_pairs(
+        embs, [block_col], "vec_id", _VECS, carry=(block_col, "embedding")
     )
-    b = embs.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col(block_col).alias("blk"),
-        F.col("embedding").alias("eb"),
-    )
-    pairs = a.join(b, "blk").where(F.col("vec_a") < F.col("vec_b"))
-    cs = cosine_similarity(F.col("ea"), F.col("eb"))
-    return pairs.select(
-        "vec_a", "vec_b", F.col("blk").alias("label"), F.round(cs, 6).alias("cosine")
-    ).where(F.col("cosine") >= threshold)
+    label = F.col(f"{block_col}_a").alias("label")
+    return _cosine_verified(pairs, threshold, carry=(label,))
 
 
 def semantic_dedup(
@@ -1021,24 +1024,14 @@ def semantic_dedup(
     """
     from datafusion_gpu_spark.operators.similarity import (
         cell_assignments,
-        cosine_similarity,
         deterministic_centroids,
     )
 
     cids, Centn = deterministic_centroids(embs, n_clusters)
     assign = cell_assignments(embs, cids, Centn)
-
-    a = assign.select(F.col("vec_id").alias("vec_a"), "cell")
-    b = assign.select(F.col("vec_id").alias("vec_b"), "cell")
-    ea = embs.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
-    eb = embs.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-    cs = F.round(cosine_similarity(F.col("ea"), F.col("eb")), 6)
+    pairs = _self_pairs(assign, ["cell"], "vec_id", _VECS)
     dups = (
-        a.join(b, "cell")
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .where(cs >= threshold)
+        _cosine_verified(pairs, threshold, embs)
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
     )
@@ -1265,21 +1258,8 @@ def duplicated_spans(
             "doc_id", "pos", F.md5(F.concat_ws(" ", "gram_words")).alias("gram")
         )
     )
-    if max_doc_freq is not None:
-        keep = (
-            grams.groupBy("gram")
-            .agg(F.count_distinct("doc_id").alias("df"))
-            .where(F.col("df") <= max_doc_freq)
-            .select("gram")
-        )
-        grams = grams.join(keep, "gram")
-    a, b = grams.alias("a"), grams.alias("b")
-    matches = a.join(b, "gram").where(F.col("a.doc_id") < F.col("b.doc_id")).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.pos").alias("pos_a"),
-        F.col("b.pos").alias("pos_b"),
-    )
+    grams = _capped(grams, ["gram"], max_doc_freq, count="doc_id")
+    matches = _self_pairs(grams, ["gram"], carry=("pos",))
     diag = matches.withColumn("diag", F.col("pos_a") - F.col("pos_b"))
     w_island = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
     islands = diag.withColumn(
@@ -1345,24 +1325,12 @@ def blocked_edit_pairs(
         F.split_part(norm, F.lit(" "), F.lit(1)).alias("w1"),
     )
     block_key = ["w1", *block_cols]
-    if max_block is not None:
-        keep = (
-            base.groupBy(*block_key)
-            .agg(F.count(F.lit(1)).alias("bn"))
-            .where(F.col("bn") <= max_block)
-            .select(*block_key)
-        )
-        base = base.join(keep, block_key)
-    a, b = base.alias("a"), base.alias("b")
-    cond = F.col("a.doc_id") < F.col("b.doc_id")
-    for k in block_key:
-        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    base = _capped(base, block_key, max_block)
     return (
-        a.join(b, cond)
+        _self_pairs(base, block_key, carry=("pfx",))
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.levenshtein(F.col("a.pfx"), F.col("b.pfx"), threshold).alias("dist"),
+            *_ENDS,
+            F.levenshtein(F.col("pfx_a"), F.col("pfx_b"), threshold).alias("dist"),
         )
         .where(F.col("dist") >= 0)
         .select(
@@ -1448,32 +1416,17 @@ def prefix_filter_pairs(
     pref = ranked.where(
         F.col("pos") <= F.col("n_sh") - _ceil_tn(F.col("n_sh")) + 1
     ).select("doc_id", "shingle", "n_sh")
-    a, b = pref.alias("a"), pref.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("b.n_sh") >= _ceil_tn(F.col("a.n_sh")))
-            & (
-                F.col("b.n_sh") * F.lit(tn) <= F.col("a.n_sh") * F.lit(td)
-            ),  # n_b <= n_a/t as the cross-multiplied integer inequality
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    n_a, n_b = F.col("a.n_sh"), F.col("b.n_sh")
+    # n_b <= n_a/t as the cross-multiplied integer inequality
+    length = (n_b >= _ceil_tn(n_a)) & (n_b * F.lit(tn) <= n_a * F.lit(td))
+    cand = _self_pairs(pref, ["shingle"], cond=length).distinct()
     sets = sh.groupBy("doc_id").agg(
         F.sort_array(F.collect_set("shingle")).alias("ss")
     )
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("ss").alias("ss_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("ss").alias("ss_b"))
     inter = F.size(F.array_intersect("ss_a", "ss_b"))
     union = F.size("ss_a") + F.size("ss_b") - inter
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _attach(cand, sets, ["ss"])
         .select(
             "doc_a",
             "doc_b",

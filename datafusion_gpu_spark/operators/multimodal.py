@@ -484,8 +484,8 @@ def audio_neardup_pairs(
     frames: int = 31,
 ) -> DataFrame:
     """Audio near-duplicate pairs: :func:`audio_fingerprint` + the
-    SimHash chunked-equality pigeonhole (dedup.simhash_pairs'
-    candidate machinery restated over the 62-bit afp) — a gain-changed
+    SimHash chunked-equality pigeonhole (the same dedup._hamming_pairs
+    that simhash_pairs runs, over the 62-bit afp) — a gain-changed
     re-encode of a clip pairs with its original at hamming 0..3 while
     unrelated clips sit ~31 bits apart, and candidate generation is an
     equality join on (chunk_id, chunk_value), never an all-pairs scan.
@@ -498,34 +498,11 @@ def audio_neardup_pairs(
     bit_count(xor) per candidate. Same scale shape as simhash_pairs:
     bucket-blocked join, distinct, no pair space.
     """
+    from datafusion_gpu_spark.operators.dedup import _hamming_pairs
+
     sig = audio_fingerprint(binary_df, frames)
     width = (2 * frames + chunks - 1) // chunks
-    mask = (1 << width) - 1
-    chunk_cols = [
-        (F.shiftrightunsigned(F.col("afp"), i * width).bitwiseAND(F.lit(mask)))
-        for i in range(chunks)
-    ]
-    buckets = sig.select(
-        "doc_id", "afp", F.posexplode(F.array(*chunk_cols)).alias("chunk", "val")
-    )
-    x, y = buckets.alias("x"), buckets.alias("y")
-    pairs = (
-        x.join(
-            y,
-            (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.val") == F.col("y.val"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.bit_count(F.col("x.afp").bitwiseXOR(F.col("y.afp"))).alias(
-                "hamming"
-            ),
-        )
-        .distinct()
-    )
-    return pairs.where(F.col("hamming") <= max_hamming)
+    return _hamming_pairs(sig, "afp", width, chunks, max_hamming)
 
 
 # -- video: pure-NumPy YUV4MPEG2 (Y4M) codec + frame sampling ---------------

@@ -81,6 +81,13 @@ _CHANGED_SINCE_CHECK: tuple[str, ...] = (
     "events_survival_km", "events_survival_greenwood", "events_competing_risks",
     "events_survival_median", "events_survival_rmst", "events_logrank_k",
     "events_logrank_weighted", "events_life_table", "events_survival_diff_72h",
+    # the near-dup pair family now builds on one candidate-and-verify
+    # substrate (operators/dedup.py); these rows' optimized plans changed
+    # (same rows), the ones whose plans stayed identical are not pinned
+    "dedup_ngram_jaccard", "dedup_containment", "dedup_minhash_lsh",
+    "dedup_embedding_lsh", "dedup_incremental_embedding",
+    "dedup_embedding_cosine", "dedup_semantic", "dedup_substring_spans",
+    "join_fuzzy_blocked",
 )
 
 

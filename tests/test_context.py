@@ -239,6 +239,31 @@ def test_persist_counted_keeps_a_rebuilt_plan_cached(spark):
     assert again.storageLevel == StorageLevel.NONE
 
 
+def test_ensure_parallelism_decides_from_the_plan(spark, tmp_path):
+    # a one-partition scan is spread over the cores; a shuffled input
+    # keeps the partitioning its exchange set, and deciding so runs none
+    # of its shuffle stages
+    from datafusion_gpu_spark.context import ensure_parallelism
+
+    sc = spark.sparkContext
+
+    def jobs() -> int:
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        return jsc.dagScheduler().numTotalJobs()
+
+    path = str(tmp_path / "one_file")
+    spark.range(100).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    spread = ensure_parallelism(scan)
+    assert spread.rdd.getNumPartitions() == sc.defaultParallelism
+    grouped = scan.groupBy((F.col("id") % 7).alias("k")).count()
+    before = jobs()
+    assert ensure_parallelism(grouped) is grouped
+    assert jobs() == before
+
+
 def test_warm_load_registers_nothing(spark, registration_calls):
     from datafusion_gpu_spark.context import TESTDATA_TABLES
     from datafusion_gpu_spark.queries import load

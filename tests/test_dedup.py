@@ -508,9 +508,9 @@ def test_incremental_minhash_finds_planted_cross_near_dup(planted):
 def test_incremental_minhash_matches_full_recompute(planted):
     # the A/B contract: probing the history band index with the batch
     # must return EXACTLY the cross-side slice of a full recompute over
-    # history+batch — this is the test that pins minhash_band_index's
-    # restated banding spelling to minhash_lsh_pairs' inline one (a
-    # drift in either xxhash64 band seed breaks this equality)
+    # history+batch — the persisted index and the full recompute must
+    # band through the same spelling (a drift in its xxhash64 band seed
+    # on either path breaks this equality)
     from datafusion_gpu_spark.operators.dedup import incremental_minhash_lsh
 
     hist_ids, batch_ids = {0, 2, 3}, {1, 4}
@@ -546,6 +546,30 @@ def test_incremental_minhash_explicit_index_equals_inline(planted):
         for r in incremental_minhash_lsh(history, batch, index=idx).collect()
     }
     assert a == b and a
+
+
+def test_incremental_minhash_construction_starts_no_job(planted):
+    # building the probe only plans: the candidate relation is persisted
+    # lazily, and no ensure_parallelism on the way runs its input's
+    # shuffles (each would run again in the caller's action)
+    from datafusion_gpu_spark.operators.dedup import (
+        incremental_minhash_lsh,
+        minhash_band_index,
+    )
+
+    jsc = planted.sparkSession.sparkContext._jsc.sc()
+
+    def jobs() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        return jsc.dagScheduler().numTotalJobs()
+
+    history = planted.where(F.col("doc_id").isin(0, 2, 3))
+    batch = planted.where(F.col("doc_id").isin(1, 4))
+    idx = minhash_band_index(history)
+    before = jobs()
+    pairs = incremental_minhash_lsh(history, batch, index=idx)
+    assert jobs() == before
+    assert (0, 1) in {(r.hist_id, r.batch_id) for r in pairs.collect()}
 
 
 def test_incremental_minhash_candidates_are_released_by_the_session(planted):

@@ -899,7 +899,7 @@ def test_incremental_minhash_is_band_probe_not_all_pairs(spark):
 
 def test_audio_neardup_is_chunk_keyed_not_all_pairs(spark):
     # candidate generation must be the (chunk, value) equality join —
-    # never a pair scan — exactly like the simhash pigeonhole it restates
+    # never a pair scan — the same pigeonhole simhash_pairs runs
     plan = plan_of(spark, "multimodal_audio_neardup")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
